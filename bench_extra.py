@@ -166,6 +166,8 @@ def main() -> None:
             dump_plan("kg_pagerank", pagerank_integer(result.edges, checkpoint=False))
         if "kg_triangles" in phases:
             run("kg_triangles", lambda: triangles(result.edges).count())
+            if plans_dir is not None:  # triangles() checkpoints eagerly
+                dump_plan("kg_triangles", triangles(result.edges))
         if "kg_components" in phases:
 
             def components() -> None:
@@ -196,12 +198,9 @@ def main() -> None:
             )
             .repartition(cpus * 2)
         )
-        run(
-            "model_ner",
-            lambda: model_ner_labels(model_input, None, encoder="numpy")
-            .select(F.sum(F.size("labels")))
-            .collect(),
-        )
+        labels = model_ner_labels(model_input, None, encoder="numpy")
+        dump_plan("model_ner", labels)
+        run("model_ner", lambda: labels.select(F.sum(F.size("labels"))).collect())
         print(f"[bench_extra] model_docs/s: "
               f"{n_docs * model_repl / timings['model_ner']:.0f}", file=sys.stderr)
 

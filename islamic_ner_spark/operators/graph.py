@@ -13,6 +13,12 @@ Neo4j MERGE semantics re-expressed as deterministic aggregations
   per key (builder.py:99-123), which ``min_by`` over the emit order
   reproduces exactly.
 
+Two strategies compute the same tables: the global groupBy
+(:func:`build_nodes`, :func:`build_edges`), valid for any input, and the
+fused Arrow pass (:func:`fused_graph_outputs`, finished by
+:func:`nodes_from_combined` / :func:`edges_from_combined`), which needs one
+row per turn.
+
 Node schema per entity type (builder.py:19-26, 325-392):
 SCHOLAR->(Scholar, canonical_name), BOOK->(Book, canonical_name),
 CONCEPT->(Concept, term), PLACE->(Place, canonical_name),
@@ -47,8 +53,6 @@ def node_candidate_rows(
     resolved_mentions: DataFrame,
     doc_index: DataFrame,
     resolved_triples: DataFrame | None = None,
-    *,
-    exclude_doc_scoped: bool = False,
 ) -> DataFrame:
     """The pre-aggregation node MERGE input: one row per (node key,
     writer) with the writer's emit order — the relational half of
@@ -58,10 +62,8 @@ def node_candidate_rows(
     Columns: label, key, conv_id, turn_idx, emit_idx, original_text,
     confidence.
     """
-    keep_types = [t for t in NODE_LABELS if not (
-        exclude_doc_scoped and t == "HADITH_REF")]
     linkable = resolved_mentions.where(
-        F.col("entity_type").isin(keep_types)
+        F.col("entity_type").isin(list(NODE_LABELS))
     ).select(
         "conv_id",
         "turn_idx",
@@ -85,7 +87,7 @@ def node_candidate_rows(
         F.lit(1.0).alias("confidence"),
     )
 
-    rows = linkable if exclude_doc_scoped else linkable.unionByName(hadith_meta)
+    rows = linkable.unionByName(hadith_meta)
 
     if resolved_triples is not None:
         def endpoint(side: str, offset: int) -> DataFrame:
@@ -104,7 +106,7 @@ def node_candidate_rows(
                 F.coalesce(F.col(f"{side}_confidence_r"), F.lit(1.0)).alias(
                     "confidence"
                 ),
-            ).where(F.col("entity_type").isin(keep_types))
+            ).where(F.col("entity_type").isin(list(NODE_LABELS)))
 
         rows = rows.unionByName(endpoint("subj", 0)).unionByName(endpoint("obj", 1))
 
@@ -172,8 +174,6 @@ def build_nodes(
     resolved_mentions: DataFrame,
     doc_index: DataFrame,
     resolved_triples: DataFrame | None = None,
-    *,
-    exclude_doc_scoped: bool = False,
 ) -> DataFrame:
     """Node table from resolved mention spans + one Hadith node per doc +
     triple endpoints (inferred entities, e.g. author-map books, exist only
@@ -184,20 +184,13 @@ def build_nodes(
     text, entity_type, canonical_name, confidence, match_type.
     ``doc_index`` columns: conv_id, turn_idx, doc_id (distinct docs).
 
-    With ``exclude_doc_scoped=True`` all HADITH_REF-typed rows (whose node
-    key is the per-turn ``doc_id``) are left out: the pipeline computes
-    those with the shuffle-free :func:`build_hadith_nodes_turn_local` and
-    unions them in, so the global agg only shuffles vocabulary-keyed rows
-    (which map-side partial aggregation collapses to ~|vocabulary| rows
-    per partition instead of ~|corpus| doc-keyed rows).
+    The global groupBy strategy, valid for any input layout: the pipeline
+    uses it for labeled input that may repeat a turn, and when the
+    resolution is too large for the fused pass
+    (:func:`fused_graph_outputs`), which it is the reference for.
     """
     return aggregate_nodes(
-        node_candidate_rows(
-            resolved_mentions,
-            doc_index,
-            resolved_triples,
-            exclude_doc_scoped=exclude_doc_scoped,
-        )
+        node_candidate_rows(resolved_mentions, doc_index, resolved_triples)
     )
 
 
@@ -219,7 +212,7 @@ def build_hadith_nodes_turn_local(extracted: DataFrame) -> DataFrame:
       endpoints.
 
     Equivalence with the global groupBy strategy is asserted in
-    tests/test_graph_pipeline.py; requires one input row per turn (the
+    tests/test_pipeline_scale.py; requires one input row per turn (the
     transcripts-table natural key).
 
     ``extracted`` columns: conv_id, turn_idx, doc_id,
@@ -281,8 +274,10 @@ def build_edges(resolved_triples: DataFrame) -> DataFrame:
     ``resolved_triples``: output of linking.resolve_triples — must carry
     subj_canonical/obj_canonical, source_hadith, rel_idx.
 
-    General-purpose (any input partitioning) global-groupBy strategy; the
-    pipeline uses the shuffle-free :func:`build_edges_turn_local` variant.
+    The global groupBy strategy, valid for any input layout and the
+    reference the fused pass (:func:`fused_graph_outputs`) is tested
+    against; the pipeline falls back to it for labeled input that may
+    repeat a turn and for resolutions too large for the fused pass.
     """
     return aggregate_edges(edge_candidate_rows(resolved_triples))
 
@@ -338,12 +333,10 @@ NODES_TABLE_SCHEMA = (
     "variants array<string>, mention_count long, best_conv string, "
     "best_turn int, best_emit long, book_ref string, chapter string"
 )
-_EDGES_OUT_SCHEMA = EDGES_TABLE_SCHEMA
 
 
 def edge_candidate_rows(resolved_triples: DataFrame) -> DataFrame:
-    """Shared projection + validity filter for both edge-merge strategies
-    (exposed so the MERGE tail can be staged to parquet and replayed by
+    """Projection + validity filter of the global edge merge (exposed so the MERGE tail can be staged to parquet and replayed by
     an independent SQL engine)."""
     return resolved_triples.select(
         "conv_id",
@@ -367,82 +360,6 @@ def edge_candidate_rows(resolved_triples: DataFrame) -> DataFrame:
     )
 
 
-def build_edges_turn_local(resolved_triples: DataFrame) -> DataFrame:
-    """Shuffle-free edge MERGE for pipeline-produced triples.
-
-    The edge MERGE key includes ``source_hadith``, which in this pipeline
-    is the per-turn ``doc_id`` (``conv_id:turn_idx``) — so the MERGE can
-    only ever combine rows of a *single turn*.  A turn's triples are
-    contiguous within one partition (they come from one exploded array
-    row, and ``resolve_triples`` joins the resolution table as a
-    broadcast, which preserves the stream side's partitioning and order).
-    The global groupBy of :func:`build_edges` is therefore a no-op across
-    turns, and at 16+ cores its SortAggregate + full-row Exchange was the
-    measured scaling bottleneck (per-record CPU inflates ~5x with core
-    count; see BENCH.md).  This operator does the same first-writer-wins
-    merge per turn in an Arrow-batched pass with NO exchange at all.
-
-    Requires: all rows of one ``source_hadith`` contiguous within a
-    partition.  Use :func:`build_edges` for inputs of unknown layout
-    (results are identical; verified in tests/test_graph_pipeline.py).
-    """
-    rows = edge_candidate_rows(resolved_triples).select(
-        "pred", "src_label", "src_key", "tgt_label", "tgt_key",
-        "source_hadith", "confidence", "evidence", "emit_idx",
-    )
-
-    def merge(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import numpy as np
-        import pandas as pd
-
-        key_cols = EDGE_KEY
-
-        def flush(chunk: pd.DataFrame) -> pd.DataFrame | None:
-            if chunk.empty:
-                return None
-            # first-writer-wins per key in emit order within each doc run
-            run = (chunk["source_hadith"] != chunk["source_hadith"].shift()).cumsum()
-            order = np.lexsort((chunk["emit_idx"].to_numpy(), run.to_numpy()))
-            if not (np.diff(order) > 0).all():
-                chunk = chunk.iloc[order]
-            if not chunk.duplicated(subset=key_cols).any():
-                out = chunk.rename(columns={"emit_idx": "first_emit"}).copy()
-                out["merge_count"] = np.int64(1)
-                return out
-            out = chunk.groupby(key_cols, sort=False, as_index=False).agg(
-                confidence=("confidence", "first"),
-                evidence=("evidence", "first"),
-                merge_count=("evidence", "size"),
-                first_emit=("emit_idx", "first"),
-            )
-            return out[key_cols + ["confidence", "evidence", "merge_count", "first_emit"]]
-
-        tail: pd.DataFrame | None = None
-        for batch in batches:
-            if tail is not None and len(tail):
-                batch = pd.concat([tail, batch], ignore_index=True)
-                tail = None
-            if batch.empty:
-                continue
-            doc = batch["source_hadith"].to_numpy()
-            trailing = doc == doc[-1]
-            # rows of the last doc may continue into the next Arrow batch;
-            # hold them back (a turn's rows are contiguous, so the trailing
-            # run is exactly the incomplete group)
-            rev = trailing[::-1]
-            head_len = len(batch) - (len(batch) if rev.all() else int(np.argmin(rev)))
-            tail = batch.iloc[head_len:]
-            head = flush(batch.iloc[:head_len])
-            if head is not None and len(head):
-                yield head
-        if tail is not None and len(tail):
-            final = flush(tail)
-            if final is not None and len(final):
-                yield final
-
-    return rows.mapInPandas(merge, schema=_EDGES_OUT_SCHEMA)
-
-
 _COMBINED_SCHEMA = (
     "out string, "
     "pred string, src_label string, src_key string, tgt_label string, "
@@ -460,28 +377,31 @@ _COMBINED_SCHEMA = (
 def fused_graph_outputs(extracted: DataFrame, resolution_bc) -> DataFrame:
     """Edges + node inputs in ONE Arrow pass over the annotate output.
 
-    Motivation (BENCH.md): the relational materialize scans the cached
-    extraction 4x (mention explode, two triple explodes, doc index),
-    broadcast-joins the resolution into each, and pushes ~6 rows/turn
-    through JVM row processing whose per-record CPU inflates ~2x at 16
-    threads on one box.  All of that is turn-local computation over data
-    already sitting in the turn's arrays, so one mapInPandas with the
+    The pipeline's materialize path for every unique-turn build, in memory
+    and staged.  The global groupBy (:func:`build_nodes`,
+    :func:`build_edges`) scans the extraction 4x (mention explode, two
+    triple explodes, doc index), broadcast-joins the resolution into each,
+    and pushes ~6 rows/turn through JVM row processing whose per-record
+    CPU inflates ~2x at 16 threads on one box.  The edge MERGE key holds
+    the per-turn ``source_hadith``, so every merge is turn-local over data
+    already sitting in the turn's arrays: one mapInPandas with the
     (vocabulary-sized) resolution as a broadcast Python dict replaces it;
     Python workers have per-worker heaps and scale ~1.0 (same shape as
     the annotate stage).
 
     Per input row (= one turn) emits, discriminated by ``out``:
 
-    * ``edge``  — first-writer-wins merged edges (== build_edges_turn_local)
+    * ``edge``  — first-writer-wins merged edges (== build_edges)
     * ``vnode`` — per-BATCH pre-aggregated vocabulary-node candidates
       (~|vocabulary| rows per Arrow batch); finish with
       :func:`nodes_from_combined` (== build_nodes on vocabulary rows,
       unioned with the JVM-side Hadith projection)
 
     ``resolution_bc``: broadcast dict {(text, entity_type): (canonical,
-    confidence)}.  Requires one input row per (conv_id, turn_idx); falls
-    back to the relational operators above for arbitrary inputs or
-    extreme vocabularies (plans/pipeline.py).
+    confidence)}.  Requires one input row per (conv_id, turn_idx); the
+    pipeline falls back to the global groupBy for labeled input that may
+    repeat a turn or for a resolution above ``FUSED_VOCAB_LIMIT``
+    (plans/pipeline.py).
     """
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:

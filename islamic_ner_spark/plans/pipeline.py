@@ -5,14 +5,20 @@ Spark lifecycle (all stages DataFrame-native, SURVEY.md §3):
     read transcripts
       -> annotate (fused normalize + AC-gazetteer + pattern NER,
          one narrow mapInPandas)                      [no shuffle]
-      -> mentions / triples (narrow mapInPandas)      [no shuffle]
+      -> mentions / triples (narrow explodes)         [no shuffle]
       -> resolution over DISTINCT strings (broadcast exact join,
          batched fuzzy, CC canonicalization)          [small shuffles]
-      -> resolved triples/mentions (AQE broadcast/skew join)
-      -> nodes/edges groupBy MERGE-semantics aggs     [keyed shuffle]
+      -> graph materialize, one of two strategies:
+         * fused: one Arrow pass over the extraction emits merged edges
+           and pre-aggregated vocabulary-node candidates (needs one row
+           per turn and a resolution that fits a broadcast dict)
+         * global: nodes/edges groupBy MERGE-semantics aggs [keyed shuffle]
 
-With a ``work_dir`` each stage materializes to parquet with a lineage
-manifest and is resumable; the annotate stage is bucketed by conv_id hash
+The strategy depends only on whether turns are unique and on the
+resolution count against ``FUSED_VOCAB_LIMIT``.  With a ``work_dir`` each
+stage materializes to parquet with a lineage manifest and is resumable;
+the annotate stage stages the lean extraction (one row per turn, so the
+fused pass stays exact after the round trip), bucketed by conv_id hash,
 and resumes at bucket granularity (a killed job skips finished buckets).
 """
 
@@ -20,18 +26,17 @@ from __future__ import annotations
 
 import hashlib
 import json
+import shutil
 import time
 from dataclasses import dataclass
 from pathlib import Path
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from islamic_ner_spark.operators.graph import (
     build_edges,
-    build_edges_turn_local,
-    build_hadith_nodes_turn_local,
     build_nodes,
     edges_from_combined,
     fused_graph_outputs,
@@ -40,10 +45,10 @@ from islamic_ner_spark.operators.graph import (
 )
 
 # above this many distinct (text, type) strings the resolution no longer
-# broadcasts comfortably as a Python dict; fall back to relational
-# materialize (broadcast joins + global aggs).  The strategy is decided
-# from a count() of the (persisted) resolution table — the rows are only
-# ever collected to the driver after the count says they fit.
+# broadcasts comfortably as a Python dict; fall back to the global
+# groupBy materialize (build_nodes / build_edges).  The strategy is decided
+# from a count() of the persisted (or staged) resolution table — the rows
+# are only ever collected to the driver after the count says they fit.
 FUSED_VOCAB_LIMIT = 500_000
 from islamic_ner_spark.operators.linking import (
     build_resolution_table,
@@ -146,6 +151,10 @@ def _annotate_resumable(
 ) -> DataFrame:
     """Bucketed, partition-resumable annotate stage.
 
+    Stages the lean extraction (``annotate_transcripts(...,
+    extraction_only=True)``): conv_id, turn_idx, doc_id, mentions,
+    triples — the only columns the KG stages read.
+
     Buckets are committed in ``n_waves`` independent append jobs, each
     followed by an incremental manifest update — so a killed job leaves a
     manifest recording exactly the committed buckets, and the re-run
@@ -172,18 +181,13 @@ def _annotate_resumable(
         # hold real rows the manifest doesn't know about — re-annotating
         # them would APPEND A SECOND COPY.  The manifest is the only
         # source of truth, so drop any bucket dir it doesn't list.
-        import shutil
-
         for bucket_dir in Path(path).glob("bucket=*"):
             if bucket_dir.name.split("=", 1)[1] not in done:
                 shutil.rmtree(bucket_dir, ignore_errors=True)
     else:
         done = set()
         resumed = False
-        if Path(path).exists():
-            import shutil
-
-            shutil.rmtree(path, ignore_errors=True)
+        shutil.rmtree(path, ignore_errors=True)
 
     per_partition: dict[str, int] = (
         dict((manifest or {}).get("per_partition_rows") or {}) if done else {}
@@ -193,6 +197,18 @@ def _annotate_resumable(
     pending_waves = sorted(
         {wave_of[b] for b in range(n_buckets) if str(b) not in done}
     )
+
+    def write_manifest() -> None:
+        tables.manifest_path(path).write_text(json.dumps({
+            "stage": "annotate",
+            "fingerprint": fingerprint,
+            "per_partition_rows": per_partition,
+            "rows": sum(per_partition.values()),
+            "complete": len(per_partition) >= n_buckets,
+            "resumed": resumed,
+            "duration_s": round(time.time() - started, 3),
+        }, indent=2))
+
     for wave in pending_waves:
         wave_buckets = [
             b for b in range(n_buckets)
@@ -202,7 +218,8 @@ def _annotate_resumable(
         # applies to the RAW transcripts — the expensive annotate UDF
         # only ever runs on each wave's rows, never on the full input
         chunk = annotate_transcripts(
-            transcripts.where(bucket_col.isin(wave_buckets)), gazetteer_bc
+            transcripts.where(bucket_col.isin(wave_buckets)), gazetteer_bc,
+            extraction_only=True,
         ).withColumn("bucket", bucket_col)
         chunk.write.mode("append").partitionBy("bucket").parquet(path)
         # count committed rows per bucket from the files just written —
@@ -216,26 +233,10 @@ def _annotate_resumable(
         for b in wave_buckets:
             wave_counts.setdefault(str(b), 0)
         per_partition.update(wave_counts)
-        tables.manifest_path(path).write_text(json.dumps({
-            "stage": "annotate",
-            "fingerprint": fingerprint,
-            "per_partition_rows": per_partition,
-            "rows": sum(per_partition.values()),
-            "complete": len(per_partition) >= n_buckets,
-            "resumed": resumed,
-            "duration_s": round(time.time() - started, 3),
-        }, indent=2))
+        write_manifest()
     if not pending_waves:
         # all buckets were already committed; finalize the manifest
-        tables.manifest_path(path).write_text(json.dumps({
-            "stage": "annotate",
-            "fingerprint": fingerprint,
-            "per_partition_rows": per_partition,
-            "rows": sum(per_partition.values()),
-            "complete": True,
-            "resumed": resumed,
-            "duration_s": round(time.time() - started, 3),
-        }, indent=2))
+        write_manifest()
     return tables.read_table(spark, path).drop("bucket")
 
 
@@ -260,14 +261,15 @@ def build_graph_from_labels(
             "conv_id", F.col("turn_idx").cast("int").alias("turn_idx"), "tokens", "labels"
         )
     ).persist()
-    return _build_from_annotated(
+    result = _build_from_annotated(
         spark, annotated, gazetteer or Gazetteer.from_dir(gazetteer_dir), work_dir=None,
         fingerprint="labels",
         # arbitrary labeled input may repeat (conv_id, turn_idx) rows, so
-        # neither turn contiguity nor turn uniqueness is guaranteed ->
-        # global groupBy merges for both edges and nodes
+        # turn uniqueness is not guaranteed -> global groupBy merges
         unique_turns=False,
     )
+    result.persisted.append(annotated)
+    return result
 
 
 def build_graph(
@@ -282,14 +284,16 @@ def build_graph(
 ) -> GraphBuildResult:
     """Run the full KG-construction dataflow.
 
-    Without ``work_dir`` the plan stays lazy (annotated is persisted since
-    two children consume it).  With ``work_dir`` every stage materializes
-    to parquet + manifest and re-runs resume from completed work.
+    Without ``work_dir`` the plan stays lazy (the extraction, resolution
+    and fused graph pass are persisted since several children consume
+    them).  With ``work_dir`` every stage materializes to parquet +
+    manifest and re-runs resume from completed work; ``annotated`` is then
+    the staged lean extraction.
 
     Input contract: ``transcripts`` has at most one row per
     (conv_id, turn_idx) — the transcripts table's natural key per
-    BASELINE.json input_hint.  The shuffle-free edge merge relies on it
-    (each turn's triples then provably share a partition).
+    BASELINE.json input_hint.  The fused graph pass relies on it (each
+    turn's triples then sit in one extraction row).
     """
     gazetteer = gazetteer or Gazetteer.from_dir(gazetteer_dir)
     gazetteer_bc = spark.sparkContext.broadcast(gazetteer)
@@ -304,19 +308,18 @@ def build_graph(
         source_files = sorted(transcripts.inputFiles())
     except Exception:  # non-file-backed plans (e.g. in-memory test frames)
         source_files = []
-    # "v2": node/edge output schemas gained the writer-ordinal columns
-    # (first_emit / best_*) — the version bump invalidates work_dirs
-    # staged by older code so a resume never unions mixed schemas.
+    # "v3": the annotate stage stages the lean extraction — the version
+    # bump invalidates work_dirs staged by older code so a resume never
+    # appends lean buckets to a table of full-schema ones.
     fingerprint = _fingerprint(
-        "v2", gazetteer_dir, sorted(gazetteer.lookup)[:50], input_token,
+        "v3", gazetteer_dir, sorted(gazetteer.lookup)[:50], input_token,
         input_identity, hashlib.sha256("\n".join(source_files).encode()).hexdigest(),
     )
 
     if work_dir:
-        annotated = _annotate_resumable(
+        annotated = extracted = _annotate_resumable(
             spark, transcripts, gazetteer_bc, work_dir, fingerprint, n_buckets
         )
-        extracted = annotated
     else:
         annotated = annotate_transcripts(transcripts, gazetteer_bc)
         # Only the extraction outputs feed the KG stages; tokens/labels/
@@ -339,6 +342,62 @@ def build_graph(
     return result
 
 
+def _stage(
+    spark: SparkSession,
+    work_dir: str,
+    name: str,
+    fingerprint: str,
+    build: Callable[[], DataFrame],
+    partition_by: Optional[list] = None,
+) -> DataFrame:
+    """``work_dir/name`` read back from parquet, written from ``build()``
+    first unless its manifest is current for ``fingerprint`` (``build`` is
+    only called when the stage must run).  Partition columns are the
+    stages' natural pruning predicates (e.g. narration-chain queries
+    filter pred) and give the lineage manifests per-partition counts."""
+    path = str(Path(work_dir) / name)
+    if not tables.table_is_current(path, fingerprint):
+        tables.write_table(
+            build(), path, stage=name, fingerprint=fingerprint, partition_by=partition_by
+        )
+    return tables.read_table(spark, path)
+
+
+def _materialize_graph(
+    spark: SparkSession,
+    extracted: DataFrame,
+    resolution: DataFrame,
+    resolved_mentions: DataFrame,
+    resolved_triples: DataFrame,
+    unique_turns: bool,
+) -> tuple[DataFrame, DataFrame, list]:
+    """(nodes, edges, cached): the MERGE as the fused pass or the global
+    groupBy.  ``cached`` lists what this call persisted."""
+    # The fused pass needs the resolution as a driver-side dict, so the
+    # strategy is chosen from a COUNT of the resolution (a few bytes to
+    # the driver); the rows themselves are only collected once the count
+    # says they fit — no multi-GB speculative collect at extreme vocab.
+    if unique_turns and resolution.count() <= FUSED_VOCAB_LIMIT:
+        # one Arrow pass over the extraction computes merged edges and
+        # per-batch pre-aggregated vocabulary node candidates; Hadith
+        # nodes are a narrow projection of the extraction — no joins, no
+        # big shuffles (operators/graph.fused_graph_outputs)
+        res_bc = spark.sparkContext.broadcast({
+            (r["text"], r["entity_type"]): (r["canonical_name"], r["confidence"])
+            for r in resolution.collect()
+        })
+        fused = fused_graph_outputs(extracted, res_bc).persist()
+        return nodes_from_combined(fused, extracted), edges_from_combined(fused), [fused]
+    # repeated turns (labeled input) or extreme vocabulary: global groupBy
+    # merges; only the small aggregates are cached, since they are
+    # consumed repeatedly and are cheaper to recompute-from-cache than the
+    # full rows are to columnar-compress
+    doc_index = extracted.select("conv_id", "turn_idx", "doc_id")
+    nodes = build_nodes(resolved_mentions, doc_index, resolved_triples).persist()
+    edges = build_edges(resolved_triples).persist()
+    return nodes, edges, [nodes, edges]
+
+
 def _build_from_annotated(
     spark: SparkSession,
     annotated: DataFrame,
@@ -354,110 +413,51 @@ def _build_from_annotated(
         gazetteer_bc = spark.sparkContext.broadcast(gazetteer)
     if extracted is None:
         extracted = annotated
-    gazetteer_df = gazetteer.to_dataframe(spark)
     persisted: list = []
 
-    mentions = extract_mentions(extracted)
-    triples = extract_triples(extracted)
+    def resolve() -> DataFrame:
+        return build_resolution_table(
+            spark, mentions, triples, gazetteer.to_dataframe(spark), gazetteer_bc,
+            persisted=persisted,
+        )
 
     if work_dir:
-        # partition columns are the stages' natural pruning predicates
-        # (e.g. narration-chain queries filter pred) and give the lineage
-        # manifests their per-partition row counts
-        for name, df, pby in (
-            ("mentions", mentions, ["entity_type"]),
-            ("triples", triples, ["pred"]),
-        ):
-            path = str(Path(work_dir) / name)
-            if not tables.table_is_current(path, fingerprint):
-                tables.write_table(
-                    df, path, stage=name, fingerprint=fingerprint, partition_by=pby
-                )
-        mentions = tables.read_table(spark, str(Path(work_dir) / "mentions"))
-        triples = tables.read_table(spark, str(Path(work_dir) / "triples"))
+        mentions = _stage(spark, work_dir, "mentions", fingerprint,
+                          lambda: extract_mentions(extracted), ["entity_type"])
+        triples = _stage(spark, work_dir, "triples", fingerprint,
+                         lambda: extract_triples(extracted), ["pred"])
+        resolution = _stage(spark, work_dir, "resolution", fingerprint, resolve)
     else:
-        pass  # mentions/triples are cheap explodes of the cached `extracted`
-
-    resolution = build_resolution_table(
-        spark, mentions, triples, gazetteer_df, gazetteer_bc, persisted=persisted
-    )
-    if work_dir:
-        path = str(Path(work_dir) / "resolution")
-        if not tables.table_is_current(path, fingerprint):
-            tables.write_table(resolution, path, stage="resolution", fingerprint=fingerprint)
-        resolution = tables.read_table(spark, path)
-    else:
-        resolution = resolution.persist()
+        # mentions/triples are cheap explodes of the cached `extracted`
+        mentions = extract_mentions(extracted)
+        triples = extract_triples(extracted)
+        resolution = resolve().persist()
         persisted.append(resolution)
 
     resolved_triples = resolve_triples(triples, resolution)
     resolved_mentions = resolve_mentions_table(mentions, resolution)
 
-    doc_index = extracted.select("conv_id", "turn_idx", "doc_id")
+    def graph() -> tuple[DataFrame, DataFrame, list]:
+        return _materialize_graph(
+            spark, extracted, resolution, resolved_mentions, resolved_triples,
+            unique_turns,
+        )
 
-    fused = None
-    if unique_turns and not work_dir:
-        # one Arrow pass over the extraction computes merged edges,
-        # Hadith nodes, and per-batch pre-aggregated vocabulary node
-        # candidates — no cache re-scans, no joins, no big shuffles
-        # (operators/graph.fused_graph_outputs).  Needs the resolution as
-        # a driver-side dict, so the strategy is chosen from a COUNT of
-        # the persisted resolution (a few bytes to the driver); the rows
-        # themselves are only collected once the count says they fit.
-        # Beyond FUSED_VOCAB_LIMIT the relational materialize is the
-        # default — no multi-GB speculative collect at extreme vocab.
-        if resolution.count() <= FUSED_VOCAB_LIMIT:
-            res_dict = {
-                (r["text"], r["entity_type"]): (r["canonical_name"], r["confidence"])
-                for r in resolution.collect()
-            }
-            res_bc = spark.sparkContext.broadcast(res_dict)
-            fused = fused_graph_outputs(extracted, res_bc).persist()
-            persisted.append(fused)
-
-    if fused is not None:
-        edges = edges_from_combined(fused)
-        nodes = nodes_from_combined(fused, extracted)
-    else:
-        if unique_turns:
-            # doc-scoped (Hadith) nodes are a narrow per-turn projection;
-            # only vocabulary-keyed rows go through the global agg, where
-            # map-side partial aggregation collapses them to
-            # ~|vocabulary| rows per partition
-            nodes = build_nodes(
-                resolved_mentions, doc_index, resolved_triples, exclude_doc_scoped=True
-            ).unionByName(build_hadith_nodes_turn_local(extracted))
-        else:
-            nodes = build_nodes(resolved_mentions, doc_index, resolved_triples)
-        if work_dir or not unique_turns:
-            # parquet round-trip (an input split can start mid-turn) or
-            # arbitrary caller input: turn contiguity is not guaranteed ->
-            # global groupBy merge
-            edges = build_edges(resolved_triples)
-        else:
-            edges = build_edges_turn_local(resolved_triples)
-
-    if work_dir:
-        for name, df, pby in (
-            ("nodes", nodes, ["label"]),
-            ("edges", edges, ["pred"]),
-        ):
-            path = str(Path(work_dir) / name)
-            if not tables.table_is_current(path, fingerprint):
-                tables.write_table(
-                    df, path, stage=name, fingerprint=fingerprint, partition_by=pby
-                )
+    if not work_dir:
+        nodes, edges, cached = graph()
+        persisted.extend(cached)
+    elif all(tables.table_is_current(str(Path(work_dir) / name), fingerprint)
+             for name in ("nodes", "edges")):
+        # resume of a finished graph: no strategy count, no resolution collect
         nodes = tables.read_table(spark, str(Path(work_dir) / "nodes"))
         edges = tables.read_table(spark, str(Path(work_dir) / "edges"))
-    elif fused is None:
-        # Aggregated outputs are consumed repeatedly (stats, queries,
-        # counts) and are much cheaper to recompute-from-cache than the
-        # full rows are to columnar-compress; only the small aggregates
-        # get cached.  (The fused path already persists the combined
-        # output; edges/nodes are cheap filters over that cache.)
-        nodes = nodes.persist()
-        edges = edges.persist()
-        persisted.extend([nodes, edges])
+    else:
+        # the graph pass is cached, so writing both tables runs it once
+        fresh_nodes, fresh_edges, cached = graph()
+        nodes = _stage(spark, work_dir, "nodes", fingerprint, lambda: fresh_nodes, ["label"])
+        edges = _stage(spark, work_dir, "edges", fingerprint, lambda: fresh_edges, ["pred"])
+        for df in cached:
+            df.unpersist()
 
     return GraphBuildResult(
         annotated=annotated,

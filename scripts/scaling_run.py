@@ -623,7 +623,7 @@ minutes), not algorithmic inflation.  {conservation}
 Triples emitted: {results[n_large]['triples']:,}; nodes {results[n_large]['nodes']:,};
 edges {results[n_large]['edges']:,}.
 
-## How the plan scales (per-stage evidence, scripts/profile_stages.py)
+## How the plan scales (per-layer evidence: `perfbench/run.py --trace 1`)
 
 The dominant stage — fused annotate (normalize + AC gazetteer + pattern
 NER + extraction, one narrow mapInPandas, zero shuffle) — scales at
@@ -631,17 +631,24 @@ NER + extraction, one narrow mapInPandas, zero shuffle) — scales at
 engineering work went into making everything else either narrow or
 vocabulary-sized:
 
-* edge MERGE: turn-local shuffle-free Arrow pass (the edge key contains
-  the per-turn doc_id, so a global exchange is provably unnecessary).
-  Spark event logs showed the previous global SortAggregate+Exchange
-  inflating per-record CPU ~5x at 16 threads on this single box
-  (shared-LLC/allocator contention — stalled cycles, not more work);
-  on a real multi-node cluster that exchange would scale, but removing
-  it is strictly better there too.
+* graph materialize: every unique-turn build — in memory and the staged
+  `work_dir` job alike — runs ONE fused Arrow pass over the extraction
+  (the resolution rides along as a broadcast dict).  It emits
+  first-writer-wins edges with no exchange (the edge key contains the
+  per-turn doc_id, so a global exchange is provably unnecessary) and
+  per-batch pre-aggregated vocabulary-node candidates.  Spark event logs
+  showed the global SortAggregate+Exchange inflating per-record CPU ~5x
+  at 16 threads on this single box (shared-LLC/allocator contention —
+  stalled cycles, not more work); on a real multi-node cluster that
+  exchange would scale, but removing it is strictly better there too.
 * node MERGE: doc-scoped (Hadith) nodes are a narrow per-row
-  projection; only vocabulary-keyed rows reach the global agg, which
-  map-side partial aggregation collapses to ~|vocabulary| rows per
-  partition before the exchange.
+  projection; only the vocabulary candidates reach a global agg, at
+  ~|vocabulary| rows per Arrow batch.
+* fallback: the global groupBy (`build_nodes` / `build_edges`) serves
+  labeled input that may repeat a turn and resolutions above
+  `FUSED_VOCAB_LIMIT`; map-side partial aggregation collapses its
+  vocabulary-keyed rows to ~|vocabulary| rows per partition before the
+  exchange.
 * resolution: computed over DISTINCT (text, type) strings (vocabulary-
   sized, not corpus-sized); exact = broadcast join, fuzzy = batched
   Arrow UDF, canonicalization = size-adaptive connected components

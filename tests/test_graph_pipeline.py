@@ -115,3 +115,16 @@ def test_count_narrated(spark, resolver_gazetteer, scholar, expected) -> None:
     labels = ["O", "B-SCHOLAR", "I-SCHOLAR", "O", "B-SCHOLAR"]
     result = _build(spark, [("h-count", 0, tokens, labels)], resolver_gazetteer)
     assert Q.count_narrated_hadiths(result.edges, normalize(scholar)) == expected
+
+
+def test_unpersist_releases_every_cache(spark, resolver_gazetteer) -> None:
+    """unpersist() releases the label build's persisted annotate output
+    along with the intermediates the build cached."""
+    from pyspark import StorageLevel
+
+    result = _build(spark, [("h-cache", 0, H_STATS_TOKENS, H_STATS_LABELS)], resolver_gazetteer)
+    result.stats()
+    assert result.annotated.storageLevel != StorageLevel.NONE
+    result.unpersist()
+    assert result.annotated.storageLevel == StorageLevel.NONE
+    assert all(df.storageLevel == StorageLevel.NONE for df in result.persisted)

@@ -52,24 +52,35 @@ def test_determinism_across_partitionings(spark) -> None:
     assert node_set(r1) == node_set(r16)
 
 
-def test_turn_local_edge_merge_matches_global(spark) -> None:
-    """The shuffle-free per-turn edge merge (pipeline path) must produce
-    exactly the global groupBy MERGE result, including merge_count for
-    within-turn duplicate edge keys."""
-    from islamic_ner_spark.operators.graph import build_edges, build_edges_turn_local
+EDGE_COLS = [
+    "pred", "src_label", "src_key", "tgt_label", "tgt_key",
+    "source_hadith", "confidence", "evidence", "merge_count", "first_emit",
+]
+NODE_COLS = [
+    "label", "key", "name_ar", "confidence", "variants", "mention_count",
+    "best_conv", "best_turn", "best_emit", "book_ref", "chapter",
+]
+
+
+def _rows(df, cols):
+    """Sorted multiset of ``df``'s rows over ``cols`` (arrays as tuples)."""
+    return sorted(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in df.select(cols).collect()
+    )
+
+
+def test_fused_edges_match_global(spark) -> None:
+    """The fused edge merge (pipeline path) must produce exactly the
+    global groupBy MERGE result on every column, including merge_count for
+    within-turn duplicate edge keys and the first-writer ordinal."""
+    from islamic_ner_spark.operators.graph import build_edges
 
     transcripts = synthetic_transcripts(spark, 40, turns_per_conv=4, partitions=3)
     result = build_graph(spark, transcripts)
-    resolved = result.resolved_triples
-
-    cols = [
-        "pred", "src_label", "src_key", "tgt_label", "tgt_key",
-        "source_hadith", "confidence", "evidence", "merge_count",
-    ]
-    local_rows = sorted(tuple(r) for r in build_edges_turn_local(resolved).select(cols).collect())
-    global_rows = sorted(tuple(r) for r in build_edges(resolved).select(cols).collect())
-    assert local_rows == global_rows
-    assert len(local_rows) > 0
+    fused_rows = _rows(result.edges, EDGE_COLS)
+    assert fused_rows == _rows(build_edges(result.resolved_triples), EDGE_COLS)
+    assert len(fused_rows) > 0
 
 
 def test_split_node_build_matches_global(spark) -> None:
@@ -95,41 +106,84 @@ def test_split_node_build_matches_global(spark) -> None:
     assert any(r[0] == "Scholar" for r in rows(result.nodes))
 
 
-def test_turn_local_edge_merge_duplicates_first_writer_wins(spark) -> None:
+def test_fused_edge_merge_duplicates_first_writer_wins(spark) -> None:
     """Within-turn duplicate edge keys: first writer (lowest rel_idx) fixes
     confidence/evidence, merge_count counts all writers — matching the
     global groupBy strategy exactly (in-batch first-wins, builder.py:99-123)."""
-    from islamic_ner_spark.operators.graph import build_edges, build_edges_turn_local
-
-    schema = (
-        "doc_id string, conv_id string, turn_idx int, rel_idx int, pred string, "
-        "subj_text string, subj_type string, obj_text string, obj_type string, "
-        "subj_canonical string, obj_canonical string, source_hadith string, "
-        "confidence double, evidence string"
+    from islamic_ner_spark.operators.graph import (
+        build_edges,
+        edges_from_combined,
+        fused_graph_outputs,
     )
-    rows = [
-        # turn c:0 — same edge key twice (different spans/evidence), one other
-        ("c:0", "c", 0, 0, "MENTIONS_CONCEPT", "h", "HADITH_REF", "x", "CONCEPT",
-         "c:0", "X", "c:0", 0.6, "first-ev"),
-        ("c:0", "c", 0, 1, "NARRATED_FROM", "a", "SCHOLAR", "b", "SCHOLAR",
-         "A", "B", "c:0", 0.9, "chain"),
-        ("c:0", "c", 0, 2, "MENTIONS_CONCEPT", "h", "HADITH_REF", "x2", "CONCEPT",
-         "c:0", "X", "c:0", 0.6, "second-ev"),
-        # turn c:1 — same canonicals as c:0 but different source_hadith: no merge
-        ("c:1", "c", 1, 0, "MENTIONS_CONCEPT", "h", "HADITH_REF", "x", "CONCEPT",
-         "c:1", "X", "c:1", 0.6, "other-turn"),
+    from islamic_ner_spark.operators.linking import resolve_triples
+    from islamic_ner_spark.operators.ner import EXTRACTED_SCHEMA
+    from islamic_ner_spark.operators.relations import extract_triples
+
+    def triple(rel_idx, pred, subj, subj_type, obj, obj_type, conf, evidence):
+        return (rel_idx, pred, subj, subj_type, 0, 1, obj, obj_type, 2, 3, conf, evidence)
+
+    extracted = spark.createDataFrame([
+        # turn c:0 — same edge key twice (x and x2 both resolve to X, with
+        # different evidence), one other edge
+        ("c", 0, "c:0", [], [
+            triple(0, "MENTIONS_CONCEPT", "h", "HADITH_REF", "x", "CONCEPT", 0.6, "first-ev"),
+            triple(1, "NARRATED_FROM", "a", "SCHOLAR", "b", "SCHOLAR", 0.9, "chain"),
+            triple(2, "MENTIONS_CONCEPT", "h", "HADITH_REF", "x2", "CONCEPT", 0.6, "second-ev"),
+        ]),
+        # turn c:1 — same canonicals as c:0 but a different source_hadith:
+        # no merge
+        ("c", 1, "c:1", [], [
+            triple(0, "MENTIONS_CONCEPT", "h", "HADITH_REF", "x", "CONCEPT", 0.6, "other-turn"),
+        ]),
+    ], EXTRACTED_SCHEMA).coalesce(1)
+    resolution = {
+        ("x", "CONCEPT"): ("X", 1.0), ("x2", "CONCEPT"): ("X", 0.9),
+        ("a", "SCHOLAR"): ("A", 1.0), ("b", "SCHOLAR"): ("B", 1.0),
+    }
+    fused = fused_graph_outputs(extracted, spark.sparkContext.broadcast(resolution))
+    resolution_df = spark.createDataFrame(
+        [(t, e, c, conf, "exact") for (t, e), (c, conf) in resolution.items()],
+        "text string, entity_type string, canonical_name string, "
+        "confidence double, match_type string",
+    )
+    glob = build_edges(resolve_triples(extract_triples(extracted), resolution_df))
+
+    fused_rows = _rows(edges_from_combined(fused), EDGE_COLS)
+    assert fused_rows == _rows(glob, EDGE_COLS)
+    merged = [r for r in fused_rows if r[8] == 2]
+    assert len(merged) == 1
+    assert merged[0][5:8] == ("c:0", 0.6, "first-ev") and merged[0][9] == 0
+    assert len(fused_rows) == 3
+
+
+def test_global_fallback_matches_fused(spark, monkeypatch) -> None:
+    """Above FUSED_VOCAB_LIMIT a unique-turn build falls back to the global
+    groupBy; its nodes and edges equal the fused build's on every column."""
+    from islamic_ner_spark.plans import pipeline
+
+    transcripts = synthetic_transcripts(spark, 40, turns_per_conv=4, partitions=3)
+    fused = build_graph(spark, transcripts)
+    monkeypatch.setattr(pipeline, "FUSED_VOCAB_LIMIT", 0)
+    fallback = build_graph(spark, transcripts)
+    assert _rows(fallback.edges, EDGE_COLS) == _rows(fused.edges, EDGE_COLS)
+    assert _rows(fallback.nodes, NODE_COLS) == _rows(fused.nodes, NODE_COLS)
+    # the fallback really ran: it caches its aggregates, the fused build
+    # its Arrow pass
+    assert fallback.nodes.is_cached and fallback.edges.is_cached
+    assert not fused.edges.is_cached
+
+
+def test_workdir_build_matches_in_memory(spark, tmp_path) -> None:
+    """The staged job runs the same fused pass over the staged lean
+    extraction: identical node and edge multisets on every column."""
+    transcripts = synthetic_transcripts(spark, 20, turns_per_conv=3, partitions=3)
+    staged = build_graph(spark, transcripts, work_dir=str(tmp_path / "work"), n_buckets=4)
+    in_memory = build_graph(spark, transcripts)
+    assert _rows(staged.edges, EDGE_COLS) == _rows(in_memory.edges, EDGE_COLS)
+    assert _rows(staged.nodes, NODE_COLS) == _rows(in_memory.nodes, NODE_COLS)
+    assert staged.annotated.columns == [
+        "conv_id", "turn_idx", "doc_id", "mentions", "triples",
     ]
-    resolved = spark.createDataFrame(rows, schema).coalesce(1)
-    cols = [
-        "pred", "src_label", "src_key", "tgt_label", "tgt_key",
-        "source_hadith", "confidence", "evidence", "merge_count",
-    ]
-    local = sorted(tuple(r) for r in build_edges_turn_local(resolved).select(cols).collect())
-    glob = sorted(tuple(r) for r in build_edges(resolved).select(cols).collect())
-    assert local == glob
-    merged = [r for r in local if r[-1] == 2]
-    assert len(merged) == 1 and merged[0][7] == "first-ev" and merged[0][5] == "c:0"
-    assert len(local) == 3
 
 
 def test_per_turn_text_equality_invariant(spark) -> None:
