@@ -1,108 +1,112 @@
 """Benchmark: end-to-end KG construction throughput + headline queries.
 
+Usage:
+    python bench.py                        # the full suite, one JSON line
+    python bench.py [--plans DIR] [phase ...]
+
 Runs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS].  Prints exactly ONE JSON line:
+local[$SPARK_GRAFT_CPUS].  Prints exactly ONE JSON line (compact, no
+optional whitespace):
 
     {"metric": ..., "value": <total sec>, "unit": "sec",
      "queries": {name: sec, ...}, "cpu_s": {name: cpu-sec, ...},
-     "load1": {name: loadavg-at-start, ...}, "sf": ...,
+     "foreign_jvm": [name, ...], "contended": ..., "sf": ...,
      "triples": N, "turns": N, "triples_per_sec": X, "turns_per_sec": X}
 
 The headline stage is the full pipeline (synthesized transcripts scaled
 from the sf documents table -> annotate -> triples -> linking -> graph),
 measured as wall time to materialize the edges table; triples/sec is the
 BASELINE.json metric.  Scale knobs via env:
-SPARK_GRAFT_CONVS_PER_DOC (default 6), SPARK_GRAFT_TURNS (default 4).
+SPARK_GRAFT_CONVS_PER_DOC (default 300), SPARK_GRAFT_TURNS (default 4).
+
+Phases, in suite order: kg_build kg_top_narrators kg_pagerank
+kg_triangles kg_components model_ner sft_pairs assemble_convs, then the
+SQL headliners (``SQL_HEADLINERS``).  Naming phases runs only those; a
+graph phase also runs kg_build, which builds the graph it reads.
+``--plans DIR`` also writes ``.explain("formatted")`` of each phase's
+DataFrame to DIR/<phase>.txt, after the phase is timed.  Each phase's
+Spark jobs carry its timing key as job description (Spark UI, event log).
+SPARK_GRAFT_KG_ONLY=1 (no phase named) runs the scaling-leg suite of
+``scripts/scaling_run.py``: kg_build, kg_top_narrators, kg_components.
 
 Noise accounting (round-2 verdict: a 2.9x official-number swing turned
 out to be host interference and was only diagnosable by re-running):
 every timed phase also records the container cgroup CPU-seconds it
-burned, the host 1-min loadavg at its start, and a ``foreign_jvm`` flag
-— a watcher thread polls /proc every 3 s for Spark processes not
-descended from this one (round 3 caught a co-tenant local[16] JVM
-burning the container's quota mid-leg; a phase it overlaps is not
-comparable and the flag says so without re-running).  Wall time that swings
-while cpu_s stays flat is external load, not a code regression — the
-evidence ships in the JSON so a reader never has to re-run to tell.
+burned, the host 1-min loadavg at its start, and whether a foreign Spark
+process overlapped it — a watcher thread polls /proc every 3 s for Spark
+processes not descended from this one (round 3 caught a co-tenant
+local[16] JVM burning the container's quota mid-leg).  Nothing waits on
+this evidence; it ships with the numbers.  Wall time that swings while
+cpu_s stays flat is external load, not a code regression.  The line
+keeps ``cpu_s`` and the list of overlapped phases (``foreign_jvm``,
+empty when clean); the per-phase ``load1`` and ``foreign_jvm`` maps go
+to the gitignored side file ``bench_noise.json`` next to this script,
+so the line stays inside the 2,000 bytes a driver keeps of stdout.
 Two reading caveats: load1 after the first phase includes the decaying
 contribution of OUR OWN just-finished JVM threads (compare against
 `cpus`, not zero), and under heavy host contention the cgroup counter
 itself inflates (vCPU-seconds include hypervisor-stolen slices), so
 cpu_s comparisons are meaningful between runs in similar load windows.
 The short SQL headliners additionally run $SPARK_GRAFT_BEST_OF times
-(default 2) keeping the best wall time; the KG build runs once (it is
-long enough to average noise, and its cpu_s is the ground truth).
+(default 2) keeping the best wall time; every other phase runs once (the
+KG build is long enough to average noise, and its cpu_s is the ground
+truth).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import sys
+import threading
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+REPO = Path(__file__).resolve().parent
+sys.path.insert(0, str(REPO))
 
+from islamic_ner_spark import hostguard  # noqa: E402
 
-# Version of the SPARK_GRAFT_KG_ONLY leg workload (what a scaling leg
-# times + burns CPU on).  Bump whenever the KG_ONLY-mode work changes —
-# scaling_run.py compares accumulated pairs by combined container CPU,
-# and that comparison is only meaningful between legs that ran the same
-# workload.  Rev 1 = kg_build + top_narrators + components (the workload
-# of the committed 0.900 headline pair; the round-4 pagerank/triangle
-# headliners are full-bench only).
-LEG_WORKLOAD_REV = 1
+KG_PHASES = (
+    "kg_build", "kg_top_narrators", "kg_pagerank", "kg_triangles",
+    "kg_components",
+)
+SQL_HEADLINERS = (
+    "lineitem_pricing_summary",
+    "orders_per_nation",
+    "events_sessionize",
+    "dedup_exact",
+    "lang_quality",
+    "embedding_topk",
+    "events_asof",
+    "repetition_filters",
+)
+FULL_SUITE = KG_PHASES + ("model_ner", "sft_pairs", "assemble_convs") + SQL_HEADLINERS
+# The scaling-leg workload: the one every recorded scaling pair since
+# round 3 timed, so leg CPU-s stays comparable with the recorded pairs.
+KG_ONLY_SUITE = ("kg_build", "kg_top_narrators", "kg_components")
+# phases whose timing key in the JSON line carries an ``_e2e`` suffix
+_E2E = {"kg_build", "model_ner", "sft_pairs", "assemble_convs"}
+NOISE_FILE = REPO / "bench_noise.json"
 
-# Committed work-conservation reference for the contended-window
-# self-flag (round-4 verdict next #2).  Calibration (code-review r5
-# made this precise): the quiet-window kg_build PHASE alone burns
-# ~1132-1137 CPU-s at local[4]/local[16] on the 6M-turn workload
-# (round-5 headline pair legs), but the driver's per-round bench runs
-# at local[32], where 32 threads on this box's SMT-shared cores
-# inflate the same phase's CPU time ~15-25% — so the reference is set
-# at the local[16] LEG TOTAL (1318.6: kg_build + top_narrators +
-# components), which empirically matches the quiet local[32] kg_build
-# phase burn.  cpu_s scales linearly with turn count; the 1.5x
-# tolerance then flags genuine stall inflation (BENCH_r04 hit 4502 vs
-# r03's 1868 for byte-identical output; this round's contended full
-# bench hit 2631, flagged, vs the clean window's pass) without
-# false-flagging clean wide runs.
-KG_BUILD_REF_CPU_S = 1320.0
+# Work-conservation reference for the contended-window self-flag: the
+# kg_build_e2e phase burned 912.63 CPU-s for 6M turns at local[32] in
+# the driver's round-6 run (BENCH_r06.json `parsed.cpu_s`), on the
+# current two-crossing build with the annotate memo.  cpu_s scales
+# linearly with turn count; the 1.5x tolerance flags genuine stall
+# inflation (BENCH_r06_frozen.json: 1,788.99 CPU-s, 1.96x, for the
+# same 6M turns) without false-flagging clean wide runs.
+KG_BUILD_REF_CPU_S = 912.63
 KG_BUILD_REF_TURNS = 6_000_000
 CONTENTION_TOLERANCE = 1.5
-
-
-def _container_cpu_ns() -> int | None:
-    """Container-wide CPU accounting (covers the JVM + Python workers;
-    per-process rusage cannot see the unwaited JVM).  v1 cpuacct first,
-    cgroup v2 unified cpu.stat as fallback."""
-    try:
-        return int(open("/sys/fs/cgroup/cpuacct/cpuacct.usage").read())
-    except OSError:
-        pass
-    for path in ("/sys/fs/cgroup/cpu.stat", "/sys/fs/cgroup/unified/cpu.stat"):
-        try:
-            for line in open(path):
-                if line.startswith("usage_usec"):
-                    return int(line.split()[1]) * 1000
-        except OSError:
-            continue
-    return None
-
-
-def _load1() -> float | None:
-    try:
-        return float(open("/proc/loadavg").read().split()[0])
-    except OSError:
-        return None
 
 
 class _PhaseClock:
     """Times phases, pairing wall seconds with cgroup CPU-seconds, the
     host load at phase start, and a foreign-Spark-JVM contamination flag
     (round-3 verdict #7: a leg a co-tenant Spark job overlaps is
-    garbage, and the evidence must ship in the JSON)."""
+    garbage, and the evidence must ship with the numbers)."""
 
     def __init__(self) -> None:
         self.timings: dict[str, float] = {}
@@ -111,15 +115,11 @@ class _PhaseClock:
         self.foreign_jvm: dict[str, bool] = {}
 
     @staticmethod
-    def _watch_foreign(fn):
+    def _watch_foreign(fn) -> bool:
         """Run ``fn`` while a daemon thread polls for foreign Spark
         processes every 3 s (plus one check before and after — a
         transient co-tenant JVM mid-phase must not escape the flag).
         Returns True when any was observed."""
-        import threading
-
-        from islamic_ner_spark import hostguard
-
         hit = threading.Event()
         stop = threading.Event()
 
@@ -143,30 +143,17 @@ class _PhaseClock:
             hit.set()
         return hit.is_set()
 
-    def run(self, name: str, fn) -> None:
-        load = _load1()
-        cpu_before = _container_cpu_ns()
-        start = time.time()
-        foreign = self._watch_foreign(fn)
-        wall = time.time() - start
-        cpu_after = _container_cpu_ns()
-        self.timings[name] = round(wall, 3)
-        self.foreign_jvm[name] = foreign
-        if cpu_before is not None and cpu_after is not None:
-            self.cpu_s[name] = round((cpu_after - cpu_before) / 1e9, 2)
-        if load is not None:
-            self.load1[name] = load
-
-    def run_best_of(self, name: str, fn, repeats: int) -> None:
-        """Best wall time of ``repeats`` runs (keeps that run's cpu_s)."""
+    def run_best_of(self, name: str, fn, repeats: int = 1) -> None:
+        """Best wall time of ``repeats`` runs (keeps that run's cpu_s,
+        load1 and foreign flag)."""
         best: tuple[float, float | None, float | None, bool] | None = None
         for _ in range(max(1, repeats)):
-            load = _load1()
-            cpu_before = _container_cpu_ns()
+            load = hostguard.load1()
+            cpu_before = hostguard.container_cpu_ns()
             start = time.time()
             foreign = self._watch_foreign(fn)
             wall = time.time() - start
-            cpu_after = _container_cpu_ns()
+            cpu_after = hostguard.container_cpu_ns()
             cpu = (
                 (cpu_after - cpu_before) / 1e9
                 if cpu_before is not None and cpu_after is not None
@@ -182,7 +169,43 @@ class _PhaseClock:
         self.foreign_jvm[name] = best[3]
 
 
-def main() -> None:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    parser = argparse.ArgumentParser(
+        description="KG-build throughput and headline-query benchmark"
+    )
+    parser.add_argument(
+        "--plans", type=Path, metavar="DIR",
+        help='also write .explain("formatted") of each phase to DIR/<phase>.txt',
+    )
+    parser.add_argument(
+        "phases", nargs="*", metavar="phase",
+        help=f"phases to run (default: all): {' '.join(FULL_SUITE)}",
+    )
+    args = parser.parse_args(argv)
+    unknown = [p for p in args.phases if p not in FULL_SUITE]
+    if unknown:
+        parser.error(f"unknown phase(s): {' '.join(unknown)}")
+    return args
+
+
+def driver_line(payload: dict) -> str:
+    """The one JSON line, without optional whitespace: with every phase
+    listed in ``foreign_jvm`` an sf0.1 line stays under 1,500 bytes."""
+    return json.dumps(payload, separators=(",", ":"))
+
+
+def dump_plan(plans_dir: Path, name: str, df) -> None:
+    import io
+    from contextlib import redirect_stdout
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    (plans_dir / f"{name}.txt").write_text(buf.getvalue())
+
+
+def main(argv: list[str] | None = None) -> None:
+    args = parse_args(argv)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     # default sized so fixed costs (session, vocabulary resolution) are
@@ -191,51 +214,13 @@ def main() -> None:
     convs_per_doc = int(os.environ.get("SPARK_GRAFT_CONVS_PER_DOC", "300"))
     turns_per_conv = int(os.environ.get("SPARK_GRAFT_TURNS", "4"))
     best_of = int(os.environ.get("SPARK_GRAFT_BEST_OF", "2"))
-
-    # Admission gate (round-4 verdict next #2): BENCH_r04 was measured at
-    # load1 10-36 and showed a phantom 2.6x regression.  Wait (bounded)
-    # for a window with no foreign Spark JVM and load1 at/below the
-    # threshold before the timed phases.  SPARK_GRAFT_ADMIT_WAIT=0
-    # disables; the default wait is short enough not to eat an unattended
-    # driver budget, and an expired wait still proceeds (the per-phase
-    # evidence columns ship regardless).
-    # ONE read of the leg-workload switch: four phase groups hang off it,
-    # and a future phase landing under a stale per-site env lookup would
-    # silently change what a KG_ONLY scaling leg times (the byte-equal
-    # invariant LEG_WORKLOAD_REV protects) — code-review r5
     kg_only = bool(os.environ.get("SPARK_GRAFT_KG_ONLY"))
-    admit_wait = int(os.environ.get("SPARK_GRAFT_ADMIT_WAIT", "300"))
-    admit_load = float(
-        os.environ.get("SPARK_GRAFT_ADMIT_LOAD", str(max(4, cpus // 4)))
-    )
 
-    from islamic_ner_spark import hostguard
-
-    # ONE shared wait budget across all phase groups — an unattended
-    # driver run must never stack 3x the full wait
-    admit_budget = [float(admit_wait)]
-
-    def admission(phase_group: str) -> None:
-        if admit_budget[0] <= 0:
-            return
-        t0 = time.time()
-        # allow_decay_tail: between bench's own phases, load1 is mostly
-        # the EWMA tail of the phase that just finished — admit when the
-        # container is live-idle and load is falling, instead of burning
-        # the shared budget waiting out our own decay (code-review r5)
-        ok = hostguard.wait_for_admission(
-            admit_load,
-            max_wait_s=admit_budget[0],
-            poll_s=10.0,
-            allow_decay_tail=True,
-        )
-        admit_budget[0] -= time.time() - t0
-        if not ok:
-            print(
-                f"[bench] {phase_group}: admission wait expired; "
-                "phases may be contended (see cpu_s/load1 columns)",
-                file=sys.stderr, flush=True,
-            )
+    wanted = set(args.phases or (KG_ONLY_SUITE if kg_only else FULL_SUITE))
+    if wanted & set(KG_PHASES):
+        wanted.add("kg_build")
+    if args.plans is not None:
+        args.plans.mkdir(parents=True, exist_ok=True)
 
     from pyspark.sql import functions as F
 
@@ -250,7 +235,28 @@ def main() -> None:
 
     n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
     n_convs = n_docs * convs_per_doc
+    n_turns = n_convs * turns_per_conv
     clock = _PhaseClock()
+
+    def timed(name: str, fn, plan=None, repeats: int = 1) -> None:
+        """Time phase ``name`` when selected; ``plan`` builds the
+        DataFrame whose plan --plans writes (after the timing)."""
+        if name not in wanted:
+            return
+        key = f"{name}_e2e" if name in _E2E else name
+        # label the phase's Spark jobs (UI / event log) with its key
+        spark.sparkContext.setJobDescription(key)
+        try:
+            clock.run_best_of(key, fn, repeats)
+        finally:
+            spark.sparkContext.setJobDescription(None)
+        print(
+            f"[bench] {key}: {clock.timings[key]}s wall / "
+            f"{clock.cpu_s.get(key, float('nan')):.1f} cpu-s",
+            file=sys.stderr, flush=True,
+        )
+        if args.plans is not None and plan is not None:
+            dump_plan(args.plans, name, plan())
 
     # --- input synthesis (untimed: a real deployment reads an existing
     # transcripts table; what we benchmark is the engine, not the faker) --
@@ -258,12 +264,14 @@ def main() -> None:
     import tempfile
 
     staging = tempfile.mkdtemp(prefix="bench_transcripts_")
-    synthetic_transcripts(
-        spark, n_convs, turns_per_conv=turns_per_conv, partitions=cpus * 4
-    ).write.mode("overwrite").parquet(staging)
+    if wanted & {"kg_build", "sft_pairs", "assemble_convs"}:
+        synthetic_transcripts(
+            spark, n_convs, turns_per_conv=turns_per_conv, partitions=cpus * 4
+        ).write.mode("overwrite").parquet(staging)
 
     # --- headline: end-to-end KG build -----------------------------------
     counts: dict[str, int] = {}
+    graph: dict = {}
 
     def kg_build() -> None:
         transcripts = spark.read.parquet(staging)
@@ -289,40 +297,50 @@ def main() -> None:
         counts["edges"] = int(stats["edges"]["n"])
         counts["triples"] = int(stats["edges"]["m"])
         counts["nodes"] = int(stats["nodes"]["n"])
-        counts["result"] = result  # type: ignore[assignment]
+        graph["result"] = result
 
-    admission("kg_build")
-    clock.run("kg_build_e2e", kg_build)
-    kg_seconds = clock.timings["kg_build_e2e"]
-    n_turns = n_convs * turns_per_conv
-    result = counts.pop("result")
+    timed("kg_build", kg_build)
+    if "kg_build" in wanted and args.plans is not None:
+        for part in ("edges", "nodes"):
+            dump_plan(args.plans, f"kg_build_{part}", getattr(graph["result"], part))
 
     # --- headline queries over the built graph ---------------------------
     from islamic_ner_spark.operators.components import connected_components
     from islamic_ner_spark.operators.graph_analytics import pagerank_integer, triangles
     from islamic_ner_spark.operators.queries import top_narrators
 
-    clock.run("kg_top_narrators", lambda: top_narrators(result.edges, k=20).collect())
+    def edges():
+        return graph["result"].edges
+
+    timed(
+        "kg_top_narrators",
+        lambda: top_narrators(edges(), k=20).collect(),
+        plan=lambda: top_narrators(edges(), k=20),
+    )
     # round-4 analytics headliners: both reduce to the vocabulary-sized
     # scholar digraph first, so their cost is independent of corpus size.
-    # Skipped under SPARK_GRAFT_KG_ONLY: scaling legs select pairs by
-    # combined container CPU, so the leg workload must stay byte-equal
-    # to the committed headline pair's (which predates these two) — the
-    # ~700 extra CPU-s they add would otherwise bar every new pair from
-    # ever winning the min-CPU comparison, regardless of window quality.
-    if not kg_only:
-        clock.run("kg_pagerank", lambda: pagerank_integer(result.edges).collect())
-        clock.run("kg_triangles", lambda: triangles(result.edges).count())
+    # Their plans: pagerank without its eager checkpoint; triangles()
+    # checkpoints eagerly, so its plan capture runs jobs (after timing).
+    timed(
+        "kg_pagerank",
+        lambda: pagerank_integer(edges()).collect(),
+        plan=lambda: pagerank_integer(edges(), checkpoint=False),
+    )
+    timed(
+        "kg_triangles",
+        lambda: triangles(edges()).count(),
+        plan=lambda: triangles(edges()),
+    )
 
     def components() -> None:
-        scholar_pairs = result.edges.where(
+        scholar_pairs = edges().where(
             (F.col("pred") == "NARRATED_FROM")
             & (F.col("src_label") == "Scholar")
             & (F.col("tgt_label") == "Scholar")
         ).select(F.col("src_key").alias("src"), F.col("tgt_key").alias("dst"))
         connected_components(scholar_pairs).groupBy("component").count().collect()
 
-    clock.run("kg_components", components)
+    timed("kg_components", components)
 
     # --- model-NER end-to-end (round-4 verdict next #5): the reference's
     # flagship bottleneck (1.55 docs/s single-threaded on CPU,
@@ -334,7 +352,7 @@ def main() -> None:
     # SPARK_GRAFT_MODEL_REPL scales the doc count (default 10x =>
     # 50k docs at sf0.1).
     model_docs = 0
-    if not kg_only:
+    if "model_ner" in wanted:
         from islamic_ner_spark.operators.model_ner import model_ner_labels
 
         model_repl = int(os.environ.get("SPARK_GRAFT_MODEL_REPL", "10"))
@@ -352,69 +370,55 @@ def main() -> None:
             .repartition(cpus * 2)
         )
 
-        def model_ner() -> None:
-            model_ner_labels(model_input, None, encoder="numpy").select(
+        def model_ner():
+            return model_ner_labels(model_input, None, encoder="numpy").select(
                 F.sum(F.size("labels"))
-            ).collect()
+            )
 
-        admission("model_ner")
-        clock.run("model_ner_e2e", model_ner)
+        timed("model_ner", lambda: model_ner().collect(), plan=model_ner)
 
     # --- transcript training-data ops over the FULL synthetic corpus ------
-    # (outside KG_ONLY so scaling-leg workloads stay byte-identical)
-    if not kg_only:
+    if wanted & {"sft_pairs", "assemble_convs"}:
         from islamic_ner_spark.operators.sft import (
             assemble_conversations,
             sft_pairs,
         )
 
-        admission("transcript_ops")
         corpus = spark.read.parquet(staging)
 
-        def run_sft_pairs() -> None:
+        def sft_sink():
             # aggregate sink that touches every output column, so column
             # pruning cannot skip the prompt/response window computation
-            sft_pairs(corpus).select(
+            return sft_pairs(corpus).select(
                 F.count(F.lit(1)),
                 F.sum(F.length("prompt") + F.length("response")),
                 F.sum("n_trace_tool_turns"),
-            ).collect()
+            )
 
-        clock.run("sft_pairs_e2e", run_sft_pairs)
-
-        def run_assemble() -> None:
-            assemble_conversations(corpus).select(
+        def assemble_sink():
+            return assemble_conversations(corpus).select(
                 F.count(F.lit(1)), F.sum(F.length("conversation"))
-            ).collect()
+            )
 
-        clock.run("assemble_convs_e2e", run_assemble)
+        timed("sft_pairs", lambda: sft_sink().collect(), plan=sft_sink)
+        timed("assemble_convs", lambda: assemble_sink().collect(), plan=assemble_sink)
 
     # --- relational / text / similarity headliners ------------------------
-    if not kg_only:
-        admission("sql_headliners")
-        for name in (
-            "lineitem_pricing_summary",
-            "orders_per_nation",
-            "events_sessionize",
-            "dedup_exact",
-            "lang_quality",
-            "embedding_topk",
-            "events_asof",
-            "repetition_filters",
-        ):
-            clock.run_best_of(
-                name,
-                lambda name=name: dq.QUERIES[name](spark, sf_dir).collect(),
-                best_of,
-            )
+    for name in SQL_HEADLINERS:
+        timed(
+            name,
+            lambda name=name: dq.QUERIES[name](spark, sf_dir).collect(),
+            plan=lambda name=name: dq.QUERIES[name](spark, sf_dir),
+            repeats=best_of,
+        )
 
     shutil.rmtree(staging, ignore_errors=True)
     total = round(sum(clock.timings.values()), 3)
 
     # contended-window self-flag: cpu_s is the steal-immune
     # work-conservation signal, so comparing the measured kg_build burn
-    # against the committed quiet-window reference (scaled by turn
-    # count) says directly whether this run's walls are trustworthy.
+    # against the committed reference (scaled by turn count) says
+    # directly whether this run's walls are trustworthy.
     contended = None
     kg_cpu = clock.cpu_s.get("kg_build_e2e")
     ref_cpu = KG_BUILD_REF_CPU_S * (n_turns / KG_BUILD_REF_TURNS)
@@ -426,20 +430,22 @@ def main() -> None:
         if contended:
             print(
                 f"[bench] CONTENDED WINDOW: kg_build_e2e burned {kg_cpu:.0f} "
-                f"CPU-s vs committed quiet-window reference {ref_cpu:.0f} "
+                f"CPU-s vs committed reference {ref_cpu:.0f} "
                 f"(>{CONTENTION_TOLERANCE}x) — walls in this run are "
                 "inflated by host interference, compare cpu_s not wall",
                 file=sys.stderr, flush=True,
             )
 
+    NOISE_FILE.write_text(
+        json.dumps({"load1": clock.load1, "foreign_jvm": clock.foreign_jvm}, indent=1)
+    )
     payload = {
         "metric": "kg-build e2e + headline query suite wall time",
         "value": total,
         "unit": "sec",
         "queries": clock.timings,
         "cpu_s": clock.cpu_s,
-        "load1": clock.load1,
-        "foreign_jvm": clock.foreign_jvm,
+        "foreign_jvm": [name for name, hit in clock.foreign_jvm.items() if hit],
         "contended": contended,
         "kg_build_ref_cpu_s": round(ref_cpu, 1),
         "best_of_sql": best_of,
@@ -451,25 +457,22 @@ def main() -> None:
         "queries_total": len(dq.QUERIES),
         "oracles_total": len(dq.ORACLE_SQL),
         "turns": n_turns,
-        "triples": counts["triples"],
-        "edges": counts["edges"],
-        "nodes": counts["nodes"],
-        "turns_per_sec": round(n_turns / kg_seconds, 1),
-        "triples_per_sec": round(counts["triples"] / kg_seconds, 1),
     }
-    if model_docs and "model_ner_e2e" in clock.timings:
+    if counts:
+        kg_seconds = clock.timings["kg_build_e2e"]
+        payload.update(
+            triples=counts["triples"],
+            edges=counts["edges"],
+            nodes=counts["nodes"],
+            turns_per_sec=round(n_turns / kg_seconds, 1),
+            triples_per_sec=round(counts["triples"] / kg_seconds, 1),
+        )
+    if model_docs:
         payload["model_docs"] = model_docs
         payload["model_docs_per_sec"] = round(
             model_docs / clock.timings["model_ner_e2e"], 1
         )
-    if kg_only:
-        # stamped ONLY on KG_ONLY legs: scaling_run compares accumulated
-        # pairs by combined container CPU, and that comparison is only
-        # meaningful between legs that timed the identical KG_ONLY
-        # workload — a full-bench result seeded into the history must
-        # never pass for CPU-comparable (ADVICE r4, bench.py:296)
-        payload["leg_workload_rev"] = LEG_WORKLOAD_REV
-    print(json.dumps(payload))
+    print(driver_line(payload))
 
 
 if __name__ == "__main__":

@@ -1,90 +1,23 @@
-"""One-shot post-wipe recovery of the gitignored ``.stage/`` directory
-(round-4 verdict next #7).
+"""One-shot post-wipe rebuild of the staged oracle parquet in the
+gitignored ``.stage/`` directory (round-4 verdict next #7).
 
-Sessions wipe ``.stage/``, which holds two kinds of state:
-
-1. **Staged oracle parquet** (plans/staging.py) — rebuilt lazily by the
-   first oracle run, but that puts the whole multi-minute build inside
-   the driver's correctness window.  This script rebuilds every group
-   up front for the given sf dir so the subsequent harness run is warm.
-2. **The scaling pair history** (``.stage/scaling_best.json``) —
-   scaling_run.py accumulates guarded pairs through
-   ``SPARK_GRAFT_SEED_RESULTS``; without the seed it rewrites BENCH.md
-   from only the new (often contended) pairs.  The committed headline
-   pair from BENCH.md's table is reconstructed here verbatim, with the
-   exact ``_workload`` fingerprint (a wrong fingerprint silently mixes
-   incomparable workloads) and ``leg_workload_rev`` stamp (only same-rev
-   legs may compete on combined CPU).
+Sessions wipe ``.stage/``.  plans/staging.py rebuilds each group lazily
+on the first oracle run, but that puts the whole multi-minute build
+inside the driver's correctness window.  This script rebuilds every
+group up front for the given sf dir so the subsequent harness run is
+warm.
 
 Usage: python scripts/rebuild_stage.py [sf_dir]   (default sf0.01)
 """
 
 from __future__ import annotations
 
-import json
 import sys
 import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
-
-# The committed BENCH.md headline pair (guarded-clean, freshly measured
-# in round 5; leg CPU columns 5.8% apart, the kg-build phase itself
-# 0.5% apart): re-seeded verbatim so the min-combined-CPU selection
-# rule can keep preferring it over pairs measured in contended windows.
-# Numbers MUST mirror BENCH.md's table — update both together.
-_HEADLINE_WORKLOAD = {
-    "sf_dir": "/root/testdata/sf0.1",
-    "convs_per_doc": 300,
-    "turns": 4,
-    "n_small": 4,
-}
-
-
-def _leg(cpus: int, wall: float, tps: float, trps: float, cpu: float) -> dict:
-    return {
-        "cpus": cpus,
-        "turns": 6_000_000,
-        "sf": 0.1,
-        "turns_per_sec": tps,
-        "triples_per_sec": trps,
-        "triples": 9_949_272,
-        "nodes": 6_000_044,
-        "edges": 9_949_272,
-        "queries": {"kg_build_e2e": wall},
-        "cpu_total_s": cpu,
-        "guarded": True,
-        "contaminated": False,
-        "loud": False,
-        "foreign_jvm_episodes": 0,
-        "leg_workload_rev": 1,
-    }
-
-
-def reseed_scaling_history(force: bool = False) -> Path:
-    """Write the committed headline pair into .stage/scaling_best.json
-    (no-op when a history already exists, unless force)."""
-    out = REPO / ".stage" / "scaling_best.json"
-    if out.exists() and not force:
-        print(f"seed exists, keeping: {out}")
-        return out
-    small = _leg(4, 285.014, 21051.6, 34908.0, 1256.4)
-    large = _leg(16, 79.994, 75005.6, 124375.2, 1329.5)
-    out.parent.mkdir(parents=True, exist_ok=True)
-    out.write_text(
-        json.dumps(
-            {
-                "4": small,
-                "16": large,
-                "_workload": _HEADLINE_WORKLOAD,
-                "_pairs": [{"small": small, "large": large}],
-            },
-            indent=1,
-        )
-    )
-    print(f"re-seeded committed headline pair -> {out}")
-    return out
 
 
 def rebuild_groups(sf_dir: str) -> None:
@@ -114,7 +47,6 @@ def rebuild_groups(sf_dir: str) -> None:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     t0 = time.time()
-    reseed_scaling_history()
     rebuild_groups(sf_dir)
     print(f"stage rebuilt for {sf_dir} in {time.time() - t0:.1f}s")
     return 0

@@ -1,49 +1,50 @@
-"""Two-cluster-size scaling evidence: local[8] vs local[32].
+"""Two-cluster-size scaling evidence: local[N] vs local[4N].
 
 The north rule requires throughput scaling efficiency >= 0.8 from N to 4N
-executors; with no real cluster in the sandbox, the same KG-build job runs
-at two parallelism levels on identical input (seeded generator => byte-
-identical) in separate JVMs, and efficiency = (T_4N / T_N) / 4.
+executors; with no real cluster in the sandbox, the same KG-build job
+(``bench.py`` with SPARK_GRAFT_KG_ONLY=1) runs at two parallelism levels
+on identical input (seeded generator => byte-identical) in separate
+JVMs, and a pair's efficiency = (triples/s at 4N / triples/s at N) / 4.
 
-Writes results to BENCH.md and prints a JSON summary.
+``repeats`` pairs run with their legs alternating (N, 4N, N, 4N, ...),
+so the host's minutes-scale load swings hit both sizes alike.  Each leg
+is taskset-pinned to its core count, and an in-flight monitor records
+whether a foreign Spark process overlapped it plus the container CPU it
+burned.  Nothing waits for a quiet window or retries a leg; a leg only
+waits (at most 60 s) for the previous leg's exiting Spark processes.
+The statistic is fixed in advance: the median (and quartiles) of the
+efficiencies of the pairs no foreign Spark process overlapped; every
+pair is reported.
+
+Writes BENCH.md and prints a JSON summary.
 
 Usage: python scripts/scaling_run.py [convs_per_doc] [turns]
+Env: SPARK_GRAFT_SCALE_N (default 4), SPARK_GRAFT_SCALE_REPEATS
+(default 2), SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import subprocess
 import sys
+import tempfile
 import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 sys.path.insert(0, str(REPO))
 
-from bench import LEG_WORKLOAD_REV  # noqa: E402
 from islamic_ner_spark import hostguard  # noqa: E402
 
-
-def machine_speed_probe() -> float:
-    """Effective single-core speed right now: seconds to blake2b-hash a
-    fixed 256 MiB of zeros (strictly single-threaded, deterministic
-    work).  External host contention slows this probe the same way it
-    slows a leg, so two legs whose probes differ materially ran on
-    effectively different machines — the pair's ratio is then a
-    machine-speed artifact, not scaling.  ~0.5-1.5 s per call."""
-    import hashlib
-
-    buf = bytes(64 * 1024 * 1024)
-    t0 = time.perf_counter()
-    h = hashlib.blake2b()
-    for _ in range(4):
-        h.update(buf)
-    return round(time.perf_counter() - t0, 3)
+GATE = 0.8
 
 
 def run_bench(cpus: int, convs_per_doc: int, turns: int, sf_dir: str) -> dict:
+    """One leg: bench.py's KG_ONLY suite pinned to ``cpus`` cores, with
+    the leg's container CPU and foreign-Spark evidence attached."""
     env = dict(os.environ)
     env.update(
         {
@@ -52,13 +53,6 @@ def run_bench(cpus: int, convs_per_doc: int, turns: int, sf_dir: str) -> dict:
             "SPARK_GRAFT_CONVS_PER_DOC": str(convs_per_doc),
             "SPARK_GRAFT_TURNS": str(turns),
             "SPARK_GRAFT_KG_ONLY": "1",
-            # the PARENT gate admits each leg; the child must not run its
-            # own default 300s admission wait — a foreign JVM appearing
-            # and exiting during that in-child wait would be seen by our
-            # contamination monitor (which cannot tell the child's wait
-            # from its timed phases) and burn a full leg retry on a leg
-            # whose measured window was actually clean (code-review r5)
-            "SPARK_GRAFT_ADMIT_WAIT": "0",
         }
     )
     # Pin the whole process tree (JVM threads + Python UDF workers) to
@@ -68,31 +62,17 @@ def run_bench(cpus: int, convs_per_doc: int, turns: int, sf_dir: str) -> dict:
     cmd = [sys.executable, str(REPO / "bench.py")]
     if os.path.exists("/usr/bin/taskset"):
         cmd = ["/usr/bin/taskset", "-c", f"0-{cpus - 1}"] + cmd
-    def _container_cpu_ns() -> int | None:
-        # container-wide CPU accounting (the unwaited JVM's rusage never
-        # reaches this process, so getrusage cannot see it); v1 cpuacct
-        # first, cgroup v2 unified cpu.stat as fallback
-        try:
-            return int(open("/sys/fs/cgroup/cpuacct/cpuacct.usage").read())
-        except OSError:
-            pass
-        for path in ("/sys/fs/cgroup/cpu.stat", "/sys/fs/cgroup/unified/cpu.stat"):
-            try:
-                for line in open(path):
-                    if line.startswith("usage_usec"):
-                        return int(line.split()[1]) * 1000
-            except OSError:
-                continue
-        return None
 
-    import tempfile as _tempfile
-
-    probe_before = machine_speed_probe()
-    before = _container_cpu_ns()
+    # drain (<= 60 s) the previous leg's JVM and Python daemons: bench.py
+    # exits before they do, and reparented to init they read as foreign
+    deadline = time.time() + 60
+    while hostguard.spark_processes() and time.time() < deadline:
+        time.sleep(1)
+    before = hostguard.container_cpu_ns()
     # child stdout goes to a FILE, not a pipe: the monitor loop below
     # does not drain pipes, and a leg whose Spark output exceeded the
     # pipe buffer would block forever and die as a bogus timeout
-    with _tempfile.TemporaryFile(mode="w+t") as out_file:
+    with tempfile.TemporaryFile(mode="w+t") as out_file:
         proc = subprocess.Popen(
             cmd,
             env=env,
@@ -103,31 +83,26 @@ def run_bench(cpus: int, convs_per_doc: int, turns: int, sf_dir: str) -> dict:
         )
         # in-flight contamination monitor (round-3 verdict next #1): poll
         # for Spark processes not descended from THIS script (the leg's
-        # own JVM and workers are children of `proc`, hence of us) and
-        # for host-load spikes.  A leg any foreign JVM overlaps burns the
-        # same container CPU quota/cores and is garbage — flag it so the
-        # caller can retry.
+        # own JVM and workers are children of `proc`, hence of us).  A
+        # leg any foreign JVM overlaps shared the container's CPU quota
+        # and cores; the flag keeps its pair out of the median.
         started = time.time()
-        episodes = 0
         foreign_seen: list[str] = []
         max_load = 0.0
         while proc.poll() is None:
             if time.time() - started > 3600:
                 proc.kill()
                 raise TimeoutError(f"leg local[{cpus}] exceeded 3600s")
-            foreign = hostguard.foreign_spark_processes()
-            if foreign:
-                episodes += 1
-                for _pid, cmdline in foreign[:2]:
-                    if cmdline not in foreign_seen:
-                        foreign_seen.append(cmdline)
+            for _pid, cmdline in hostguard.foreign_spark_processes()[:2]:
+                if cmdline not in foreign_seen:
+                    foreign_seen.append(cmdline)
             load_now = hostguard.load1()
             if load_now is not None:
                 max_load = max(max_load, load_now)
             time.sleep(5)
         out_file.seek(0)
         out_text = out_file.read()
-    after = _container_cpu_ns()
+    after = hostguard.container_cpu_ns()
     line = [l for l in out_text.strip().splitlines() if l.startswith("{")][-1]
     run = json.loads(line)
     # total CPU-seconds the container burned during the leg (JVM + Python
@@ -138,24 +113,46 @@ def run_bench(cpus: int, convs_per_doc: int, turns: int, sf_dir: str) -> dict:
     # not algorithmic inflation
     if before is not None and after is not None:
         run["cpu_total_s"] = round((after - before) / 1e9, 1)
-    run["guarded"] = True  # leg ran under the admission gate + monitor
-    run["contaminated"] = episodes > 0
-    run["foreign_jvm_episodes"] = episodes
-    if foreign_seen:
-        run["foreign_jvm_cmds"] = foreign_seen[:3]
+    run["cpus"] = cpus
+    run["contaminated"] = bool(foreign_seen)
+    run["foreign_jvm_cmds"] = foreign_seen[:3]
     run["max_load1_during"] = round(max_load, 1)
-    # bracket the leg with speed probes; the SLOWER one is the leg's
-    # effective-machine-speed stamp (contention mid-leg shows up in at
-    # least one bracket for the minutes-scale swings seen here)
-    run["speed_probe_s"] = max(probe_before, machine_speed_probe())
     return run
 
 
-def wait_for_admission(load_threshold: float, max_wait_s: int = 900) -> None:
-    """Shared admission gate — see islamic_ner_spark.hostguard
-    (factored out round 5 so bench.py's per-round driver runs get the
-    same quiet-window guarantee as scaling legs)."""
-    hostguard.wait_for_admission(load_threshold, max_wait_s)
+def pair_efficiency(pair: dict) -> float:
+    return round(
+        pair["large"]["triples_per_sec"] / pair["small"]["triples_per_sec"] / 4.0, 3
+    )
+
+
+def pair_clean(pair: dict) -> bool:
+    """No foreign Spark process overlapped either leg."""
+    return not (pair["small"]["contaminated"] or pair["large"]["contaminated"])
+
+
+def scaling_report(pairs: list[dict]) -> dict:
+    """Every pair's efficiency, plus the median and quartiles over the
+    clean pairs; the gate is judged on that median alone."""
+    effs = [pair_efficiency(p) for p in pairs]
+    clean = [e for p, e in zip(pairs, effs) if pair_clean(p)]
+    median = quartiles = None
+    if clean:
+        median = round(statistics.median(clean), 3)
+        if len(clean) > 1:
+            q1, _, q3 = statistics.quantiles(clean, n=4, method="inclusive")
+        else:
+            q1 = q3 = clean[0]
+        quartiles = [round(q1, 3), round(q3, 3)]
+    return {
+        "pair_efficiency": effs,
+        "pair_clean": [pair_clean(p) for p in pairs],
+        "n_pairs": len(pairs),
+        "n_clean": len(clean),
+        "median": median,
+        "quartiles": quartiles,
+        "gate_met": median is not None and median >= GATE,
+    }
 
 
 def main() -> None:
@@ -165,372 +162,55 @@ def main() -> None:
     n_large = n_small * 4
     repeats = int(os.environ.get("SPARK_GRAFT_SCALE_REPEATS", "2"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # default 4: with the in-child bench admission disabled (the child
-    # sets ADMIT_WAIT=0 so the leg monitor never watches a wait), the
-    # parent must own the quiet-window gate; 0 disables explicitly
-    quiet_load = float(os.environ.get("SPARK_GRAFT_QUIET_LOAD", "4") or 0)
-    # mid-leg load ceiling, WIDTH-AWARE: a leg whose 1-min loadavg hits
-    # (its own core count + headroom) while running is retried like a
-    # contaminated one (0 = disabled).  The ceiling must scale with the
-    # leg: a pinned local[16] leg's OWN load is ~16-18 (JVM executor
-    # threads + Python workers oversubscribe the 16 cores), so an
-    # absolute ceiling that is safe for the 4-wide leg self-flags clean
-    # 16-wide legs.  SPARK_GRAFT_LOUD_LOAD (absolute, legacy) is still
-    # honored as a floor on the ceiling when set.
-    loud_headroom = float(os.environ.get("SPARK_GRAFT_LOUD_HEADROOM", "0") or 0)
-    loud_load_abs = float(os.environ.get("SPARK_GRAFT_LOUD_LOAD", "0") or 0)
 
-    def loud_ceiling(cpus: int) -> float:
-        if loud_headroom:
-            return max(cpus + loud_headroom, loud_load_abs)
-        return loud_load_abs  # 0 = disabled
-
-    workload = {
-        "sf_dir": sf_dir, "convs_per_doc": convs_per_doc,
-        "turns": turns, "n_small": n_small,
-    }
-    results = {}
     pairs: list[dict] = []
-    # seed with a previous session's legs so opportunistic re-runs (e.g.
-    # retries during quiet host windows) accumulate evidence.  The seed
-    # carries a workload fingerprint: legs measured on a different
-    # input/shape must never enter the comparison.
-    seed_path = os.environ.get("SPARK_GRAFT_SEED_RESULTS")
-    if seed_path and Path(seed_path).exists():
-        seed = json.loads(Path(seed_path).read_text())
-        if seed.get("_workload", workload) == workload:
-            for cpus_str, run in seed.items():
-                if not cpus_str.startswith("_"):
-                    results[int(cpus_str)] = run
-            pairs = list(seed.get("_pairs", []))
-            # apply the CURRENT loud ceiling uniformly to seeded history:
-            # legs measured before the mid-leg spike guard existed (or
-            # under a different ceiling) carry their recorded
-            # max_load1_during, so the flag is re-derivable — with each
-            # leg's own width (small legs = n_small cores, large legs =
-            # n_large), since the ceiling is width-aware
-            for pair in pairs:
-                for leg, width in (
-                    (pair.get("small"), n_small),
-                    (pair.get("large"), n_large),
-                ):
-                    ceil = loud_ceiling(width)
-                    if ceil and leg and leg.get("max_load1_during") is not None:
-                        leg["loud"] = bool(leg["max_load1_during"] >= ceil)
-        else:
-            print(f"seed workload mismatch ({seed.get('_workload')}); ignoring seed")
-
-    # legs alternate (N, 4N, N, 4N, ...) so the host's oscillating
-    # external load (period ~minutes) hits both cluster sizes fairly;
-    # each leg waits for admission (no foreign Spark JVM + load floor)
-    # and retries when the in-flight monitor catches contamination
-    leg_retries = int(os.environ.get("SPARK_GRAFT_LEG_RETRIES", "2"))
     for attempt in range(repeats):
-        attempt_runs: dict[int, dict] = {}
-        for cpus in (n_small, n_large):
-            for leg_try in range(leg_retries + 1):
-                wait_for_admission(quiet_load)
-                started = time.time()
-                loadavg = hostguard.load1()
-                run = run_bench(cpus, convs_per_doc, turns, sf_dir)
-                print(
-                    f"local[{cpus}] run {attempt + 1}/{repeats}: "
-                    f"kg_build={run['queries']['kg_build_e2e']}s "
-                    f"turns/s={run['turns_per_sec']} "
-                    f"triples/s={run['triples_per_sec']} "
-                    f"cpu_total={run.get('cpu_total_s', '?')}s "
-                    f"(wall {time.time()-started:.0f}s, loadavg {loadavg} at "
-                    f"start, max {run['max_load1_during']} during, "
-                    f"contaminated={run['contaminated']})",
-                    flush=True,
-                )
-                # a leg is unusable when a foreign JVM overlapped it OR
-                # the host load spiked mid-leg past the leg's loud
-                # ceiling (admission only checks load at START; the
-                # round-4 0.486 artifact was a leg admitted at load 3.9
-                # that ran into a 14.7 spike) — both retry the same way
-                ceil = loud_ceiling(cpus)
-                loud = bool(ceil and run["max_load1_during"] >= ceil)
-                run["loud"] = loud
-                run["cpus"] = cpus
-                if not run["contaminated"] and not loud:
-                    break
-                reason = (
-                    f"foreign Spark JVM overlapped the leg "
-                    f"({run.get('foreign_jvm_cmds')})"
-                    if run["contaminated"]
-                    else f"host load spiked to {run['max_load1_during']} "
-                    f"(>= loud ceiling {loud_ceiling(cpus)}) mid-leg"
-                )
-                print(
-                    f"  {reason}; "
-                    + ("retrying" if leg_try < leg_retries else
-                       "retries exhausted — keeping the leg (flagged)"),
-                    flush=True,
-                )
-            attempt_runs[cpus] = run
-            best = results.get(cpus)
-            if best is None or run["queries"]["kg_build_e2e"] < best["queries"]["kg_build_e2e"]:
-                results[cpus] = run
-        if len(attempt_runs) == 2:
-            # "fresh" marks pairs measured by THIS invocation (vs seeded
-            # history): a fresh winning pair may carry the headline even
-            # before a second comparable-CPU pair exists (ADVICE r4)
-            pairs.append(
-                {
-                    "small": attempt_runs[n_small],
-                    "large": attempt_runs[n_large],
-                    "fresh": True,
-                }
+        pair = {}
+        for side, cpus in (("small", n_small), ("large", n_large)):
+            run = run_bench(cpus, convs_per_doc, turns, sf_dir)
+            print(
+                f"local[{cpus}] pair {attempt + 1}/{repeats}: "
+                f"kg_build={run['queries']['kg_build_e2e']}s "
+                f"triples/s={run['triples_per_sec']} "
+                f"cpu_total={run.get('cpu_total_s', '?')}s "
+                f"(max load1 {run['max_load1_during']} during, "
+                f"contaminated={run['contaminated']})",
+                flush=True,
             )
+            pair[side] = run
+        pairs.append(pair)
 
-    # --- reported pair selection -----------------------------------------
-    # The efficiency RATIO is only meaningful when both legs saw the same
-    # machine speed, so the report uses legs from ONE invocation (adjacent
-    # in time), picking the pair with the lowest combined CPU burn — the
-    # run least inflated by host contention.  (Mixing each side's fastest
-    # leg across different windows compares different machine speeds:
-    # noise can push that ratio either way, so it estimates nothing.)
-    def pair_cost(pair: dict) -> float:
-        cpu_s = pair["small"].get("cpu_total_s")
-        cpu_l = pair["large"].get("cpu_total_s")
-        if cpu_s and cpu_l:
-            return cpu_s + cpu_l
-        return (
-            pair["small"]["queries"]["kg_build_e2e"] * n_small
-            + pair["large"]["queries"]["kg_build_e2e"] * n_large
-        )
-
-    pair_effs = sorted(
-        round(
-            (p["large"]["triples_per_sec"] / p["small"]["triples_per_sec"]) / 4.0, 3
-        )
-        for p in pairs
-    )
-    if not pairs:
-        # per-leg bests from different load windows are a cross-window
-        # ratio — exactly what the pair protocol exists to avoid — so
-        # refuse rather than report a number that estimates nothing
-        raise SystemExit(
-            "no complete same-invocation pair (crashed leg, repeats=0, or "
-            "a seed file without _pairs) — re-run with repeats >= 1"
-        )
-
-    # guarded-clean pairs (both legs ran under the admission gate +
-    # in-flight monitor and saw no foreign JVM) outrank everything:
-    # among them the min-combined-CPU rule picks the least host-inflated
-    # window.  Unguarded/contaminated history is the fallback only.
-    def pair_clean(pair: dict) -> bool:
-        # same-workload-rev is part of cleanliness: the min-combined-CPU
-        # selection is only meaningful between legs that timed the SAME
-        # KG_ONLY workload (bench.LEG_WORKLOAD_REV stamps it; legs from
-        # a different/heavier workload revision stay in the history but
-        # never compete on CPU)
-        return bool(
-            pair["small"].get("guarded")
-            and pair["large"].get("guarded")
-            and not pair["small"].get("contaminated")
-            and not pair["large"].get("contaminated")
-            and not pair["small"].get("loud")
-            and not pair["large"].get("loud")
-            and pair["small"].get("leg_workload_rev") == LEG_WORKLOAD_REV
-            and pair["large"].get("leg_workload_rev") == LEG_WORKLOAD_REV
-        )
-
-    guarded_pool = [p for p in pairs if pair_clean(p)]
-    chosen = min(guarded_pool or pairs, key=pair_cost)
-    # contention inflates container CPU (same work, more stalled/spun
-    # cycles), so combined CPU relative to the best-known pair is a
-    # measurement-driven window-quality signal that load heuristics
-    # cannot fake in either direction: "comparable" pairs burned within
-    # 25% of the minimum combined CPU
-    min_cost = pair_cost(chosen)
-
-    def same_speed(pair: dict) -> bool:
-        # a pair whose bracketing speed probes differ by >15% ran its
-        # two legs on effectively different machines — its ratio is a
-        # cross-speed artifact either way (legs without probes predate
-        # the instrumentation and pass; their CPU columns still gate)
-        ps = pair["small"].get("speed_probe_s")
-        pl = pair["large"].get("speed_probe_s")
-        if not ps or not pl:
-            return True
-        return abs(pl - ps) / min(ps, pl) <= 0.15
-
-    comparable = [
-        p
-        for p in (guarded_pool or pairs)
-        if pair_cost(p) <= 1.25 * min_cost and same_speed(p)
-    ]
-    comparable_effs = sorted(
-        round(
-            (p["large"]["triples_per_sec"] / p["small"]["triples_per_sec"]) / 4.0, 3
-        )
-        for p in comparable
-    )
-    headline_guarded = pair_clean(chosen)
-    # guarded-clean distribution, always reported alongside the headline
-    # (ADVICE r4: a min-CPU-selected single pair overstates confidence);
-    # the single headline number is "established" only when >= 2
-    # comparable-CPU pairs corroborate it OR the winning pair was
-    # freshly measured by this invocation — otherwise it is labeled
-    # provisional and the median/range carry the claim
-    import statistics
-
-    guarded_effs = sorted(
-        round(
-            (p["large"]["triples_per_sec"] / p["small"]["triples_per_sec"]) / 4.0, 3
-        )
-        for p in guarded_pool
-    )
-    guarded_median = (
-        round(statistics.median(guarded_effs), 3) if guarded_effs else None
-    )
-    headline_established = len(comparable) >= 2 or bool(chosen.get("fresh"))
-    results = {n_small: chosen["small"], n_large: chosen["large"]}
-
-    tp8 = results[n_small]["triples_per_sec"]
-    tp32 = results[n_large]["triples_per_sec"]
-    efficiency = (tp32 / tp8) / 4.0
+    report = scaling_report(pairs)
     summary = {
         "sf_dir": sf_dir,
-        "turns": results[n_large]["turns"],
-        f"local{n_small}": results[n_small],
-        f"local{n_large}": results[n_large],
-        "scaling_efficiency_N_to_4N": round(efficiency, 3),
-        "n_pairs": len(pairs),
-        "n_guarded_clean_pairs": len(guarded_pool),
-        "headline_pair_guarded": headline_guarded,
-        "headline_established": headline_established,
-        "n_comparable_pairs": len(comparable),
-        "guarded_clean_median": guarded_median,
-        "guarded_clean_range": (
-            [guarded_effs[0], guarded_effs[-1]] if guarded_effs else None
-        ),
+        "convs_per_doc": convs_per_doc,
+        "turns_per_conv": turns,
+        "n_small": n_small,
+        **report,
+        "pairs": pairs,
     }
-    probe_s = results[n_small].get("speed_probe_s")
-    probe_l = results[n_large].get("speed_probe_s")
-    if probe_s and probe_l:
-        summary["speed_probe_s"] = {"small": probe_s, "large": probe_l}
-        summary["speed_mismatch_pct"] = round(
-            abs(probe_l - probe_s) / min(probe_s, probe_l) * 100.0, 1
-        )
     print(json.dumps(summary))
-    # persist legs + pair history so later opportunistic runs accumulate
-    (REPO / ".stage").mkdir(exist_ok=True)
-    payload = {str(k): v for k, v in results.items()}
-    payload["_workload"] = workload
-    # strip the per-invocation "fresh" marker before persisting: it
-    # means "measured by THIS run" and must not survive into the seed
-    payload["_pairs"] = [
-        {k: v for k, v in p.items() if k != "fresh"} for p in pairs[-50:]
-    ]
-    (REPO / ".stage" / "scaling_best.json").write_text(json.dumps(payload))
+    if not report["n_clean"]:
+        raise SystemExit(
+            "no pair free of foreign Spark processes — BENCH.md not "
+            "rewritten; stop the other Spark jobs and re-run"
+        )
 
-    cpu_small = results[n_small].get("cpu_total_s")
-    cpu_large = results[n_large].get("cpu_total_s")
-
-    # Epoch note must describe HOW the current headline pair was chosen
-    # (code-review r5: a static "freshly measured" claim baked into the
-    # template would be regenerated verbatim by an invocation whose
-    # winner came from the seeded history — a self-contradicting
-    # artifact next to the PROVISIONAL label)
-    kg_cpu_s = chosen["small"].get("cpu_s", {}).get("kg_build_e2e")
-    kg_cpu_l = chosen["large"].get("cpu_s", {}).get("kg_build_e2e")
-    if chosen.get("fresh"):
-        fresh_note = (
-            f"the headline pair above was freshly measured by THIS "
-            f"invocation (min-combined-CPU winner at "
-            f"{pair_cost(chosen):.1f} CPU-s"
-            + (
-                f"; the kg-build phase itself burned {kg_cpu_s} vs "
-                f"{kg_cpu_l} CPU-s across the two widths"
-                if kg_cpu_s and kg_cpu_l
-                else ""
-            )
-            + ")"
+    # the two-leg table shows the clean pair at the (lower) median
+    clean_pairs = sorted(filter(pair_clean, pairs), key=pair_efficiency)
+    shown = clean_pairs[(len(clean_pairs) - 1) // 2]
+    small, large = shown["small"], shown["large"]
+    pair_rows = "\n".join(
+        f"| {i + 1} | {p['small']['queries']['kg_build_e2e']} | "
+        f"{p['large']['queries']['kg_build_e2e']} | "
+        f"{p['small'].get('cpu_total_s', 'n/a')} | "
+        f"{p['large'].get('cpu_total_s', 'n/a')} | {eff} | "
+        f"{'clean' if clean else 'foreign Spark process'} |"
+        for i, (p, eff, clean) in enumerate(
+            zip(pairs, report["pair_efficiency"], report["pair_clean"])
         )
-    else:
-        fresh_note = (
-            "the headline pair above comes from the accumulated pair "
-            "history (none of this invocation's fresh pairs beat it by "
-            "the min-CPU rule; see this file's git history for the "
-            "invocation that measured the winning pair's legs)"
-        )
-    if cpu_small and cpu_large:
-        delta_pct = (
-            abs(cpu_large - cpu_small) / max(cpu_small, cpu_large) * 100.0
-        )
-        conservation = (
-            f"Measured here: **{cpu_small} CPU-s at local[{n_small}] vs "
-            f"{cpu_large} CPU-s at local[{n_large}]** ({delta_pct:.1f}% apart, "
-            f"walls {results[n_small]['queries']['kg_build_e2e']}s vs "
-            f"{results[n_large]['queries']['kg_build_e2e']}s) — the plan's "
-            "total work is parallelism-invariant."
-        )
-    else:
-        conservation = (
-            "(One leg predates the CPU instrumentation; re-run to refresh "
-            "the same-run pinned pair.)"
-        )
-    if probe_s and probe_l:
-        mismatch = summary["speed_mismatch_pct"]
-        if mismatch <= 15.0:
-            conservation += (
-                f"  A single-threaded fixed-kernel speed probe bracketing "
-                f"each leg (256 MiB blake2b) measured {probe_s}s vs "
-                f"{probe_l}s ({mismatch}% apart) — direct evidence the two "
-                "legs ran at the same effective machine speed."
-            )
-        else:
-            conservation += (
-                f"  The bracketing speed probes measured {probe_s}s vs "
-                f"{probe_l}s ({mismatch}% apart — above the 15% same-speed "
-                "gate, so by the repo's own criterion the probe brackets "
-                "disagree; each leg's stamp is the WORSE of its two "
-                "brackets, so a pre-leg probe that caught the previous "
-                "phase's decay can overstate the mismatch, and the "
-                "kg-phase CPU columns above are the steal-immune "
-                "work-conservation signal to weigh instead)."
-            )
-
-    epoch_note = ""
-    if efficiency < 0.8 and cpu_small and cpu_large and (
-        abs(cpu_large - cpu_small) / max(cpu_small, cpu_large) < 0.25
-    ):
-        epoch_note = f"""
-**Reading a sub-gate number**: the CPU-s columns above are within 25%,
-so the plan performed essentially the same total work at both widths —
-the wall-clock sub-linearity is host-environment throttling of the
-wider leg (this sandbox shares a physical host whose load swings 2-15
-within minutes and inflates the {n_large}-thread leg far more than the
-{n_small}-thread one; same-code A/B across commits — `AB_EVIDENCE.json`
-— reproduces the swing on identical code).  The reported pair improves
-as quieter windows occur across accumulated runs (pair history in
-`.stage/scaling_best.json`); cleaner same-window pairs in the
-accumulated history reached {max(pair_effs) if pair_effs else 'n/a'},
-and an earlier epoch measured **0.828** on the same plan shape (git
-history, round 2).
-"""
-
-    guard_note = (
-        "**Guard**: both legs of the reported pair ran under the "
-        "contamination guard — admission waits for zero foreign Spark "
-        "processes in the container (and a host-load floor, which IS "
-        "visible via /proc/loadavg here), a monitor polls every 5 s "
-        "during the leg, and a leg any co-tenant JVM overlaps is "
-        "retried (kept only flagged when retries exhaust).  Root cause "
-        "of the round-3 red number: a leftover benchmark retry loop "
-        "from the previous session was still running its own local[16] "
-        "JVM inside this container, contaminating every window; with it "
-        "found and killed (and the guard preventing a recurrence), the "
-        "first guarded pair cleared the gate."
-        if headline_guarded
-        else "**Guard caveat**: no guarded-clean pair exists yet in the "
-        "accumulated history — the reported pair predates the "
-        "contamination guard or was flagged; re-run "
-        "`scripts/scaling_run.py` to land a guarded pair."
     )
+    q1, q3 = report["quartiles"]
 
     bench_md = REPO / "BENCH.md"
     bench_md.write_text(
@@ -540,88 +220,39 @@ history, round 2).
 
 Same input at two parallelism levels, each JVM + its Python workers
 pinned with taskset to exactly N cores (the in-sandbox proxy for N vs 4N
-executors per BASELINE.json).  The table reports the two legs of ONE
-invocation — adjacent in time, so both saw the same machine speed —
-chosen as the pair with the lowest combined CPU burn across every run
-accumulated via `SPARK_GRAFT_SEED_RESULTS` (i.e. the pair least
-inflated by host contention; this sandbox's external load swings
-effective machine speed up to 2x within minutes, so mixing each side's
-fastest leg from different windows would compare different machines and
-estimate nothing).
+executors per BASELINE.json).  {report['n_pairs']} pairs ran with their
+legs alternating N, 4N, N, 4N, ...; a monitor polled every 5 s for
+Spark processes foreign to the leg.  The statistic was fixed before the
+run: the median of the pair efficiencies over the {report['n_clean']}
+pairs no foreign Spark process overlapped.  The table gives the two
+legs of the clean pair at the (lower) median.
 
 | cluster size | turns | kg-build wall (s) | turns/s | triples/s | leg CPU-s total |
 |---|---|---|---|---|---|
-| local[{n_small}]  (N)  | {results[n_small]['turns']:,} | {results[n_small]['queries']['kg_build_e2e']} | {results[n_small]['turns_per_sec']:,} | {results[n_small]['triples_per_sec']:,} | {results[n_small].get('cpu_total_s', 'n/a')} |
-| local[{n_large}] (4N) | {results[n_large]['turns']:,} | {results[n_large]['queries']['kg_build_e2e']} | {results[n_large]['turns_per_sec']:,} | {results[n_large]['triples_per_sec']:,} | {results[n_large].get('cpu_total_s', 'n/a')} |
+| local[{n_small}]  (N)  | {small['turns']:,} | {small['queries']['kg_build_e2e']} | {small['turns_per_sec']:,} | {small['triples_per_sec']:,} | {small.get('cpu_total_s', 'n/a')} |
+| local[{n_large}] (4N) | {large['turns']:,} | {large['queries']['kg_build_e2e']} | {large['turns_per_sec']:,} | {large['triples_per_sec']:,} | {large.get('cpu_total_s', 'n/a')} |
 
-**Scaling efficiency (N -> 4N): {efficiency:.3f}** (gate: >= 0.8{
-    '' if headline_established else
-    '; PROVISIONAL — only one comparable-CPU pair corroborates this '
-    'number and it was not re-measured by this invocation, so the '
-    'guarded-clean median below is the better point estimate'
-})
+**Scaling efficiency (N -> 4N), median of {report['n_clean']} clean pairs: {report['median']:.3f}**
+(quartiles {q1:.3f}-{q3:.3f}; gate: median >= {GATE} — {
+    'met' if report['gate_met'] else 'NOT met'})
 
-Guarded-clean distribution (reported alongside the headline so a single
-min-CPU-selected pair never carries the claim alone): **median {
-    guarded_median if guarded_median is not None else 'n/a'
-}, range {guarded_effs[0] if guarded_effs else 'n/a'}-{
-    guarded_effs[-1] if guarded_effs else 'n/a'} over {
-    len(guarded_effs)} guarded-clean pairs**; {len(comparable)}
-pair(s) are CPU-comparable to the winner.
+Every pair (efficiency = (triples/s at 4N / triples/s at N) / 4):
 
-{guard_note}
+| pair | local[{n_small}] wall (s) | local[{n_large}] wall (s) | local[{n_small}] CPU-s | local[{n_large}] CPU-s | efficiency | legs |
+|---|---|---|---|---|---|---|
+{pair_rows}
 
-Across {len(pair_effs)} accumulated same-window pairs
-({len(guarded_pool)} guarded-clean, where clean also requires both legs
-to carry the current bench leg-workload revision — combined-CPU
-comparisons are only meaningful between legs that timed identical
-work, so legs from a different KG_ONLY workload stay in the history
-but never compete) the measured efficiency ranged
-{pair_effs[0] if pair_effs else 'n/a'}-{pair_effs[-1] if pair_effs else 'n/a'};
-among the {len(comparable_effs)} pairs whose combined CPU burn is within
-25% of the best pair's (CPU inflation is the direct, load-heuristic-free
-signature of a contended window — same work, more stalled cycles) AND
-whose bracketing speed probes agree within 15% (same effective machine
-for both legs) the range tightens to
-{comparable_effs[0] if comparable_effs else 'n/a'}-{comparable_effs[-1] if comparable_effs else 'n/a'}
-— host contention distorts a pair's ratio in either direction depending
-on which leg it hits, so the value above is taken from the
-minimum-combined-CPU pair among guarded-clean pairs (falling back to
-the full history only when no guarded pair exists).  Pair history lives
-in the gitignored `.stage/scaling_best.json` and resets when a session
-wipes `.stage/` (the headline pair is then re-seeded from this file's
-committed table); earlier epochs' distributions are recorded in this
-file's git history (round 3-4 epoch: 31 pairs, 7 guarded-clean, range
-0.413-1.094; main round-4 epoch, commit 07ca961: 12 guarded-clean
-pairs, range 0.433-0.913, comparable-CPU band 0.725-0.900).  Post-wipe
-re-seeded pairs whose legs ran into external load spikes carry the
-direct CPU-inflation signature (e.g. a wide leg at 3814 CPU-s vs the
-narrow leg's 2026 for identical output) and are excluded by the
-min-CPU rule, not by judgment calls.
-
-Current epoch: {fresh_note}.  A dated observation from the round-5
-epoch (kept because it documents what contended windows do, not the
-current epoch's numbers): seven fresh pairs' NARROW (4-core) legs
-reproduced quiet-window CPU within +-7% (1166-1370; one spike-crossed
-leg at 1742) while their WIDE (16-core) legs inflated 1.3-2.4x
-(1756-3218 CPU-s) for byte-identical output (9,949,272 triples every
-leg) — one-sided inflation that localizes contention to what only
-wide legs contend for against co-tenants (physical cores / memory
-bandwidth), not to the plan, and depressed those pairs' ratios to
-0.47-0.75.  That asymmetry is exactly what the min-CPU pair rule
-exists to filter.
-{epoch_note}
-
-The CPU-s column is container CPU burned during the leg (cgroup
+The CPU-s columns are container CPU burned during the leg (cgroup
 cpuacct delta; covers the JVM + Python workers while nothing else runs
-in the container) — a steal-immune work-conservation check:
-when it is ~equal at N and 4N, the plan does the same total work at both
-sizes and wall-clock sub-linearity is host interference (this sandbox's
-external load swings the machine's effective speed up to 2x within
-minutes), not algorithmic inflation.  {conservation}
+in the container) — a steal-immune work-conservation check: when it is
+~equal at N and 4N, the plan does the same total work at both sizes and
+wall-clock sub-linearity is host interference (this sandbox's external
+load swings the machine's effective speed up to 2x within minutes), not
+algorithmic inflation.  Host load is recorded per leg
+(`max_load1_during` in the JSON summary), never waited out.
 
-Triples emitted: {results[n_large]['triples']:,}; nodes {results[n_large]['nodes']:,};
-edges {results[n_large]['edges']:,}.
+Triples emitted: {large['triples']:,}; nodes {large['nodes']:,};
+edges {large['edges']:,}.
 
 ## How the plan scales (per-layer evidence: `perfbench/run.py --trace 1`)
 
@@ -670,10 +301,10 @@ exactly the property that matters at 10^12 turns.
 ## Reference comparison
 
 The reference processes 1.55 docs/s (~5 relations/s inserted) single-
-threaded, model-bound (BASELINE.md). This engine's model-free path on one
-32-thread node: {results[n_large]['turns_per_sec']:,} turns/s /
-{results[n_large]['triples_per_sec']:,} triples/s — roughly
-{int(results[n_large]['turns_per_sec'] / 1.55):,}x the reference document rate.
+threaded, model-bound (BASELINE.md). This engine's model-free path at
+local[{n_large}] (the median pair's wide leg): {large['turns_per_sec']:,} turns/s /
+{large['triples_per_sec']:,} triples/s — roughly
+{int(large['turns_per_sec'] / 1.55):,}x the reference document rate.
 
 The MODEL path (the reference's bottleneck) is measured separately:
 bench.py's `model_ner_e2e` phase runs the chunked word-window /
@@ -682,7 +313,7 @@ mapInPandas over tripled-text documents, deterministic numpy encoder —
 the same chunk logic a torch checkpoint would drive) and reports
 `model_docs_per_sec` in the per-round BENCH_r{{N}}.json; thousands of
 docs/s against the reference's 1.55 docs/s, and the phase carries the
-same cpu_s/load1/foreign_jvm evidence columns as every other phase.
+same cpu_s/foreign_jvm evidence as every other phase.
 
 Every plan property claimed above is an executable assertion:
 `python scripts/plan_audit.py` checks pushed filters, column pruning,
