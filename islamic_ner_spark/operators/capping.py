@@ -78,18 +78,28 @@ def cap_buckets(
         .orderBy(F.desc("_bucket_n"))
         .take(6)
     )
-    if hot_rows:
+    warn_dropped(
+        what,
+        [tuple(r[c] for c in key_cols) + (r["_bucket_n"],) for r in hot_rows],
+        max_bucket_size,
+    )
+    return capped
+
+
+def warn_dropped(what: str, hot: list[tuple], max_bucket_size: int) -> None:
+    """The one WARNING for dropped buckets.  ``hot`` lists the
+    over-capacity buckets largest first, each a key tuple ending in its
+    member count; six or more read as ">=6" (more exist)."""
+    if hot:
         log.warning(
             "%s: dropped %s%d over-capacity bucket(s) (> %d members) from "
             "candidate generation; largest: %s",
             what,
-            ">=" if len(hot_rows) > 5 else "",
-            len(hot_rows),
+            ">=" if len(hot) > 5 else "",
+            len(hot[:6]),
             max_bucket_size,
-            [tuple(r[c] for c in key_cols) + (r["_bucket_n"],)
-             for r in hot_rows[:5]],
+            hot[:5],
         )
-    return capped
 
 
 def log_candidate_stats(

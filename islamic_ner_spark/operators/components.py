@@ -15,6 +15,8 @@ partitioning.
 
 from __future__ import annotations
 
+from typing import Iterable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -60,13 +62,10 @@ def _signature(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def _local_components(spark, rows) -> DataFrame:
-    """Driver-side union-find for small (already collected) edge lists.
-
-    Below ``local_threshold`` the iterative join rounds cost far more in
-    job overhead than the data justifies; solving a few-hundred-KB edge
-    list locally is the standard hybrid cutover (the same min-label
-    semantics, so results are identical to the distributed path)."""
+def min_label_components(edges: Iterable[tuple[str, str]]) -> dict[str, str]:
+    """Union-find over ``(src, dst)`` pairs: node -> lexicographic-min
+    node of its component, for every node an edge touches (the same
+    min-label semantics as the distributed rounds)."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -78,13 +77,23 @@ def _local_components(spark, rows) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for row in rows:
-        ra, rb = find(row["src"]), find(row["dst"])
+    for src, dst in edges:
+        ra, rb = find(src), find(dst)
         if ra != rb:
             if rb < ra:
                 ra, rb = rb, ra
             parent[rb] = ra
-    mapping = [(node, find(node)) for node in parent]
+    return {node: find(node) for node in parent}
+
+
+def _local_components(spark, rows) -> DataFrame:
+    """Driver-side union-find for small (already collected) edge lists.
+
+    Below ``local_threshold`` the iterative join rounds cost far more in
+    job overhead than the data justifies; solving a few-hundred-KB edge
+    list locally is the standard hybrid cutover (the same min-label
+    semantics, so results are identical to the distributed path)."""
+    mapping = list(min_label_components((row["src"], row["dst"]) for row in rows).items())
     # single partition: a locally-solved mapping is tiny, and fanning it
     # over defaultParallelism tasks just adds scheduling overhead.  The
     # frame is built via pandas/Arrow: createDataFrame over a plain list

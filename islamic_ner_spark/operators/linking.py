@@ -6,16 +6,25 @@ Scale shape (the whole point of this design):
 * Resolution is computed over **distinct** (text, type) strings, never per
   mention row — at 10^12 turns the distinct mention vocabulary is orders
   of magnitude smaller than the mention table.
+* The distinct strings are **counted first**.  Up to
+  ``DRIVER_LADDER_LIMIT`` of them are collected and the whole ladder
+  below runs on the driver in plain Python (``resolve_strings_locally``),
+  returned as one Arrow-built frame: a few thousand rows do not justify
+  the distributed ladder's ~20 Spark jobs and three Python crossings.
+  Above the limit the same ladder runs distributed, rule for rule.
 * L1 exact linking is a **broadcast hash lookup** against the gazetteer
   dimension (the map-side half of a broadcast hash join,
   entity_resolver.py:26-43), fused into the same batched Arrow pass as
 * L2 fuzzy scoring (SequenceMatcher vs same-type canonicals+variants;
-  entity_resolver.py:70-100).
+  entity_resolver.py:70-100), which skips a candidate whose exact difflib
+  upper bound cannot reach the threshold or the best score so far.
+  Both rungs are one per-string function (functions/resolve.resolve_string).
 * L3' "new" entities are clustered **jointly**: blocking by shared token,
   pairwise SequenceMatcher ratio >= 0.8 scored in an Arrow batch, then
-  connected components (large-star/small-star) pick a deterministic
-  canonical (lexicographic min).  This replaces the reference's
-  order-dependent resolver mutation with order-free semantics.
+  connected components (large-star/small-star, or union-find on the
+  driver) pick a deterministic canonical (lexicographic min).  This
+  replaces the reference's order-dependent resolver mutation with
+  order-free semantics.
 * The final mention->resolution join relies on AQE to broadcast the
   (small) resolution table and to split skewed keys when it is not small
   (hot narrator names are Zipf-heavy; ``spark.sql.adaptive.skewJoin`` is
@@ -24,14 +33,20 @@ Scale shape (the whole point of this design):
 
 from __future__ import annotations
 
-from typing import Iterator
+import logging
+from typing import Iterable, Iterator
 
 import pandas as pd
 from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from islamic_ner_spark.operators.components import connected_components
+from islamic_ner_spark.operators.components import (
+    connected_components,
+    min_label_components,
+)
+
+log = logging.getLogger(__name__)
 
 LINKABLE_TYPES = ("SCHOLAR", "BOOK", "CONCEPT", "PLACE")
 
@@ -39,6 +54,7 @@ RESOLUTION_SCHEMA = (
     "text string, entity_type string, norm_text string, "
     "canonical_name string, confidence double, match_type string"
 )
+RESOLUTION_COLUMNS = [c.split()[0] for c in RESOLUTION_SCHEMA.split(", ")]
 
 
 def _distinct_linkable_strings(mentions: DataFrame, triples: DataFrame) -> DataFrame:
@@ -74,6 +90,17 @@ def _distinct_linkable_strings(mentions: DataFrame, triples: DataFrame) -> DataF
 # makes the blocked self-join quadratic in the hot block's size.  Every
 # drop is logged — no silent coverage caps.
 MAX_BLOCK_SIZE = 1_000
+
+# Up to this many distinct linkable strings the whole resolution ladder
+# runs on the driver (build_resolution_table); above it, distributed.
+# Measured crossover, build_resolution_table over V long-tail names
+# (perfbench workloads.longtail_vocabulary, pool V/10), warm local[4]
+# session on a 4-vCPU host, driver vs distributed seconds:
+#   V= 2,000: 1.3 vs 3.9    V=10,000: 5.6-5.8 vs 4.9-6.3
+#   V= 5,000: 3.3-3.8 vs 4.9-5.8    V=20,000: 11.7-12.0 vs 8.7-9.7
+# The driver ladder is single-threaded and linear in V; the distributed
+# one pays ~4 s of per-job fixed cost first, so they cross near 10k.
+DRIVER_LADDER_LIMIT = 10_000
 
 
 def new_entity_nodes(new_strings: DataFrame) -> DataFrame:
@@ -149,13 +176,10 @@ def new_pair_edges(
     )
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from islamic_ner_spark.functions.resolve import FUZZY_THRESHOLD, similarity_ratio
+        from islamic_ner_spark.functions.resolve import fuzzy_match
 
         for batch in batches:
-            keep = [
-                similarity_ratio(a, b) >= FUZZY_THRESHOLD
-                for a, b in zip(batch["text_a"], batch["text_b"])
-            ]
+            keep = [fuzzy_match(a, b) for a, b in zip(batch["text_a"], batch["text_b"])]
             yield batch.loc[keep, ["src", "dst"]]
 
     return pairs.mapInPandas(score, schema="src string, dst string")
@@ -209,24 +233,49 @@ def build_resolution_table(
     """Distinct (text, entity_type) -> (canonical_name, confidence,
     match_type) via the exact -> fuzzy -> new ladder.
 
-    The exact and fuzzy rungs both score against the *broadcast* gazetteer
-    dimension and are independent per string, so they run fused in ONE
-    batched Arrow pass over the distinct strings (exact = broadcast hash
-    lookup, the map-side half of a broadcast hash join; fuzzy = the
-    reference's SequenceMatcher scoring, entity_resolver.py:26-100).  The
-    earlier staging of this ladder as join -> UDF -> unions spent ~3
-    extra stage/persist round-trips per build on vocabulary-sized data.
-    Only the "new" remainder needs corpus-joint work (blocking +
-    connected components).  ``gazetteer_df`` is kept in the signature for
-    callers that want the dimension relationally (tests, ad-hoc joins).
-    ``persisted`` (when given) collects the cached ladder table so
-    long-running callers — the streaming foreachBatch loop relies on
+    The distinct strings are counted first.  Up to
+    ``DRIVER_LADDER_LIMIT`` of them are collected and the whole ladder
+    runs on the driver (:func:`resolve_strings_locally`): the table comes
+    back as one Arrow-built frame, so a small vocabulary pays one count
+    and one collect instead of the distributed ladder's ~20 jobs and
+    three Python crossings.
+
+    Above the limit the ladder runs distributed.  The exact and fuzzy
+    rungs both score against the *broadcast* gazetteer dimension and are
+    independent per string, so they run fused in ONE batched Arrow pass
+    over the distinct strings (exact = broadcast hash lookup, the
+    map-side half of a broadcast hash join; fuzzy = the reference's
+    SequenceMatcher scoring, entity_resolver.py:26-100).  Only the "new"
+    remainder needs corpus-joint work (blocking + connected components).
+    ``gazetteer_df`` is kept in the signature for callers that want the
+    dimension relationally (tests, ad-hoc joins).  ``persisted`` (when
+    given) collects the cached ladder table so long-running callers —
+    the streaming foreachBatch loop relies on
     ``GraphBuildResult.unpersist()`` — can release it per build.
     """
-    strings = _distinct_linkable_strings(mentions, triples)
+    # cached, so the count computes the distinct strings once and the
+    # collect (or the distributed ladder) reads them back
+    strings = _distinct_linkable_strings(mentions, triples).persist()
+    n_strings = strings.count()
+    on_driver = n_strings <= DRIVER_LADDER_LIMIT
+    log.info(
+        "resolution ladder: %d distinct linkable strings, driver limit %d -> %s",
+        n_strings, DRIVER_LADDER_LIMIT, "driver" if on_driver else "distributed",
+    )
+    if on_driver:
+        collected = strings.collect()
+        strings.unpersist()
+        rows = resolve_strings_locally(
+            ((r["text"], r["entity_type"]) for r in collected), gazetteer_bc.value
+        )
+        # one local Arrow batch in one partition, as components'
+        # _local_components builds its mapping
+        frame = pd.DataFrame(rows, columns=RESOLUTION_COLUMNS)
+        return spark.createDataFrame(frame, schema=RESOLUTION_SCHEMA).coalesce(1)
+
     scored = score_strings_ladder(strings, gazetteer_bc).persist()
     if persisted is not None:
-        persisted.append(scored)
+        persisted.extend([strings, scored])
 
     new_strings = scored.where(F.col("match_type") == "new").select(
         "text", "entity_type", "norm_text"
@@ -235,38 +284,76 @@ def build_resolution_table(
     return resolution_from_scored(scored, new_canon)
 
 
+def resolve_strings_locally(
+    strings: Iterable[tuple[str, str]],
+    gazetteer,
+    *,
+    max_block_size: int = MAX_BLOCK_SIZE,
+) -> list[tuple]:
+    """The whole resolution ladder in plain Python over distinct
+    ``(text, entity_type)`` pairs -> ``RESOLUTION_SCHEMA`` rows.
+
+    The same rungs as the distributed path, rule for rule: the per-string
+    exact/fuzzy/new ladder (functions/resolve.resolve_string), token
+    blocks over the new strings' nodes capped at ``max_block_size``
+    exploded (node, token) rows (a repeated token counts twice) with the
+    same dropped-block WARNING, pairs scored as ``ratio(text of the
+    smaller node id, text of the larger)`` >= 0.8, and min-label
+    union-find (components.min_label_components), whose component id's
+    text after the last \\x1f is the canonical."""
+    from islamic_ner_spark.functions.resolve import fuzzy_match, resolve_string
+    from islamic_ner_spark.operators.capping import warn_dropped
+
+    scored = [(text, etype, *resolve_string(text, etype, gazetteer))
+              for text, etype in strings]
+
+    # new_entity_nodes: node id -> (entity_type, normalized text)
+    nodes = {f"{etype}\x1f{norm}": (etype, norm)
+             for _, etype, norm, _, _, match_type in scored if match_type == "new"}
+    blocks: dict[tuple[str, str], list[str]] = {}
+    for node, (etype, norm) in nodes.items():
+        for token in norm.split(" "):
+            if token:
+                blocks.setdefault((etype, token), []).append(node)
+    warn_dropped(
+        "new-entity-blocking",
+        sorted(((*key, len(members)) for key, members in blocks.items()
+                if len(members) > max_block_size), key=lambda hot: -hot[-1]),
+        max_block_size,
+    )
+    pairs = {
+        (a, b)
+        for members in blocks.values() if len(members) <= max_block_size
+        for a in members for b in members if a < b
+    }
+    component = min_label_components(
+        (a, b) for a, b in pairs if fuzzy_match(nodes[a][1], nodes[b][1])
+    )
+
+    rows = []
+    for text, etype, norm, canonical, confidence, match_type in scored:
+        if match_type == "new":
+            node = f"{etype}\x1f{norm}"
+            canonical = component.get(node, node).rsplit("\x1f", 1)[-1]
+        rows.append((text, etype, norm, canonical, confidence, match_type))
+    return rows
+
+
 def score_strings_ladder(strings: DataFrame, gazetteer_bc: Broadcast) -> DataFrame:
     """Distinct strings -> per-string exact/fuzzy/new scoring in one
     batched Arrow pass (the per-string half of the resolution ladder; the
     'new' rows still need the joint canonicalization)."""
 
     def ladder(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from islamic_ner_spark.functions.normalize import normalize
-        from islamic_ner_spark.functions.resolve import best_fuzzy_candidate
+        from islamic_ner_spark.functions.resolve import resolve_string
 
         gazetteer = gazetteer_bc.value
         for batch in batches:
-            norm_l, canon_l, conf_l, mt_l = [], [], [], []
-            for text, etype in zip(batch["text"], batch["entity_type"]):
-                norm = normalize(text or "")
-                canonical = gazetteer.canonical_map.get((norm, etype))
-                if canonical is not None:
-                    canon, conf, mt = canonical, 1.0, "exact"
-                else:
-                    fuzzy = best_fuzzy_candidate(norm, etype, gazetteer)
-                    if fuzzy is not None:
-                        canon, conf, mt = fuzzy[0], round(fuzzy[1], 4), "fuzzy"
-                    else:
-                        canon, conf, mt = None, 0.5, "new"
-                norm_l.append(norm)
-                canon_l.append(canon)
-                conf_l.append(conf)
-                mt_l.append(mt)
+            scored = [resolve_string(text, etype, gazetteer)
+                      for text, etype in zip(batch["text"], batch["entity_type"])]
             out = batch[["text", "entity_type"]].copy()
-            out["norm_text"] = norm_l
-            out["canonical_name"] = canon_l
-            out["confidence"] = conf_l
-            out["match_type"] = mt_l
+            for i, column in enumerate(RESOLUTION_COLUMNS[2:]):
+                out[column] = [row[i] for row in scored]
             yield out
 
     return strings.mapInPandas(ladder, schema=RESOLUTION_SCHEMA)

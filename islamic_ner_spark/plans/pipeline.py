@@ -6,8 +6,10 @@ Spark lifecycle (all stages DataFrame-native, SURVEY.md §3):
       -> annotate (fused normalize + AC-gazetteer + pattern NER,
          one narrow mapInPandas)                      [no shuffle]
       -> mentions / triples (narrow explodes)         [no shuffle]
-      -> resolution over DISTINCT strings (broadcast exact join,
-         batched fuzzy, CC canonicalization)          [small shuffles]
+      -> resolution over DISTINCT strings (exact lookup, fuzzy,
+         blocked pair scoring, CC canonicalization): one count, then
+         on the driver for a small vocabulary         [one small shuffle]
+         or distributed above DRIVER_LADDER_LIMIT     [small shuffles]
       -> graph materialize, one of two strategies:
          * fused: one Arrow pass over the extraction emits merged edges
            and pre-aggregated vocabulary-node candidates (needs one row

@@ -303,3 +303,71 @@ def test_in_memory_metrics(spark) -> None:
     assert m["nodes"] == result.nodes.count() > 0
     assert m["edges"] == result.edges.count() > 0
     assert m["resolution_strings"] > 0
+
+
+def _isnad_transcripts(spark):
+    """Stock turns (gazetteer hits) plus isnad chains over 1,005 new
+    ``X بن Y`` names: one-letter spelling variants that cluster, a fuzzy
+    gazetteer hit, a name with a repeated token, and a بن block over
+    ``MAX_BLOCK_SIZE`` that the ladder drops."""
+    import datetime
+    import random
+
+    from islamic_ner_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
+
+    rng = random.Random(5)
+    letters = "بتثجحخدذرزسشصضطظعغفقكلمنهو"
+    first: list[str] = []
+    while len(first) < 60:
+        name = "".join(rng.choice(letters) for _ in range(rng.randint(6, 8)))
+        if name not in first:
+            first.append(name)
+    names: list[str] = []
+    while len(names) < 1_005:
+        name = " بن ".join(rng.sample(first, 2))
+        if name not in names:
+            names.append(name)
+    names += ["البخاريي", "زيدون بن حارث", "زيدون بن حارت", "زيذون بن حارث", "محمد بن محمد"]
+    ts = datetime.datetime(2024, 1, 1)
+    chains = [
+        (f"isnad_{i // 8:04d}", i % 8, "assistant",
+         "حدثنا " + " عن ".join(names[3 * i:3 * i + 3]), None, ts)
+        for i in range((len(names) + 2) // 3)
+    ]
+    stock = synthetic_transcripts(spark, 20, turns_per_conv=4, partitions=2)
+    return stock.unionByName(spark.createDataFrame(chains, TRANSCRIPTS_SCHEMA))
+
+
+def test_driver_ladder_build_matches_distributed(spark, monkeypatch, caplog) -> None:
+    """A build whose resolution ladder ran on the driver equals one whose
+    ladder ran distributed: resolution table, nodes and edges, every
+    column."""
+    import logging
+
+    from islamic_ner_spark.operators import linking
+
+    transcripts = _isnad_transcripts(spark)
+    res_cols = linking.RESOLUTION_COLUMNS
+
+    def build(limit: int):
+        monkeypatch.setattr(linking, "DRIVER_LADDER_LIMIT", limit)
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger="islamic_ner_spark"):
+            result = build_graph(spark, transcripts)
+            rows = [_rows(result.resolution, res_cols), _rows(result.edges, EDGE_COLS),
+                    _rows(result.nodes, NODE_COLS)]
+        return rows, [r.getMessage() for r in caplog.records]
+
+    on_driver, driver_log = build(10_000)
+    distributed, distributed_log = build(0)
+    assert on_driver == distributed
+    assert driver_log[0].endswith("-> driver")
+    assert distributed_log[0].endswith("-> distributed")
+    # both dropped the بن block: every name carries it
+    assert driver_log[1:] == distributed_log[1:] and "'بن'" in driver_log[1]
+
+    resolution = on_driver[0]
+    assert {r[5] for r in resolution} == {"exact", "fuzzy", "new"}
+    canon = {r[0]: r[3] for r in resolution}
+    assert canon["زيدون بن حارث"] == canon["زيذون بن حارث"] == "زيدون بن حارت"
+    assert canon["محمد بن محمد"] == "محمد بن محمد"

@@ -82,3 +82,175 @@ def test_new_entity_blocking_cap_preserves_small_block_semantics(spark) -> None:
     uncapped = sorted(map(tuple, new_pair_edges(nodes, max_block_size=10**9,
                                                 log_dropped=False).collect()))
     assert capped == uncapped and len(capped) >= 2
+
+
+# --------------------------------------------------------------------------
+# the pruned fuzzy rung and the driver-side ladder
+
+import logging
+import random
+
+_LETTERS = "بتثجحخدذرزسشصضطظعغفقكلمنهو"
+
+
+def _names(n: int, seed: int) -> list[str]:
+    """``n`` distinct 6-8 letter names that normalization leaves alone."""
+    rng = random.Random(seed)
+    names: list[str] = []
+    while len(names) < n:
+        name = "".join(rng.choice(_LETTERS) for _ in range(rng.randint(6, 8)))
+        if name not in names:
+            names.append(name)
+    return names
+
+
+def _unpruned_best_fuzzy(norm_text, entity_type, gazetteer):
+    """Reference fuzzy rung: every same-type candidate string scored."""
+    from islamic_ner_spark.functions.resolve import FUZZY_THRESHOLD, similarity_ratio
+
+    if not norm_text:
+        return None
+    best = None
+    for canonical, meta in gazetteer.entity_metadata.items():
+        if str(meta.get("type")) != entity_type:
+            continue
+        score = similarity_ratio(norm_text, canonical)
+        for variant in meta.get("variants", ()):
+            score = max(score, similarity_ratio(norm_text, str(variant)))
+        if best is None or score > best[1]:
+            best = (canonical, score)
+    if best is None or best[1] < FUZZY_THRESHOLD:
+        return None
+    return best
+
+
+def _edits(text: str, rng: random.Random) -> list[str]:
+    """One substitution, one deletion and one insertion of ``text``."""
+    i = rng.randrange(len(text))
+    j = rng.randrange(len(text) + 1)
+    return [
+        text[:i] + rng.choice(_LETTERS) + text[i + 1:],
+        text[:i] + text[i + 1:],
+        text[:j] + rng.choice(_LETTERS) + text[j:],
+    ]
+
+
+def test_pruned_fuzzy_matches_unpruned_reference(resolver_gazetteer) -> None:
+    from islamic_ner_spark.functions.resolve import best_fuzzy_candidate
+    from islamic_ner_spark.operators.linking import LINKABLE_TYPES
+    from islamic_ner_spark.plans.pipeline import DEFAULT_GAZETTEER_DIR
+    from islamic_ner_spark.sources.gazetteer import Gazetteer
+
+    rng = random.Random(7)
+    for gazetteer in (resolver_gazetteer, Gazetteer.from_dir(DEFAULT_GAZETTEER_DIR)):
+        names = _names(150, 3)
+        for meta in gazetteer.entity_metadata.values():
+            for variant in meta["variants"]:
+                for _ in range(3):
+                    names += _edits(variant, rng)
+        names += ["", normalize("محمد بن إسماعيل البخاريي")]
+        hits = 0
+        for entity_type in LINKABLE_TYPES:
+            for name in names:
+                expected = _unpruned_best_fuzzy(name, entity_type, gazetteer)
+                assert best_fuzzy_candidate(name, entity_type, gazetteer) == expected, (
+                    name, entity_type)
+                hits += expected is not None
+        assert len(names) > 300 and hits > 50
+
+
+def test_pruned_fuzzy_tie_keeps_earlier_canonical() -> None:
+    from islamic_ner_spark.functions.resolve import best_fuzzy_candidate, similarity_ratio
+    from islamic_ner_spark.sources.gazetteer import Gazetteer
+
+    first, second, query = "محمد بن علي", "محمد بن علا", "محمد بن علو"
+    assert similarity_ratio(query, first) == similarity_ratio(query, second) >= 0.8
+    for order in ((first, second), (second, first)):
+        gazetteer = Gazetteer.from_rows([("SCHOLAR", [c]) for c in order])
+        assert best_fuzzy_candidate(query, "SCHOLAR", gazetteer) == (
+            order[0], similarity_ratio(query, order[0]))
+        assert best_fuzzy_candidate(query, "SCHOLAR", gazetteer) == _unpruned_best_fuzzy(
+            query, "SCHOLAR", gazetteer)
+
+
+def _ladder_input() -> list[tuple[str, str]]:
+    """Distinct (text, entity_type) strings covering every rung and rule:
+    an exact and two fuzzy hits, one-letter spelling variants that
+    cluster, a string whose normal form is empty, and an over-cap block
+    that only a row count (not a node count) catches — 999 ``محمد X``
+    names plus ``محمد بن محمد`` are 1,000 nodes but 1,001 exploded
+    (node, محمد) rows.  The first two ``محمد X`` names are one-letter
+    variants that share no other token, so they must stay apart."""
+    hot = _names(999, 11)
+    hot[1] = hot[0][:-1] + ("ب" if hot[0][-1] != "ب" else "ت")
+    return [
+        ("البخاري", "SCHOLAR"),
+        ("البخاريي", "SCHOLAR"),
+        ("صحيح البخاريي", "BOOK"),
+        ("زيدون بن حارث", "SCHOLAR"),
+        ("زيدون بن حارت", "SCHOLAR"),
+        ("زيذون بن حارث", "SCHOLAR"),
+        ("محمد بن محمد", "SCHOLAR"),
+        ("ـــ", "SCHOLAR"),
+        ("", "PLACE"),
+        *[(f"محمد {name}", "SCHOLAR") for name in hot],
+    ]
+
+
+def test_driver_ladder_logs_dropped_block(resolver_gazetteer, caplog) -> None:
+    from islamic_ner_spark.operators.linking import resolve_strings_locally
+
+    with caplog.at_level(logging.WARNING, logger="islamic_ner_spark.capping"):
+        rows = resolve_strings_locally(_ladder_input(), resolver_gazetteer)
+    assert [r.getMessage() for r in caplog.records] == [
+        "new-entity-blocking: dropped 1 over-capacity bucket(s) (> 1000 members) "
+        "from candidate generation; largest: [('SCHOLAR', 'محمد', 1001)]"
+    ]
+    assert len(rows) == len(_ladder_input())
+
+
+def test_driver_ladder_matches_distributed(spark, resolver_gazetteer, monkeypatch,
+                                           caplog) -> None:
+    """The driver ladder and the distributed one give the same resolution
+    table on every column, and log the same dropped block."""
+    from islamic_ner_spark.operators import linking
+
+    strings = _ladder_input()
+    mentions = spark.createDataFrame(strings[:-3], "text string, entity_type string")
+    # the last strings reach the table only as triple endpoints
+    triples = spark.createDataFrame(
+        [(strings[-3][0], "SCHOLAR", strings[-2][0], "SCHOLAR"),
+         (strings[-1][0], "SCHOLAR", "doc-1", "HADITH_REF")],
+        "subj_text string, subj_type string, obj_text string, obj_type string",
+    )
+    bc = spark.sparkContext.broadcast(resolver_gazetteer)
+
+    def run(limit: int):
+        monkeypatch.setattr(linking, "DRIVER_LADDER_LIMIT", limit)
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger="islamic_ner_spark"):
+            table = linking.build_resolution_table(
+                spark, mentions, triples, resolver_gazetteer.to_dataframe(spark), bc
+            )
+            rows = sorted(map(tuple, table.select(linking.RESOLUTION_COLUMNS).collect()))
+        return rows, [r.getMessage() for r in caplog.records]
+
+    on_driver, driver_log = run(10_000)
+    distributed, distributed_log = run(0)
+    assert on_driver == distributed
+    assert len(on_driver) == len(strings)
+    assert driver_log[0].endswith("-> driver")
+    assert distributed_log[0].endswith("-> distributed")
+    assert driver_log[1:] == distributed_log[1:] and "محمد" in driver_log[1]
+
+    by_text = {(r[0], r[1]): r for r in on_driver}
+    assert by_text[("البخاري", "SCHOLAR")][5] == "exact"
+    assert by_text[("البخاريي", "SCHOLAR")][5] == "fuzzy"
+    assert by_text[("صحيح البخاريي", "BOOK")][5] == "fuzzy"
+    variants = {by_text[(t, "SCHOLAR")][3]
+                for t in ("زيدون بن حارث", "زيدون بن حارت", "زيذون بن حارث")}
+    assert variants == {"زيدون بن حارت"}
+    assert by_text[("ـــ", "SCHOLAR")][2:4] == ("", "")
+    # one-letter variants seen only through the dropped block stay apart
+    hot = [r for r in on_driver if r[0].startswith("محمد ") and r[0] != "محمد بن محمد"]
+    assert all(r[3] == r[2] for r in hot) and len(hot) == 999
