@@ -41,11 +41,16 @@ def similarity_ratio(a: str, b: str) -> float:
 
 
 def fuzzy_match(a: str, b: str) -> bool:
-    """``similarity_ratio(a, b) >= FUZZY_THRESHOLD``; the full ratio is
-    computed only when difflib's exact upper bounds
+    """``similarity_ratio(a, b) >= FUZZY_THRESHOLD``."""
+    return matcher_passes(SequenceMatcher(None, a, b))
+
+
+def matcher_passes(matcher: SequenceMatcher) -> bool:
+    """``matcher.ratio() >= FUZZY_THRESHOLD``; the full ratio is computed
+    only when difflib's exact upper bounds
     (``real_quick_ratio() >= quick_ratio() >= ratio()``) reach the
-    threshold."""
-    matcher = SequenceMatcher(None, a, b)
+    threshold.  A caller scoring one string against many keeps it as
+    ``seq2`` (indexed once) and swaps ``seq1``."""
     return (
         matcher.real_quick_ratio() >= FUZZY_THRESHOLD
         and matcher.quick_ratio() >= FUZZY_THRESHOLD

@@ -75,7 +75,9 @@ def cap_buckets(
         banded.groupBy(*key_cols)
         .agg(F.count(F.lit(1)).alias("_bucket_n"))
         .where(F.col("_bucket_n") > max_bucket_size)
-        .orderBy(F.desc("_bucket_n"))
+        # ties by key, so the list is the same on every run and matches
+        # the driver resolution ladder's (operators/linking.py)
+        .orderBy(F.desc("_bucket_n"), *key_cols)
         .take(6)
     )
     warn_dropped(
@@ -88,8 +90,8 @@ def cap_buckets(
 
 def warn_dropped(what: str, hot: list[tuple], max_bucket_size: int) -> None:
     """The one WARNING for dropped buckets.  ``hot`` lists the
-    over-capacity buckets largest first, each a key tuple ending in its
-    member count; six or more read as ">=6" (more exist)."""
+    over-capacity buckets largest first (ties by key), each a key tuple
+    ending in its member count; six or more read as ">=6" (more exist)."""
     if hot:
         log.warning(
             "%s: dropped %s%d over-capacity bucket(s) (> %d members) from "

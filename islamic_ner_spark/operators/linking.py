@@ -11,7 +11,10 @@ Scale shape (the whole point of this design):
   below runs on the driver in plain Python (``resolve_strings_locally``),
   returned as one Arrow-built frame: a few thousand rows do not justify
   the distributed ladder's ~20 Spark jobs and three Python crossings.
-  Above the limit the same ladder runs distributed, rule for rule.
+  The driver ladder counts its blocked pairs before scoring them and
+  hands a vocabulary over ``DRIVER_PAIR_LIMIT`` (hot name tokens just
+  under the block cap) to the distributed ladder, as it does a
+  vocabulary over the string limit; that ladder runs rule for rule.
 * L1 exact linking is a **broadcast hash lookup** against the gazetteer
   dimension (the map-side half of a broadcast hash join,
   entity_resolver.py:26-43), fused into the same batched Arrow pass as
@@ -91,16 +94,33 @@ def _distinct_linkable_strings(mentions: DataFrame, triples: DataFrame) -> DataF
 # drop is logged — no silent coverage caps.
 MAX_BLOCK_SIZE = 1_000
 
-# Up to this many distinct linkable strings the whole resolution ladder
-# runs on the driver (build_resolution_table); above it, distributed.
-# Measured crossover, build_resolution_table over V long-tail names
-# (perfbench workloads.longtail_vocabulary, pool V/10), warm local[4]
-# session on a 4-vCPU host, driver vs distributed seconds:
-#   V= 2,000: 1.3 vs 3.9    V=10,000: 5.6-5.8 vs 4.9-6.3
-#   V= 5,000: 3.3-3.8 vs 4.9-5.8    V=20,000: 11.7-12.0 vs 8.7-9.7
-# The driver ladder is single-threaded and linear in V; the distributed
-# one pays ~4 s of per-job fixed cost first, so they cross near 10k.
+# The whole resolution ladder runs on the driver (build_resolution_table)
+# for up to DRIVER_LADDER_LIMIT distinct linkable strings whose kept
+# blocks hold up to DRIVER_PAIR_LIMIT pairs; past either, distributed.
+# The driver's cost is linear in the blocked pairs (sum of n(n-1)/2 over
+# the kept blocks), so both counts were measured: build_resolution_table
+# over V scholar names, warm local[4] session on a 4-vCPU host, driver
+# vs distributed seconds, two runs each:
+#   names                             V   pairs  driver     distributed
+#   longtail_vocabulary(1, V, 200)    2k    37k  2.0  2.1   6.4  7.4
+#   (the benchmark's fixed pool)      5k   226k  4.7  4.9   8.0  8.0
+#                                    10k   900k 13.4 14.9  14.5 16.4
+#                                    20k  3.54M 30.2 43.1  39.6 43.5
+#   longtail_vocabulary(1, V, V/10)   2k    37k  1.6  1.9   4.7  4.8
+#   (blocks of ~20 names)             5k    92k  3.1  3.2   5.0  5.1
+#                                    10k   184k  3.9  4.6   6.0  6.1
+#                                    20k   367k  6.2  9.3   7.7  8.4
+#   "H بن Y", 999 names per hot H     2k   1.0M 11.8 13.4  17.0 13.5
+#   (blocks just under the cap)       5k   2.5M 23.8 22.0  29.9 26.1
+#                                    10k   5.0M 37.9 40.5  60.8 46.6
+# The driver was never slower (about even at pool-200 V=20k and hot
+# V=2k), so at 4 vCPUs neither limit is a crossover.  The string limit
+# bounds the collect where the few-pair shapes still clearly favour the
+# driver; the pair limit is the largest pair count measured.  Past it
+# one core is unmeasured, and a cluster with more cores scores the
+# distributed pairs in parallel.
 DRIVER_LADDER_LIMIT = 10_000
+DRIVER_PAIR_LIMIT = 5_000_000
 
 
 def new_entity_nodes(new_strings: DataFrame) -> DataFrame:
@@ -238,9 +258,12 @@ def build_resolution_table(
     runs on the driver (:func:`resolve_strings_locally`): the table comes
     back as one Arrow-built frame, so a small vocabulary pays one count
     and one collect instead of the distributed ladder's ~20 jobs and
-    three Python crossings.
+    three Python crossings.  The driver ladder's cost is its blocked
+    pairs, so it also stops, before scoring any, when they exceed
+    ``DRIVER_PAIR_LIMIT``.  One INFO line records both counts and the
+    ladder that ran.
 
-    Above the limit the ladder runs distributed.  The exact and fuzzy
+    Above either limit the ladder runs distributed.  The exact and fuzzy
     rungs both score against the *broadcast* gazetteer dimension and are
     independent per string, so they run fused in ONE batched Arrow pass
     over the distinct strings (exact = broadcast hash lookup, the
@@ -257,17 +280,21 @@ def build_resolution_table(
     # collect (or the distributed ladder) reads them back
     strings = _distinct_linkable_strings(mentions, triples).persist()
     n_strings = strings.count()
-    on_driver = n_strings <= DRIVER_LADDER_LIMIT
-    log.info(
-        "resolution ladder: %d distinct linkable strings, driver limit %d -> %s",
-        n_strings, DRIVER_LADDER_LIMIT, "driver" if on_driver else "distributed",
-    )
-    if on_driver:
-        collected = strings.collect()
-        strings.unpersist()
-        rows = resolve_strings_locally(
-            ((r["text"], r["entity_type"]) for r in collected), gazetteer_bc.value
+    rows = n_pairs = None
+    if n_strings <= DRIVER_LADDER_LIMIT:
+        rows, n_pairs = resolve_strings_locally(
+            ((r["text"], r["entity_type"]) for r in strings.collect()),
+            gazetteer_bc.value,
         )
+    log.info(
+        "resolution ladder: %d distinct linkable strings (driver limit %d), "
+        "%s blocked pairs (driver limit %d) -> %s",
+        n_strings, DRIVER_LADDER_LIMIT,
+        "uncounted" if n_pairs is None else n_pairs, DRIVER_PAIR_LIMIT,
+        "distributed" if rows is None else "driver",
+    )
+    if rows is not None:
+        strings.unpersist()
         # one local Arrow batch in one partition, as components'
         # _local_components builds its mapping
         frame = pd.DataFrame(rows, columns=RESOLUTION_COLUMNS)
@@ -275,33 +302,46 @@ def build_resolution_table(
 
     scored = score_strings_ladder(strings, gazetteer_bc).persist()
     if persisted is not None:
-        persisted.extend([strings, scored])
+        persisted.append(scored)
 
     new_strings = scored.where(F.col("match_type") == "new").select(
         "text", "entity_type", "norm_text"
     )
     new_canon = _canonicalize_new(spark, new_strings)
+    # the clustering's blocking and components jobs read every partition
+    # of `scored`, so it is cached and the strings are no longer read
+    strings.unpersist()
     return resolution_from_scored(scored, new_canon)
 
 
 def resolve_strings_locally(
-    strings: Iterable[tuple[str, str]],
-    gazetteer,
-    *,
-    max_block_size: int = MAX_BLOCK_SIZE,
-) -> list[tuple]:
+    strings: Iterable[tuple[str, str]], gazetteer
+) -> tuple[list[tuple] | None, int]:
     """The whole resolution ladder in plain Python over distinct
-    ``(text, entity_type)`` pairs -> ``RESOLUTION_SCHEMA`` rows.
+    ``(text, entity_type)`` pairs -> ``(RESOLUTION_SCHEMA rows,
+    blocked pair count)``.
+
+    The blocked pair count is the sum of ``n(n-1)/2`` over the kept
+    blocks, the pairs the blocked self-join would generate.  Above
+    ``DRIVER_PAIR_LIMIT`` the rows are ``None``: no pair is scored and
+    nothing is logged, and the caller runs the distributed ladder.
 
     The same rungs as the distributed path, rule for rule: the per-string
     exact/fuzzy/new ladder (functions/resolve.resolve_string), token
-    blocks over the new strings' nodes capped at ``max_block_size``
+    blocks over the new strings' nodes capped at ``MAX_BLOCK_SIZE``
     exploded (node, token) rows (a repeated token counts twice) with the
     same dropped-block WARNING, pairs scored as ``ratio(text of the
     smaller node id, text of the larger)`` >= 0.8, and min-label
     union-find (components.min_label_components), whose component id's
-    text after the last \\x1f is the canonical."""
-    from islamic_ner_spark.functions.resolve import fuzzy_match, resolve_string
+    text after the last \\x1f is the canonical.
+
+    Pairs are scored node by node: each node's text is indexed once as a
+    matcher's ``seq2`` and scored against the smaller ids it shares a
+    kept block with, so no pair set is ever held — memory stays linear
+    in the vocabulary however many pairs the blocks generate."""
+    from difflib import SequenceMatcher
+
+    from islamic_ner_spark.functions.resolve import matcher_passes, resolve_string
     from islamic_ner_spark.operators.capping import warn_dropped
 
     scored = [(text, etype, *resolve_string(text, etype, gazetteer))
@@ -315,20 +355,34 @@ def resolve_strings_locally(
         for token in norm.split(" "):
             if token:
                 blocks.setdefault((etype, token), []).append(node)
+    n_pairs = sum(len(members) * (len(members) - 1) // 2
+                  for members in blocks.values() if len(members) <= MAX_BLOCK_SIZE)
+    if n_pairs > DRIVER_PAIR_LIMIT:
+        return None, n_pairs
+    # largest first, ties by key: cap_buckets' order
     warn_dropped(
         "new-entity-blocking",
         sorted(((*key, len(members)) for key, members in blocks.items()
-                if len(members) > max_block_size), key=lambda hot: -hot[-1]),
-        max_block_size,
+                if len(members) > MAX_BLOCK_SIZE),
+               key=lambda hot: (-hot[-1], hot[:-1])),
+        MAX_BLOCK_SIZE,
     )
-    pairs = {
-        (a, b)
-        for members in blocks.values() if len(members) <= max_block_size
-        for a in members for b in members if a < b
-    }
-    component = min_label_components(
-        (a, b) for a, b in pairs if fuzzy_match(nodes[a][1], nodes[b][1])
-    )
+    blocks_of: dict[str, list[list[str]]] = {}
+    for members in blocks.values():
+        if len(members) <= MAX_BLOCK_SIZE:
+            for node in members:
+                blocks_of.setdefault(node, []).append(members)
+
+    def similar_pairs() -> Iterator[tuple[str, str]]:
+        matcher = SequenceMatcher(None)
+        for b, member_lists in blocks_of.items():
+            matcher.set_seq2(nodes[b][1])
+            for a in {a for members in member_lists for a in members if a < b}:
+                matcher.set_seq1(nodes[a][1])
+                if matcher_passes(matcher):
+                    yield a, b
+
+    component = min_label_components(similar_pairs())
 
     rows = []
     for text, etype, norm, canonical, confidence, match_type in scored:
@@ -336,7 +390,7 @@ def resolve_strings_locally(
             node = f"{etype}\x1f{norm}"
             canonical = component.get(node, node).rsplit("\x1f", 1)[-1]
         rows.append((text, etype, norm, canonical, confidence, match_type))
-    return rows
+    return rows, n_pairs
 
 
 def score_strings_ladder(strings: DataFrame, gazetteer_bc: Broadcast) -> DataFrame:

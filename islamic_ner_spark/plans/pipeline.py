@@ -9,7 +9,8 @@ Spark lifecycle (all stages DataFrame-native, SURVEY.md §3):
       -> resolution over DISTINCT strings (exact lookup, fuzzy,
          blocked pair scoring, CC canonicalization): one count, then
          on the driver for a small vocabulary         [one small shuffle]
-         or distributed above DRIVER_LADDER_LIMIT     [small shuffles]
+         or distributed above DRIVER_LADDER_LIMIT
+         strings or DRIVER_PAIR_LIMIT blocked pairs   [small shuffles]
       -> graph materialize, one of two strategies:
          * fused: one Arrow pass over the extraction emits merged edges
            and pre-aggregated vocabulary-node candidates (needs one row

@@ -356,15 +356,17 @@ def test_driver_ladder_build_matches_distributed(spark, monkeypatch, caplog) -> 
             result = build_graph(spark, transcripts)
             rows = [_rows(result.resolution, res_cols), _rows(result.edges, EDGE_COLS),
                     _rows(result.nodes, NODE_COLS)]
-        return rows, [r.getMessage() for r in caplog.records]
+        decisions = [r.getMessage() for r in caplog.records if r.name == linking.log.name]
+        warnings = [r.getMessage() for r in caplog.records if r.levelno == logging.WARNING]
+        return rows, decisions, warnings
 
-    on_driver, driver_log = build(10_000)
-    distributed, distributed_log = build(0)
+    on_driver, driver_log, driver_warnings = build(10_000)
+    distributed, distributed_log, distributed_warnings = build(0)
     assert on_driver == distributed
-    assert driver_log[0].endswith("-> driver")
-    assert distributed_log[0].endswith("-> distributed")
+    assert len(driver_log) == 1 and driver_log[0].endswith("-> driver")
+    assert len(distributed_log) == 1 and distributed_log[0].endswith("-> distributed")
     # both dropped the بن block: every name carries it
-    assert driver_log[1:] == distributed_log[1:] and "'بن'" in driver_log[1]
+    assert driver_warnings == distributed_warnings and "'بن'" in driver_warnings[0]
 
     resolution = on_driver[0]
     assert {r[5] for r in resolution} == {"exact", "fuzzy", "new"}

@@ -176,12 +176,14 @@ def test_pruned_fuzzy_tie_keeps_earlier_canonical() -> None:
 def _ladder_input() -> list[tuple[str, str]]:
     """Distinct (text, entity_type) strings covering every rung and rule:
     an exact and two fuzzy hits, one-letter spelling variants that
-    cluster, a string whose normal form is empty, and an over-cap block
-    that only a row count (not a node count) catches — 999 ``محمد X``
-    names plus ``محمد بن محمد`` are 1,000 nodes but 1,001 exploded
-    (node, محمد) rows.  The first two ``محمد X`` names are one-letter
-    variants that share no other token, so they must stay apart."""
-    hot = _names(999, 11)
+    cluster, a string whose normal form is empty, and two over-cap blocks
+    of equal size.  One of them only a row count (not a node count)
+    catches — 999 ``محمد X`` names plus ``محمد بن محمد`` are 1,000 nodes
+    but 1,001 exploded (node, محمد) rows.  The first two ``محمد X`` names
+    are one-letter variants that share no other token, so they must stay
+    apart.  The 1,001 ``احمد Y`` names come last, so a block order that
+    broke ties by arrival instead of by key would list محمد first."""
+    hot, warm = _names(999, 11), _names(2_000, 11)[999:]
     hot[1] = hot[0][:-1] + ("ب" if hot[0][-1] != "ب" else "ت")
     return [
         ("البخاري", "SCHOLAR"),
@@ -194,25 +196,34 @@ def _ladder_input() -> list[tuple[str, str]]:
         ("ـــ", "SCHOLAR"),
         ("", "PLACE"),
         *[(f"محمد {name}", "SCHOLAR") for name in hot],
+        *[(f"احمد {name}", "SCHOLAR") for name in warm],
     ]
+
+
+_DROPPED_BLOCKS = (
+    "new-entity-blocking: dropped 2 over-capacity bucket(s) (> 1000 members) "
+    "from candidate generation; largest: [('SCHOLAR', 'احمد', 1001), "
+    "('SCHOLAR', 'محمد', 1001)]"
+)
 
 
 def test_driver_ladder_logs_dropped_block(resolver_gazetteer, caplog) -> None:
     from islamic_ner_spark.operators.linking import resolve_strings_locally
 
     with caplog.at_level(logging.WARNING, logger="islamic_ner_spark.capping"):
-        rows = resolve_strings_locally(_ladder_input(), resolver_gazetteer)
-    assert [r.getMessage() for r in caplog.records] == [
-        "new-entity-blocking: dropped 1 over-capacity bucket(s) (> 1000 members) "
-        "from candidate generation; largest: [('SCHOLAR', 'محمد', 1001)]"
-    ]
+        rows, n_pairs = resolve_strings_locally(_ladder_input(), resolver_gazetteer)
+    assert [r.getMessage() for r in caplog.records] == [_DROPPED_BLOCKS]
     assert len(rows) == len(_ladder_input())
+    # the kept blocks that pair: بن (the three زيدون variants and
+    # محمد بن محمد), زيدون and حارث; the two over-cap blocks do not count
+    assert n_pairs == 6 + 1 + 1
 
 
 def test_driver_ladder_matches_distributed(spark, resolver_gazetteer, monkeypatch,
                                            caplog) -> None:
     """The driver ladder and the distributed one give the same resolution
-    table on every column, and log the same dropped block."""
+    table on every column, and log the same dropped blocks.  Over the
+    pair limit the driver scores nothing and the distributed ladder runs."""
     from islamic_ner_spark.operators import linking
 
     strings = _ladder_input()
@@ -225,23 +236,37 @@ def test_driver_ladder_matches_distributed(spark, resolver_gazetteer, monkeypatc
     )
     bc = spark.sparkContext.broadcast(resolver_gazetteer)
 
-    def run(limit: int):
+    pair_limit_default = linking.DRIVER_PAIR_LIMIT
+
+    def run(limit: int, pair_limit: int = pair_limit_default):
         monkeypatch.setattr(linking, "DRIVER_LADDER_LIMIT", limit)
+        monkeypatch.setattr(linking, "DRIVER_PAIR_LIMIT", pair_limit)
         caplog.clear()
         with caplog.at_level(logging.INFO, logger="islamic_ner_spark"):
             table = linking.build_resolution_table(
                 spark, mentions, triples, resolver_gazetteer.to_dataframe(spark), bc
             )
             rows = sorted(map(tuple, table.select(linking.RESOLUTION_COLUMNS).collect()))
-        return rows, [r.getMessage() for r in caplog.records]
+        decisions = [r.getMessage() for r in caplog.records if r.name == linking.log.name]
+        warnings = [r.getMessage() for r in caplog.records if r.levelno == logging.WARNING]
+        return rows, decisions, warnings
 
-    on_driver, driver_log = run(10_000)
-    distributed, distributed_log = run(0)
-    assert on_driver == distributed
+    on_driver, driver_log, driver_warnings = run(10_000)
+    distributed, distributed_log, distributed_warnings = run(0)
+    too_many_pairs, pairs_log, pairs_warnings = run(10_000, 7)
+    assert on_driver == distributed == too_many_pairs
     assert len(on_driver) == len(strings)
-    assert driver_log[0].endswith("-> driver")
-    assert distributed_log[0].endswith("-> distributed")
-    assert driver_log[1:] == distributed_log[1:] and "محمد" in driver_log[1]
+    assert driver_log == [
+        f"resolution ladder: {len(strings)} distinct linkable strings (driver limit "
+        f"10000), 8 blocked pairs (driver limit {pair_limit_default}) -> driver"]
+    assert distributed_log == [
+        f"resolution ladder: {len(strings)} distinct linkable strings (driver limit "
+        f"0), uncounted blocked pairs (driver limit {pair_limit_default}) "
+        "-> distributed"]
+    assert pairs_log == [
+        f"resolution ladder: {len(strings)} distinct linkable strings (driver limit "
+        "10000), 8 blocked pairs (driver limit 7) -> distributed"]
+    assert driver_warnings == distributed_warnings == pairs_warnings == [_DROPPED_BLOCKS]
 
     by_text = {(r[0], r[1]): r for r in on_driver}
     assert by_text[("البخاري", "SCHOLAR")][5] == "exact"
