@@ -1,38 +1,55 @@
-"""Whole-graph analytics over the merged KG: PageRank and triangles.
+"""Whole-graph analytics over the merged KG: the scholar-graph kernels.
 
 The reference stops at point lookups and BFS (`src/graph/query.py`);
-these are the two whole-graph measures a KG consumer asks for next —
-"who are the central narrators" (PageRank) and "how clustered is the
-transmission network" (triangle enumeration).  Both are built to be
-DuckDB-replayable bit-for-bit, which forces a discipline that also
-pays off at scale:
+this module holds the whole-graph measures a KG consumer asks for next
+(PageRank, triangles, communities, k-core, centrality, co-mention
+scores, walk corpora).  Every kernel reads the scholar narration
+digraph, and each relation derived from it is written ONCE here — the
+kernels and the BFS queries in operators/queries.py call these copies:
 
-- **Integer-exact arithmetic.**  PageRank is computed in fixed-point
-  (ranks scaled by 1e9, integer division only), so every sum is an
-  order-independent integer sum — the result is invariant to partition
-  layout, task scheduling, and engine, and the driver's value-hash
-  oracle can replay the whole iteration in SQL.  Float PageRank would
-  differ across engines in the last ulp because float addition is not
-  associative.
-- **Bounded iteration.**  A fixed ``n_iters`` (default 5) keeps the
-  oracle expressible as unrolled CTEs and the Spark lineage bounded
-  (each iteration is localCheckpoint-ed, same as BFS/components).
+- :func:`scholar_digraph` — distinct directed Scholar->Scholar
+  NARRATED_FROM pairs (src, tgt), no self-loops;
+- :func:`_scholar_nodes` — its node set, distinct src ∪ tgt;
+- :func:`_und_deg` — distinct undirected edges as (u, v) with u < v,
+  and the per-node degree table;
+- :func:`undirected_adjacency` — the symmetric (node, nbr) list;
+- :func:`_pagerank` — the fixed-point PageRank recurrence over a
+  per-node teleport flag (:func:`pagerank_integer` flags every node,
+  :func:`personalized_pagerank` the seed);
+- :func:`multi_origin_bfs` — the hop-bounded frontier ⋈ adjacency ⊳
+  reached-set expansion (:func:`harmonic_centrality`,
+  ``queries.bfs_distances``).
 
-Scale shape (1000-executor reading):
+Every kernel is DuckDB-replayable bit-for-bit, which forces a
+discipline that also pays off at scale:
 
-- PageRank per iteration: one equi-join of the edge list against the
-  rank table on ``src`` (both hash-partitioned on the same key, so AQE
-  reuses the exchange across iterations) followed by one partial-agg
-  sum keyed on ``tgt``.  No driver-side collect; the rank table is
-  node-sized, never corpus-sized.
-- Triangles: edges are oriented from the lower-(degree, key) endpoint
-  to the higher one, the standard worst-case-optimal orientation — a
-  node's out-neighborhood in the oriented graph is O(sqrt(|E|)), so the
-  wedge join (the only quadratic step) is bounded even on skewed
-  degree distributions; the closing edge check is a semi-join.
+- **Integer-exact arithmetic.**  Scores are fixed-point (PageRank x1e9,
+  integer division only), so every sum is an order-independent integer
+  sum — invariant to partition layout, task scheduling and engine, and
+  the driver's value-hash oracle can replay the whole iteration in SQL.
+  Float PageRank would differ across engines in the last ulp because
+  float addition is not associative.
+- **Bounded iteration.**  A fixed iteration or hop count keeps each
+  oracle an unrolled or recursive CTE and the Spark lineage bounded.
+
+Eager jobs: building the plan of :func:`pagerank_integer`,
+:func:`personalized_pagerank`, :func:`triangles`,
+:func:`local_clustering`, :func:`label_propagation`,
+:func:`community_modularity`, :func:`kcore`, :func:`random_walks`,
+:func:`skipgram_pairs` and :func:`harmonic_centrality` (and of
+``queries.bfs_distances``) runs eager ``localCheckpoint`` jobs — one
+per reused relation and per iteration, to cap lineage.  Only the two
+PageRank entry points take ``checkpoint=False``, which keeps the whole
+plan lazy for plan capture (``bench.py --plans``,
+``scripts/plan_audit.py``).  :func:`scholar_digraph`,
+:func:`undirected_adjacency`, :func:`dense_ids`,
+:func:`comention_network`, :func:`comention_lift` and
+:func:`negative_samples` return lazy plans.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame, Window, functions as F
 
@@ -57,6 +74,31 @@ def scholar_digraph(edges: DataFrame) -> DataFrame:
         .select(F.col("src_key").alias("src"), F.col("tgt_key").alias("tgt"))
         .distinct()
     )
+
+
+def _scholar_nodes(se: DataFrame) -> DataFrame:
+    """Node set (node) of a :func:`scholar_digraph`: distinct src ∪ tgt."""
+    return (
+        se.select(F.col("src").alias("node"))
+        .union(se.select(F.col("tgt").alias("node")))
+        .distinct()
+    )
+
+
+def undirected_adjacency(edges: DataFrame) -> DataFrame:
+    """Symmetric distinct neighbor list (node, nbr) of the scholar
+    graph — each undirected edge contributes both directions."""
+    se = scholar_digraph(edges)
+    return (
+        se.select(F.col("src").alias("node"), F.col("tgt").alias("nbr"))
+        .union(se.select(F.col("tgt").alias("node"), F.col("src").alias("nbr")))
+        .distinct()
+    )
+
+
+def _cut(df: DataFrame, checkpoint: bool) -> DataFrame:
+    """``localCheckpoint(eager=True)`` when ``checkpoint``, else ``df``."""
+    return df.localCheckpoint(eager=True) if checkpoint else df
 
 
 def dense_ids(
@@ -106,52 +148,56 @@ def dense_ids(
     )
 
 
-def pagerank_integer(
+def _pagerank(
     edges: DataFrame,
-    n_iters: int = PAGERANK_ITERS,
-    scale: int = PAGERANK_SCALE,
-    checkpoint: bool = True,
+    n_iters: int,
+    scale: int,
+    checkpoint: bool,
+    teleport: Callable[[DataFrame], DataFrame],
 ) -> DataFrame:
-    """Fixed-point PageRank over the scholar narration digraph.
+    """The fixed-point PageRank recurrence, shared by
+    :func:`pagerank_integer` and :func:`personalized_pagerank`.
 
-    rank_0(v) = scale (i.e. 1.0); each iteration
-    rank_{i+1}(v) = (15 * scale) div 100
-                  + (85 * sum over in-edges (s,v) of rank_i(s) div out(s))
-                    div 100
+    ``teleport(nodes)`` maps the node set (node) to (node, teleport
+    boolean).  With t(v) = [teleport(v)]:
+
+        rank_0(v)     = scale * t(v)
+        rank_{i+1}(v) = (15 * scale div 100) * t(v)
+                      + (85 * sum over in-edges (s,v) of
+                              rank_i(s) div out(s)) div 100
+
     with ``div`` integer division throughout — the dangling-mass
     variant that redistributes nothing (documented; both engines
     compute it identically).  All values stay well inside int64:
     total mass <= n_nodes * scale and the 85x intermediate fits until
     n_nodes ~ 1e8 per partition-sum; beyond that, lower ``scale``.
 
-    Returns (node, rank_x1e9) — bit-identical to the driver oracle's
-    unrolled-CTE replay.
+    Scale shape per iteration: one equi-join of the edge list against
+    the node-sized rank table on ``src`` (both hash-partitioned on the
+    same key, so AQE reuses the exchange across iterations) followed by
+    one partial-agg sum keyed on ``tgt``.  No driver-side collect.
+
+    Returns (node, rank).
     """
-    se = scholar_digraph(edges)
-    if checkpoint:
-        # materialize the corpus->digraph reduction ONCE: se feeds the
-        # node set, the degree table, and the joined edge list — without
-        # the cut each consumer re-scans the full merged edge table
-        # (measured 2-3 redundant 10^7-row scans per bench run)
-        se = se.localCheckpoint(eager=True)
-    nodes = (
-        se.select(F.col("src").alias("node"))
-        .union(se.select(F.col("tgt").alias("node")))
-        .distinct()
-    )
-    if checkpoint:
-        # nodes is re-consumed by EVERY iteration's left join; without
-        # its own cut each iteration re-runs the union+distinct
-        nodes = nodes.localCheckpoint(eager=True)
+    # materialize the corpus->digraph reduction ONCE: se feeds the node
+    # set, the degree table, and the joined edge list — without the cut
+    # each consumer re-scans the full merged edge table (measured 2-3
+    # redundant 10^7-row scans per bench run)
+    se = _cut(scholar_digraph(edges), checkpoint)
+    # nodes is re-consumed by EVERY iteration's left join; without its
+    # own cut each iteration re-runs the union+distinct
+    nodes = _cut(_scholar_nodes(se), checkpoint)
     out_deg = se.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     # per-source contribution denominator joined once; re-used every
     # iteration (edge list and degree table are iteration-invariant)
-    edges_d = se.join(out_deg, "src")
-    if checkpoint:
-        edges_d = edges_d.localCheckpoint(eager=True)
+    edges_d = _cut(se.join(out_deg, "src"), checkpoint)
+    flagged = teleport(nodes)
     base = (15 * scale) // 100
 
-    ranks = nodes.select("node", F.lit(scale).cast("long").alias("rank"))
+    def teleport_term(mass: int):
+        return F.when(F.col("teleport"), F.lit(mass)).otherwise(F.lit(0))
+
+    ranks = flagged.select("node", teleport_term(scale).cast("long").alias("rank"))
     for _ in range(n_iters):
         contribs = (
             edges_d.join(ranks, edges_d["src"] == ranks["node"])
@@ -159,19 +205,39 @@ def pagerank_integer(
             .groupBy("tgt")
             .agg(F.sum("c").alias("s"))
         )
-        ranks = nodes.join(
-            contribs, nodes["node"] == contribs["tgt"], "left"
+        ranks = flagged.join(
+            contribs, flagged["node"] == contribs["tgt"], "left"
         ).select(
             "node",
-            (F.lit(base) + F.expr("(85 * coalesce(s, 0L)) div 100"))
+            (teleport_term(base) + F.expr("(85 * coalesce(s, 0L)) div 100"))
             .cast("long")
             .alias("rank"),
         )
-        # cap lineage growth per iteration (same discipline as BFS /
-        # connected components); the audit path keeps the plan lazy so
-        # the iteration's physical shape stays inspectable
-        if checkpoint:
-            ranks = ranks.localCheckpoint(eager=True)
+        # cap lineage growth per iteration; the plan-capture path keeps
+        # the plan lazy so the iteration's physical shape stays
+        # inspectable
+        ranks = _cut(ranks, checkpoint)
+    return ranks
+
+
+def pagerank_integer(
+    edges: DataFrame,
+    n_iters: int = PAGERANK_ITERS,
+    scale: int = PAGERANK_SCALE,
+    checkpoint: bool = True,
+) -> DataFrame:
+    """Fixed-point PageRank over the scholar narration digraph: the
+    :func:`_pagerank` recurrence with t(v) = 1 on every node (rank_0 =
+    scale, i.e. 1.0).
+
+    Returns (node, rank_x1e9) — bit-identical to the driver oracle's
+    unrolled-CTE replay.
+    """
+
+    def teleport(nodes: DataFrame) -> DataFrame:
+        return nodes.withColumn("teleport", F.lit(True))
+
+    ranks = _pagerank(edges, n_iters, scale, checkpoint, teleport)
     return ranks.select("node", F.col("rank").alias("rank_x1e9"))
 
 
@@ -188,46 +254,43 @@ def triangles(edges: DataFrame) -> DataFrame:
     Returns one row per triangle, keys sorted lexicographically
     (s1 < s2 < s3 as strings), exactly reproducible in SQL.
     """
-    und, deg = _und_deg(edges, checkpoint=True)
-    return _triangles_from(und, deg, checkpoint=True)
+    und, deg = _und_deg(edges)
+    return _triangles_from(und, deg)
 
 
-def _und_deg(
-    edges: DataFrame, checkpoint: bool = False
-) -> tuple[DataFrame, DataFrame]:
-    """Distinct undirected scholar edges (u < v) and the per-node
-    degree table — shared by the triangle enumeration and the local
-    clustering coefficient so the edge scan + degree agg run once.
-
-    ``checkpoint=True`` materializes both: ``und`` is consumed three
-    times downstream (orientation join + both degree unions) and without
-    the cut every consumer re-runs the corpus->digraph reduction
-    (measured ~6 redundant full edge scans per triangles() call)."""
-    se = scholar_digraph(edges)
+def _und_deg(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Distinct undirected scholar edges ``und`` (u, v) with u < v and
+    the per-node degree table ``deg`` (node, deg), both materialized —
+    shared by the triangle enumeration, the local clustering
+    coefficient and the modularity so the edge scan + degree agg run
+    once.  ``und`` is consumed several times downstream
+    (orientation join + both degree unions) and without the cut every
+    consumer re-runs the corpus->digraph reduction (measured ~6
+    redundant full edge scans per triangles() call)."""
     und = (
-        se.select(
+        scholar_digraph(edges)
+        .select(
             F.least("src", "tgt").alias("u"), F.greatest("src", "tgt").alias("v")
         )
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    if checkpoint:
-        und = und.localCheckpoint(eager=True)
     ends = und.select(F.col("u").alias("node")).union(
         und.select(F.col("v").alias("node"))
     )
-    deg = ends.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
-    if checkpoint:
-        deg = deg.localCheckpoint(eager=True)
+    deg = (
+        ends.groupBy("node")
+        .agg(F.count(F.lit(1)).alias("deg"))
+        .localCheckpoint(eager=True)
+    )
     return und, deg
 
 
-def _triangles_from(
-    und: DataFrame, deg: DataFrame, checkpoint: bool = False
-) -> DataFrame:
+def _triangles_from(und: DataFrame, deg: DataFrame) -> DataFrame:
     """Degree-ordered triangle enumeration over a prepared (und, deg)
-    pair (see :func:`triangles` for semantics).  ``checkpoint=True``
-    materializes the oriented edge list, which the wedge join consumes
-    twice and the closing semi-join a third time."""
+    pair (see :func:`triangles` for semantics).  The oriented edge list
+    is materialized: the wedge join consumes it twice and the closing
+    semi-join a third time."""
     du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
     oriented = (
@@ -243,9 +306,8 @@ def _triangles_from(
             .alias("e")
         )
         .select("e.a", "e.b")
+        .localCheckpoint(eager=True)
     )
-    if checkpoint:
-        oriented = oriented.localCheckpoint(eager=True)
     e1 = oriented.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = oriented.select(F.col("a").alias("y"), F.col("b").alias("z"))
     wedges = e1.join(e2, "y").select("x", "y", "z")
@@ -254,17 +316,6 @@ def _triangles_from(
     s = F.array_sort(F.array("x", "y", "z"))
     return tri.select(
         s.getItem(0).alias("s1"), s.getItem(1).alias("s2"), s.getItem(2).alias("s3")
-    )
-
-
-def undirected_adjacency(edges: DataFrame) -> DataFrame:
-    """Symmetric distinct neighbor list (node, nbr) of the scholar
-    graph — each undirected edge contributes both directions."""
-    se = scholar_digraph(edges)
-    return (
-        se.select(F.col("src").alias("node"), F.col("tgt").alias("nbr"))
-        .union(se.select(F.col("tgt").alias("node"), F.col("src").alias("nbr")))
-        .distinct()
     )
 
 
@@ -433,12 +484,7 @@ def random_walks(edges: DataFrame, n_steps: int = WALK_STEPS) -> DataFrame:
     Returns (start, walk, walk_len) with walk = '->'-joined keys.
     """
     se = scholar_digraph(edges).localCheckpoint(eager=True)
-    nodes = (
-        se.select(F.col("src").alias("node"))
-        .union(se.select(F.col("tgt").alias("node")))
-        .distinct()
-    )
-    walks = nodes.select(
+    walks = _scholar_nodes(se).select(
         F.col("node").alias("start"),
         F.col("node").alias("cur"),
         F.col("node").alias("walk"),
@@ -539,15 +585,13 @@ def community_modularity(
     exact).  Overflow bounds: e_c*1e9 fits int64 while m < 9e9 edges;
     the degree fraction is <= 1e4 so its squared term is <= 1e9.
 
-    Scale shape: one labels⋈degree node-sized join, one endpoints⋈labels
-    equi-join over the edge list (never node x node), partial-agg
-    counts, and a broadcast 1-row m.
+    Scale shape: the materialized (u < v) pairs and degree table of
+    :func:`_und_deg`, one labels⋈degree node-sized join, one
+    endpoints⋈labels equi-join over the edge list (never node x node),
+    partial-agg counts, and a broadcast 1-row m.
     """
     labels = label_propagation(edges, n_iters)
-    sd = scholar_digraph(edges)
-    und = sd.select(
-        F.least("src", "tgt").alias("u"), F.greatest("src", "tgt").alias("v")
-    ).distinct()
+    und, deg = _und_deg(edges)
     m = und.agg(F.count(F.lit(1)).cast("long").alias("m"))
     lu = labels.select(F.col("node").alias("u"), F.col("community").alias("cu"))
     lv = labels.select(F.col("node").alias("v"), F.col("community").alias("cv"))
@@ -557,12 +601,6 @@ def community_modularity(
         .where(F.col("cu") == F.col("cv"))
         .groupBy(F.col("cu").alias("community"))
         .agg(F.count(F.lit(1)).cast("long").alias("e_intra_raw"))
-    )
-    deg = (
-        und.select(F.col("u").alias("node"))
-        .union(und.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
     )
     comm = (
         labels.join(deg, "node")
@@ -681,9 +719,9 @@ def local_clustering(edges: DataFrame) -> DataFrame:
 
     Returns (node, deg, n_tri, cc_x1000) for every node with >= 1 edge.
     """
-    und, deg = _und_deg(edges, checkpoint=True)
+    und, deg = _und_deg(edges)
     per_node_tri = (
-        _triangles_from(und, deg, checkpoint=True)
+        _triangles_from(und, deg)
         .select(F.explode(F.array("s1", "s2", "s3")).alias("node"))
         .groupBy("node")
         .agg(F.count(F.lit(1)).alias("n_tri"))
@@ -721,78 +759,33 @@ def personalized_pagerank(
     ``seed_agg`` ("min"/"max") node by key order, a deterministic
     data-derived default both engines replay.  Defaults preserve the
     original behavior (lexicographically smallest scholar node)
-    (random-walk-with-restart proximity to the seed), same integer
-    recurrence as :func:`pagerank_integer` but with all teleport mass
-    pinned on the seed:
+    (random-walk-with-restart proximity to the seed): the
+    :func:`_pagerank` recurrence with t(v) = [v == seed], so the
+    unrolled-CTE oracle replays every iteration bit-for-bit; mass
+    bounds are strictly tighter than global PageRank (total mass <=
+    scale + n_iters * base).
 
-        rank_0(v)     = scale * [v == seed]
-        rank_{i+1}(v) = (15 * scale div 100) * [v == seed]
-                      + (85 * sum over in-edges (s,v) of
-                              rank_i(s) div out(s)) div 100
-
-    Integer division throughout, so the unrolled-CTE oracle replays
-    every iteration bit-for-bit; mass bounds are strictly tighter than
-    global PageRank (total mass <= scale + n_iters * base).
-
-    Scale shape: identical to the global variant — the edge⋈rank
-    equi-join and the tgt-keyed partial-agg sum per iteration, the
-    iteration-invariant edge/out-degree join localCheckpoint-ed once,
-    plus one broadcast 1-row seed.  Choosing a different seed (a query
-    parameter in a serving deployment) changes only the broadcast row.
+    Scale shape: the global variant's (:func:`_pagerank`) plus one
+    broadcast 1-row seed cross-joined onto the node set.  Choosing a
+    different seed (a query parameter in a serving deployment) changes
+    only the broadcast row.
 
     Returns (node, ppr_x1e9) over all scholar nodes.
     """
-    se = scholar_digraph(edges)
-    if checkpoint:
-        # one cut for the corpus->digraph reduction (see pagerank_integer)
-        se = se.localCheckpoint(eager=True)
-    nodes = (
-        se.select(F.col("src").alias("node"))
-        .union(se.select(F.col("tgt").alias("node")))
-        .distinct()
-    )
-    if checkpoint:
-        nodes = nodes.localCheckpoint(eager=True)
-    if seed is not None:
-        seed_df = nodes.sparkSession.range(1).select(
-            F.lit(seed).alias("seed")
-        )
-    elif seed_agg == "max":
-        seed_df = nodes.agg(F.max("node").alias("seed"))
-    else:
-        seed_df = nodes.agg(F.min("node").alias("seed"))
-    out_deg = se.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    edges_d = se.join(out_deg, "src")
-    if checkpoint:
-        edges_d = edges_d.localCheckpoint(eager=True)
-    base = (15 * scale) // 100
-    nodes_s = nodes.crossJoin(F.broadcast(seed_df))
-    is_seed = F.col("node") == F.col("seed")
 
-    ranks = nodes_s.select(
-        "node",
-        F.when(is_seed, F.lit(scale)).otherwise(F.lit(0)).cast("long").alias("rank"),
-    )
-    for _ in range(n_iters):
-        contribs = (
-            edges_d.join(ranks, edges_d["src"] == ranks["node"])
-            .select(F.col("tgt"), F.expr("rank div d").alias("c"))
-            .groupBy("tgt")
-            .agg(F.sum("c").alias("s"))
-        )
-        ranks = nodes_s.join(
-            contribs, nodes_s["node"] == contribs["tgt"], "left"
-        ).select(
-            "node",
-            (
-                F.when(is_seed, F.lit(base)).otherwise(F.lit(0))
-                + F.expr("(85 * coalesce(s, 0L)) div 100")
+    def teleport(nodes: DataFrame) -> DataFrame:
+        if seed is not None:
+            seed_df = nodes.sparkSession.range(1).select(
+                F.lit(seed).alias("seed")
             )
-            .cast("long")
-            .alias("rank"),
+        else:
+            agg = F.max if seed_agg == "max" else F.min
+            seed_df = nodes.agg(agg("node").alias("seed"))
+        return nodes.crossJoin(F.broadcast(seed_df)).select(
+            "node", (F.col("node") == F.col("seed")).alias("teleport")
         )
-        if checkpoint:
-            ranks = ranks.localCheckpoint(eager=True)
+
+    ranks = _pagerank(edges, n_iters, scale, checkpoint, teleport)
     return ranks.select("node", F.col("rank").alias("ppr_x1e9"))
 
 
@@ -833,12 +826,7 @@ def negative_samples(edges: DataFrame, k: int = NEG_SLOTS) -> DataFrame:
         # for k=0 (Spark defaults the step to -1 when start > stop) and
         # fabricate two bogus slots per node instead of zero
         raise ValueError(f"negative_samples requires k >= 1, got {k}")
-    se = scholar_digraph(edges)
-    nodes = (
-        se.select(F.col("src").alias("node"))
-        .union(se.select(F.col("tgt").alias("node")))
-        .distinct()
-    )
+    nodes = _scholar_nodes(scholar_digraph(edges))
     # md5-order dense index via the bucketed two-phase rank (dense_ids):
     # hex ordering values give 256 uniform buckets, so the ranking
     # parallelizes instead of funneling the vocabulary through one
@@ -879,6 +867,44 @@ HARMONIC_HOPS = 4
 HARMONIC_SCALE = 1_000_000
 
 
+def multi_origin_bfs(
+    adj: DataFrame, origins: DataFrame, max_hops: int
+) -> DataFrame:
+    """Hop-bounded BFS from every row of ``origins`` (node) over the
+    symmetric adjacency ``adj`` (node, nbr), e.g.
+    :func:`undirected_adjacency`.
+
+    Each hop joins the frontier to ``adj`` on ``node``, dedups the
+    (origin, node) pairs and anti-joins everything the origin already
+    reached — BFS reaches a node first at its minimal distance — then
+    localCheckpoints to cap lineage growth; the loop stops early once a
+    hop reaches nothing new.  Output size is the sum over origins of
+    their ``max_hops``-ball, never all-pairs.
+
+    Returns (origin, node, dist int), the origin itself at dist 0.
+    """
+    reached = origins.select(
+        F.col("node").alias("origin"),
+        "node",
+        F.lit(0).cast("int").alias("dist"),
+    ).localCheckpoint(eager=True)
+    frontier = reached
+    for depth in range(1, max_hops + 1):
+        nxt = (
+            frontier.join(adj, "node")
+            .select("origin", F.col("nbr").alias("node"))
+            .distinct()
+            .join(reached.select("origin", "node"), ["origin", "node"], "left_anti")
+            .withColumn("dist", F.lit(depth))
+            .localCheckpoint(eager=True)
+        )
+        if nxt.isEmpty():
+            break
+        reached = reached.union(nxt).localCheckpoint(eager=True)
+        frontier = nxt
+    return reached
+
+
 def harmonic_centrality(
     edges: DataFrame,
     max_hops: int = HARMONIC_HOPS,
@@ -895,10 +921,9 @@ def harmonic_centrality(
     graphs), in integer fixed point so the DuckDB recursive-CTE oracle
     replays every division exactly.
 
-    Scale shape: multi-origin BFS — the reached set (origin, node,
-    dist) grows by one frontier⋈adjacency equi-join per hop with an
-    anti-join against the already-reached set (min-dist dedup), each
-    hop localCheckpoint-ed.  Size is sum over nodes of their
+    Scale shape: :func:`multi_origin_bfs` from every (sampled) origin —
+    one frontier⋈adjacency equi-join per hop with an anti-join against
+    the already-reached set.  Size is sum over nodes of their
     max_hops-ball, the irreducible output of the measure; the hop
     bound keeps it linear in the ball volume, never all-pairs, and on
     the narration graph the balls are isnad-neighborhood-sized.  For
@@ -927,33 +952,7 @@ def harmonic_centrality(
             )
             == 0
         )
-    reached = origins.select(
-        F.col("node").alias("origin"),
-        "node",
-        F.lit(0).cast("int").alias("dist"),
-    ).localCheckpoint(eager=True)
-    frontier = reached
-    for _ in range(max_hops):
-        nxt = (
-            frontier.join(adj, "node")
-            .select(
-                "origin",
-                F.col("nbr").alias("node"),
-                (F.col("dist") + 1).cast("int").alias("dist"),
-            )
-            .groupBy("origin", "node")
-            .agg(F.min("dist").alias("dist"))
-            .join(
-                reached.select("origin", "node"),
-                ["origin", "node"],
-                "left_anti",
-            )
-            .localCheckpoint(eager=True)
-        )
-        if not nxt.take(1):
-            break
-        reached = reached.union(nxt).localCheckpoint(eager=True)
-        frontier = nxt
+    reached = multi_origin_bfs(adj, origins, max_hops)
     scores = (
         reached.where(F.col("dist") > 0)
         .groupBy(F.col("origin").alias("node"))

@@ -3,7 +3,8 @@
 Parity target: GraphQuerier (/root/reference/src/graph/query.py) and the
 FakeGraphBackend query doubles (tests/test_graph.py:99-198).  All queries
 are plain DataFrame plans (filter/join/distinct/orderBy) except BFS, which
-is an iterative frontier-expansion join bounded at 20 hops (query.py:125).
+is an iterative frontier-expansion join bounded at 20 hops (query.py:125)
+over the scholar adjacency of operators/graph_analytics.
 """
 
 from __future__ import annotations
@@ -12,6 +13,11 @@ from typing import Dict, List
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from islamic_ner_spark.operators.graph_analytics import (
+    multi_origin_bfs,
+    undirected_adjacency,
+)
 
 
 def find_scholar(nodes: DataFrame, name: str) -> Dict[str, str]:
@@ -152,20 +158,7 @@ def shortest_path(
     if scholar1 == scholar2:
         return [scholar1]
 
-    scholar_edges = edges.where(
-        (F.col("pred") == "NARRATED_FROM")
-        & (F.col("src_label") == "Scholar")
-        & (F.col("tgt_label") == "Scholar")
-    ).select("src_key", "tgt_key")
-    undirected = (
-        scholar_edges.select(F.col("src_key").alias("a"), F.col("tgt_key").alias("b"))
-        .union(
-            scholar_edges.select(F.col("tgt_key").alias("a"), F.col("src_key").alias("b"))
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-
+    adj = undirected_adjacency(edges)
     spark = edges.sparkSession
     frontier = spark.createDataFrame(
         [(scholar1, [scholar1])], "node string, path array<string>"
@@ -174,10 +167,10 @@ def shortest_path(
 
     for _ in range(max_hops):
         expanded = (
-            frontier.join(undirected, frontier["node"] == undirected["a"])
+            frontier.join(adj, "node")
             .select(
-                F.col("b").alias("node"),
-                F.concat("path", F.array(F.col("b"))).alias("path"),
+                F.col("nbr").alias("node"),
+                F.concat("path", F.array(F.col("nbr"))).alias("path"),
             )
             .join(visited, "node", "left_anti")
         )
@@ -201,51 +194,23 @@ def bfs_distances(
     Scholar NARRATED_FROM graph, capped at ``max_hops`` (the
     all-destinations generalization of Q5's point-to-point BFS).
 
-    Iterative frontier expansion: each level joins the frontier to the
-    (deduplicated, undirected) edge list, anti-joins everything already
-    reached (BFS guarantees the first visit is minimal), and
-    localCheckpoints to cap lineage growth — ``max_hops`` joins total,
-    each a keyed equi-join Catalyst can broadcast when the frontier is
-    small.  When ``source`` is None the lexicographically smallest
-    scholar key seeds the walk (a deterministic choice both engines can
-    compute; the driver oracle replays the whole walk as a recursive
-    CTE with MIN(dist)).
+    The walk is :func:`graph_analytics.multi_origin_bfs` from the one
+    origin over :func:`graph_analytics.undirected_adjacency` — one
+    frontier⋈adjacency equi-join per level, an anti-join against
+    everything already reached (BFS guarantees the first visit is
+    minimal) and a lineage checkpoint.  When ``source`` is None the
+    lexicographically smallest scholar key seeds the walk (a
+    deterministic choice both engines can compute; the driver oracle
+    replays the whole walk as a recursive CTE with MIN(dist)).  A
+    ``source`` absent from the graph reaches only itself.
+
+    Returns (node string, dist int).
     """
-    scholar_edges = edges.where(
-        (F.col("pred") == "NARRATED_FROM")
-        & (F.col("src_label") == "Scholar")
-        & (F.col("tgt_label") == "Scholar")
-    ).select("src_key", "tgt_key")
-    undirected = (
-        scholar_edges.select(F.col("src_key").alias("a"), F.col("tgt_key").alias("b"))
-        .union(
-            scholar_edges.select(F.col("tgt_key").alias("a"), F.col("src_key").alias("b"))
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    if source is None:
-        row = undirected.agg(F.min("a").alias("s")).collect()[0]  # bounded: 1 row
-        source = row["s"]
-        if source is None:
-            return edges.sparkSession.createDataFrame([], "node string, dist int")
-
+    adj = undirected_adjacency(edges).localCheckpoint(eager=True)
     spark = edges.sparkSession
-    frontier = spark.createDataFrame([(source, 0)], "node string, dist int")
-    reached = frontier
-
-    for depth in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(undirected, frontier["node"] == undirected["a"])
-            .select(F.col("b").alias("node"))
-            .distinct()
-            .join(reached.select("node"), "node", "left_anti")
-            .withColumn("dist", F.lit(depth))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            break
-        reached = reached.union(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    return reached
+    if source is None:
+        source = adj.agg(F.min("node").alias("s")).collect()[0]["s"]  # 1 row
+        if source is None:
+            return spark.createDataFrame([], "node string, dist int")
+    origin = spark.createDataFrame([(source,)], "node string")
+    return multi_origin_bfs(adj, origin, max_hops).select("node", "dist")

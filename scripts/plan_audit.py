@@ -421,10 +421,22 @@ def main() -> int:
 
     from islamic_ner_spark.operators.graph_analytics import (
         negative_samples,
+        pagerank_integer,
         personalized_pagerank,
     )
 
     staged_edges = dq._staged_edges(spark, sf_dir)
+    plan = plan_of(pagerank_integer(staged_edges, n_iters=1, checkpoint=False))
+    check(
+        "pagerank: no seed join, keyed contribution agg",
+        "BroadcastNestedLoopJoin" not in plan
+        and "CartesianProduct" not in plan
+        and plan.count("HashAggregate") >= 2,
+        "global PageRank flags every node as a teleport target with a "
+        "literal, so the shared kernel adds no seed cross join; "
+        "contributions combine map-side before the tgt exchange",
+    )
+
     plan = plan_of(personalized_pagerank(staged_edges, n_iters=1, checkpoint=False))
     check(
         "ppr: broadcast seed + keyed contribution agg",

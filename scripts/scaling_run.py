@@ -298,6 +298,12 @@ stage materialization) plus external host load; it shrinks relative to
 input size — the efficiency number above improves with corpus scale,
 exactly the property that matters at 10^12 turns.
 
+## sf1 headroom
+
+The one 10x-scale kg-build leg (60,000,000 turns, round 6) is recorded
+in [BENCH_sf1.md](BENCH_sf1.md).  `scripts/scaling_run.py` rewrites
+this file but never that one.
+
 ## Reference comparison
 
 The reference processes 1.55 docs/s (~5 relations/s inserted) single-

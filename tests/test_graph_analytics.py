@@ -79,11 +79,15 @@ def test_pagerank_matches_python_replay_random_graph(spark) -> None:
         }
     )
     pairs = [(s, t) for s, t in pairs if s != t]
-    got = {
-        r["node"]: r["rank_x1e9"]
-        for r in pagerank_integer(_edges(spark, pairs)).collect()
-    }
-    assert got == _python_pagerank(pairs)
+    # checkpoint=False is the lazy plan-capture path: same results
+    for checkpoint in (True, False):
+        got = {
+            r["node"]: r["rank_x1e9"]
+            for r in pagerank_integer(
+                _edges(spark, pairs), checkpoint=checkpoint
+            ).collect()
+        }
+        assert got == _python_pagerank(pairs), checkpoint
 
 
 def test_pagerank_duplicate_and_reversed_edges_distinct(spark) -> None:
@@ -500,11 +504,14 @@ def test_ppr_matches_python_replay_random_graph(spark) -> None:
             if a != b
         }
     )
-    got = {
-        r["node"]: r["ppr_x1e9"]
-        for r in personalized_pagerank(_edges(spark, pairs)).collect()
-    }
-    assert got == _python_ppr(pairs)
+    for checkpoint in (True, False):
+        got = {
+            r["node"]: r["ppr_x1e9"]
+            for r in personalized_pagerank(
+                _edges(spark, pairs), checkpoint=checkpoint
+            ).collect()
+        }
+        assert got == _python_ppr(pairs), checkpoint
 
 
 from islamic_ner_spark.operators.graph_analytics import negative_samples

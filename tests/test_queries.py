@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
 from islamic_ner_spark.functions.normalize import normalize
 from islamic_ner_spark.operators import queries as Q
 from islamic_ner_spark.plans.pipeline import build_graph_from_labels
@@ -119,3 +121,12 @@ def test_bfs_distances_hand_graph(spark) -> None:
     # default seed = lexicographic min node ("a"); max_hops truncates
     capped = {r["node"]: r["dist"] for r in Q.bfs_distances(edges, max_hops=1).collect()}
     assert capped == {"a": 0, "b": 1}
+    # a source absent from the graph reaches only itself
+    absent = Q.bfs_distances(edges, source="nobody").collect()
+    assert {r["node"]: r["dist"] for r in absent} == {"nobody": 0}
+    # no Scholar NARRATED_FROM row: the default seed is undefined, so
+    # the walk is empty but keeps its (node string, dist int) shape
+    no_scholars = edges.where(F.col("pred") != "NARRATED_FROM")
+    empty = Q.bfs_distances(no_scholars)
+    assert empty.collect() == []
+    assert empty.dtypes == [("node", "string"), ("dist", "int")]
