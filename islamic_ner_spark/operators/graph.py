@@ -7,17 +7,25 @@ Neo4j MERGE semantics re-expressed as deterministic aggregations
   stable (conv_id, turn_idx, mention order) sequence, except ``variants``
   which accumulates as a sorted set union
 * edge MERGE keyed by (pred, src_label, src_key, tgt_label, tgt_key,
-  source_hadith) -> first writer fixes evidence/confidence; later writers
-  raise confidence to the max and fill evidence only if empty.  Within one
-  document the reference's in-batch dedupe keeps the *first* relation
-  per key (builder.py:99-123), which ``min_by`` over the emit order
-  reproduces exactly.
+  source_hadith) -> the first writer fixes evidence/confidence.  The key
+  holds the turn's ``source_hadith``, so all of an edge's writers come
+  from one turn, where the reference's in-batch dedupe keeps the *first*
+  relation per key (builder.py:99-123); a min over the emit order
+  reproduces it exactly.
 
 Two strategies compute the same tables: the global groupBy
 (:func:`build_nodes`, :func:`build_edges`), valid for any input, and the
 fused Arrow pass (:func:`fused_graph_outputs`, finished by
 :func:`nodes_from_combined` / :func:`edges_from_combined`), which needs one
 row per turn.
+
+Rows already merged (the persistent ``NODES_TABLE_SCHEMA`` /
+``EDGES_TABLE_SCHEMA`` shape) carry their winning writer's ordinal, so
+merging them again is one associative re-aggregation:
+:func:`merge_node_rows` and :func:`merge_edge_rows`.  The fused pass's
+vocabulary finish, the stream's per-bucket upsert and the compaction all
+run these two, so a streamed, compacted or resumed graph equals the
+one-shot build.
 
 Node schema per entity type (builder.py:19-26, 325-392):
 SCHOLAR->(Scholar, canonical_name), BOOK->(Book, canonical_name),
@@ -128,11 +136,8 @@ def aggregate_nodes(rows: DataFrame) -> DataFrame:
     writer count (builder.py:404-443).
 
     The winning writer's ordinal rides along as ``best_conv/best_turn/
-    best_emit`` so any later re-aggregation — cross-batch incremental
-    MERGE, or node clusters that merge during streaming
-    re-canonicalization compaction — can re-run the SAME last-writer
-    rule associatively: max over constituents' ordinals IS the global
-    last writer."""
+    best_emit`` so :func:`merge_node_rows` can re-run the same
+    last-writer rule over merged rows."""
     # single struct-max carries both last-writer payloads in one agg
     # buffer (vs two max_by(col, order) buffers); order fields lead, so
     # struct comparison == last-writer-wins
@@ -163,11 +168,15 @@ def aggregate_nodes(rows: DataFrame) -> DataFrame:
             F.col("w.turn_idx").alias("best_turn"),
             F.col("w.emit_idx").alias("best_emit"),
         )
-        # Hadith nodes carry provenance fields, empty for transcript input
-        # (builder.py:339-343); Book author / Concept category default ""
-        .withColumn("book_ref", F.when(F.col("label") == "Hadith", F.lit("")))
-        .withColumn("chapter", F.when(F.col("label") == "Hadith", F.lit("")))
+        .withColumn("book_ref", _hadith_provenance())
+        .withColumn("chapter", _hadith_provenance())
     )
+
+
+def _hadith_provenance() -> F.Column:
+    """``book_ref`` / ``chapter``: Hadith nodes carry provenance fields,
+    empty for transcript input (builder.py:339-343); other labels null."""
+    return F.when(F.col("label") == "Hadith", F.lit(""))
 
 
 def build_nodes(
@@ -287,12 +296,9 @@ def aggregate_edges(rows: DataFrame) -> DataFrame:
     (conv_id, turn_idx, emit_idx) order fixes confidence/evidence per
     key, ``merge_count`` counts the writers (builder.py:99-123,427-435).
 
-    ``first_emit`` (the winning writer's emit ordinal) rides along so a
-    later re-aggregation — e.g. edges whose endpoint keys merge during
-    streaming re-canonicalization compaction — can re-run the SAME
-    first-writer rule associatively: min over rows' ``first_emit`` IS
-    the global first writer (an edge key's rows all share one turn, so
-    emit order alone totally orders its writers)."""
+    ``first_emit`` (the winning writer's emit ordinal) rides along so
+    :func:`merge_edge_rows` can re-run the same first-writer rule over
+    merged rows."""
     # single struct-min carries both payloads in one agg buffer (half the
     # sort width of two min_by(col, order) buffers); the order fields
     # lead, so struct comparison == first-writer-wins
@@ -319,6 +325,18 @@ def aggregate_edges(rows: DataFrame) -> DataFrame:
 
 
 EDGE_KEY = ["pred", "src_label", "src_key", "tgt_label", "tgt_key", "source_hadith"]
+
+
+# The streamed graph's bucket of a row: a hash of its MERGE key modulo
+# the graph dir's pinned bucket count.  Stored bucket dirs depend on
+# these exact expressions; changing one orphans every row of a graph dir.
+def edge_bucket(n_buckets: int) -> F.Column:
+    return F.pmod(F.xxhash64(*EDGE_KEY), F.lit(n_buckets)).cast("int")
+
+
+def node_bucket(n_buckets: int) -> F.Column:
+    return F.pmod(F.xxhash64("label", "key"), F.lit(n_buckets)).cast("int")
+
 
 # persistent-table DDL shapes (v2, writer-ordinal columns) — shared by
 # the streaming maintenance jobs so a one-table-missing graph dir can be
@@ -532,145 +550,76 @@ def edges_from_combined(combined: DataFrame) -> DataFrame:
 
 
 def nodes_from_combined(combined: DataFrame, extracted: DataFrame) -> DataFrame:
-    """Vocabulary candidates finish with a (tiny) global last-writer/
-    variant-union aggregation; Hadith nodes come from the narrow JVM
+    """Vocabulary candidates finish with a (tiny) global
+    :func:`merge_node_rows`; Hadith nodes come from the narrow JVM
     projection over the cached extraction."""
-    hadith = build_hadith_nodes_turn_local(extracted)
-    winner = F.max(
-        F.struct("best_conv", "best_turn", "best_emit", "name_ar", "confidence")
-    ).alias("w")
     vocab = (
         combined.where(F.col("out") == "vnode")
-        .groupBy("label", "key")
+        .withColumn("book_ref", _hadith_provenance())
+        .withColumn("chapter", _hadith_provenance())
+    )
+    return merge_node_rows(vocab).unionByName(build_hadith_nodes_turn_local(extracted))
+
+
+def merge_node_rows(rows: DataFrame) -> DataFrame:
+    """Node MERGE over already-merged rows (``NODES_TABLE_SCHEMA``
+    columns; extra columns are ignored): per (label, key) the row with
+    the globally last writer (max ``best_conv/best_turn/best_emit``)
+    wins the properties, ``variants`` is the sorted set union and
+    ``mention_count`` the sum (``SET n += props``, builder.py:404-408).
+
+    The max over the rows' winner ordinals is the global last writer,
+    so the result does not depend on how the writers were split into
+    rows, nor on the order the rows arrive in."""
+    # the ordinal fields lead the struct, so struct max == last writer
+    winner = F.max(
+        F.struct(
+            "best_conv", "best_turn", "best_emit",
+            "name_ar", "confidence", "book_ref", "chapter",
+        )
+    ).alias("w")
+    return (
+        rows.groupBy("label", "key")
         .agg(
             winner,
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("variants"))))
-            .alias("variants"),
+            F.array_sort(
+                F.array_distinct(F.flatten(F.collect_list("variants")))
+            ).alias("variants"),
             F.sum("mention_count").alias("mention_count"),
         )
         .select(
-            "label",
-            "key",
+            "label", "key",
             F.col("w.name_ar").alias("name_ar"),
             F.col("w.confidence").alias("confidence"),
-            "variants",
-            "mention_count",
+            "variants", "mention_count",
             F.col("w.best_conv").alias("best_conv"),
             F.col("w.best_turn").alias("best_turn"),
             F.col("w.best_emit").alias("best_emit"),
-            F.when(F.col("label") == "Hadith", F.lit("")).alias("book_ref"),
-            F.when(F.col("label") == "Hadith", F.lit("")).alias("chapter"),
+            F.col("w.book_ref").alias("book_ref"),
+            F.col("w.chapter").alias("chapter"),
         )
     )
-    return vocab.unionByName(hadith)
 
 
-def merge_edges_incremental(existing: DataFrame, incoming: DataFrame) -> DataFrame:
-    """Cross-batch MERGE (A4): confidence = max, evidence = first
-    non-empty, existing row wins ties (builder.py:427-435).
-    ``merge_count`` accumulates across batches (old + new), so after any
-    partitioning of the input into batches it equals the one-shot batch
-    build's total writer count per edge — bucket/batch-history-invariant.
-    """
-    e = existing.select(
-        "pred", "src_label", "src_key", "tgt_label", "tgt_key", "source_hadith",
-        F.col("confidence").alias("old_conf"), F.col("evidence").alias("old_ev"),
-        F.col("merge_count").alias("old_mc"), F.col("first_emit").alias("old_fe"),
-    )
-    i = incoming.select(
-        "pred", "src_label", "src_key", "tgt_label", "tgt_key", "source_hadith",
-        F.col("confidence").alias("new_conf"), F.col("evidence").alias("new_ev"),
-        F.col("merge_count").alias("new_mc"), F.col("first_emit").alias("new_fe"),
-    )
-    key = ["pred", "src_label", "src_key", "tgt_label", "tgt_key", "source_hadith"]
+def merge_edge_rows(rows: DataFrame) -> DataFrame:
+    """Edge MERGE over already-merged rows (``EDGES_TABLE_SCHEMA``
+    columns): per :data:`EDGE_KEY` the row with the first writer (min
+    ``first_emit``) keeps its confidence and evidence, and
+    ``merge_count`` is the sum.  An edge key's writers all share one
+    turn, so the emit ordinal alone orders them, and the min over the
+    rows' ordinals is the global first writer in any split or order."""
+    # first_emit leads the struct, so struct min == first writer
+    winner = F.min(F.struct("first_emit", "confidence", "evidence")).alias("w")
     return (
-        e.join(i, key, "full_outer")
+        rows.groupBy(*EDGE_KEY)
+        .agg(winner, F.sum("merge_count").alias("merge_count"))
         .select(
-            *key,
-            F.greatest(
-                F.coalesce("old_conf", F.lit(0.0)), F.coalesce("new_conf", F.lit(0.0))
-            ).alias("confidence"),
-            F.when(
-                F.coalesce(F.col("old_ev"), F.lit("")) != "", F.col("old_ev")
-            ).otherwise(F.coalesce("new_ev", F.lit(""))).alias("evidence"),
-            (
-                F.coalesce("old_mc", F.lit(0)) + F.coalesce("new_mc", F.lit(0))
-            ).alias("merge_count"),
-            # least() skips nulls: the surviving first-writer ordinal
-            F.least("old_fe", "new_fe").alias("first_emit"),
+            *EDGE_KEY,
+            F.col("w.confidence").alias("confidence"),
+            F.col("w.evidence").alias("evidence"),
+            "merge_count",
+            F.col("w.first_emit").alias("first_emit"),
         )
-    )
-
-
-def merge_nodes_incremental(existing: DataFrame, incoming: DataFrame) -> DataFrame:
-    """Cross-batch node MERGE: ``SET n += props`` semantics — the side
-    whose winning writer is GLOBALLY later (max ``best_conv/best_turn/
-    best_emit`` ordinal) wins properties, ``variants`` accumulates as a
-    sorted set union, ``mention_count`` sums (builder.py:404-408; union
-    semantics tests/test_graph.py:31-44).
-
-    Resolving the winner by ordinal (rather than "incoming wins") makes
-    the merge commutative: batches may replay or arrive out of writer
-    order and the result still equals the one-shot batch build."""
-    key = ["label", "key"]
-    e = existing.select(
-        *key,
-        F.col("name_ar").alias("old_name"), F.col("confidence").alias("old_conf"),
-        F.col("variants").alias("old_variants"),
-        F.col("mention_count").alias("old_count"),
-        F.col("best_conv").alias("old_bc"), F.col("best_turn").alias("old_bt"),
-        F.col("best_emit").alias("old_be"),
-        F.col("book_ref").alias("old_book_ref"), F.col("chapter").alias("old_chapter"),
-    )
-    i = incoming.select(
-        *key,
-        F.col("name_ar").alias("new_name"), F.col("confidence").alias("new_conf"),
-        F.col("variants").alias("new_variants"),
-        F.col("mention_count").alias("new_count"),
-        F.col("best_conv").alias("new_bc"), F.col("best_turn").alias("new_bt"),
-        F.col("best_emit").alias("new_be"),
-        F.col("book_ref").alias("new_book_ref"), F.col("chapter").alias("new_chapter"),
-    )
-    empty_arr = F.array().cast("array<string>")
-    # incoming wins ties (replay of the same batch must be a no-op under
-    # the old "incoming wins" contract)
-    new_wins = F.col("old_bc").isNull() | (
-        F.col("new_bc").isNotNull()
-        & (
-            F.struct(
-                F.col("new_bc").alias("c"), F.col("new_bt").alias("t"),
-                F.col("new_be").alias("e"),
-            )
-            >= F.struct(
-                F.col("old_bc").alias("c"), F.col("old_bt").alias("t"),
-                F.col("old_be").alias("e"),
-            )
-        )
-    )
-
-    def pick(new_col: str, old_col: str) -> F.Column:
-        return F.when(new_wins, F.coalesce(new_col, old_col)).otherwise(
-            F.coalesce(old_col, new_col)
-        )
-
-    return e.join(i, key, "full_outer").select(
-        *key,
-        pick("new_name", "old_name").alias("name_ar"),
-        pick("new_conf", "old_conf").alias("confidence"),
-        F.array_sort(
-            F.array_union(
-                F.coalesce("old_variants", empty_arr),
-                F.coalesce("new_variants", empty_arr),
-            )
-        ).alias("variants"),
-        (
-            F.coalesce("old_count", F.lit(0)) + F.coalesce("new_count", F.lit(0))
-        ).alias("mention_count"),
-        pick("new_bc", "old_bc").alias("best_conv"),
-        pick("new_bt", "old_bt").alias("best_turn"),
-        pick("new_be", "old_be").alias("best_emit"),
-        pick("new_book_ref", "old_book_ref").alias("book_ref"),
-        pick("new_chapter", "old_chapter").alias("chapter"),
     )
 
 

@@ -150,15 +150,16 @@ def shortest_path(
 ) -> List[str]:
     """Undirected BFS over NARRATED_FROM Scholar edges (Q5, query.py:115-135).
 
-    Iterative frontier-expansion joins; the frontier carries the path as an
-    array column, visited nodes are anti-joined out, and each level is
-    localCheckpoint-ed to cap lineage.  Ties resolve to the
-    lexicographically smallest path for determinism.
+    Iterative frontier-expansion joins over an adjacency checkpointed
+    once (so no level re-derives it from the edge table); the frontier
+    carries the path as an array column, visited nodes are anti-joined
+    out, and each level is localCheckpoint-ed to cap lineage.  Ties
+    resolve to the lexicographically smallest path for determinism.
     """
     if scholar1 == scholar2:
         return [scholar1]
 
-    adj = undirected_adjacency(edges)
+    adj = undirected_adjacency(edges).localCheckpoint(eager=True)
     spark = edges.sparkSession
     frontier = spark.createDataFrame(
         [(scholar1, [scholar1])], "node string, path array<string>"

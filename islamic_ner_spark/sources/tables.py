@@ -10,9 +10,10 @@ same contract is implemented over partitioned parquet:
 * bucketed stages (hash of conv_id -> ``bucket=N`` directories) can resume:
   completed buckets are listed in the manifest and skipped on re-run —
   a killed job restarts without recomputing finished partitions;
-* cross-batch MERGE upserts are read-merge-overwrite with the same
-  (max-confidence, first-non-empty-evidence) semantics Iceberg MERGE INTO
-  would express (operators/graph.merge_edges_incremental).
+* cross-batch MERGE upserts are read-merge-overwrite under the batch
+  build's own rule (operators/graph.merge_edge_rows / merge_node_rows:
+  first writer per edge, last writer per node), which Iceberg MERGE INTO
+  would express as mapped on :class:`ParquetTableSink`.
 
 Swap-in point for Iceberg: replace ``write_table``/``read_table`` with
 ``df.writeTo(...).createOrReplace()`` / ``spark.table`` — the pipeline
@@ -176,26 +177,29 @@ class ParquetTableSink:
     * ``is_current`` -> compare the fingerprint stored in the latest
       snapshot's summary properties.
     * ``merge_buckets`` -> one ``MERGE INTO`` per table instead of the
-      hand-rolled per-bucket directory swap, keyed exactly as the
-      incremental merge functions are:
+      hand-rolled per-bucket directory swap, keyed and resolved exactly
+      as the shared MERGE rule (``operators/graph.merge_edge_rows`` /
+      ``merge_node_rows``) is:
 
-      - edges (``operators/graph.EDGE_KEY``)::
+      - edges (``operators/graph.EDGE_KEY``) — the first writer (min
+        ``first_emit``) keeps confidence and evidence::
 
             MERGE INTO kg_edges t USING batch s
             ON  t.pred = s.pred AND t.src_label = s.src_label
             AND t.src_key = s.src_key AND t.tgt_label = s.tgt_label
             AND t.tgt_key = s.tgt_key AND t.source_hadith = s.source_hadith
             WHEN MATCHED THEN UPDATE SET
-              confidence  = greatest(t.confidence, s.confidence),
-              evidence    = CASE WHEN t.evidence <> '' THEN t.evidence
-                                 ELSE s.evidence END,
+              confidence  = CASE WHEN s.first_emit < t.first_emit
+                                 THEN s.confidence ELSE t.confidence END,
+              evidence    = CASE WHEN s.first_emit < t.first_emit
+                                 THEN s.evidence ELSE t.evidence END,
               merge_count = t.merge_count + s.merge_count,
               first_emit  = least(t.first_emit, s.first_emit)
             WHEN NOT MATCHED THEN INSERT *
 
       - nodes (key ``(label, key)``) — properties resolve by the
-        writer-ordinal comparison (graph.merge_nodes_incremental), NOT
-        blind incoming-wins, so out-of-order batches stay correct::
+        writer-ordinal comparison (graph.merge_node_rows), NOT blind
+        incoming-wins, so out-of-order batches stay correct::
 
             MERGE INTO kg_nodes t USING batch s
             ON t.label = s.label AND t.key = s.key
@@ -206,8 +210,7 @@ class ParquetTableSink:
               confidence = CASE WHEN ... same ordinal test ...
                                 THEN s.confidence ELSE t.confidence END,
               best_conv/best_turn/best_emit = the winning ordinal,
-              book_ref = coalesce(s.book_ref, t.book_ref),
-              chapter = coalesce(s.chapter, t.chapter),
+              book_ref / chapter = the same ordinal test's side,
               variants = array_sort(array_union(t.variants, s.variants)),
               mention_count = t.mention_count + s.mention_count
             WHEN NOT MATCHED THEN INSERT *

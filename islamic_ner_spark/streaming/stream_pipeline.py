@@ -1,20 +1,26 @@
-"""Streaming triple extraction: transcripts stream -> triples stream.
+"""Streaming: the extraction and the graph as Structured Streaming jobs.
 
 The reference is strictly batch (SURVEY.md §2.8); this module extends the
 engine to continuous ingestion, which a transcript KG at 10^12-turn scale
 realistically needs.  The extraction stages are stateless per turn, so
-they map 1:1 onto Structured Streaming micro-batches:
+they map 1:1 onto micro-batches.  Entry points:
 
-    readStream(parquet dir, input_hint schema)
-      -> annotate (mapInPandas, narrow)
-      -> triples (mapInPandas, narrow)
-      -> writeStream(parquet, checkpointLocation)
+* :func:`start_triples_stream` — transcripts -> annotate -> triples ->
+  parquet sink (:func:`stream_triples` is the transform);
+* :func:`start_windowed_mention_stream` — event-time windowed mention
+  counts under a watermark (:func:`windowed_mention_counts`);
+* :func:`start_dedup_stream` — cross-batch exact dedup by content hash
+  (:func:`stream_exact_dedup`);
+* :func:`start_graph_stream` — per micro-batch graph build upserted into
+  bucketed persistent node/edge tables;
+* :func:`compact_graph_stream` and :func:`rebucket_graph` — maintenance
+  jobs over a streamed graph dir (cross-batch re-canonicalization,
+  bucket-count change).
 
-Checkpointing/exactly-once is Spark's file-sink contract; downstream
-graph materialization stays a periodic batch MERGE over the streamed
-triples table (the groupBy-upsert in operators/graph.py is idempotent on
-re-runs, so replays are safe).  Watermarking hooks are provided for
-late-turn handling when windowed per-conversation aggregation is added.
+Checkpointing/exactly-once is Spark's sink contract; the graph upsert
+adds a per-bucket batch watermark (see :func:`start_graph_stream`).  The
+upsert and the compaction re-merge stored rows with the one MERGE rule
+of operators/graph.py (``merge_node_rows`` / ``merge_edge_rows``).
 """
 
 from __future__ import annotations
@@ -249,11 +255,11 @@ def compact_graph_stream(spark: SparkSession, graph_dir: str, gazetteer_bc: Broa
        uses (``_canonicalize_new``: capped token blocking ->
        SequenceMatcher >= 0.8 -> connected components) over their
        accumulated variant vocabulary;
-    3. remap node keys / edge endpoint keys and re-aggregate with the
-       writer-ordinal merge rules (max ``best_*`` ordinal for node
-       props, min ``first_emit`` for same-turn edge dedup) — both
-       associative, so the compacted graph row-for-row equals the
-       one-shot batch build over the same input (tested);
+    3. remap node keys / edge endpoint keys and re-merge with the
+       writer-ordinal MERGE rule (``graph.merge_node_rows`` /
+       ``merge_edge_rows``) — associative, so the compacted graph
+       row-for-row equals the one-shot batch build over the same input
+       (tested);
     4. atomically replace both bucketed tables via the sink's staged
        directory swap (``SINK.replace_table``; rows move between
        buckets, so the merge-only protocol cannot express this).
@@ -291,14 +297,17 @@ def compact_graph_stream(spark: SparkSession, graph_dir: str, gazetteer_bc: Broa
 def _compact_graph_locked(spark, graph_path, gazetteer_bc, n_buckets) -> dict:
     from pyspark.sql import functions as F
 
-    from islamic_ner_spark.operators.graph import EDGE_KEY, NODE_LABELS
-    from islamic_ner_spark.operators.linking import _canonicalize_new
-    from islamic_ner_spark.sources.tables import SINK
-
     from islamic_ner_spark.operators.graph import (
         EDGES_TABLE_SCHEMA,
+        NODE_LABELS,
         NODES_TABLE_SCHEMA,
+        edge_bucket,
+        merge_edge_rows,
+        merge_node_rows,
+        node_bucket,
     )
+    from islamic_ner_spark.operators.linking import _canonicalize_new
+    from islamic_ner_spark.sources.tables import SINK
 
     for name in ("nodes", "edges"):
         SINK.recover_replace(graph_path / name)
@@ -385,42 +394,15 @@ def _compact_graph_locked(spark, graph_path, gazetteer_bc, n_buckets) -> dict:
     )
     n_remapped = remap.count()
 
-    # --- nodes: remap keys, re-aggregate with the last-writer ordinal ----
-    remapped_nodes = (
+    # --- nodes: remap keys, re-merge with the last-writer ordinal -------
+    compact_nodes = merge_node_rows(
         typed.join(F.broadcast(remap), ["entity_type", "key"], "left")
         .withColumn("key", F.coalesce("new_key", "key"))
         .drop("new_key", "entity_type")
         .unionByName(nodes.where(F.col("label") == "Hadith"))
     )
-    winner = F.max(
-        F.struct(
-            "best_conv", "best_turn", "best_emit",
-            "name_ar", "confidence", "book_ref", "chapter",
-        )
-    ).alias("w")
-    compact_nodes = (
-        remapped_nodes.groupBy("label", "key")
-        .agg(
-            winner,
-            F.array_sort(
-                F.array_distinct(F.flatten(F.collect_list("variants")))
-            ).alias("variants"),
-            F.sum("mention_count").alias("mention_count"),
-        )
-        .select(
-            "label", "key",
-            F.col("w.name_ar").alias("name_ar"),
-            F.col("w.confidence").alias("confidence"),
-            "variants", "mention_count",
-            F.col("w.best_conv").alias("best_conv"),
-            F.col("w.best_turn").alias("best_turn"),
-            F.col("w.best_emit").alias("best_emit"),
-            F.col("w.book_ref").alias("book_ref"),
-            F.col("w.chapter").alias("chapter"),
-        )
-    )
 
-    # --- edges: remap endpoint keys, re-dedupe with the first-writer rule
+    # --- edges: remap endpoint keys, re-merge with the first-writer rule -
     type_to_label = F.create_map(
         *[F.lit(x) for label, etype in type_for_label.items() for x in (etype, label)]
     )
@@ -429,7 +411,7 @@ def _compact_graph_locked(spark, graph_path, gazetteer_bc, n_buckets) -> dict:
         F.col("key").alias("r_key"),
         "new_key",
     )
-    edges1 = (
+    compact_edges = merge_edge_rows(
         edges.join(
             F.broadcast(edge_remap),
             (F.col("src_label") == F.col("r_label"))
@@ -447,27 +429,15 @@ def _compact_graph_locked(spark, graph_path, gazetteer_bc, n_buckets) -> dict:
         .withColumn("tgt_key", F.coalesce("new_key", "tgt_key"))
         .drop("r_label", "r_key", "new_key")
     )
-    edge_winner = F.min(F.struct("first_emit", "confidence", "evidence")).alias("w")
-    compact_edges = (
-        edges1.groupBy(*EDGE_KEY)
-        .agg(edge_winner, F.sum("merge_count").alias("merge_count"))
-        .select(
-            *EDGE_KEY,
-            F.col("w.confidence").alias("confidence"),
-            F.col("w.evidence").alias("evidence"),
-            "merge_count",
-            F.col("w.first_emit").alias("first_emit"),
-        )
-    )
 
-    edge_bucket = F.pmod(F.xxhash64(*EDGE_KEY), F.lit(n_buckets)).cast("int")
-    node_bucket = F.pmod(F.xxhash64("label", "key"), F.lit(n_buckets)).cast("int")
     # only rewrite sides that exist: replacing a missing table with an
     # empty frame would leave a file-less parquet dir later reads choke on
     if has_edges:
-        SINK.replace_table(spark, graph_path / "edges", compact_edges, edge_bucket, batch_id)
+        SINK.replace_table(spark, graph_path / "edges", compact_edges,
+                           edge_bucket(n_buckets), batch_id)
     if has_nodes:
-        SINK.replace_table(spark, graph_path / "nodes", compact_nodes, node_bucket, batch_id)
+        SINK.replace_table(spark, graph_path / "nodes", compact_nodes,
+                           node_bucket(n_buckets), batch_id)
 
     stats = {
         "remapped_keys": int(n_remapped),
@@ -510,9 +480,7 @@ def rebucket_graph(spark: SparkSession, graph_dir: str, new_n_buckets: int) -> d
     import json
     from pathlib import Path
 
-    from pyspark.sql import functions as F
-
-    from islamic_ner_spark.operators.graph import EDGE_KEY
+    from islamic_ner_spark.operators.graph import edge_bucket, node_bucket
     from islamic_ner_spark.sources.tables import (
         SINK,
         acquire_compaction_lock,
@@ -561,14 +529,13 @@ def rebucket_graph(spark: SparkSession, graph_dir: str, new_n_buckets: int) -> d
         batch_id = graph_batch_watermark(graph_path)
         intent.write_text(json.dumps({"new_n_buckets": new_n_buckets}))
 
-        edge_bucket = F.pmod(F.xxhash64(*EDGE_KEY), F.lit(new_n_buckets)).cast("int")
-        node_bucket = F.pmod(F.xxhash64("label", "key"), F.lit(new_n_buckets)).cast("int")
         bucket_for = {"edges": edge_bucket, "nodes": node_bucket}
         stats = {"n_buckets": new_n_buckets, "nodes": 0, "edges": 0}
         for name in present:
             table = graph_path / name
             df = spark.read.parquet(str(table)).drop("bucket")
-            SINK.replace_table(spark, table, df, bucket_for[name], batch_id)
+            SINK.replace_table(spark, table, df, bucket_for[name](new_n_buckets),
+                               batch_id)
             stats[name] = spark.read.parquet(str(table)).count()
 
         meta["n_buckets"] = new_n_buckets
@@ -683,6 +650,16 @@ def start_dedup_stream(
     return writer.start()
 
 
+def bucket_upsert(merge_rows):
+    """The ``merge_fn`` of ``SINK.merge_buckets`` for a graph table: a
+    touched bucket's stored rows and the batch's rows re-merge under the
+    one MERGE rule ``merge_rows`` (``graph.merge_edge_rows`` /
+    ``merge_node_rows``); the sink re-adds ``bucket``."""
+    return lambda existing, incoming: merge_rows(
+        existing.drop("bucket").unionByName(incoming.drop("bucket"))
+    )
+
+
 def start_graph_stream(
     spark: SparkSession,
     input_dir: str,
@@ -698,12 +675,13 @@ def start_graph_stream(
     subgraph and MERGE it into the persistent nodes/edges tables.
 
     **Bucketed incremental MERGE** — the persistent tables are hash-
-    partitioned on their MERGE keys (``bucket = xxhash64(key) % n``), and
-    a micro-batch reads, merges, and rewrites ONLY the buckets its keys
-    touch.  Per-batch cost is O(touched buckets), not O(graph): at
-    10^12-turn scale a micro-batch touches a bounded key set while the
-    accumulated graph grows without bound, so a full read-merge-rewrite
-    would degrade linearly in graph age.  (Iceberg ``MERGE INTO`` is the
+    partitioned on their MERGE keys (``graph.edge_bucket`` /
+    ``node_bucket``), and a micro-batch reads, re-merges (with the batch
+    build's own rule, :func:`bucket_upsert`) and rewrites ONLY the
+    buckets its keys touch.  Per-batch cost is O(touched buckets), not
+    O(graph): at 10^12-turn scale a micro-batch touches a bounded key
+    set while the accumulated graph grows without bound, so a full
+    read-merge-rewrite would degrade linearly in graph age.  (Iceberg ``MERGE INTO`` is the
     managed-table form of the same idea; sources/tables.py documents the
     swap-in.)
 
@@ -724,12 +702,11 @@ def start_graph_stream(
     import json
     from pathlib import Path
 
-    from pyspark.sql import functions as F
-
     from islamic_ner_spark.operators.graph import (
-        EDGE_KEY,
-        merge_edges_incremental,
-        merge_nodes_incremental,
+        edge_bucket,
+        merge_edge_rows,
+        merge_node_rows,
+        node_bucket,
     )
     from islamic_ner_spark.plans.pipeline import build_graph
     from islamic_ner_spark.sources.tables import SINK
@@ -744,9 +721,6 @@ def start_graph_stream(
     # loss), and an older schema would break the ordinal merges.
     _check_graph_meta(graph_path, n_buckets)
 
-    edge_bucket = F.pmod(F.xxhash64(*EDGE_KEY), F.lit(n_buckets)).cast("int")
-    node_bucket = F.pmod(F.xxhash64("label", "key"), F.lit(n_buckets)).cast("int")
-
     def process_batch(batch_df, batch_id: int) -> None:
         if marker.exists() and json.loads(marker.read_text())["batch_id"] >= batch_id:
             return  # replayed batch fully committed previously
@@ -754,9 +728,9 @@ def start_graph_stream(
             return
         result = build_graph(spark, batch_df)
         SINK.merge_buckets(spark, graph_path / "edges", result.edges,
-                           edge_bucket, merge_edges_incremental, batch_id)
+                           edge_bucket(n_buckets), bucket_upsert(merge_edge_rows), batch_id)
         SINK.merge_buckets(spark, graph_path / "nodes", result.nodes,
-                           node_bucket, merge_nodes_incremental, batch_id)
+                           node_bucket(n_buckets), bucket_upsert(merge_node_rows), batch_id)
         marker.write_text(json.dumps({"batch_id": batch_id}))
         result.unpersist()
 

@@ -437,6 +437,27 @@ def main() -> int:
         "contributions combine map-side before the tgt exchange",
     )
 
+    from islamic_ner_spark.operators.graph import merge_edge_rows
+
+    # two staged edge frames (split on first_emit parity), as the stream's
+    # bucket upsert unions stored and incoming rows
+    parity = F.col("first_emit") % 2 == 0
+    pair = staged_edges.where(parity).unionByName(staged_edges.where(~parity))
+    plan = plan_of(merge_edge_rows(pair))
+    # a struct min is not a fixed-width buffer, so Spark may plan it as a
+    # SortAggregate: count aggregate operators of any kind ("keys=" for
+    # HashAggregate, "key=" for Sort/ObjectHashAggregate)
+    added = plan.count("Aggregate(key") - plan_of(pair).count("Aggregate(key")
+    check(
+        "edge re-merge: one keyed aggregation, no join",
+        added >= 2
+        and "Join" not in plan
+        and "FullOuter" not in plan,
+        "merging stored and incoming edge rows is a partial + final "
+        "aggregation on the edge key over their union, never a "
+        "full-outer join with a coalesce per column",
+    )
+
     plan = plan_of(personalized_pagerank(staged_edges, n_iters=1, checkpoint=False))
     check(
         "ppr: broadcast seed + keyed contribution agg",

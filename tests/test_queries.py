@@ -79,6 +79,26 @@ def test_shortest_path_bfs(spark, resolver_gazetteer) -> None:
     assert Q.shortest_path(result.edges, malik, "مجهول") == []
 
 
+def test_shortest_path_reads_each_edge_once(spark) -> None:
+    """shortest_path derives its adjacency once, not once per BFS level:
+    over a 7-edge chain the 7-hop walk reads each edge row one time."""
+    reads = spark.sparkContext.accumulator(0)
+
+    def counted(_key):
+        reads.add(1)
+        return True
+
+    chain = [f"s{i}" for i in range(8)]
+    edges = spark.createDataFrame(
+        [("NARRATED_FROM", "Scholar", a, "Scholar", b)
+         for a, b in zip(chain, chain[1:])],
+        "pred string, src_label string, src_key string, tgt_label string, "
+        "tgt_key string",
+    ).where(F.udf(counted, "boolean")("src_key"))
+    assert Q.shortest_path(edges, "s0", "s7") == chain
+    assert reads.value == len(chain) - 1
+
+
 def test_entry_matches_staged_narration_chains(spark, tmp_path, monkeypatch) -> None:
     """Drift guard (VERDICT r2 #8): the flagship entry() and the staged
     KG dataflow synthesize transcripts from the SAME single-sourced

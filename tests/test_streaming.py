@@ -448,6 +448,78 @@ def test_compaction_edge_first_writer_merge(spark, tmp_path) -> None:
     assert node["mention_count"] == 2
 
 
+def test_bucket_upsert_order_independent(spark, tmp_path) -> None:
+    """The stream's bucket upsert re-merges stored rows with the batch
+    build's rule, whatever order the batches arrive in: the edge keeps
+    its first writer's confidence and evidence (even empty evidence),
+    the node its last writer's properties."""
+    from islamic_ner_spark.operators.graph import (
+        EDGES_TABLE_SCHEMA,
+        NODES_TABLE_SCHEMA,
+        edge_bucket,
+        merge_edge_rows,
+        merge_node_rows,
+        node_bucket,
+    )
+    from islamic_ner_spark.sources.tables import SINK
+    from islamic_ner_spark.streaming.stream_pipeline import bucket_upsert
+
+    edge = ("NARRATED_FROM", "Scholar", "مالك", "Scholar", "نافع", "c1:0")
+    batch_a = (
+        [("Scholar", "مالك", "مالك بن انس", 0.7, ["مالك بن انس"], 1,
+          "c1", 0, 3_000_000_000, None, None)],
+        [edge + (0.6, "", 1, 0),
+         ("NARRATED_FROM", "Scholar", "نافع", "Scholar", "مالك", "c1:0",
+          0.8, "isnad connector", 1, 1)],
+    )
+    batch_b = (
+        [("Scholar", "مالك", "الامام مالك", 0.95, ["الامام مالك", "مالك"], 2,
+          "c2", 1, 5, None, None)],
+        [edge + (0.9, "isnad connector", 2, 4)],
+    )
+
+    def merged(order, name):
+        graph = tmp_path / name
+        graph.mkdir()
+        for batch_id, (nodes, edges) in enumerate(order, start=1):
+            SINK.merge_buckets(
+                spark, graph / "nodes",
+                spark.createDataFrame(nodes, NODES_TABLE_SCHEMA),
+                node_bucket(2), bucket_upsert(merge_node_rows), batch_id,
+            )
+            SINK.merge_buckets(
+                spark, graph / "edges",
+                spark.createDataFrame(edges, EDGES_TABLE_SCHEMA),
+                edge_bucket(2), bucket_upsert(merge_edge_rows), batch_id,
+            )
+
+        def rows(table):
+            df = spark.read.parquet(str(graph / table)).drop("bucket")
+            return {
+                tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                for r in df.collect()
+            }
+
+        return rows("nodes"), rows("edges")
+
+    ab = merged([batch_a, batch_b], "ab")
+    ba = merged([batch_b, batch_a], "ba")
+    assert ab == ba
+    nodes, edges = ab
+    # edge: first writer (emit 0) keeps confidence and empty evidence
+    assert edges == {
+        edge + (0.6, "", 3, 0),
+        ("NARRATED_FROM", "Scholar", "نافع", "Scholar", "مالك", "c1:0",
+         0.8, "isnad connector", 1, 1),
+    }
+    # node: last writer (c2) wins; variants union; counts sum
+    assert nodes == {
+        ("Scholar", "مالك", "الامام مالك", 0.95,
+         tuple(sorted(["مالك بن انس", "الامام مالك", "مالك"])), 3,
+         "c2", 1, 5, None, None),
+    }
+
+
 def test_merge_buckets_recovers_interrupted_replace(spark, tmp_path) -> None:
     """A compaction (replace_table) crash that left the live table dir
     renamed away must be rolled forward/back by merge_buckets BEFORE the
