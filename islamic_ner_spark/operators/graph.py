@@ -13,19 +13,24 @@ Neo4j MERGE semantics re-expressed as deterministic aggregations
   relation per key (builder.py:99-123); a min over the emit order
   reproduces it exactly.
 
-Two strategies compute the same tables: the global groupBy
-(:func:`build_nodes`, :func:`build_edges`), valid for any input, and the
-fused Arrow pass (:func:`fused_graph_outputs`, finished by
-:func:`nodes_from_combined` / :func:`edges_from_combined`), which needs one
-row per turn.
+The MERGE rule is written once per table, over rows in the persistent
+``NODES_TABLE_SCHEMA`` / ``EDGES_TABLE_SCHEMA`` shape: each row carries
+its winning writer's ordinal, so merging is one associative
+aggregation, :func:`merge_node_rows` and :func:`merge_edge_rows`.  Rows
+enter it in one of two shapes:
 
-Rows already merged (the persistent ``NODES_TABLE_SCHEMA`` /
-``EDGES_TABLE_SCHEMA`` shape) carry their winning writer's ordinal, so
-merging them again is one associative re-aggregation:
-:func:`merge_node_rows` and :func:`merge_edge_rows`.  The fused pass's
-vocabulary finish, the stream's per-bucket upsert and the compaction all
-run these two, so a streamed, compacted or resumed graph equals the
-one-shot build.
+* candidate rows, one per writer (:func:`node_candidate_rows`,
+  :func:`edge_candidate_rows`), lifted to the table shape by
+  :func:`lift_node_candidates` / :func:`lift_edge_candidates` — the
+  global groupBy strategy (:func:`build_nodes`, :func:`build_edges`),
+  valid for any input, and the staged oracle queries;
+* rows already merged — the fused Arrow pass's per-batch vocabulary
+  rows (:func:`fused_graph_outputs`, finished by
+  :func:`nodes_from_combined` / :func:`edges_from_combined`; needs one
+  row per turn), the stream's per-bucket upsert and the compaction.
+
+Both shapes run the one rule, so a streamed, compacted or resumed graph
+equals the one-shot build.
 
 Node schema per entity type (builder.py:19-26, 325-392):
 SCHOLAR->(Scholar, canonical_name), BOOK->(Book, canonical_name),
@@ -129,54 +134,30 @@ def node_candidate_rows(
     )
 
 
-def aggregate_nodes(rows: DataFrame) -> DataFrame:
-    """Node MERGE over candidate rows (the ``SET n += props`` tail):
-    last-writer-wins properties under (conv_id, turn_idx, emit_idx)
-    order, ``variants`` as sorted set union, ``mention_count`` as the
-    writer count (builder.py:404-443).
-
-    The winning writer's ordinal rides along as ``best_conv/best_turn/
-    best_emit`` so :func:`merge_node_rows` can re-run the same
-    last-writer rule over merged rows."""
-    # single struct-max carries both last-writer payloads in one agg
-    # buffer (vs two max_by(col, order) buffers); order fields lead, so
-    # struct comparison == last-writer-wins
-    winner = F.max(
-        F.struct(
-            F.col("conv_id"),
-            F.col("turn_idx").cast("int").alias("turn_idx"),
-            F.col("emit_idx").cast("long").alias("emit_idx"),
-            F.col("original_text"),
-            F.col("confidence"),
-        )
-    ).alias("w")
-    return (
-        rows.groupBy("label", "key")
-        .agg(
-            winner,
-            F.array_sort(F.collect_set("original_text")).alias("variants"),
-            F.count(F.lit(1)).alias("mention_count"),
-        )
-        .select(
-            "label",
-            "key",
-            F.col("w.original_text").alias("name_ar"),
-            F.col("w.confidence").alias("confidence"),
-            "variants",
-            "mention_count",
-            F.col("w.conv_id").alias("best_conv"),
-            F.col("w.turn_idx").alias("best_turn"),
-            F.col("w.emit_idx").alias("best_emit"),
-        )
-        .withColumn("book_ref", _hadith_provenance())
-        .withColumn("chapter", _hadith_provenance())
-    )
-
-
 def _hadith_provenance() -> F.Column:
     """``book_ref`` / ``chapter``: Hadith nodes carry provenance fields,
     empty for transcript input (builder.py:339-343); other labels null."""
     return F.when(F.col("label") == "Hadith", F.lit(""))
+
+
+def lift_node_candidates(rows: DataFrame) -> DataFrame:
+    """:func:`node_candidate_rows` -> ``NODES_TABLE_SCHEMA`` rows, each
+    one writer: its own text is the name and the only variant, and its
+    emit order is the winning ordinal, so :func:`merge_node_rows` over
+    the lifted rows is the first-time node MERGE."""
+    return rows.select(
+        "label",
+        "key",
+        F.col("original_text").alias("name_ar"),
+        "confidence",
+        F.array("original_text").alias("variants"),
+        F.lit(1).cast("long").alias("mention_count"),
+        F.col("conv_id").alias("best_conv"),
+        F.col("turn_idx").cast("int").alias("best_turn"),
+        F.col("emit_idx").cast("long").alias("best_emit"),
+        _hadith_provenance().alias("book_ref"),
+        _hadith_provenance().alias("chapter"),
+    )
 
 
 def build_nodes(
@@ -196,11 +177,13 @@ def build_nodes(
     The global groupBy strategy, valid for any input layout: the pipeline
     uses it for labeled input that may repeat a turn, and when the
     resolution is too large for the fused pass
-    (:func:`fused_graph_outputs`), which it is the reference for.
+    (:func:`fused_graph_outputs`), which it is the reference for.  It is
+    the one node MERGE (:func:`merge_node_rows`) over the candidate rows
+    lifted to the table shape.
     """
-    return aggregate_nodes(
+    return merge_node_rows(lift_node_candidates(
         node_candidate_rows(resolved_mentions, doc_index, resolved_triples)
-    )
+    ))
 
 
 def build_hadith_nodes_turn_local(extracted: DataFrame) -> DataFrame:
@@ -286,42 +269,11 @@ def build_edges(resolved_triples: DataFrame) -> DataFrame:
     The global groupBy strategy, valid for any input layout and the
     reference the fused pass (:func:`fused_graph_outputs`) is tested
     against; the pipeline falls back to it for labeled input that may
-    repeat a turn and for resolutions too large for the fused pass.
+    repeat a turn and for resolutions too large for the fused pass.  It
+    is the one edge MERGE (:func:`merge_edge_rows`) over the candidate
+    rows lifted to the table shape.
     """
-    return aggregate_edges(edge_candidate_rows(resolved_triples))
-
-
-def aggregate_edges(rows: DataFrame) -> DataFrame:
-    """Edge MERGE over candidate rows (the upsert tail): first writer in
-    (conv_id, turn_idx, emit_idx) order fixes confidence/evidence per
-    key, ``merge_count`` counts the writers (builder.py:99-123,427-435).
-
-    ``first_emit`` (the winning writer's emit ordinal) rides along so
-    :func:`merge_edge_rows` can re-run the same first-writer rule over
-    merged rows."""
-    # single struct-min carries both payloads in one agg buffer (half the
-    # sort width of two min_by(col, order) buffers); the order fields
-    # lead, so struct comparison == first-writer-wins
-    winner = F.min(
-        F.struct(
-            F.col("conv_id"),
-            F.col("turn_idx").cast("int").alias("turn_idx"),
-            F.col("emit_idx").cast("long").alias("emit_idx"),
-            F.col("confidence"),
-            F.col("evidence"),
-        )
-    ).alias("w")
-    return (
-        rows.groupBy(*EDGE_KEY)
-        .agg(winner, F.count(F.lit(1)).alias("merge_count"))
-        .select(
-            *EDGE_KEY,
-            F.col("w.confidence").alias("confidence"),
-            F.col("w.evidence").alias("evidence"),
-            "merge_count",
-            F.col("w.emit_idx").alias("first_emit"),
-        )
-    )
+    return merge_edge_rows(lift_edge_candidates(edge_candidate_rows(resolved_triples)))
 
 
 EDGE_KEY = ["pred", "src_label", "src_key", "tgt_label", "tgt_key", "source_hadith"]
@@ -354,8 +306,9 @@ NODES_TABLE_SCHEMA = (
 
 
 def edge_candidate_rows(resolved_triples: DataFrame) -> DataFrame:
-    """Projection + validity filter of the global edge merge (exposed so the MERGE tail can be staged to parquet and replayed by
-    an independent SQL engine)."""
+    """Projection + validity filter of the global edge merge (exposed so
+    the MERGE tail can be staged to parquet and replayed by an
+    independent SQL engine)."""
     return resolved_triples.select(
         "conv_id",
         "turn_idx",
@@ -375,6 +328,20 @@ def edge_candidate_rows(resolved_triples: DataFrame) -> DataFrame:
         & (F.col("tgt_key") != "")
         & F.col("src_label").isNotNull()
         & F.col("tgt_label").isNotNull()
+    )
+
+
+def lift_edge_candidates(rows: DataFrame) -> DataFrame:
+    """:func:`edge_candidate_rows` -> ``EDGES_TABLE_SCHEMA`` rows, each
+    one writer whose emit order is its ``first_emit``, so
+    :func:`merge_edge_rows` over the lifted rows is the first-time edge
+    MERGE."""
+    return rows.select(
+        *EDGE_KEY,
+        "confidence",
+        "evidence",
+        F.lit(1).cast("long").alias("merge_count"),
+        F.col("emit_idx").cast("long").alias("first_emit"),
     )
 
 
@@ -562,8 +529,9 @@ def nodes_from_combined(combined: DataFrame, extracted: DataFrame) -> DataFrame:
 
 
 def merge_node_rows(rows: DataFrame) -> DataFrame:
-    """Node MERGE over already-merged rows (``NODES_TABLE_SCHEMA``
-    columns; extra columns are ignored): per (label, key) the row with
+    """The node MERGE over table-shaped rows (``NODES_TABLE_SCHEMA``
+    columns; extra columns are ignored), merged already or lifted by
+    :func:`lift_node_candidates`: per (label, key) the row with
     the globally last writer (max ``best_conv/best_turn/best_emit``)
     wins the properties, ``variants`` is the sorted set union and
     ``mention_count`` the sum (``SET n += props``, builder.py:404-408).
@@ -571,7 +539,9 @@ def merge_node_rows(rows: DataFrame) -> DataFrame:
     The max over the rows' winner ordinals is the global last writer,
     so the result does not depend on how the writers were split into
     rows, nor on the order the rows arrive in."""
-    # the ordinal fields lead the struct, so struct max == last writer
+    # the ordinal fields lead the struct, so struct max == last writer;
+    # collect_set keeps one copy of each variant array in the partial
+    # buffer, not one per writer
     winner = F.max(
         F.struct(
             "best_conv", "best_turn", "best_emit",
@@ -583,7 +553,7 @@ def merge_node_rows(rows: DataFrame) -> DataFrame:
         .agg(
             winner,
             F.array_sort(
-                F.array_distinct(F.flatten(F.collect_list("variants")))
+                F.array_distinct(F.flatten(F.collect_set("variants")))
             ).alias("variants"),
             F.sum("mention_count").alias("mention_count"),
         )
@@ -602,8 +572,9 @@ def merge_node_rows(rows: DataFrame) -> DataFrame:
 
 
 def merge_edge_rows(rows: DataFrame) -> DataFrame:
-    """Edge MERGE over already-merged rows (``EDGES_TABLE_SCHEMA``
-    columns): per :data:`EDGE_KEY` the row with the first writer (min
+    """The edge MERGE over table-shaped rows (``EDGES_TABLE_SCHEMA``
+    columns), merged already or lifted by :func:`lift_edge_candidates`:
+    per :data:`EDGE_KEY` the row with the first writer (min
     ``first_emit``) keeps its confidence and evidence, and
     ``merge_count`` is the sum.  An edge key's writers all share one
     turn, so the emit ordinal alone orders them, and the min over the

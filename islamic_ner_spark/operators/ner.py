@@ -255,13 +255,3 @@ def annotate_labeled(labeled: DataFrame) -> DataFrame:
 
     return labeled.mapInPandas(run, schema=LABELED_ANNOTATED_SCHEMA)
 
-
-def ordered_turns(transcripts: DataFrame) -> DataFrame:
-    """Stable per-conversation turn ordering (north-rule invariant):
-    ``Window.partitionBy(conv_id).orderBy(turn_idx)`` surfaced as an
-    explicit ordering column so every downstream consumer inherits a
-    deterministic sequence."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("conv_id").orderBy("turn_idx")
-    return transcripts.withColumn("turn_seq", F.row_number().over(w))

@@ -295,26 +295,34 @@ def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_triples(annotated)
 
 
-def q_kg_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edge MERGE (first-writer-wins per key) over staged candidate rows
-    — semantics per builder.py:99-123,404-443."""
-    from islamic_ner_spark.operators.graph import aggregate_edges
+def _staged_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The edge table of the staged KG dataflow: the edge MERGE over the
+    staged candidate rows (every graph query over merged edges reads
+    this)."""
+    from islamic_ner_spark.operators.graph import lift_edge_candidates, merge_edge_rows
     from islamic_ner_spark.plans import staging
 
     staging.ensure_kg_stage(spark, sf_dir)
-    return aggregate_edges(spark.read.parquet(staging.stage_path("kg", "edge_rows")))
+    rows = spark.read.parquet(staging.stage_path("kg", "edge_rows"))
+    return merge_edge_rows(lift_edge_candidates(rows))
+
+
+def q_kg_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Edge MERGE (first-writer-wins per key) over staged candidate rows
+    — semantics per builder.py:99-123,404-443."""
+    return _staged_edges(spark, sf_dir)
 
 
 def q_kg_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Node MERGE (last-writer props, variant set-union) over staged
     candidate rows; ``variants`` serialized '|'-joined so the row set is
     hashable by the driver's value-hash harness."""
-    from islamic_ner_spark.operators.graph import aggregate_nodes
+    from islamic_ner_spark.operators.graph import lift_node_candidates, merge_node_rows
     from islamic_ner_spark.plans import staging
 
     staging.ensure_kg_stage(spark, sf_dir)
     rows = spark.read.parquet(staging.stage_path("kg", "node_rows"))
-    return aggregate_nodes(rows).select(
+    return merge_node_rows(lift_node_candidates(rows)).select(
         "label",
         "key",
         "name_ar",
@@ -346,11 +354,7 @@ def q_kg_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kg_narration_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scholar->Scholar NARRATED_FROM chains in stable order
     (query.py:40-66) over the MERGE-aggregated edge table."""
-    from islamic_ner_spark.operators.graph import aggregate_edges
-    from islamic_ner_spark.plans import staging
-
-    staging.ensure_kg_stage(spark, sf_dir)
-    edges = aggregate_edges(spark.read.parquet(staging.stage_path("kg", "edge_rows")))
+    edges = _staged_edges(spark, sf_dir)
     return (
         edges.where(
             (F.col("pred") == "NARRATED_FROM")
@@ -808,11 +812,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kg_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph-analytics rollup over the MERGE-aggregated edge table:
     degree histogram per node label (undirected endpoint degree)."""
-    from islamic_ner_spark.operators.graph import aggregate_edges
-    from islamic_ner_spark.plans import staging
-
-    staging.ensure_kg_stage(spark, sf_dir)
-    edges = aggregate_edges(spark.read.parquet(staging.stage_path("kg", "edge_rows")))
+    edges = _staged_edges(spark, sf_dir)
     ends = edges.select(
         F.col("src_label").alias("label"), F.col("src_key").alias("key")
     ).unionAll(edges.select(F.col("tgt_label"), F.col("tgt_key")))
@@ -1683,13 +1683,9 @@ def q_kg_bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative BFS distances (<= 8 hops) from the lexicographically
     smallest scholar over the undirected NARRATED_FROM graph; the oracle
     replays the walk as a recursive CTE with MIN(dist)."""
-    from islamic_ner_spark.operators.graph import aggregate_edges
     from islamic_ner_spark.operators.queries import bfs_distances
-    from islamic_ner_spark.plans import staging
 
-    staging.ensure_kg_stage(spark, sf_dir)
-    edges = aggregate_edges(spark.read.parquet(staging.stage_path("kg", "edge_rows")))
-    return bfs_distances(edges, max_hops=8)
+    return bfs_distances(_staged_edges(spark, sf_dir), max_hops=8)
 
 
 QUERIES["kg_bfs_distances"] = q_kg_bfs_distances
@@ -1843,13 +1839,9 @@ def q_kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-point (x1e9) PageRank over the scholar narration digraph;
     integer division only, so the unrolled-CTE oracle replays every
     iteration bit-for-bit (operators/graph_analytics.py)."""
-    from islamic_ner_spark.operators.graph import aggregate_edges
     from islamic_ner_spark.operators.graph_analytics import pagerank_integer
-    from islamic_ner_spark.plans import staging
 
-    staging.ensure_kg_stage(spark, sf_dir)
-    edges = aggregate_edges(spark.read.parquet(staging.stage_path("kg", "edge_rows")))
-    return pagerank_integer(edges)
+    return pagerank_integer(_staged_edges(spark, sf_dir))
 
 
 def _pagerank_oracle_sql(n_iters: int = 5, scale: int = 1_000_000_000) -> str:
@@ -1891,13 +1883,9 @@ def q_kg_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree-ordered triangle enumeration over the undirected scholar
     graph (operators/graph_analytics.py); rows are lexicographically
     sorted key triples."""
-    from islamic_ner_spark.operators.graph import aggregate_edges
     from islamic_ner_spark.operators.graph_analytics import triangles
-    from islamic_ner_spark.plans import staging
 
-    staging.ensure_kg_stage(spark, sf_dir)
-    edges = aggregate_edges(spark.read.parquet(staging.stage_path("kg", "edge_rows")))
-    return triangles(edges)
+    return triangles(_staged_edges(spark, sf_dir))
 
 
 QUERIES["kg_triangles"] = q_kg_triangles
@@ -2058,16 +2046,6 @@ ORACLE_SQL["vocab_coverage"] = """
 
 # --- graph analytics round 2: LPA communities, k-core, co-mention,
 # --- deterministic random walks ----------------------------------------
-
-
-def _staged_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from islamic_ner_spark.operators.graph import aggregate_edges
-    from islamic_ner_spark.plans import staging
-
-    staging.ensure_kg_stage(spark, sf_dir)
-    return aggregate_edges(
-        spark.read.parquet(staging.stage_path("kg", "edge_rows"))
-    )
 
 
 # MATERIALIZED matters: the iterative oracles below reference these

@@ -143,6 +143,13 @@ def resolve_mentions_table(mentions: DataFrame, resolution: DataFrame) -> DataFr
     )
 
 
+# the resumable annotate commits its buckets in this many append jobs:
+# more waves = finer resume granularity, but one extra input scan per
+# wave (the bucket predicate is a hash of conv_id and cannot prune the
+# source)
+ANNOTATE_WAVES = 4
+
+
 def _annotate_resumable(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -150,7 +157,6 @@ def _annotate_resumable(
     work_dir: str,
     fingerprint: str,
     n_buckets: int,
-    n_waves: int = 4,
 ) -> DataFrame:
     """Bucketed, partition-resumable annotate stage.
 
@@ -158,13 +164,10 @@ def _annotate_resumable(
     extraction_only=True)``): conv_id, turn_idx, doc_id, mentions,
     triples — the only columns the KG stages read.
 
-    Buckets are committed in ``n_waves`` independent append jobs, each
-    followed by an incremental manifest update — so a killed job leaves a
-    manifest recording exactly the committed buckets, and the re-run
-    annotates only the missing ones.  More waves = finer resume
-    granularity but one extra input scan per wave (the bucket predicate
-    is a hash of conv_id and cannot prune the source); 4 is a reasonable
-    default, pass 1 for single-commit all-or-nothing.
+    Buckets are committed in ``ANNOTATE_WAVES`` independent append jobs,
+    each followed by an incremental manifest update — so a killed job
+    leaves a manifest recording exactly the committed buckets, and the
+    re-run annotates only the missing ones.
     """
     path = str(Path(work_dir) / "annotated")
     bucket_col = F.pmod(F.xxhash64("conv_id"), F.lit(n_buckets)).cast("int")
@@ -196,7 +199,7 @@ def _annotate_resumable(
         dict((manifest or {}).get("per_partition_rows") or {}) if done else {}
     )
     started = time.time()
-    wave_of = {b: b % n_waves for b in range(n_buckets)}
+    wave_of = {b: b % ANNOTATE_WAVES for b in range(n_buckets)}
     pending_waves = sorted(
         {wave_of[b] for b in range(n_buckets) if str(b) not in done}
     )

@@ -5,20 +5,23 @@ DuckDB cannot execute Aho-Corasick matching, SequenceMatcher scoring, or
 blake2b minhashing — but everything downstream of those kernels (edge
 MERGE aggregation, node variant-union/last-writer, connected components,
 band-bucket candidate joins, top-k ranking) is relational.  Each stage
-group writes its kernel outputs once per (sf_dir, STAGE_VERSION) under
+group writes its kernel outputs once per (sf_dir, engine code) under
 ``.stage/``; the Spark query then computes its answer from the staged
 parquet with DataFrame operators, and the paired ``ORACLE_SQL`` entry
 computes the same answer in DuckDB over the *same files* (connected
 components via recursive CTE).  The result: a genuine differential test
 of the relational tail instead of a rows-only count.
 
-Staleness: a ``_STAGE_META.json`` records (sf_dir, version); any
-mismatch wipes and rebuilds the group.  Bump ``STAGE_VERSION`` whenever
-staged semantics change.
+Staleness: a ``_STAGE_META.json`` records the sf_dir and
+:func:`code_digest`, a hash of every file of the package; any mismatch
+wipes and rebuilds the group, so the oracles never check stages that
+older code wrote.
 """
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import json
 import shutil
 from pathlib import Path
@@ -26,8 +29,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-STAGE_VERSION = "r5-1"
-STAGE_ROOT = Path(__file__).resolve().parents[2] / ".stage"
+PACKAGE_ROOT = Path(__file__).resolve().parents[1]
+STAGE_ROOT = PACKAGE_ROOT.parent / ".stage"
 
 # the flagship entry() (__spark_entry__.py) and the staged KG dataflow
 # MUST synthesize transcripts identically — single-sourced here so a
@@ -62,17 +65,30 @@ def _meta_file(group: str) -> Path:
     return STAGE_ROOT / group / "_STAGE_META.json"
 
 
+@functools.lru_cache(maxsize=1)
+def code_digest() -> str:
+    """sha256 over the path and bytes of every file under the package
+    (code and gazetteer data, ``__pycache__`` skipped): any edit to the
+    engine makes every stage stale."""
+    h = hashlib.sha256()
+    for path in sorted(PACKAGE_ROOT.rglob("*")):
+        if path.is_file() and "__pycache__" not in path.parts:
+            h.update(str(path.relative_to(PACKAGE_ROOT)).encode() + b"\0")
+            h.update(hashlib.sha256(path.read_bytes()).digest())
+    return h.hexdigest()
+
+
 def _is_current(group: str, sf_dir: str) -> bool:
     try:
         meta = json.loads(_meta_file(group).read_text())
     except (OSError, json.JSONDecodeError):
         return False
-    return meta.get("sf_dir") == sf_dir and meta.get("version") == STAGE_VERSION
+    return meta.get("sf_dir") == sf_dir and meta.get("code") == code_digest()
 
 
 def _mark(group: str, sf_dir: str) -> None:
     _meta_file(group).write_text(
-        json.dumps({"sf_dir": sf_dir, "version": STAGE_VERSION})
+        json.dumps({"sf_dir": sf_dir, "code": code_digest()})
     )
 
 

@@ -458,6 +458,20 @@ def main() -> int:
         "full-outer join with a coalesce per column",
     )
 
+    # the first-time MERGE of the staged candidate rows runs the same
+    # re-aggregation over the rows lifted to the table shape
+    for qname in ("kg_nodes", "kg_edges"):
+        plan = plan_of(dq.QUERIES[qname](spark, sf_dir))
+        check(
+            f"{qname}: one keyed MERGE aggregation, no join",
+            plan.count("Aggregate(key") == 2
+            and plan.count("Exchange hashpartitioning") == 1
+            and "Join" not in plan,
+            "staged candidate rows merge in one partial + final "
+            "aggregation on the table key, with no join to pick the "
+            "winning writer",
+        )
+
     plan = plan_of(personalized_pagerank(staged_edges, n_iters=1, checkpoint=False))
     check(
         "ppr: broadcast seed + keyed contribution agg",

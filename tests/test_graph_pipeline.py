@@ -7,7 +7,7 @@ import pytest
 
 from islamic_ner_spark.functions.normalize import normalize
 from islamic_ner_spark.operators import queries as Q
-from islamic_ner_spark.operators.graph import graph_stats
+from islamic_ner_spark.operators.graph import EDGE_KEY, graph_stats
 from islamic_ner_spark.plans.pipeline import build_graph_from_labels
 
 LABELED_SCHEMA = "conv_id string, turn_idx int, tokens array<string>, labels array<string>"
@@ -39,13 +39,27 @@ def test_single_doc_creates_nodes_and_edges(spark, resolver_gazetteer) -> None:
 def test_reprocessing_same_doc_is_idempotent(spark, resolver_gazetteer) -> None:
     tokens = ["حدثنا", "عبد", "الله", "عن", "نافع"]
     labels = ["O", "B-SCHOLAR", "I-SCHOLAR", "O", "B-SCHOLAR"]
-    once = _build(spark, [("h-dup", 0, tokens, labels)], resolver_gazetteer).stats()
+    once = _build(spark, [("h-dup", 0, tokens, labels)], resolver_gazetteer)
     twice = _build(
         spark,
         [("h-dup", 0, tokens, labels), ("h-dup", 0, tokens, labels)],
         resolver_gazetteer,
-    ).stats()
-    assert once == twice
+    )
+    assert once.stats() == twice.stats()
+    # a repeated turn takes the global groupBy: every column of every row
+    # equals the one-turn build's, except the writer counts, which double
+    def rows(df, key):
+        return {tuple(r[k] for k in key): r.asDict() for r in df.collect()}
+
+    for table, key, count in (
+        ("nodes", ["label", "key"], "mention_count"),
+        ("edges", EDGE_KEY, "merge_count"),
+    ):
+        single = rows(getattr(once, table), key)
+        double = rows(getattr(twice, table), key)
+        assert single and single.keys() == double.keys()
+        for k, row in single.items():
+            assert double[k] == {**row, count: 2 * row[count]}, (table, k)
 
 
 def test_variant_mentions_merge_to_one_node(spark, resolver_gazetteer) -> None:

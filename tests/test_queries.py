@@ -119,6 +119,23 @@ def test_entry_matches_staged_narration_chains(spark, tmp_path, monkeypatch) -> 
     )
 
 
+def test_stage_goes_stale_when_engine_code_changes(tmp_path, monkeypatch) -> None:
+    """A stage group is keyed on the digest of the package's files, so
+    stages written by other engine code never feed the oracles."""
+    from islamic_ner_spark.plans import staging
+
+    monkeypatch.setattr(staging, "STAGE_ROOT", tmp_path / "stage")
+    assert len(staging.code_digest()) == 64
+    monkeypatch.setattr(staging, "code_digest", lambda: "a" * 64)
+    staging._reset("kg")
+    assert not staging._is_current("kg", "sf")
+    staging._mark("kg", "sf")
+    assert staging._is_current("kg", "sf")
+    assert not staging._is_current("kg", "other_sf")
+    monkeypatch.setattr(staging, "code_digest", lambda: "b" * 64)
+    assert not staging._is_current("kg", "sf")
+
+
 def test_bfs_distances_hand_graph(spark) -> None:
     """bfs_distances on a hand-built edge table: path graph + branch +
     disconnected island; distances must be minimal and the island
