@@ -1,12 +1,33 @@
-"""Bucket/block capping with dropped-work observability.
+"""Candidate generation for every bucketed path: capping plus the two
+join shapes, each written once.
 
-Every path that bounds quadratic candidate generation — MinHash LSH
-bands (operators/dedup.py), SimHash bands (same), hyperplane-LSH bands
-(operators/similarity.py), token blocking for new-entity resolution
-(operators/linking.py) — runs through :func:`cap_buckets`, so every
-build emits the same evidence when it drops work: one WARNING naming
-the path, how many buckets were dropped, and the largest offenders.
-No silent caps anywhere.
+A bucketed path computes signatures, equi-joins the rows that share one,
+then verifies the pairs.  The paths are MinHash LSH bands and SimHash
+bands (operators/dedup.py), hyperplane-LSH bands and IVF cells
+(operators/similarity.py), token blocks for new-entity resolution
+(operators/linking.py), deletion variants for typo pairs (dedup.py),
+and the staged driver queries that replay them (plans/driver_queries.py).
+Their shared kernels:
+
+* :func:`cap_buckets` drops over-capacity buckets, so every build emits
+  the same evidence when it drops work: one WARNING naming the path, how
+  many buckets were dropped, and the largest offenders.  No silent caps
+  anywhere.  :data:`MAX_BUCKET_SIZE` is the one cap of the LSH paths.
+* :func:`bucket_self_join` — distinct pairs ``id_a < id_b`` of rows that
+  share a bucket, carrying chosen columns from each side.  Callers:
+  ``dedup.lsh_candidate_pairs``, ``dedup.simhash_pairs_from_signatures``
+  (carries ``simhash``), ``dedup.typo_pairs`` (uncapped),
+  ``similarity.embedding_candidate_pairs`` and ``linking.new_pair_edges``
+  (carries ``norm_text``).
+* :func:`probe_join` — query probes against an index on the bucket key,
+  distinct ``(qid, vid)`` with ``qid != vid``.  Callers:
+  ``similarity.lsh_topk``, ``similarity.ivf_topk`` and the driver
+  queries ``q_ann_lsh_topk`` / ``q_ivf_topk``.
+* The verified pairs' tail, ``(id_a, id_b)`` -> connected components ->
+  ``(id, group)``, is ``components.pair_groups``.  Callers:
+  ``dedup.near_duplicate_groups``, ``similarity.embedding_near_duplicates``
+  and the driver queries ``q_neardup_minhash``, ``q_neardup_embedding``
+  and ``q_corpus_curation``.
 
 :func:`log_candidate_stats` is the companion visibility hook: one INFO
 line per build reporting candidate-pair volume against corpus size, so
@@ -23,6 +44,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 log = logging.getLogger("islamic_ner_spark.capping")
+
+# a band bucket larger than this is dropped from candidate generation
+# (and logged): degenerate buckets — e.g. thousands of empty/near-empty
+# docs sharing one signature — would otherwise go quadratic within the
+# bucket.  Real near-dup clusters this large are still found through
+# their other (b-1) bands unless ALL their buckets are degenerate.
+MAX_BUCKET_SIZE = 5_000
 
 # Bounded registry for caches nobody tracks (callers that pass no
 # ``persisted`` list, e.g. the driver query catalog): the newest few
@@ -86,6 +114,46 @@ def cap_buckets(
         max_bucket_size,
     )
     return capped
+
+
+def bucket_self_join(
+    banded: DataFrame,
+    key_cols: list[str],
+    id_col: str,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Distinct ``(id_a, id_b, <c>_a, <c>_b ...)`` pairs, ``id_a < id_b``,
+    of the ``banded`` rows that share the bucket ``key_cols``; each
+    column ``c`` in ``carry`` comes from both sides.  An equi-join on
+    the bucket key (the id order is a join filter), never all-pairs; a
+    pair that shares several buckets is emitted once."""
+
+    def side(s: str) -> DataFrame:
+        return banded.select(
+            *key_cols,
+            F.col(id_col).alias(f"id_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+
+    return (
+        side("a").join(side("b"), list(key_cols))
+        .where(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", *[f"{c}_{s}" for c in carry for s in "ab"])
+        .distinct()
+    )
+
+
+def probe_join(probes: DataFrame, index: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Distinct candidate ``(qid, vid)`` pairs, ``qid != vid``: the query
+    ``probes(vid, *key_cols)`` (their ``vid`` is the query id ``qid``)
+    equi-joined to ``index(vid, *key_cols)`` on the bucket key."""
+    return (
+        probes.select(F.col("vid").alias("qid"), *key_cols)
+        .join(index.select("vid", *key_cols), list(key_cols))
+        .where(F.col("qid") != F.col("vid"))
+        .select("qid", "vid")
+        .distinct()
+    )
 
 
 def warn_dropped(what: str, hot: list[tuple], max_bucket_size: int) -> None:

@@ -167,18 +167,25 @@ def connected_components(
     return members.union(roots).groupBy("node").agg(F.min("component").alias("component"))
 
 
-def numeric_groups(comp: DataFrame) -> DataFrame:
-    """``(node, component)`` with string keys -> ``(id, group)`` longs,
-    where ``group`` is the NUMERIC min id of the cluster.
+def pair_groups(pairs: DataFrame) -> DataFrame:
+    """Verified pairs ``(id_a, id_b)`` of long ids -> ``(id, group)``
+    longs, where ``group`` is the NUMERIC min id of the connected
+    cluster; ids in no pair (singletons) are absent.
 
-    ``connected_components`` labels clusters with the *lexicographic*
-    min of the string node keys, so a cluster ``{2, 1000002}`` would get
-    component ``'1000002'`` (``'1' < '2'``) — surprising for a consumer
-    of a numeric group column.  This re-aggregates to the numeric min
-    with one window over the component key (tiny: one row per clustered
-    node)."""
+    :func:`connected_components` runs over the ids as strings and labels
+    a cluster with their *lexicographic* min, so a cluster
+    ``{2, 1000002}`` gets component ``'1000002'`` (``'1' < '2'``) —
+    surprising for a consumer of a numeric group column.  One window over
+    the component key (tiny: one row per clustered id) re-labels it with
+    the numeric min."""
     from pyspark.sql import Window
 
+    comp = connected_components(
+        pairs.select(
+            F.col("id_a").cast("string").alias("src"),
+            F.col("id_b").cast("string").alias("dst"),
+        )
+    )
     nid = F.col("node").cast("long")
     return comp.select(
         nid.alias("id"),

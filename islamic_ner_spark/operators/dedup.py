@@ -25,8 +25,13 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from islamic_ner_spark.operators.capping import cap_buckets, log_candidate_stats
-from islamic_ner_spark.operators.components import connected_components
+from islamic_ner_spark.operators.capping import (
+    MAX_BUCKET_SIZE,
+    bucket_self_join,
+    cap_buckets,
+    log_candidate_stats,
+)
+from islamic_ner_spark.operators.components import pair_groups
 
 _MERSENNE_PRIME = (1 << 61) - 1
 _MAX_HASH = (1 << 32) - 1
@@ -99,19 +104,6 @@ def minhash_signatures(
     )
 
 
-# a band bucket larger than this is dropped from candidate generation
-# (and logged): degenerate buckets — e.g. thousands of empty/near-empty
-# docs sharing one signature — would otherwise go quadratic within the
-# bucket.  Real near-dup clusters this large are still found through
-# their other (b-1) bands unless ALL their buckets are degenerate.
-MAX_BUCKET_SIZE = 5_000
-
-# capping + dropped-work logging is shared across every bucketed path
-# (minhash/simhash here, hyperplane LSH in similarity.py, token
-# blocking in linking.py) — see operators/capping.py
-_cap_buckets = cap_buckets
-
-
 def lsh_candidate_pairs(
     signatures: DataFrame,
     *,
@@ -139,24 +131,9 @@ def lsh_candidate_pairs(
             ).alias("band_hash"),
         )
     )
-    banded = _cap_buckets(
-        banded, ["band_id", "band_hash"], max_bucket_size, "minhash-lsh", persisted
-    )
-
-    left = banded.alias("a")
-    right = banded.alias("b")
-    return (
-        left.join(
-            right,
-            on=[
-                F.col("a.band_id") == F.col("b.band_id"),
-                F.col("a.band_hash") == F.col("b.band_hash"),
-                F.col("a.id") < F.col("b.id"),
-            ],
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    keys = ["band_id", "band_hash"]
+    banded = cap_buckets(banded, keys, max_bucket_size, "minhash-lsh", persisted)
+    return bucket_self_join(banded, keys, "id")
 
 
 def verify_jaccard_pairs(
@@ -226,17 +203,13 @@ def near_duplicate_groups(
     verified = verify_jaccard_pairs(
         candidates, df, id_col, text_col, shingle_k=shingle_k, threshold=threshold
     )
-    edges = verified.select(
-        F.col("id_a").cast("string").alias("src"), F.col("id_b").cast("string").alias("dst")
-    )
-    from islamic_ner_spark.operators.components import numeric_groups
-
-    comp = connected_components(edges)
-    # connected_components materialized the edge set (probe collect /
-    # checkpoint), so the banded-signature cache is no longer referenced
+    groups = pair_groups(verified)
+    # pair_groups' connected_components materialized the edge set (probe
+    # collect / checkpoint), so the banded-signature cache is no longer
+    # referenced
     for df_ in caches:
         df_.unpersist()
-    return numeric_groups(comp)
+    return groups
 
 
 def jaccard_scores(
@@ -385,29 +358,10 @@ def simhash_pairs_from_signatures(
             )
         ).alias("band"),
     ).select("id", "simhash", "band.band_id", "band.band_value")
-    banded = _cap_buckets(
-        banded, ["band_id", "band_value"], max_bucket_size, "simhash", persisted
-    )
-
-    pairs = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            on=[
-                F.col("a.band_id") == F.col("b.band_id"),
-                F.col("a.band_value") == F.col("b.band_value"),
-                F.col("a.id") < F.col("b.id"),
-            ],
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.simhash").alias("sig_a"),
-            F.col("b.simhash").alias("sig_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
+    keys = ["band_id", "band_value"]
+    banded = cap_buckets(banded, keys, max_bucket_size, "simhash", persisted)
+    pairs = bucket_self_join(banded, keys, "id", carry=("simhash",))
+    hamming = F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
     return pairs.select("id_a", "id_b", hamming.alias("hamming")).where(
         F.col("hamming") <= max_hamming
     )
@@ -554,16 +508,9 @@ def typo_pairs(docs: DataFrame, max_dist: int = 2) -> DataFrame:
     exploded = words.select(
         "word", F.explode(F.expr(variants)).alias("v")
     )
-    a = exploded.select(F.col("v"), F.col("word").alias("w_a"))
-    b = exploded.select(F.col("v"), F.col("word").alias("w_b"))
-    cand = (
-        a.join(b, "v")
-        .where(F.col("w_a") < F.col("w_b"))
-        .select("w_a", "w_b")
-        .distinct()
-    )
+    cand = bucket_self_join(exploded, ["v"], "word")
     return cand.select(
-        "w_a",
-        "w_b",
-        F.levenshtein("w_a", "w_b").cast("long").alias("dist"),
+        F.col("id_a").alias("w_a"),
+        F.col("id_b").alias("w_b"),
+        F.levenshtein("id_a", "id_b").cast("long").alias("dist"),
     ).where(F.col("dist") <= max_dist)

@@ -149,14 +149,17 @@ def new_pair_edges(
     Blocking: same (entity_type, shared whitespace token), with blocks
     larger than ``max_block_size`` dropped (logged via the shared
     operators/capping helper) so one ubiquitous name particle cannot
-    make the pair join quadratic in the vocabulary.  Pair scoring:
+    make the pair join quadratic in the vocabulary.  Both capping
+    branches feed the shared bucket self-join
+    (operators/capping.bucket_self_join).  Pair scoring:
     SequenceMatcher ratio >= 0.8 in an Arrow batch
     (entity_resolver.py:70-100 semantics).
     """
     from pyspark.sql import Window
 
-    from islamic_ner_spark.operators.capping import cap_buckets
+    from islamic_ner_spark.operators.capping import bucket_self_join, cap_buckets
 
+    block_key = ["entity_type", "block_token"]
     blocked = nodes.select(
         "node", "entity_type", "norm_text",
         F.explode(F.split("norm_text", " ")).alias("block_token"),
@@ -164,43 +167,26 @@ def new_pair_edges(
 
     if log_dropped:
         capped = cap_buckets(
-            blocked, ["entity_type", "block_token"], max_block_size,
-            "new-entity-blocking", persisted,
+            blocked, block_key, max_block_size, "new-entity-blocking", persisted
         )
     else:
         # silent path for equivalence tests: one shuffle keyed on the
         # block — the window count and the subsequent self-join both
         # consume the same (entity_type, block_token) hashing
-        block_w = Window.partitionBy("entity_type", "block_token")
+        block_w = Window.partitionBy(*block_key)
         capped = blocked.withColumn(
             "block_n", F.count(F.lit(1)).over(block_w)
         ).where(F.col("block_n") <= max_block_size).drop("block_n")
 
-    pairs = (
-        capped.alias("a")
-        .join(
-            capped.alias("b"),
-            on=[
-                F.col("a.entity_type") == F.col("b.entity_type"),
-                F.col("a.block_token") == F.col("b.block_token"),
-                F.col("a.node") < F.col("b.node"),
-            ],
-        )
-        .select(
-            F.col("a.node").alias("src"),
-            F.col("b.node").alias("dst"),
-            F.col("a.norm_text").alias("text_a"),
-            F.col("b.norm_text").alias("text_b"),
-        )
-        .distinct()
-    )
+    pairs = bucket_self_join(capped, block_key, "node", carry=("norm_text",))
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from islamic_ner_spark.functions.resolve import fuzzy_match
 
         for batch in batches:
-            keep = [fuzzy_match(a, b) for a, b in zip(batch["text_a"], batch["text_b"])]
-            yield batch.loc[keep, ["src", "dst"]]
+            keep = [fuzzy_match(a, b)
+                    for a, b in zip(batch["norm_text_a"], batch["norm_text_b"])]
+            yield batch.loc[keep, ["id_a", "id_b"]].set_axis(["src", "dst"], axis=1)
 
     return pairs.mapInPandas(score, schema="src string, dst string")
 
@@ -223,9 +209,7 @@ def canonicalize_from_pairs(nodes: DataFrame, pair_edges: DataFrame) -> DataFram
     )
 
 
-def _canonicalize_new(
-    spark: SparkSession, new_strings: DataFrame, *, max_block_size: int = MAX_BLOCK_SIZE
-) -> DataFrame:
+def _canonicalize_new(spark: SparkSession, new_strings: DataFrame) -> DataFrame:
     """Joint clustering of unresolved strings.
 
     Blocking (capped) -> pairwise SequenceMatcher >= 0.8 -> connected
@@ -233,7 +217,7 @@ def _canonicalize_new(
     canonical.  Identical to the reference for every test fixture."""
     nodes = new_entity_nodes(new_strings.select("text", "entity_type", "norm_text"))
     caches: list = []
-    edges = new_pair_edges(nodes, max_block_size=max_block_size, persisted=caches)
+    edges = new_pair_edges(nodes, persisted=caches)
     canon = canonicalize_from_pairs(nodes, edges)
     # canonicalize_from_pairs ran connected_components, which materialized
     # the edge set — the blocked cache is no longer referenced

@@ -24,15 +24,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from islamic_ner_spark.operators.capping import cap_buckets, log_candidate_stats
+from islamic_ner_spark.operators.capping import (
+    MAX_BUCKET_SIZE,
+    bucket_self_join,
+    cap_buckets,
+    log_candidate_stats,
+    probe_join,
+)
+from islamic_ner_spark.operators.components import pair_groups
 
 log = logging.getLogger(__name__)
-
-# a band bucket larger than this is dropped from candidate generation
-# (logged, never silent) — same guard as the text-LSH paths
-# (operators/dedup.MAX_BUCKET_SIZE); kept as a separate constant so the
-# embedding paths can be tuned independently.
-MAX_BUCKET_SIZE = 5_000
 
 
 def hyperplane_bits(n_docs: int) -> int:
@@ -269,22 +270,8 @@ def lsh_topk(
     query_sig = hyperplane_signatures(
         queries, id_col=id_col, vec_col=vec_col, n_planes=n_planes, bands=bands,
         seed=seed, probe_radius=probe_radius,
-    ).select(
-        F.col("vid").alias("qid"), F.col("band_id").alias("qband"), F.col("band_hash").alias("qhash")
     )
-
-    candidates = (
-        query_sig.join(
-            corpus_sig,
-            on=[
-                F.col("qband") == F.col("band_id"),
-                F.col("qhash") == F.col("band_hash"),
-            ],
-        )
-        .where(F.col("qid") != F.col("vid"))
-        .select("qid", "vid")
-        .distinct()
-    )
+    candidates = probe_join(query_sig, corpus_sig, ["band_id", "band_hash"])
     return topk_from_candidates(
         emb, queries, candidates, k=k, id_col=id_col, vec_col=vec_col
     )
@@ -323,22 +310,9 @@ def embedding_candidate_pairs(
     """Unordered candidate pairs (id_a < id_b) from a hyperplane
     signature table — corpus self-join on shared band buckets, with
     over-capacity buckets dropped (logged) like the text-LSH paths."""
-    sigs = cap_buckets(
-        sigs, ["band_id", "band_hash"], max_bucket_size, "embedding-lsh", persisted
-    )
-    return (
-        sigs.alias("a")
-        .join(
-            sigs.alias("b"),
-            on=[
-                F.col("a.band_id") == F.col("b.band_id"),
-                F.col("a.band_hash") == F.col("b.band_hash"),
-                F.col("a.vid") < F.col("b.vid"),
-            ],
-        )
-        .select(F.col("a.vid").alias("id_a"), F.col("b.vid").alias("id_b"))
-        .distinct()
-    )
+    keys = ["band_id", "band_hash"]
+    sigs = cap_buckets(sigs, keys, max_bucket_size, "embedding-lsh", persisted)
+    return bucket_self_join(sigs, keys, "vid")
 
 
 def cosine_pair_scores(emb: DataFrame, pairs: DataFrame, *, id_col: str = "vec_id",
@@ -412,21 +386,12 @@ def embedding_near_duplicates(
         extra=f"{n_planes // bands} bits x {bands} bands",
     )
     scored = cosine_pair_scores(emb, candidates, id_col=id_col, vec_col=vec_col)
-    edges = scored.where(F.col("cos_x1e6") >= threshold_x1e6).select(
-        F.col("id_a").cast("string").alias("src"),
-        F.col("id_b").cast("string").alias("dst"),
-    )
-    from islamic_ner_spark.operators.components import (
-        connected_components,
-        numeric_groups,
-    )
-
-    comp = connected_components(edges)
-    # connected_components materialized the edge set, so the banded /
-    # candidate caches are no longer referenced
+    groups = pair_groups(scored.where(F.col("cos_x1e6") >= threshold_x1e6))
+    # pair_groups' connected_components materialized the edge set, so
+    # the banded / candidate caches are no longer referenced
     for df_ in caches:
         df_.unpersist()
-    return numeric_groups(comp)
+    return groups
 
 
 # ---------------------------------------------------------------------------
@@ -622,13 +587,8 @@ def ivf_topk(
     assigned = assign_cells(emb, centroids, id_col=id_col, vec_col=vec_col)
     probes = assign_cells(
         queries, centroids, id_col=id_col, vec_col=vec_col, nprobe=nprobe
-    ).select(F.col("vid").alias("qid"), "cell")
-    candidates = (
-        probes.join(assigned.select("vid", "cell"), "cell")
-        .where(F.col("qid") != F.col("vid"))
-        .select("qid", "vid")
-        .distinct()
     )
+    candidates = probe_join(probes, assigned, ["cell"])
     return topk_from_candidates(
         emb, queries, candidates, k=k, id_col=id_col, vec_col=vec_col
     )

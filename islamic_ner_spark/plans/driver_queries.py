@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from islamic_ner_spark.functions.normalize import TASHKEEL_PATTERN
+from islamic_ner_spark.operators.capping import MAX_BUCKET_SIZE
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -385,21 +386,12 @@ def q_kg_scholar_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_neardup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate grouping: connected components over staged verified
     MinHash pairs (group = numeric min doc id of the cluster)."""
-    from islamic_ner_spark.operators.components import (
-        connected_components,
-        numeric_groups,
-    )
+    from islamic_ner_spark.operators.components import pair_groups
     from islamic_ner_spark.plans import staging
 
     staging.ensure_dedup_stage(spark, sf_dir)
     pairs = spark.read.parquet(staging.stage_path("dedup", "minhash_pairs"))
-    comp = connected_components(
-        pairs.select(
-            F.col("id_a").cast("string").alias("src"),
-            F.col("id_b").cast("string").alias("dst"),
-        )
-    )
-    return numeric_groups(comp).orderBy("id")
+    return pair_groups(pairs).orderBy("id")
 
 
 def q_neardup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -431,10 +423,7 @@ def q_neardup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup grouping: staged hyperplane-LSH
     candidates -> exact cosine (x1e6 integer) >= threshold -> connected
     components."""
-    from islamic_ner_spark.operators.components import (
-        connected_components,
-        numeric_groups,
-    )
+    from islamic_ner_spark.operators.components import pair_groups
     from islamic_ner_spark.operators.similarity import (
         cosine_pair_scores,
         embedding_candidate_pairs,
@@ -446,49 +435,27 @@ def q_neardup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates = embedding_candidate_pairs(sigs)
     emb = staging.embeddings_with_perturbed(spark, sf_dir)
     scored = cosine_pair_scores(emb, candidates)
-    edges = scored.where(
-        F.col("cos_x1e6") >= staging.EMBDUP_THRESHOLD_X1E6
-    ).select(
-        F.col("id_a").cast("string").alias("src"),
-        F.col("id_b").cast("string").alias("dst"),
-    )
-    comp = connected_components(edges)
-    return numeric_groups(comp).orderBy("id")
+    return pair_groups(
+        scored.where(F.col("cos_x1e6") >= staging.EMBDUP_THRESHOLD_X1E6)
+    ).orderBy("id")
 
 
 def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN: staged multiprobe query hashes joined against capped corpus
     band buckets, exact cosine re-score of candidates only, per-query
     rank."""
-    from islamic_ner_spark.operators.capping import cap_buckets
-    from islamic_ner_spark.operators.similarity import (
-        MAX_BUCKET_SIZE,
-        topk_from_candidates,
-    )
+    from islamic_ner_spark.operators.capping import cap_buckets, probe_join
+    from islamic_ner_spark.operators.similarity import topk_from_candidates
     from islamic_ner_spark.plans import staging
 
     staging.ensure_ann_stage(spark, sf_dir)
+    keys = ["band_id", "band_hash"]
     sig = cap_buckets(
         spark.read.parquet(staging.stage_path("ann", "ann_sigs")),
-        ["band_id", "band_hash"], MAX_BUCKET_SIZE, "ann-lsh",
+        keys, MAX_BUCKET_SIZE, "ann-lsh",
     )
-    probes = spark.read.parquet(staging.stage_path("ann", "ann_query_probes")).select(
-        F.col("vid").alias("qid"),
-        F.col("band_id").alias("qband"),
-        F.col("band_hash").alias("qhash"),
-    )
-    candidates = (
-        probes.join(
-            sig,
-            on=[
-                F.col("qband") == F.col("band_id"),
-                F.col("qhash") == F.col("band_hash"),
-            ],
-        )
-        .where(F.col("qid") != F.col("vid"))
-        .select("qid", "vid")
-        .distinct()
-    )
+    probes = spark.read.parquet(staging.stage_path("ann", "ann_query_probes"))
+    candidates = probe_join(probes, sig, keys)
     emb = _read(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < staging.ANN_N_QUERIES)
     return topk_from_candidates(emb, queries, candidates, k=5)
@@ -499,22 +466,13 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus: quality filters -> exact dedup -> near-dup cluster survivor
     rule, one attributable (doc_id, status) row per document
     (operators/curation.curate_corpus)."""
-    from islamic_ner_spark.operators.components import (
-        connected_components,
-        numeric_groups,
-    )
+    from islamic_ner_spark.operators.components import pair_groups
     from islamic_ner_spark.operators.curation import curate_corpus
     from islamic_ner_spark.plans import staging
 
     staging.ensure_dedup_stage(spark, sf_dir)
-    pairs = spark.read.parquet(staging.stage_path("dedup", "minhash_pairs"))
-    groups = numeric_groups(
-        connected_components(
-            pairs.select(
-                F.col("id_a").cast("string").alias("src"),
-                F.col("id_b").cast("string").alias("dst"),
-            )
-        )
+    groups = pair_groups(
+        spark.read.parquet(staging.stage_path("dedup", "minhash_pairs"))
     )
     corpus = staging.documents_with_perturbed(spark, sf_dir)
     return curate_corpus(corpus, groups).orderBy("doc_id")
@@ -526,20 +484,14 @@ def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     only, per-query rank.  Candidate volume is structurally
     ~nprobe/n_cells of the corpus — the distribution-independent ANN
     scale path (operators/similarity.ivf_topk)."""
+    from islamic_ner_spark.operators.capping import probe_join
     from islamic_ner_spark.operators.similarity import topk_from_candidates
     from islamic_ner_spark.plans import staging
 
     staging.ensure_ann_stage(spark, sf_dir)
     assigned = spark.read.parquet(staging.stage_path("ann", "ivf_assign"))
-    probes = spark.read.parquet(staging.stage_path("ann", "ivf_probes")).select(
-        F.col("vid").alias("qid"), "cell"
-    )
-    candidates = (
-        probes.join(assigned, "cell")
-        .where(F.col("qid") != F.col("vid"))
-        .select("qid", "vid")
-        .distinct()
-    )
+    probes = spark.read.parquet(staging.stage_path("ann", "ivf_probes"))
+    candidates = probe_join(probes, assigned, ["cell"])
     emb = _read(spark, sf_dir, "embeddings")
     queries = emb.where(F.col("vec_id") < staging.ANN_N_QUERIES)
     return topk_from_candidates(emb, queries, candidates, k=5)
@@ -1117,18 +1069,6 @@ def _simhash_band_union() -> str:
     )
 
 
-def _max_bucket_size() -> int:
-    from islamic_ner_spark.operators.dedup import MAX_BUCKET_SIZE
-
-    return MAX_BUCKET_SIZE
-
-
-def _emb_max_bucket_size() -> int:
-    from islamic_ner_spark.operators.similarity import MAX_BUCKET_SIZE
-
-    return MAX_BUCKET_SIZE
-
-
 ORACLE_SQL.update({
     "kg_triples": f"""
         SELECT doc_id, conv_id, turn_idx, UNNEST(triples, recursive := true)
@@ -1214,7 +1154,7 @@ ORACLE_SQL.update({
             SELECT id, simhash, band_id, band_value FROM (
                 SELECT *, COUNT(*) OVER (PARTITION BY band_id, band_value) AS bn
                 FROM banded
-            ) WHERE bn <= {_max_bucket_size()}
+            ) WHERE bn <= {MAX_BUCKET_SIZE}
         ),
         cand AS (
             SELECT DISTINCT a.id AS id_a, b.id AS id_b,
@@ -1284,7 +1224,7 @@ ORACLE_SQL.update({
             SELECT vid, band_id, band_hash FROM (
                 SELECT *, COUNT(*) OVER (PARTITION BY band_id, band_hash) AS bn
                 FROM sig
-            ) WHERE bn <= {_emb_max_bucket_size()}
+            ) WHERE bn <= {MAX_BUCKET_SIZE}
         ),
         cand AS (
             SELECT DISTINCT a.vid AS id_a, b.vid AS id_b
@@ -1315,7 +1255,7 @@ ORACLE_SQL.update({
             SELECT vid, band_id, band_hash FROM (
                 SELECT *, COUNT(*) OVER (PARTITION BY band_id, band_hash) AS bn
                 FROM sig
-            ) WHERE bn <= {_emb_max_bucket_size()}
+            ) WHERE bn <= {MAX_BUCKET_SIZE}
         ),
         probes AS (SELECT * FROM read_parquet('{_ANN_PROBES}')),
         cand AS (

@@ -107,15 +107,14 @@ def write_table(
     stage: str,
     fingerprint: str,
     partition_by: Optional[Sequence[str]] = None,
-    mode: str = "overwrite",
 ) -> dict:
-    """Write a stage output with a lineage manifest.
+    """Write (overwrite) a stage output with a lineage manifest.
 
     The manifest is written only after the parquet commit succeeds, so a
     missing/st stale manifest means "recompute this stage"."""
     table_path = str(table_path)
     started = time.time()
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(table_path)
@@ -163,19 +162,22 @@ def completed_buckets(table_path: str | Path) -> set[str]:
 
 
 class ParquetTableSink:
-    """The managed-table seam: every table write/read/merge in the batch
-    pipeline and the streaming graph maintenance routes through this
-    object (``tables.SINK``), so swapping in a catalog-managed format is
-    one assignment, not a code hunt.
+    """The managed-table seam of the streaming graph maintenance: the
+    bucketed MERGE, the whole-table swap and their crash recovery route
+    through this object (``tables.SINK``), so swapping in a
+    catalog-managed format there is one assignment, not a code hunt.
+    The batch pipeline's stage tables do not go through it:
+    plans/pipeline.py calls the module functions :func:`write_table`,
+    :func:`read_table` and :func:`table_is_current` directly.
 
     **Iceberg mapping** (the production target; no Iceberg runtime jar in
-    this sandbox).  An ``IcebergTableSink`` implements the same methods:
+    this sandbox).  The stage-table functions map to
+    ``df.writeTo(tbl).using("iceberg").createOrReplace()`` (the
+    manifest's lineage fields ride in snapshot summary properties),
+    ``spark.table(tbl)``, and a comparison with the fingerprint stored in
+    the latest snapshot's summary properties.  An ``IcebergTableSink``
+    implements this object's methods:
 
-    * ``write``      -> ``df.writeTo(tbl).using("iceberg").createOrReplace()``;
-      the manifest's lineage fields ride in snapshot summary properties.
-    * ``read``       -> ``spark.table(tbl)``.
-    * ``is_current`` -> compare the fingerprint stored in the latest
-      snapshot's summary properties.
     * ``merge_buckets`` -> one ``MERGE INTO`` per table instead of the
       hand-rolled per-bucket directory swap, keyed and resolved exactly
       as the shared MERGE rule (``operators/graph.merge_edge_rows`` /
@@ -220,29 +222,6 @@ class ParquetTableSink:
       ``_batch.json`` watermark; ``recover`` becomes a no-op (atomic
       metadata commits cannot leave half-swapped buckets).
     """
-
-    # -- stage tables -----------------------------------------------------
-
-    def write(
-        self,
-        df: DataFrame,
-        table_path: str | Path,
-        *,
-        stage: str,
-        fingerprint: str,
-        partition_by: Optional[Sequence[str]] = None,
-        mode: str = "overwrite",
-    ) -> dict:
-        return write_table(
-            df, table_path, stage=stage, fingerprint=fingerprint,
-            partition_by=partition_by, mode=mode,
-        )
-
-    def read(self, spark: SparkSession, table_path: str | Path) -> DataFrame:
-        return read_table(spark, table_path)
-
-    def is_current(self, table_path: str | Path, fingerprint: str) -> bool:
-        return table_is_current(table_path, fingerprint)
 
     # -- bucketed incremental MERGE (streaming graph maintenance) ---------
 

@@ -82,13 +82,31 @@ def _check_graph_meta(graph_path, n_buckets: int | None = None) -> dict:
     return meta
 
 
-def read_transcript_stream(spark: SparkSession, input_dir: str) -> DataFrame:
-    """File-source stream with the input_hint schema."""
+def _read_parquet_stream(
+    spark: SparkSession, input_dir: str, schema: str, max_files_per_trigger: int
+) -> DataFrame:
+    """File-source stream over the parquet files of ``input_dir``."""
     return (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", 16)
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )
+
+
+def _start_parquet_sink(
+    stream: DataFrame, output_dir: str, checkpoint_dir: str, available_now: bool
+) -> StreamingQuery:
+    """Start an append-mode parquet sink; ``available_now=True`` drains
+    the currently-visible input and stops."""
+    writer = (
+        stream.writeStream.format("parquet")
+        .option("path", output_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def stream_triples(
@@ -113,16 +131,9 @@ def start_triples_stream(
     ``available_now=True`` drains the currently-visible input and stops —
     used for tests and for catch-up runs after downtime (resume comes free
     from the checkpoint)."""
-    triples = stream_triples(read_transcript_stream(spark, input_dir), gazetteer_bc)
-    writer = (
-        triples.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    transcripts = _read_parquet_stream(spark, input_dir, TRANSCRIPTS_SCHEMA, 16)
+    triples = stream_triples(transcripts, gazetteer_bc)
+    return _start_parquet_sink(triples, output_dir, checkpoint_dir, available_now)
 
 
 def windowed_mention_counts(
@@ -177,22 +188,14 @@ def start_windowed_mention_stream(
     """Windowed mention counts -> append-mode parquet sink (each closed
     window lands exactly once; open windows stay pending in state)."""
     counts = windowed_mention_counts(
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir),
+        _read_parquet_stream(
+            spark, input_dir, TRANSCRIPTS_SCHEMA, max_files_per_trigger
+        ),
         gazetteer_bc,
         window_duration=window_duration,
         watermark_delay=watermark_delay,
     )
-    writer = (
-        counts.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(counts, output_dir, checkpoint_dir, available_now)
 
 
 def graph_batch_watermark(graph_path) -> int:
@@ -635,19 +638,9 @@ def start_dedup_stream(
 ) -> StreamingQuery:
     """documents stream -> first-copy-only stream (parquet sink)."""
     deduped = stream_exact_dedup(
-        spark.readStream.schema(input_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
+        _read_parquet_stream(spark, input_dir, input_schema, max_files_per_trigger)
     )
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_parquet_sink(deduped, output_dir, checkpoint_dir, available_now)
 
 
 def bucket_upsert(merge_rows):
@@ -734,10 +727,8 @@ def start_graph_stream(
         marker.write_text(json.dumps({"batch_id": batch_id}))
         result.unpersist()
 
-    transcripts = (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
+    transcripts = _read_parquet_stream(
+        spark, input_dir, TRANSCRIPTS_SCHEMA, max_files_per_trigger
     )
     writer = transcripts.writeStream.foreachBatch(process_batch).option(
         "checkpointLocation", checkpoint_dir

@@ -126,6 +126,32 @@ def main() -> int:
         "the nprobe-cell probe table broadcasts against cell assignments",
     )
 
+    # -- bucket self-join: shared-bucket equi-join, never all-pairs ------
+    from islamic_ner_spark.operators.dedup import lsh_candidate_pairs
+    from islamic_ner_spark.operators.similarity import embedding_candidate_pairs
+
+    staging.ensure_dedup_stage(spark, sf_dir)
+    plans = [
+        plan_of(lsh_candidate_pairs(
+            spark.read.parquet(staging.stage_path("dedup", "minhash_sigs"))
+        )),
+        plan_of(embedding_candidate_pairs(
+            spark.read.parquet(staging.stage_path("ann", "emb_neardup_sigs"))
+        )),
+    ]
+    check(
+        "bucket self-join: equi-join on the bucket key, no all-pairs",
+        all(
+            any(j in p for j in ("SortMergeJoin", "ShuffledHashJoin",
+                                 "BroadcastHashJoin"))
+            and "CartesianProduct" not in p
+            and "BroadcastNestedLoopJoin" not in p
+            for p in plans
+        ),
+        "lsh_candidate_pairs and embedding_candidate_pairs over staged "
+        "signatures pair rows through a bucket-keyed hash/sort-merge join",
+    )
+
     # -- IVF trainer: refinement aggregates partials, never the corpus ---
     from pyspark.sql import functions as F
 

@@ -67,3 +67,15 @@ def test_components_deterministic_across_partitionings(spark) -> None:
     r1 = sorted(map(tuple, connected_components(df1).collect()))
     r8 = sorted(map(tuple, connected_components(df8).collect()))
     assert r1 == r8
+
+
+def test_pair_groups_numeric_min_without_singletons(spark) -> None:
+    """The group of {2, 1000002} is its numeric min 2, not the
+    lexicographic min '1000002' that connected_components labels it
+    with; an id in no pair with another id (7, a self-pair) is absent."""
+    from islamic_ner_spark.operators.components import pair_groups
+
+    pairs = spark.createDataFrame([(2, 1000002), (7, 7)], "id_a long, id_b long")
+    groups = pair_groups(pairs)
+    assert groups.schema.simpleString() == "struct<id:bigint,group:bigint>"
+    assert sorted(tuple(r) for r in groups.collect()) == [(2, 2), (1000002, 2)]

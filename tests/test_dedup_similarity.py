@@ -398,3 +398,41 @@ def test_cap_buckets_auto_cache_registry_bounded(spark) -> None:
     assert len(capping._auto_cached) == capping._AUTO_CACHE_LIMIT
     # evicted entries are no longer cached; recent ones are
     assert all(df.storageLevel.useMemory for df in capping._auto_cached)
+
+
+def test_bucket_self_join_matches_brute_force(spark) -> None:
+    """cap_buckets + bucket_self_join against a Python enumeration of the
+    within-bucket pairs: the over-cap bucket is dropped (and kept when
+    uncapped), a pair sharing two buckets comes out once, an id listed
+    twice in one bucket pairs once, and the carried column rides along
+    from both sides."""
+    from islamic_ner_spark.operators.capping import bucket_self_join, cap_buckets
+
+    cap = 3
+    members = {
+        (0, "x"): [1, 2, 3],      # at the cap: kept
+        (1, "y"): [1, 2, 5],      # ids 1 and 2 share a second bucket
+        (1, "x"): [3, 6],         # same hash, other band: its own bucket
+        (0, "z"): [4, 5, 6, 7],   # over the cap
+        (2, "w"): [9, 9, 10],     # id 9 twice in one bucket
+        (2, "x"): [8],            # no pair
+    }
+    rows = [(band, h, i, f"t{i}") for (band, h), ids in members.items() for i in ids]
+    banded = spark.createDataFrame(rows, "band int, h string, id long, tag string")
+
+    for max_size in (cap, None):
+        expected = {
+            (a, b, f"t{a}", f"t{b}")
+            for ids in members.values()
+            if max_size is None or len(ids) <= max_size
+            for a in ids
+            for b in ids
+            if a < b
+        }
+        capped = cap_buckets(banded, ["band", "h"], max_size, "test-self-join")
+        out = bucket_self_join(capped, ["band", "h"], "id", carry=("tag",))
+        assert out.columns == ["id_a", "id_b", "tag_a", "tag_b"]
+        got = [tuple(r) for r in out.collect()]
+        assert len(got) == len(set(got))
+        assert set(got) == expected
+        assert ((4, 5, "t4", "t5") in expected) == (max_size is None)
