@@ -6,15 +6,16 @@ Scale shape (the whole point of this design):
 * Resolution is computed over **distinct** (text, type) strings, never per
   mention row — at 10^12 turns the distinct mention vocabulary is orders
   of magnitude smaller than the mention table.
-* The distinct strings are **counted first**.  Up to
-  ``DRIVER_LADDER_LIMIT`` of them are collected and the whole ladder
-  below runs on the driver in plain Python (``resolve_strings_locally``),
-  returned as one Arrow-built frame: a few thousand rows do not justify
-  the distributed ladder's ~20 Spark jobs and three Python crossings.
-  The driver ladder counts its blocked pairs before scoring them and
-  hands a vocabulary over ``DRIVER_PAIR_LIMIT`` (hot name tokens just
-  under the block cap) to the distributed ladder, as it does a
-  vocabulary over the string limit; that ladder runs rule for rule.
+* One bounded collect (``DRIVER_LADDER_LIMIT`` + 1 rows) both decides
+  the ladder and fetches a small vocabulary: at or below the limit the
+  whole ladder below runs on the driver in plain Python
+  (``resolve_strings_locally``) and nothing is cached — a few thousand
+  rows do not justify the distributed ladder's ~20 Spark jobs and three
+  Python crossings.  The driver ladder counts its blocked pairs before
+  scoring them and hands a vocabulary over ``DRIVER_PAIR_LIMIT`` (hot
+  name tokens just under the block cap) to the distributed ladder, as it
+  does a vocabulary over the string limit; that ladder runs rule for
+  rule.
 * L1 exact linking is a **broadcast hash lookup** against the gazetteer
   dimension (the map-side half of a broadcast hash join,
   entity_resolver.py:26-43), fused into the same batched Arrow pass as
@@ -62,29 +63,34 @@ RESOLUTION_COLUMNS = [c.split()[0] for c in RESOLUTION_SCHEMA.split(", ")]
 
 def _distinct_linkable_strings(mentions: DataFrame, triples: DataFrame) -> DataFrame:
     """Distinct (text, entity_type) across mention spans and triple
-    endpoints (inferred-book endpoints only exist in triples)."""
-    linkable = list(LINKABLE_TYPES)
-    from_mentions = mentions.select("text", "entity_type").where(
-        F.col("entity_type").isin(linkable)
+    endpoints (inferred-book endpoints only exist in triples).
+
+    Two branches, one per fact table: the mention spans, and both
+    endpoints of each triple through one ``explode(array(struct,
+    struct))``, so each table is read once.  Over the cached extraction
+    every read is its own Spark job at the first action, so this costs
+    two cache reads where three union branches (mentions, subjects,
+    objects) cost three."""
+    endpoints = triples.select(F.explode(F.array(
+        F.struct(F.col("subj_text").alias("text"), F.col("subj_type").alias("entity_type")),
+        F.struct(F.col("obj_text").alias("text"), F.col("obj_type").alias("entity_type")),
+    )).alias("endpoint")).select("endpoint.*")
+    return (
+        mentions.select("text", "entity_type").unionByName(endpoints)
+        .where(F.col("entity_type").isin(list(LINKABLE_TYPES)))
+        .distinct()
     )
-    subj = triples.select(
-        F.col("subj_text").alias("text"), F.col("subj_type").alias("entity_type")
-    ).where(F.col("subj_type").isin(linkable))
-    obj = triples.select(
-        F.col("obj_text").alias("text"), F.col("obj_type").alias("entity_type")
-    ).where(F.col("obj_type").isin(linkable))
-    return from_mentions.union(subj).union(obj).distinct()
 
 
-# NOTE (round 6): a single-scan variant of _distinct_linkable_strings
-# (mentions + both triple endpoints concatenated array-side with
-# higher-order filter/transform lambdas before one explode) was tried
-# and REJECTED by measurement: the nested-lambda struct-building
-# expressions run interpreted, not codegen'd — 1335 CPU-s vs 137 CPU-s
-# for the three codegen'd explode scans of the same cached table at the
-# bench workload.  Three cheap cache scans beat one expensive one.
-
-
+# NOTE (round 6): a single-scan variant (mentions + both triple endpoints
+# concatenated array-side with higher-order filter/transform lambdas
+# before one explode) was REJECTED by measurement: the nested-lambda
+# struct-building expressions run interpreted, not codegen'd — 1335 CPU-s
+# vs 137 CPU-s for three codegen'd explode scans of the same cached table
+# at the bench workload.  A lambda-free single scan needs the extraction's
+# array columns, which callers passing flat mention and triple tables
+# (tests, perfbench/layers.py) do not have, so the derivation keeps one
+# codegen'd branch per fact table instead.
 
 
 # blocks (shared tokens) larger than this are dropped from candidate
@@ -230,20 +236,40 @@ def build_resolution_table(
     spark: SparkSession,
     mentions: DataFrame,
     triples: DataFrame,
-    gazetteer_df: DataFrame,
+    gazetteer_df: DataFrame | None,
     gazetteer_bc: Broadcast,
     persisted: list | None = None,
 ) -> DataFrame:
     """Distinct (text, entity_type) -> (canonical_name, confidence,
-    match_type) via the exact -> fuzzy -> new ladder.
+    match_type) via the exact -> fuzzy -> new ladder: the table of
+    :func:`resolve_vocabulary`, without the driver-side rows.
 
-    The distinct strings are counted first.  Up to
-    ``DRIVER_LADDER_LIMIT`` of them are collected and the whole ladder
-    runs on the driver (:func:`resolve_strings_locally`): the table comes
-    back as one Arrow-built frame, so a small vocabulary pays one count
-    and one collect instead of the distributed ladder's ~20 jobs and
-    three Python crossings.  The driver ladder's cost is its blocked
-    pairs, so it also stops, before scoring any, when they exceed
+    ``gazetteer_df`` is unused — every rung reads the broadcast
+    ``gazetteer_bc`` — and stays in the signature for existing callers.
+    """
+    return resolve_vocabulary(spark, mentions, triples, gazetteer_bc, persisted)[0]
+
+
+def resolve_vocabulary(
+    spark: SparkSession,
+    mentions: DataFrame,
+    triples: DataFrame,
+    gazetteer_bc: Broadcast,
+    persisted: list | None = None,
+) -> tuple[DataFrame, list[tuple] | None]:
+    """The resolution table, and its ``RESOLUTION_COLUMNS`` rows when the
+    ladder ran on the driver (``None`` when it ran distributed).
+
+    One bounded collect of ``DRIVER_LADDER_LIMIT`` + 1 distinct strings
+    both decides the ladder and fetches the vocabulary: at or below the
+    limit the whole ladder runs on the driver
+    (:func:`resolve_strings_locally`) over those rows, nothing is cached,
+    and the table is one Arrow-built frame of the driver's rows, so a
+    small vocabulary crosses the barrier in one Spark action instead of
+    the distributed ladder's ~20 jobs and three Python crossings.  A
+    caller holding the rows (the pipeline's fused pass) need not read
+    the frame back.  The driver ladder's cost is its blocked pairs, so it
+    also stops, before scoring any, when they exceed
     ``DRIVER_PAIR_LIMIT``.  One INFO line records both counts and the
     ladder that ran.
 
@@ -254,22 +280,23 @@ def build_resolution_table(
     map-side half of a broadcast hash join; fuzzy = the reference's
     SequenceMatcher scoring, entity_resolver.py:26-100).  Only the "new"
     remainder needs corpus-joint work (blocking + connected components).
-    ``gazetteer_df`` is kept in the signature for callers that want the
-    dimension relationally (tests, ad-hoc joins).  ``persisted`` (when
-    given) collects the cached ladder table so long-running callers —
-    the streaming foreachBatch loop relies on
+    ``persisted`` (when given) collects the cached ladder table so
+    long-running callers — the streaming foreachBatch loop relies on
     ``GraphBuildResult.unpersist()`` — can release it per build.
     """
-    # cached, so the count computes the distinct strings once and the
-    # collect (or the distributed ladder) reads them back
-    strings = _distinct_linkable_strings(mentions, triples).persist()
-    n_strings = strings.count()
+    strings = _distinct_linkable_strings(mentions, triples)
+    head = strings.limit(DRIVER_LADDER_LIMIT + 1).collect()
+    n_strings = len(head)
     rows = n_pairs = None
     if n_strings <= DRIVER_LADDER_LIMIT:
         rows, n_pairs = resolve_strings_locally(
-            ((r["text"], r["entity_type"]) for r in strings.collect()),
-            gazetteer_bc.value,
+            ((r["text"], r["entity_type"]) for r in head), gazetteer_bc.value
         )
+    else:
+        # cached, so the count (for the INFO line) computes the distinct
+        # strings once and the distributed ladder reads them back
+        strings = strings.persist()
+        n_strings = strings.count()
     log.info(
         "resolution ladder: %d distinct linkable strings (driver limit %d), "
         "%s blocked pairs (driver limit %d) -> %s",
@@ -278,11 +305,10 @@ def build_resolution_table(
         "distributed" if rows is None else "driver",
     )
     if rows is not None:
-        strings.unpersist()
         # one local Arrow batch in one partition, as components'
         # _local_components builds its mapping
         frame = pd.DataFrame(rows, columns=RESOLUTION_COLUMNS)
-        return spark.createDataFrame(frame, schema=RESOLUTION_SCHEMA).coalesce(1)
+        return spark.createDataFrame(frame, schema=RESOLUTION_SCHEMA).coalesce(1), rows
 
     scored = score_strings_ladder(strings, gazetteer_bc).persist()
     if persisted is not None:
@@ -295,7 +321,7 @@ def build_resolution_table(
     # the clustering's blocking and components jobs read every partition
     # of `scored`, so it is cached and the strings are no longer read
     strings.unpersist()
-    return resolution_from_scored(scored, new_canon)
+    return resolution_from_scored(scored, new_canon), None
 
 
 def resolve_strings_locally(

@@ -7,8 +7,9 @@ Spark lifecycle (all stages DataFrame-native, SURVEY.md §3):
          one narrow mapInPandas)                      [no shuffle]
       -> mentions / triples (narrow explodes)         [no shuffle]
       -> resolution over DISTINCT strings (exact lookup, fuzzy,
-         blocked pair scoring, CC canonicalization): one count, then
-         on the driver for a small vocabulary         [one small shuffle]
+         blocked pair scoring, CC canonicalization): one bounded
+         collect, then on the driver for a small
+         vocabulary, whose rows feed the fused pass  [one small shuffle]
          or distributed above DRIVER_LADDER_LIMIT
          strings or DRIVER_PAIR_LIMIT blocked pairs   [small shuffles]
       -> graph materialize, one of two strategies:
@@ -18,7 +19,8 @@ Spark lifecycle (all stages DataFrame-native, SURVEY.md §3):
          * global: nodes/edges groupBy MERGE-semantics aggs [keyed shuffle]
 
 The strategy depends only on whether turns are unique and on the
-resolution count against ``FUSED_VOCAB_LIMIT``.  With a ``work_dir`` each
+resolution's size against ``FUSED_VOCAB_LIMIT`` (the driver ladder's row
+count, else a count of the resolution table).  With a ``work_dir`` each
 stage materializes to parquet with a lineage manifest and is resumable;
 the annotate stage stages the lean extraction (one row per turn, so the
 fused pass stays exact after the round trip), bucketed by conv_id hash,
@@ -31,7 +33,8 @@ import hashlib
 import json
 import shutil
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+from functools import cached_property, partial
 from pathlib import Path
 from typing import Callable, Optional
 
@@ -50,12 +53,15 @@ from islamic_ner_spark.operators.graph import (
 # above this many distinct (text, type) strings the resolution no longer
 # broadcasts comfortably as a Python dict; fall back to the global
 # groupBy materialize (build_nodes / build_edges).  The strategy is decided
-# from a count() of the persisted (or staged) resolution table — the rows
-# are only ever collected to the driver after the count says they fit.
+# from the driver ladder's rows when it ran, else from a count() of the
+# persisted (or staged) resolution table — those rows are only ever
+# collected to the driver after the count says they fit.
 FUSED_VOCAB_LIMIT = 500_000
 from islamic_ner_spark.operators.linking import (
+    RESOLUTION_COLUMNS,
     build_resolution_table,
     resolve_triples,
+    resolve_vocabulary,
 )
 from islamic_ner_spark.operators.ner import annotate_transcripts
 from islamic_ner_spark.operators.relations import extract_mentions, extract_triples
@@ -67,16 +73,31 @@ DEFAULT_GAZETTEER_DIR = str(Path(__file__).resolve().parents[1] / "data" / "gaze
 
 @dataclass
 class GraphBuildResult:
-    annotated: DataFrame
+    """A build's tables.  The build reads only the extraction, the fact
+    tables and the resolution; ``annotated``, ``resolved_triples`` and
+    ``resolved_mentions`` are views for callers, planned on first
+    access."""
+
     mentions: DataFrame
     triples: DataFrame
     resolution: DataFrame
-    resolved_triples: DataFrame
-    resolved_mentions: DataFrame
     nodes: DataFrame
     edges: DataFrame
-    persisted: list = None  # cached intermediates, released via unpersist()
-    extracted: DataFrame = None  # cached (conv, turn, doc, mentions, triples)
+    extracted: DataFrame  # (conv, turn, doc, mentions, triples): cached, or staged
+    annotate: Callable[[], DataFrame]  # plans the ``annotated`` view
+    persisted: list = field(default_factory=list)  # released via unpersist()
+
+    @cached_property
+    def annotated(self) -> DataFrame:
+        return self.annotate()
+
+    @cached_property
+    def resolved_triples(self) -> DataFrame:
+        return resolve_triples(self.triples, self.resolution)
+
+    @cached_property
+    def resolved_mentions(self) -> DataFrame:
+        return resolve_mentions_table(self.mentions, self.resolution)
 
     def stats(self) -> dict:
         return graph_stats(self.nodes, self.edges)
@@ -84,11 +105,11 @@ class GraphBuildResult:
     def metrics(self) -> dict:
         """Per-stage row counts — the in-memory counterpart of the
         ``work_dir`` path's ``_manifest.json`` lineage records (computed
-        on demand from the cached intermediates, so the counts cost
-        cache scans, not recomputation)."""
-        turns_df = self.extracted if self.extracted is not None else self.annotated
+        on demand from the cached extraction and graph tables; the
+        resolution is cached only when its ladder ran distributed, and
+        otherwise is a local frame of the driver ladder's rows)."""
         return {
-            "turns": turns_df.count(),
+            "turns": self.extracted.count(),
             "mentions": self.mentions.count(),
             "triples": self.triples.count(),
             "resolution_strings": self.resolution.count(),
@@ -267,9 +288,11 @@ def build_graph_from_labels(
             "conv_id", F.col("turn_idx").cast("int").alias("turn_idx"), "tokens", "labels"
         )
     ).persist()
+    gazetteer_bc = spark.sparkContext.broadcast(
+        gazetteer or Gazetteer.from_dir(gazetteer_dir)
+    )
     result = _build_from_annotated(
-        spark, annotated, gazetteer or Gazetteer.from_dir(gazetteer_dir), work_dir=None,
-        fingerprint="labels",
+        spark, annotated, lambda: annotated, gazetteer_bc,
         # arbitrary labeled input may repeat (conv_id, turn_idx) rows, so
         # turn uniqueness is not guaranteed -> global groupBy merges
         unique_turns=False,
@@ -290,11 +313,13 @@ def build_graph(
 ) -> GraphBuildResult:
     """Run the full KG-construction dataflow.
 
-    Without ``work_dir`` the plan stays lazy (the extraction, resolution
-    and fused graph pass are persisted since several children consume
-    them).  With ``work_dir`` every stage materializes to parquet +
-    manifest and re-runs resume from completed work; ``annotated`` is then
-    the staged lean extraction.
+    Without ``work_dir`` the extraction and the fused graph pass are
+    persisted since several children consume them; the resolution is
+    persisted only when its ladder ran distributed (the driver ladder's
+    rows feed the fused pass directly).  With ``work_dir`` every stage
+    materializes to parquet + manifest and re-runs resume from completed
+    work; ``annotated`` is then the staged lean extraction, and only this
+    path computes the input fingerprint that keys the staged tables.
 
     Input contract: ``transcripts`` has at most one row per
     (conv_id, turn_idx) — the transcripts table's natural key per
@@ -303,12 +328,43 @@ def build_graph(
     """
     gazetteer = gazetteer or Gazetteer.from_dir(gazetteer_dir)
     gazetteer_bc = spark.sparkContext.broadcast(gazetteer)
-    # input_token folds the input identity (path, row caps) into stage
-    # fingerprints so a work_dir is never silently reused across inputs.
-    # Even without a token, a cheap intrinsic identity — schema + the
-    # source file listing (stable across job restarts, unlike plan/expr
-    # ids) — is folded in, so pointing an old work_dir at new parquet
-    # invalidates the staged tables instead of silently resuming them.
+
+    if work_dir:
+        fingerprint = _input_fingerprint(transcripts, gazetteer, gazetteer_dir, input_token)
+        extracted = _annotate_resumable(
+            spark, transcripts, gazetteer_bc, work_dir, fingerprint, n_buckets
+        )
+        result = _build_from_annotated(
+            spark, extracted, lambda: extracted, gazetteer_bc,
+            work_dir=work_dir, fingerprint=fingerprint,
+        )
+    else:
+        # Only the extraction outputs feed the KG stages; tokens/labels/
+        # norm_text are the bulk of the row, so the build materializes a
+        # LEAN annotate pass (same memoized kernel, 5-column output —
+        # the Arrow boundary never serializes the dropped columns, and
+        # the input projection prunes role/tool/ts from the scan).  The
+        # full annotated view is planned on access (for audits/stats).
+        extracted = annotate_transcripts(
+            transcripts, gazetteer_bc, extraction_only=True
+        ).persist()
+        result = _build_from_annotated(
+            spark, extracted, partial(annotate_transcripts, transcripts, gazetteer_bc),
+            gazetteer_bc,
+        )
+        result.persisted.append(extracted)
+    return result
+
+
+def _input_fingerprint(
+    transcripts: DataFrame, gazetteer: Gazetteer, gazetteer_dir: str, input_token: str
+) -> str:
+    """The staged tables' key: ``input_token`` folds the input identity
+    (path, row caps) in so a work_dir is never silently reused across
+    inputs.  Even without a token, a cheap intrinsic identity — schema +
+    the source file listing (stable across job restarts, unlike plan/expr
+    ids) — is folded in, so pointing an old work_dir at new parquet
+    invalidates the staged tables instead of silently resuming them."""
     input_identity = transcripts.schema.simpleString()
     try:
         source_files = sorted(transcripts.inputFiles())
@@ -317,35 +373,10 @@ def build_graph(
     # "v3": the annotate stage stages the lean extraction — the version
     # bump invalidates work_dirs staged by older code so a resume never
     # appends lean buckets to a table of full-schema ones.
-    fingerprint = _fingerprint(
+    return _fingerprint(
         "v3", gazetteer_dir, sorted(gazetteer.lookup)[:50], input_token,
         input_identity, hashlib.sha256("\n".join(source_files).encode()).hexdigest(),
     )
-
-    if work_dir:
-        annotated = extracted = _annotate_resumable(
-            spark, transcripts, gazetteer_bc, work_dir, fingerprint, n_buckets
-        )
-    else:
-        annotated = annotate_transcripts(transcripts, gazetteer_bc)
-        # Only the extraction outputs feed the KG stages; tokens/labels/
-        # norm_text are the bulk of the row, so the build materializes a
-        # LEAN annotate pass (same memoized kernel, 5-column output —
-        # the Arrow boundary never serializes the dropped columns, and
-        # the input projection prunes role/tool/ts from the scan).  The
-        # full annotated view stays lazy (recomputed on demand for
-        # audits/stats).
-        extracted = annotate_transcripts(
-            transcripts, gazetteer_bc, extraction_only=True
-        ).persist()
-
-    result = _build_from_annotated(
-        spark, annotated, gazetteer, work_dir=work_dir, fingerprint=fingerprint,
-        gazetteer_bc=gazetteer_bc, extracted=extracted,
-    )
-    if not work_dir:
-        result.persisted.append(extracted)
-    return result
 
 
 def _stage(
@@ -372,25 +403,33 @@ def _stage(
 def _materialize_graph(
     spark: SparkSession,
     extracted: DataFrame,
+    mentions: DataFrame,
+    triples: DataFrame,
     resolution: DataFrame,
-    resolved_mentions: DataFrame,
-    resolved_triples: DataFrame,
+    resolution_rows: Optional[list],
     unique_turns: bool,
 ) -> tuple[DataFrame, DataFrame, list]:
     """(nodes, edges, cached): the MERGE as the fused pass or the global
-    groupBy.  ``cached`` lists what this call persisted."""
-    # The fused pass needs the resolution as a driver-side dict, so the
-    # strategy is chosen from a COUNT of the resolution (a few bytes to
-    # the driver); the rows themselves are only collected once the count
-    # says they fit — no multi-GB speculative collect at extreme vocab.
-    if unique_turns and resolution.count() <= FUSED_VOCAB_LIMIT:
+    groupBy.  ``resolution_rows`` are the driver ladder's rows of
+    ``resolution`` (``None`` when it ran distributed or was staged).
+    ``cached`` lists what this call persisted."""
+    # The fused pass needs the resolution as a driver-side dict.  The
+    # driver ladder's rows are already here; otherwise the strategy is
+    # chosen from a COUNT of the resolution (a few bytes to the driver)
+    # and the rows are only collected once the count says they fit — no
+    # multi-GB speculative collect at extreme vocab.
+    if unique_turns and (
+        len(resolution_rows) if resolution_rows is not None else resolution.count()
+    ) <= FUSED_VOCAB_LIMIT:
+        if resolution_rows is None:
+            resolution_rows = resolution.select(*RESOLUTION_COLUMNS).collect()
         # one Arrow pass over the extraction computes merged edges and
         # per-batch pre-aggregated vocabulary node candidates; Hadith
         # nodes are a narrow projection of the extraction — no joins, no
         # big shuffles (operators/graph.fused_graph_outputs)
         res_bc = spark.sparkContext.broadcast({
-            (r["text"], r["entity_type"]): (r["canonical_name"], r["confidence"])
-            for r in resolution.collect()
+            (text, entity_type): (canonical_name, confidence)
+            for text, entity_type, _, canonical_name, confidence, _ in resolution_rows
         })
         fused = fused_graph_outputs(extracted, res_bc).persist()
         return nodes_from_combined(fused, extracted), edges_from_combined(fused), [fused]
@@ -398,54 +437,61 @@ def _materialize_graph(
     # merges; only the small aggregates are cached, since they are
     # consumed repeatedly and are cheaper to recompute-from-cache than the
     # full rows are to columnar-compress
+    resolved_triples = resolve_triples(triples, resolution)
     doc_index = extracted.select("conv_id", "turn_idx", "doc_id")
-    nodes = build_nodes(resolved_mentions, doc_index, resolved_triples).persist()
+    nodes = build_nodes(
+        resolve_mentions_table(mentions, resolution), doc_index, resolved_triples
+    ).persist()
     edges = build_edges(resolved_triples).persist()
     return nodes, edges, [nodes, edges]
 
 
 def _build_from_annotated(
     spark: SparkSession,
-    annotated: DataFrame,
-    gazetteer: Gazetteer,
+    extracted: DataFrame,
+    annotate: Callable[[], DataFrame],
+    gazetteer_bc,
     *,
-    work_dir: Optional[str],
-    fingerprint: str,
-    gazetteer_bc=None,
-    extracted: Optional[DataFrame] = None,
+    work_dir: Optional[str] = None,
+    fingerprint: Optional[str] = None,
     unique_turns: bool = True,
 ) -> GraphBuildResult:
-    if gazetteer_bc is None:
-        gazetteer_bc = spark.sparkContext.broadcast(gazetteer)
-    if extracted is None:
-        extracted = annotated
+    """The KG stages over ``extracted`` (conv, turn, doc, mentions,
+    triples); ``annotate`` plans the result's ``annotated`` view.
+    ``fingerprint`` keys the staged tables and is read only with a
+    ``work_dir``."""
     persisted: list = []
-
-    def resolve() -> DataFrame:
-        return build_resolution_table(
-            spark, mentions, triples, gazetteer.to_dataframe(spark), gazetteer_bc,
-            persisted=persisted,
-        )
+    resolution_rows = None
 
     if work_dir:
         mentions = _stage(spark, work_dir, "mentions", fingerprint,
                           lambda: extract_mentions(extracted), ["entity_type"])
         triples = _stage(spark, work_dir, "triples", fingerprint,
                          lambda: extract_triples(extracted), ["pred"])
-        resolution = _stage(spark, work_dir, "resolution", fingerprint, resolve)
+        # the staged table is the resolution's source of truth, so a
+        # resume reads it back instead of rerunning the ladder
+        resolution = _stage(
+            spark, work_dir, "resolution", fingerprint,
+            lambda: build_resolution_table(
+                spark, mentions, triples, None, gazetteer_bc, persisted=persisted
+            ),
+        )
     else:
         # mentions/triples are cheap explodes of the cached `extracted`
         mentions = extract_mentions(extracted)
         triples = extract_triples(extracted)
-        resolution = resolve().persist()
-        persisted.append(resolution)
-
-    resolved_triples = resolve_triples(triples, resolution)
-    resolved_mentions = resolve_mentions_table(mentions, resolution)
+        resolution, resolution_rows = resolve_vocabulary(
+            spark, mentions, triples, gazetteer_bc, persisted=persisted
+        )
+        if resolution_rows is None:
+            # the distributed ladder's table: the strategy count, the
+            # collect or the global joins all read it
+            resolution = resolution.persist()
+            persisted.append(resolution)
 
     def graph() -> tuple[DataFrame, DataFrame, list]:
         return _materialize_graph(
-            spark, extracted, resolution, resolved_mentions, resolved_triples,
+            spark, extracted, mentions, triples, resolution, resolution_rows,
             unique_turns,
         )
 
@@ -466,14 +512,12 @@ def _build_from_annotated(
             df.unpersist()
 
     return GraphBuildResult(
-        annotated=annotated,
         mentions=mentions,
         triples=triples,
         resolution=resolution,
-        resolved_triples=resolved_triples,
-        resolved_mentions=resolved_mentions,
         nodes=nodes,
         edges=edges,
-        persisted=persisted,
         extracted=extracted,
+        annotate=annotate,
+        persisted=persisted,
     )

@@ -354,8 +354,10 @@ def test_driver_ladder_build_matches_distributed(spark, monkeypatch, caplog) -> 
         caplog.clear()
         with caplog.at_level(logging.INFO, logger="islamic_ner_spark"):
             result = build_graph(spark, transcripts)
-            rows = [_rows(result.resolution, res_cols), _rows(result.edges, EDGE_COLS),
-                    _rows(result.nodes, NODE_COLS)]
+            rows = [_rows(result.resolution, res_cols),
+                    _rows(result.edges, result.edges.columns),
+                    _rows(result.nodes, result.nodes.columns)]
+            result.unpersist()
         decisions = [r.getMessage() for r in caplog.records if r.name == linking.log.name]
         warnings = [r.getMessage() for r in caplog.records if r.levelno == logging.WARNING]
         return rows, decisions, warnings
@@ -368,8 +370,54 @@ def test_driver_ladder_build_matches_distributed(spark, monkeypatch, caplog) -> 
     # both dropped the بن block: every name carries it
     assert driver_warnings == distributed_warnings and "'بن'" in driver_warnings[0]
 
+    # the bounded collect's last row decides: a vocabulary of exactly the
+    # limit runs on the driver, one string more runs distributed
+    n_strings = len(on_driver[0])
+    at_limit, at_limit_log, _ = build(n_strings)
+    over_limit, over_limit_log, _ = build(n_strings - 1)
+    assert at_limit == over_limit == on_driver
+    assert at_limit_log[0].startswith(
+        f"resolution ladder: {n_strings} distinct linkable strings (driver limit "
+        f"{n_strings}), ") and at_limit_log[0].endswith("-> driver")
+    assert over_limit_log[0].startswith(
+        f"resolution ladder: {n_strings} distinct linkable strings (driver limit "
+        f"{n_strings - 1}), uncounted ") and over_limit_log[0].endswith("-> distributed")
+
     resolution = on_driver[0]
     assert {r[5] for r in resolution} == {"exact", "fuzzy", "new"}
     canon = {r[0]: r[3] for r in resolution}
     assert canon["زيدون بن حارث"] == canon["زيذون بن حارث"] == "زيدون بن حارت"
     assert canon["محمد بن محمد"] == "محمد بن محمد"
+
+
+# Spark jobs of one in-memory build plus one action over its nodes and
+# edges, on the driver ladder.  The build runs 4: two reads of the cached
+# extraction (one per string-derivation branch), the distinct strings'
+# shuffle and the bounded collect.  The action runs 6: the fused pass and
+# the node/edge aggregations.
+BUILD_JOB_BUDGET = 10
+
+
+def test_in_memory_build_job_budget(spark) -> None:
+    """A small-vocabulary build crosses the resolution barrier in one
+    action and builds no frame it does not read: the job count of a build
+    and one materializing action stays exactly at its budget."""
+    sc = spark.sparkContext
+    # a size no other test builds, so no earlier test's cache is reused
+    transcripts = synthetic_transcripts(spark, 23, turns_per_conv=3)
+    group = "test_in_memory_build_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        result = build_graph(spark, transcripts)
+        counts = (
+            result.edges.agg(F.count(F.lit(1)).alias("n")).select(F.lit("edges").alias("k"), "n")
+            .unionByName(result.nodes.agg(F.count(F.lit(1)).alias("n"))
+                         .select(F.lit("nodes").alias("k"), "n"))
+            .collect()
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    result.unpersist()
+    assert all(r["n"] > 0 for r in counts)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == BUILD_JOB_BUDGET
