@@ -21,23 +21,8 @@ from typing import Iterator, List, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-def word_offsets(text: str, words: List[str]) -> List[Tuple[int, int]]:
-    """Char (start, end) of each word within ``text`` (ner.py:73-91)."""
-    offsets: List[Tuple[int, int]] = []
-    cursor = 0
-    for word in words:
-        while cursor < len(text) and text[cursor].isspace():
-            cursor += 1
-        start = text.find(word, cursor)
-        if start == -1:
-            start = text.find(word)
-        if start == -1:
-            start = cursor
-        end = start + len(word)
-        offsets.append((start, end))
-        cursor = end
-    return offsets
+from islamic_ner_spark.functions.annotate import annotate_raw, repair_bio, word_offsets
+from islamic_ner_spark.functions.normalize import normalize
 
 
 def _build_entity(
@@ -92,11 +77,6 @@ def labels_to_entities(
 def run_ner_text(text: str, gazetteer, *, return_tokens: bool = False) -> dict:
     """One text -> ``NERResponse``-shaped dict (run_ner_pipeline,
     ner.py:289-340, gazetteer fallback path with B=0.75/I=0.7)."""
-    from islamic_ner_spark.functions.annotate import annotate_raw
-    from islamic_ner_spark.functions.normalize import normalize
-
-    from islamic_ner_spark.functions.annotate import repair_bio
-
     normalized = normalize(text or "")
     words, labels = annotate_raw(normalized, gazetteer, is_normalized=True)
     if not words:

@@ -41,6 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from islamic_ner_spark.operators.materialize import materialize
+
 # GPT-2-style pre-tokenizer: letter runs / digit runs / symbol runs.
 # Same pattern the token_stats oracle proved identical between Java
 # regex and DuckDB's RE2.
@@ -153,7 +155,7 @@ def learn_bpe(
     if words is None:
         words = word_frequencies(docs, vocab_cap, pattern)
     syms = initial_symbols(words)
-    syms = syms.localCheckpoint(eager=True)
+    syms = materialize(syms)
     learned: list[tuple[int, str, str, int]] = []
     for step in range(1, n_merges + 1):
         bi = _bigrams(syms)
@@ -170,7 +172,7 @@ def learn_bpe(
         left, right, cnt = top[0]["sym"], top[0]["nxt"], int(top[0]["cnt"])
         learned.append((step, left, right, cnt))
         if step < n_merges:
-            syms = _merge_round(bi, left, right).localCheckpoint(eager=True)
+            syms = materialize(_merge_round(bi, left, right))
     return spark.createDataFrame(
         learned, "step INT, left_sym STRING, right_sym STRING, pair_freq BIGINT"
     )
@@ -189,11 +191,9 @@ def encode_words(
     — never touches corpus-sized data.
     """
     syms = initial_symbols(words.select("word", F.lit(1).alias("freq")))
-    syms = syms.localCheckpoint(eager=True)
+    syms = materialize(syms)
     for left, right in merges:
-        syms = _merge_round(_bigrams(syms), left, right).localCheckpoint(
-            eager=True
-        )
+        syms = materialize(_merge_round(_bigrams(syms), left, right))
     return syms.groupBy("word").agg(F.count(F.lit(1)).cast("long").alias("n_sym"))
 
 
@@ -224,7 +224,7 @@ def encode_corpus(
     every document with at least one pre-token; the ratio is integer
     fixed-point so both engines floor identically.
     """
-    wf_full = (
+    wf_full = materialize(
         docs.select(
             F.explode(
                 F.regexp_extract_all("text", F.lit(pattern), F.lit(0))
@@ -232,7 +232,6 @@ def encode_corpus(
         )
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("freq"))
-        .localCheckpoint(eager=True)
     )
     train_words = wf_full.orderBy(F.desc("freq"), F.asc("word")).limit(vocab_cap)
     merges_df = learn_bpe(docs, n_merges, vocab_cap, pattern, words=train_words)

@@ -7,10 +7,11 @@ a node to its component minimum.  Used for canonicalization of unmatched
 resolver's sequential statefulness (entity_resolver.py:55-68, see
 functions/resolve.py docstring).
 
-Each round is groupBy(min) + join; lineage is cut with localCheckpoint so
-iteration count doesn't blow up the plan.  Node ids are strings; min is
-lexicographic, which makes the chosen canonical deterministic under any
-partitioning.
+Each round is groupBy(min) + join; lineage is cut with
+operators/materialize.py (a reliable checkpoint when the deployment sets
+``spark.checkpoint.dir``) so iteration count doesn't blow up the plan.
+Node ids are strings; min is lexicographic, which makes the chosen
+canonical deterministic under any partitioning.
 """
 
 from __future__ import annotations
@@ -19,6 +20,8 @@ from typing import Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from islamic_ner_spark.operators.materialize import materialize
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -140,11 +143,8 @@ def connected_components(
     # checkpoint anyway to cap lineage) start from the same blocks —
     # upstream (e.g. the fuzzy pair-scoring Arrow pass feeding entity
     # canonicalization) is never evaluated twice
-    current = (
-        edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    current = materialize(
+        edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
     )
 
     n_edges = current.count()
@@ -156,7 +156,7 @@ def connected_components(
     signature = _signature(current)
 
     for _ in range(max_iterations):
-        current = _small_star(_large_star(current)).localCheckpoint(eager=True)
+        current = materialize(_small_star(_large_star(current)))
         new_signature = _signature(current)
         if new_signature == signature:
             break

@@ -595,16 +595,21 @@ def merge_edge_rows(rows: DataFrame) -> DataFrame:
 
 
 def graph_stats(nodes: DataFrame, edges: DataFrame) -> dict:
-    """Counts by node label and edge type + totals (A6, builder.py:244-283)."""
+    """Counts by node label and edge type + totals (A6, builder.py:244-283).
+
+    ``total_triples`` is the number of resolved triples the edges merged,
+    ``sum(merge_count)``: an edge written by k triples counts k times."""
     nodes_by_label = {
         r["label"]: r["count"] for r in nodes.groupBy("label").count().collect()
     }
-    rels_by_type = {
-        r["pred"]: r["count"] for r in edges.groupBy("pred").count().collect()
-    }
+    by_pred = edges.groupBy("pred").agg(
+        F.count(F.lit(1)).alias("count"), F.sum("merge_count").alias("triples")
+    ).collect()
+    rels_by_type = {r["pred"]: r["count"] for r in by_pred}
     return {
         "nodes_by_label": nodes_by_label,
         "relationships_by_type": rels_by_type,
         "total_nodes": int(sum(nodes_by_label.values())),
         "total_relationships": int(sum(rels_by_type.values())),
+        "total_triples": int(sum(r["triples"] for r in by_pred)),
     }

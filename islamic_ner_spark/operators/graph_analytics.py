@@ -37,11 +37,15 @@ Eager jobs: building the plan of :func:`pagerank_integer`,
 :func:`local_clustering`, :func:`label_propagation`,
 :func:`community_modularity`, :func:`kcore`, :func:`random_walks`,
 :func:`skipgram_pairs` and :func:`harmonic_centrality` (and of
-``queries.bfs_distances``) runs eager ``localCheckpoint`` jobs — one
-per reused relation and per iteration, to cap lineage.  Only the two
-PageRank entry points take ``checkpoint=False``, which keeps the whole
-plan lazy for plan capture (``bench.py --plans``,
-``scripts/plan_audit.py``).  :func:`scholar_digraph`,
+``queries.bfs_distances``) runs eager lineage cuts — one per reused
+relation and per iteration — through
+:func:`islamic_ner_spark.operators.materialize.materialize` (reliable
+checkpoints when the deployment sets ``spark.checkpoint.dir``, local
+ones otherwise).  Under ``materialize.plan_capture()`` every kernel's
+plan stays lazy and building it runs no checkpoint job (``bench.py
+--plans``, ``scripts/plan_audit.py``); only the BFS early-stop probe
+and ``bfs_distances``' default-source lookup still run jobs.
+:func:`scholar_digraph`,
 :func:`undirected_adjacency`, :func:`dense_ids`,
 :func:`comention_network`, :func:`comention_lift` and
 :func:`negative_samples` return lazy plans.
@@ -52,6 +56,8 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame, Window, functions as F
+
+from islamic_ner_spark.operators.materialize import materialize
 
 PAGERANK_SCALE = 1_000_000_000
 PAGERANK_ITERS = 5
@@ -94,11 +100,6 @@ def undirected_adjacency(edges: DataFrame) -> DataFrame:
         .union(se.select(F.col("tgt").alias("node"), F.col("src").alias("nbr")))
         .distinct()
     )
-
-
-def _cut(df: DataFrame, checkpoint: bool) -> DataFrame:
-    """``localCheckpoint(eager=True)`` when ``checkpoint``, else ``df``."""
-    return df.localCheckpoint(eager=True) if checkpoint else df
 
 
 def dense_ids(
@@ -152,7 +153,6 @@ def _pagerank(
     edges: DataFrame,
     n_iters: int,
     scale: int,
-    checkpoint: bool,
     teleport: Callable[[DataFrame], DataFrame],
 ) -> DataFrame:
     """The fixed-point PageRank recurrence, shared by
@@ -183,14 +183,14 @@ def _pagerank(
     # set, the degree table, and the joined edge list — without the cut
     # each consumer re-scans the full merged edge table (measured 2-3
     # redundant 10^7-row scans per bench run)
-    se = _cut(scholar_digraph(edges), checkpoint)
+    se = materialize(scholar_digraph(edges))
     # nodes is re-consumed by EVERY iteration's left join; without its
     # own cut each iteration re-runs the union+distinct
-    nodes = _cut(_scholar_nodes(se), checkpoint)
+    nodes = materialize(_scholar_nodes(se))
     out_deg = se.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
     # per-source contribution denominator joined once; re-used every
     # iteration (edge list and degree table are iteration-invariant)
-    edges_d = _cut(se.join(out_deg, "src"), checkpoint)
+    edges_d = materialize(se.join(out_deg, "src"))
     flagged = teleport(nodes)
     base = (15 * scale) // 100
 
@@ -213,10 +213,8 @@ def _pagerank(
             .cast("long")
             .alias("rank"),
         )
-        # cap lineage growth per iteration; the plan-capture path keeps
-        # the plan lazy so the iteration's physical shape stays
-        # inspectable
-        ranks = _cut(ranks, checkpoint)
+        # cap lineage growth per iteration
+        ranks = materialize(ranks)
     return ranks
 
 
@@ -224,7 +222,6 @@ def pagerank_integer(
     edges: DataFrame,
     n_iters: int = PAGERANK_ITERS,
     scale: int = PAGERANK_SCALE,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Fixed-point PageRank over the scholar narration digraph: the
     :func:`_pagerank` recurrence with t(v) = 1 on every node (rank_0 =
@@ -237,7 +234,7 @@ def pagerank_integer(
     def teleport(nodes: DataFrame) -> DataFrame:
         return nodes.withColumn("teleport", F.lit(True))
 
-    ranks = _pagerank(edges, n_iters, scale, checkpoint, teleport)
+    ranks = _pagerank(edges, n_iters, scale, teleport)
     return ranks.select("node", F.col("rank").alias("rank_x1e9"))
 
 
@@ -267,22 +264,17 @@ def _und_deg(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     (orientation join + both degree unions) and without the cut every
     consumer re-runs the corpus->digraph reduction (measured ~6
     redundant full edge scans per triangles() call)."""
-    und = (
+    und = materialize(
         scholar_digraph(edges)
         .select(
             F.least("src", "tgt").alias("u"), F.greatest("src", "tgt").alias("v")
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
     ends = und.select(F.col("u").alias("node")).union(
         und.select(F.col("v").alias("node"))
     )
-    deg = (
-        ends.groupBy("node")
-        .agg(F.count(F.lit(1)).alias("deg"))
-        .localCheckpoint(eager=True)
-    )
+    deg = materialize(ends.groupBy("node").agg(F.count(F.lit(1)).alias("deg")))
     return und, deg
 
 
@@ -293,7 +285,7 @@ def _triangles_from(und: DataFrame, deg: DataFrame) -> DataFrame:
     semi-join a third time."""
     du = deg.select(F.col("node").alias("u"), F.col("deg").alias("du"))
     dv = deg.select(F.col("node").alias("v"), F.col("deg").alias("dv"))
-    oriented = (
+    oriented = materialize(
         und.join(du, "u")
         .join(dv, "v")
         .select(
@@ -306,7 +298,6 @@ def _triangles_from(und: DataFrame, deg: DataFrame) -> DataFrame:
             .alias("e")
         )
         .select("e.a", "e.b")
-        .localCheckpoint(eager=True)
     )
     e1 = oriented.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = oriented.select(F.col("a").alias("y"), F.col("b").alias("z"))
@@ -334,11 +325,11 @@ def label_propagation(edges: DataFrame, n_iters: int = LPA_ITERS) -> DataFrame:
     Scale shape per iteration: one equi-join of the adjacency list
     against the node-sized label table, one partial-agg count keyed on
     (node, label), one node-keyed window min — no collect, nothing
-    corpus-sized; localCheckpoint caps lineage like PageRank/BFS.
+    corpus-sized; a lineage cut per round, like PageRank/BFS.
 
     Returns (node, community).
     """
-    adj = undirected_adjacency(edges).localCheckpoint(eager=True)
+    adj = materialize(undirected_adjacency(edges))
     nodes = adj.select("node").distinct()
     labels = nodes.select("node", F.col("node").alias("community"))
     w = Window.partitionBy("node").orderBy(F.desc("n"), F.asc("community"))
@@ -352,11 +343,10 @@ def label_propagation(edges: DataFrame, n_iters: int = LPA_ITERS) -> DataFrame:
         counted = nbr_labels.groupBy("node", "community").agg(
             F.count(F.lit(1)).alias("n")
         )
-        labels = (
+        labels = materialize(
             counted.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .select("node", "community")
-            .localCheckpoint(eager=True)
         )
     return labels
 
@@ -379,14 +369,13 @@ def kcore(
 
     Returns (node, core_degree) for survivors.
     """
-    adj = undirected_adjacency(edges).localCheckpoint(eager=True)
+    adj = materialize(undirected_adjacency(edges))
     for _ in range(n_iters):
         deg = adj.groupBy("node").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.where(F.col("deg") >= k).select("node")
-        adj = (
+        adj = materialize(
             adj.join(keep, "node", "left_semi")
             .join(keep.select(F.col("node").alias("nbr")), "nbr", "left_semi")
-            .localCheckpoint(eager=True)
         )
     return (
         adj.groupBy("node")
@@ -483,7 +472,7 @@ def random_walks(edges: DataFrame, n_steps: int = WALK_STEPS) -> DataFrame:
 
     Returns (start, walk, walk_len) with walk = '->'-joined keys.
     """
-    se = scholar_digraph(edges).localCheckpoint(eager=True)
+    se = materialize(scholar_digraph(edges))
     walks = _scholar_nodes(se).select(
         F.col("node").alias("start"),
         F.col("node").alias("cur"),
@@ -497,7 +486,7 @@ def random_walks(edges: DataFrame, n_steps: int = WALK_STEPS) -> DataFrame:
             F.md5(F.concat_ws("#", F.col("cur"), F.lit(str(i)), F.col("tgt"))),
         )
         w = Window.partitionBy("start").orderBy(F.asc_nulls_last("hkey"))
-        walks = (
+        walks = materialize(
             scored.withColumn("rn", F.row_number().over(w))
             .where(F.col("rn") == 1)
             .select(
@@ -516,7 +505,6 @@ def random_walks(edges: DataFrame, n_steps: int = WALK_STEPS) -> DataFrame:
                 .cast("long")
                 .alias("walk_len"),
             )
-            .localCheckpoint(eager=True)
         )
     return walks.select("start", "walk", "walk_len")
 
@@ -747,7 +735,6 @@ def personalized_pagerank(
     edges: DataFrame,
     n_iters: int = PAGERANK_ITERS,
     scale: int = PAGERANK_SCALE,
-    checkpoint: bool = True,
     seed: str | None = None,
     seed_agg: str = "min",
 ) -> DataFrame:
@@ -785,7 +772,7 @@ def personalized_pagerank(
             "node", (F.col("node") == F.col("seed")).alias("teleport")
         )
 
-    ranks = _pagerank(edges, n_iters, scale, checkpoint, teleport)
+    ranks = _pagerank(edges, n_iters, scale, teleport)
     return ranks.select("node", F.col("rank").alias("ppr_x1e9"))
 
 
@@ -877,30 +864,31 @@ def multi_origin_bfs(
     Each hop joins the frontier to ``adj`` on ``node``, dedups the
     (origin, node) pairs and anti-joins everything the origin already
     reached — BFS reaches a node first at its minimal distance — then
-    localCheckpoints to cap lineage growth; the loop stops early once a
+    cuts lineage (:func:`materialize`); the loop stops early once a
     hop reaches nothing new.  Output size is the sum over origins of
     their ``max_hops``-ball, never all-pairs.
 
     Returns (origin, node, dist int), the origin itself at dist 0.
     """
-    reached = origins.select(
-        F.col("node").alias("origin"),
-        "node",
-        F.lit(0).cast("int").alias("dist"),
-    ).localCheckpoint(eager=True)
+    reached = materialize(
+        origins.select(
+            F.col("node").alias("origin"),
+            "node",
+            F.lit(0).cast("int").alias("dist"),
+        )
+    )
     frontier = reached
     for depth in range(1, max_hops + 1):
-        nxt = (
+        nxt = materialize(
             frontier.join(adj, "node")
             .select("origin", F.col("nbr").alias("node"))
             .distinct()
             .join(reached.select("origin", "node"), ["origin", "node"], "left_anti")
             .withColumn("dist", F.lit(depth))
-            .localCheckpoint(eager=True)
         )
         if nxt.isEmpty():
             break
-        reached = reached.union(nxt).localCheckpoint(eager=True)
+        reached = materialize(reached.union(nxt))
         frontier = nxt
     return reached
 
@@ -942,7 +930,7 @@ def harmonic_centrality(
     origin; origins reaching nothing (isolated after self-loop removal
     cannot occur here, but kept for safety) report zeros.
     """
-    adj = undirected_adjacency(edges).localCheckpoint(eager=True)
+    adj = materialize(undirected_adjacency(edges))
     origins = adj.select("node").distinct()
     if origin_mod and origin_mod > 1:
         origins = origins.where(

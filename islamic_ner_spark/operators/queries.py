@@ -18,6 +18,7 @@ from islamic_ner_spark.operators.graph_analytics import (
     multi_origin_bfs,
     undirected_adjacency,
 )
+from islamic_ner_spark.operators.materialize import materialize
 
 
 def find_scholar(nodes: DataFrame, name: str) -> Dict[str, str]:
@@ -153,13 +154,13 @@ def shortest_path(
     Iterative frontier-expansion joins over an adjacency checkpointed
     once (so no level re-derives it from the edge table); the frontier
     carries the path as an array column, visited nodes are anti-joined
-    out, and each level is localCheckpoint-ed to cap lineage.  Ties
+    out, and each level's lineage is cut (operators/materialize.py).  Ties
     resolve to the lexicographically smallest path for determinism.
     """
     if scholar1 == scholar2:
         return [scholar1]
 
-    adj = undirected_adjacency(edges).localCheckpoint(eager=True)
+    adj = materialize(undirected_adjacency(edges))
     spark = edges.sparkSession
     frontier = spark.createDataFrame(
         [(scholar1, [scholar1])], "node string, path array<string>"
@@ -177,13 +178,13 @@ def shortest_path(
         )
         # one best (shortest tie-broken) path per node this level
         expanded = expanded.groupBy("node").agg(F.min("path").alias("path"))
-        expanded = expanded.localCheckpoint(eager=True)
+        expanded = materialize(expanded)
         hits = expanded.where(F.col("node") == scholar2).select("path").collect()
         if hits:
             return list(min(r["path"] for r in hits))
         if expanded.isEmpty():
             return []
-        visited = visited.union(expanded.select("node")).distinct().localCheckpoint(eager=True)
+        visited = materialize(visited.union(expanded.select("node")).distinct())
         frontier = expanded
     return []
 
@@ -207,7 +208,7 @@ def bfs_distances(
 
     Returns (node string, dist int).
     """
-    adj = undirected_adjacency(edges).localCheckpoint(eager=True)
+    adj = materialize(undirected_adjacency(edges))
     spark = edges.sparkSession
     if source is None:
         source = adj.agg(F.min("node").alias("s")).collect()[0]["s"]  # 1 row

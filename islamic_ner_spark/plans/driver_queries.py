@@ -1992,7 +1992,7 @@ ORACLE_SQL["vocab_coverage"] = """
 # CTEs (and each other) several times per unrolled step; left to
 # DuckDB's default inlining, a 3-reference chain over 8 steps expands
 # 3^8-fold and never finishes.  Materializing pins each step to one
-# evaluation, which is also what the Spark side does (localCheckpoint).
+# evaluation, which is also what the Spark side does (its lineage cuts).
 _SCHOLAR_GRAPH_SQL = """
     se AS MATERIALIZED (
         SELECT DISTINCT src_key AS src, tgt_key AS tgt FROM edges_all

@@ -23,6 +23,7 @@ concepts.txt, places.txt.
 from __future__ import annotations
 
 import re
+import zipfile
 from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Dict, Iterable, List, Optional, Sequence, Tuple
@@ -38,6 +39,18 @@ GAZETTEER_FILES: Tuple[Tuple[str, str], ...] = (
     ("concepts.txt", "CONCEPT"),
     ("places.txt", "PLACE"),
 )
+
+
+def _in_archive(base: Path):
+    """``base``, or the same directory inside the zip archive on its
+    path — the package shipped with ``spark-submit --py-files pkg.zip``
+    puts its data files there, where ``Path`` cannot read them."""
+    if not base.is_dir():
+        for archive in base.parents:
+            if archive.is_file() and zipfile.is_zipfile(archive):
+                return zipfile.Path(archive, base.relative_to(archive).as_posix() + "/")
+    return base
+
 
 _WORD_RE = re.compile(r"\w")  # same \w semantics as the reference's regex
 _TASHKEEL_RE = re.compile(TASHKEEL_PATTERN)
@@ -135,7 +148,7 @@ class Gazetteer:
 
     @classmethod
     def from_dir(cls, gazetteer_dir: str | Path) -> "Gazetteer":
-        base = Path(gazetteer_dir)
+        base = _in_archive(Path(gazetteer_dir))
         typed: List[Tuple[str, Sequence[str]]] = []
         for file_name, entity_type in GAZETTEER_FILES:
             path = base / file_name

@@ -22,6 +22,13 @@ re-runs the corpus-joint new-entity canonicalization over the graph's
 accumulated variant vocabulary and atomically replaces the bucketed
 tables — after it, the streamed graph equals a one-shot batch rebuild
 (streaming/stream_pipeline.compact_graph_stream).
+
+``--conf spark.checkpoint.dir=DIR`` makes the engine's lineage cuts
+(the components rounds of the compaction's re-canonicalization among
+them) reliable checkpoints that survive a lost executor
+(operators/materialize.py); Spark deletes those files only when
+``spark.cleaner.referenceTracking.cleanCheckpoints`` is set.  This is
+separate from ``--checkpoint``, the stream's own offset/state dir.
 """
 
 from __future__ import annotations

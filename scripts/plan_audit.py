@@ -471,9 +471,11 @@ def main() -> int:
         pagerank_integer,
         personalized_pagerank,
     )
+    from islamic_ner_spark.operators.materialize import plan_capture
 
     staged_edges = dq._staged_edges(spark, sf_dir)
-    plan = plan_of(pagerank_integer(staged_edges, n_iters=1, checkpoint=False))
+    with plan_capture():
+        plan = plan_of(pagerank_integer(staged_edges, n_iters=1))
     check(
         "pagerank: no seed join, keyed contribution agg",
         "BroadcastNestedLoopJoin" not in plan
@@ -519,7 +521,8 @@ def main() -> int:
             "winning writer",
         )
 
-    plan = plan_of(personalized_pagerank(staged_edges, n_iters=1, checkpoint=False))
+    with plan_capture():
+        plan = plan_of(personalized_pagerank(staged_edges, n_iters=1))
     check(
         "ppr: broadcast seed + keyed contribution agg",
         "BroadcastNestedLoopJoin" in plan

@@ -9,6 +9,7 @@ the driver harness, but independent of any SQL engine).
 from __future__ import annotations
 
 import random
+from contextlib import nullcontext
 
 from pyspark.sql import functions as F
 
@@ -18,6 +19,7 @@ from islamic_ner_spark.operators.graph_analytics import (
     pagerank_integer,
     triangles,
 )
+from islamic_ner_spark.operators.materialize import plan_capture
 
 EDGE_SCHEMA = (
     "pred string, src_label string, src_key string, "
@@ -79,15 +81,12 @@ def test_pagerank_matches_python_replay_random_graph(spark) -> None:
         }
     )
     pairs = [(s, t) for s, t in pairs if s != t]
-    # checkpoint=False is the lazy plan-capture path: same results
-    for checkpoint in (True, False):
-        got = {
-            r["node"]: r["rank_x1e9"]
-            for r in pagerank_integer(
-                _edges(spark, pairs), checkpoint=checkpoint
-            ).collect()
-        }
-        assert got == _python_pagerank(pairs), checkpoint
+    # a plan built under plan capture is lazy: same results
+    for capture in (False, True):
+        with plan_capture() if capture else nullcontext():
+            ranks = pagerank_integer(_edges(spark, pairs))
+        got = {r["node"]: r["rank_x1e9"] for r in ranks.collect()}
+        assert got == _python_pagerank(pairs), capture
 
 
 def test_pagerank_duplicate_and_reversed_edges_distinct(spark) -> None:
@@ -504,14 +503,11 @@ def test_ppr_matches_python_replay_random_graph(spark) -> None:
             if a != b
         }
     )
-    for checkpoint in (True, False):
-        got = {
-            r["node"]: r["ppr_x1e9"]
-            for r in personalized_pagerank(
-                _edges(spark, pairs), checkpoint=checkpoint
-            ).collect()
-        }
-        assert got == _python_ppr(pairs), checkpoint
+    for capture in (False, True):
+        with plan_capture() if capture else nullcontext():
+            ranks = personalized_pagerank(_edges(spark, pairs))
+        got = {r["node"]: r["ppr_x1e9"] for r in ranks.collect()}
+        assert got == _python_ppr(pairs), capture
 
 
 from islamic_ner_spark.operators.graph_analytics import negative_samples

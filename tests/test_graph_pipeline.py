@@ -45,7 +45,10 @@ def test_reprocessing_same_doc_is_idempotent(spark, resolver_gazetteer) -> None:
         [("h-dup", 0, tokens, labels), ("h-dup", 0, tokens, labels)],
         resolver_gazetteer,
     )
-    assert once.stats() == twice.stats()
+    once_stats, twice_stats = once.stats(), twice.stats()
+    # every triple is written twice into the same graph
+    assert twice_stats.pop("total_triples") == 2 * once_stats.pop("total_triples")
+    assert once_stats == twice_stats
     # a repeated turn takes the global groupBy: every column of every row
     # equals the one-turn build's, except the writer counts, which double
     def rows(df, key):
@@ -107,6 +110,19 @@ def test_stats_counts_exact(spark, resolver_gazetteer) -> None:
     assert stats["nodes_by_label"].get("Hadith", 0) == 1
     assert stats["total_nodes"] == sum(stats["nodes_by_label"].values())
     assert stats["total_relationships"] == sum(stats["relationships_by_type"].values())
+    assert stats["total_triples"] == stats["total_relationships"]
+
+
+def test_stats_triples_sum_merge_count(spark, resolver_gazetteer) -> None:
+    """``total_triples`` counts the resolved triples the edges merged,
+    not the edges: a turn written twice merges two triples per edge."""
+    row = ("h-stats", 0, H_STATS_TOKENS, H_STATS_LABELS)
+    result = _build(spark, [row, row], resolver_gazetteer)
+    stats = graph_stats(result.nodes, result.edges)
+    merge_counts = [r["merge_count"] for r in result.edges.collect()]
+    assert merge_counts and set(merge_counts) == {2}
+    assert stats["total_relationships"] == len(merge_counts)
+    assert stats["total_triples"] == sum(merge_counts) == 2 * len(merge_counts)
 
 
 def test_edge_merge_confidence_and_evidence(spark, resolver_gazetteer) -> None:

@@ -68,6 +68,17 @@ def test_spark_submit_py_files_build_and_resume(spark, tmp_path):
     assert stats1["triples"] > 0
     assert stats1["edges"] > 0 and stats1["nodes"] > 0
 
+    # the job's triples are the resolved triples the edges merged, as an
+    # in-memory build of the same input counts them
+    from pyspark.sql import functions as F
+
+    from islamic_ner_spark.plans.pipeline import build_graph
+
+    result = build_graph(spark, spark.read.parquet(input_dir))
+    in_memory = result.edges.agg(F.sum("merge_count")).collect()[0][0]
+    result.unpersist()
+    assert stats1["triples"] == in_memory
+
     edges_manifest = next(out_dir.rglob("_manifest.json"), None)
     assert edges_manifest is not None, "staged tables must carry lineage manifests"
 
