@@ -43,6 +43,8 @@ import logging
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from islamic_ner_spark.operators.materialize import cache
+
 log = logging.getLogger("islamic_ner_spark.capping")
 
 # a band bucket larger than this is dropped from candidate generation
@@ -51,16 +53,6 @@ log = logging.getLogger("islamic_ner_spark.capping")
 # bucket.  Real near-dup clusters this large are still found through
 # their other (b-1) bands unless ALL their buckets are degenerate.
 MAX_BUCKET_SIZE = 5_000
-
-# Bounded registry for caches nobody tracks (callers that pass no
-# ``persisted`` list, e.g. the driver query catalog): the newest few
-# inputs stay cached so the overflow-report job, the window-cap plan,
-# and the downstream candidate join all reuse ONE kernel run, while the
-# oldest entries are explicitly unpersisted — a loop over the catalog
-# holds at most ``_AUTO_CACHE_LIMIT`` kernels in memory instead of
-# leaking until Spark's LRU notices.
-_AUTO_CACHE_LIMIT = 4
-_auto_cached: list[DataFrame] = []
 
 
 def cap_buckets(
@@ -72,26 +64,17 @@ def cap_buckets(
 ) -> DataFrame:
     """Drop (and log) over-capacity buckets/blocks from ``banded``.
 
-    ``banded`` is always cached — the overflow check, the window-cap
-    plan, and the downstream candidate self-join would otherwise each
-    re-run the (expensive) kernel that produced it.  When ``persisted``
-    (a list) is given the cache is appended to it and the caller owns
-    the ``unpersist()``; otherwise it lands in a bounded module-level
-    registry that unpersists the oldest entries as new ones arrive.
+    With a ``persisted`` owner, ``banded`` is cached into it
+    (operators/materialize.cache), so the overflow check, the window-cap
+    plan and the downstream candidate self-join read one run of the
+    kernel that produced it; the caller releases it.  With no owner
+    nothing is cached and each of them re-reads ``banded`` — the
+    callers that pass none (the staged driver queries and stages) feed
+    it a parquet scan.
     """
     if max_bucket_size is None:
         return banded
-    banded = banded.persist()
-    if persisted is not None:
-        persisted.append(banded)
-    else:
-        _auto_cached.append(banded)
-        while len(_auto_cached) > _AUTO_CACHE_LIMIT:
-            evicted = _auto_cached.pop(0)
-            try:
-                evicted.unpersist()
-            except Exception:  # entry may belong to a stopped SparkContext
-                pass
+    banded = cache(banded, persisted)
 
     bucket_w = Window.partitionBy(*key_cols)
     capped = banded.withColumn(

@@ -32,6 +32,7 @@ from islamic_ner_spark.operators.capping import (
     log_candidate_stats,
 )
 from islamic_ner_spark.operators.components import pair_groups
+from islamic_ner_spark.operators.materialize import cache, owned
 
 _MERSENNE_PRIME = (1 << 61) - 1
 _MAX_HASH = (1 << 32) - 1
@@ -189,27 +190,22 @@ def near_duplicate_groups(
     sigs = minhash_signatures(
         df, id_col, text_col, num_perm=num_perm, shingle_k=shingle_k, seed=seed
     )
-    caches: list = []
-    candidates = lsh_candidate_pairs(
-        sigs, bands=bands, max_bucket_size=max_bucket_size, persisted=caches
-    ).persist()
-    caches.append(candidates)
-    log_candidate_stats(
-        "minhash-near-dup",
-        n_candidates=candidates.count(),
-        corpus_size=df.count(),
-        extra=f"{num_perm // bands} rows x {bands} bands",
-    )
-    verified = verify_jaccard_pairs(
-        candidates, df, id_col, text_col, shingle_k=shingle_k, threshold=threshold
-    )
-    groups = pair_groups(verified)
-    # pair_groups' connected_components materialized the edge set (probe
-    # collect / checkpoint), so the banded-signature cache is no longer
-    # referenced
-    for df_ in caches:
-        df_.unpersist()
-    return groups
+    # pair_groups' connected_components materializes the edge set (probe
+    # collect / checkpoint), so the banded-signature and candidate caches
+    # are no longer referenced after it
+    with owned() as local:
+        candidates = cache(lsh_candidate_pairs(
+            sigs, bands=bands, max_bucket_size=max_bucket_size, persisted=local
+        ), local)
+        log_candidate_stats(
+            "minhash-near-dup",
+            n_candidates=candidates.count(),
+            corpus_size=df.count(),
+            extra=f"{num_perm // bands} rows x {bands} bands",
+        )
+        return pair_groups(verify_jaccard_pairs(
+            candidates, df, id_col, text_col, shingle_k=shingle_k, threshold=threshold
+        ))
 
 
 def jaccard_scores(

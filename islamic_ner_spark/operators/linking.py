@@ -49,6 +49,7 @@ from islamic_ner_spark.operators.components import (
     connected_components,
     min_label_components,
 )
+from islamic_ner_spark.operators.materialize import cache, owned
 
 log = logging.getLogger(__name__)
 
@@ -222,14 +223,10 @@ def _canonicalize_new(spark: SparkSession, new_strings: DataFrame) -> DataFrame:
     components; the lexicographic-min norm_text of each component is the
     canonical.  Identical to the reference for every test fixture."""
     nodes = new_entity_nodes(new_strings.select("text", "entity_type", "norm_text"))
-    caches: list = []
-    edges = new_pair_edges(nodes, persisted=caches)
-    canon = canonicalize_from_pairs(nodes, edges)
-    # canonicalize_from_pairs ran connected_components, which materialized
-    # the edge set — the blocked cache is no longer referenced
-    for df_ in caches:
-        df_.unpersist()
-    return canon
+    # canonicalize_from_pairs runs connected_components, which materializes
+    # the edge set — the blocked cache is no longer referenced after it
+    with owned() as blocked:
+        return canonicalize_from_pairs(nodes, new_pair_edges(nodes, persisted=blocked))
 
 
 def build_resolution_table(
@@ -280,9 +277,10 @@ def resolve_vocabulary(
     map-side half of a broadcast hash join; fuzzy = the reference's
     SequenceMatcher scoring, entity_resolver.py:26-100).  Only the "new"
     remainder needs corpus-joint work (blocking + connected components).
-    ``persisted`` (when given) collects the cached ladder table so
-    long-running callers — the streaming foreachBatch loop relies on
-    ``GraphBuildResult.unpersist()`` — can release it per build.
+    With a ``persisted`` owner the distributed ladder's scored strings
+    are cached into it (operators/materialize.cache), and the caller
+    releases them (``GraphBuildResult.unpersist()``); with none they are
+    not cached.
     """
     strings = _distinct_linkable_strings(mentions, triples)
     head = strings.limit(DRIVER_LADDER_LIMIT + 1).collect()
@@ -292,36 +290,30 @@ def resolve_vocabulary(
         rows, n_pairs = resolve_strings_locally(
             ((r["text"], r["entity_type"]) for r in head), gazetteer_bc.value
         )
-    else:
-        # cached, so the count (for the INFO line) computes the distinct
-        # strings once and the distributed ladder reads them back
-        strings = strings.persist()
-        n_strings = strings.count()
-    log.info(
-        "resolution ladder: %d distinct linkable strings (driver limit %d), "
-        "%s blocked pairs (driver limit %d) -> %s",
-        n_strings, DRIVER_LADDER_LIMIT,
-        "uncounted" if n_pairs is None else n_pairs, DRIVER_PAIR_LIMIT,
-        "distributed" if rows is None else "driver",
-    )
-    if rows is not None:
-        # one local Arrow batch in one partition, as components'
-        # _local_components builds its mapping
-        frame = pd.DataFrame(rows, columns=RESOLUTION_COLUMNS)
-        return spark.createDataFrame(frame, schema=RESOLUTION_SCHEMA).coalesce(1), rows
+    with owned() as local:
+        if rows is None:
+            # cached, so the count (for the INFO line) computes the
+            # distinct strings once and the distributed ladder reads them
+            # back; the clustering's blocking and components jobs below
+            # are the last to read them
+            strings = cache(strings, local)
+            n_strings = strings.count()
+        log.info(
+            "resolution ladder: %d distinct linkable strings (driver limit %d), "
+            "%s blocked pairs (driver limit %d) -> %s",
+            n_strings, DRIVER_LADDER_LIMIT,
+            "uncounted" if n_pairs is None else n_pairs, DRIVER_PAIR_LIMIT,
+            "distributed" if rows is None else "driver",
+        )
+        if rows is not None:
+            # one local Arrow batch in one partition, as components'
+            # _local_components builds its mapping
+            frame = pd.DataFrame(rows, columns=RESOLUTION_COLUMNS)
+            return spark.createDataFrame(frame, schema=RESOLUTION_SCHEMA).coalesce(1), rows
 
-    scored = score_strings_ladder(strings, gazetteer_bc).persist()
-    if persisted is not None:
-        persisted.append(scored)
-
-    new_strings = scored.where(F.col("match_type") == "new").select(
-        "text", "entity_type", "norm_text"
-    )
-    new_canon = _canonicalize_new(spark, new_strings)
-    # the clustering's blocking and components jobs read every partition
-    # of `scored`, so it is cached and the strings are no longer read
-    strings.unpersist()
-    return resolution_from_scored(scored, new_canon), None
+        scored = cache(score_strings_ladder(strings, gazetteer_bc), persisted)
+        new_canon = _canonicalize_new(spark, scored.where(F.col("match_type") == "new"))
+        return resolution_from_scored(scored, new_canon), None
 
 
 def resolve_strings_locally(

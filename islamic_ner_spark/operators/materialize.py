@@ -1,4 +1,5 @@
-"""The engine's one lineage cut: every eager checkpoint goes through here.
+"""The engine's one lineage cut and its one cache: every eager
+checkpoint and every ``persist()`` goes through here.
 
 The iterative kernels (large-star/small-star components, PageRank,
 BFS, triangles, k-core, label propagation, walks, BPE merge rounds)
@@ -22,8 +23,14 @@ lazy lineage (``bench.py --plans``, ``scripts/plan_audit.py``).  A
 kernel whose loop branches on data (component convergence, BFS early
 stop, the BPE argmax) still runs the jobs that read that data.
 
-``persist()`` caches with an owner that unpersists them are not lineage
-cuts and do not go through here.
+A cache is not a lineage cut: the frame keeps its plan and Spark may
+evict blocks and recompute them.  :func:`cache` persists a frame into an
+*owner*, a list whose holder releases it.  One rule decides who that
+is: a function caches only into an owner its caller passes in (a
+``persisted`` list, e.g. ``GraphBuildResult.persisted``), and with no
+owner it caches nothing.  Caches that live only inside one call go into
+a local owner from :func:`owned`, which releases them in ``finally``,
+so an exception cannot leave them behind.
 """
 
 from __future__ import annotations
@@ -44,6 +51,31 @@ def materialize(df: DataFrame) -> DataFrame:
     if df.sparkSession.sparkContext.getCheckpointDir():
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
+
+
+def cache(df: DataFrame, owner: list | None) -> DataFrame:
+    """``df`` persisted into ``owner``; with no owner, ``df`` unchanged."""
+    if owner is None:
+        return df
+    df = df.persist()
+    owner.append(df)
+    return df
+
+
+def release(owner: list) -> None:
+    """Unpersist every cache in ``owner`` and empty it."""
+    while owner:
+        owner.pop().unpersist()
+
+
+@contextmanager
+def owned() -> Iterator[list]:
+    """A local owner for :func:`cache`, released when the block exits."""
+    owner: list = []
+    try:
+        yield owner
+    finally:
+        release(owner)
 
 
 @contextmanager

@@ -32,6 +32,7 @@ from islamic_ner_spark.operators.capping import (
     probe_join,
 )
 from islamic_ner_spark.operators.components import pair_groups
+from islamic_ner_spark.operators.materialize import cache, owned
 
 log = logging.getLogger(__name__)
 
@@ -365,7 +366,6 @@ def embedding_near_duplicates(
             "hyperplane_params) — a half-specified sizing would be "
             "silently overridden"
         )
-    caches: list = []
     n_docs = None
     if n_planes is None:
         n_docs = emb.count()
@@ -375,23 +375,20 @@ def embedding_near_duplicates(
     sigs = hyperplane_signatures(
         emb, id_col=id_col, vec_col=vec_col, n_planes=n_planes, bands=bands, seed=seed
     )
-    candidates = embedding_candidate_pairs(
-        sigs, max_bucket_size=max_bucket_size, persisted=caches
-    ).persist()
-    caches.append(candidates)
-    log_candidate_stats(
-        "embedding-near-dup",
-        n_candidates=candidates.count(),
-        corpus_size=n_docs if n_docs is not None else emb.count(),
-        extra=f"{n_planes // bands} bits x {bands} bands",
-    )
-    scored = cosine_pair_scores(emb, candidates, id_col=id_col, vec_col=vec_col)
-    groups = pair_groups(scored.where(F.col("cos_x1e6") >= threshold_x1e6))
-    # pair_groups' connected_components materialized the edge set, so
-    # the banded / candidate caches are no longer referenced
-    for df_ in caches:
-        df_.unpersist()
-    return groups
+    # pair_groups' connected_components materializes the edge set, so
+    # the banded / candidate caches are no longer referenced after it
+    with owned() as local:
+        candidates = cache(embedding_candidate_pairs(
+            sigs, max_bucket_size=max_bucket_size, persisted=local
+        ), local)
+        log_candidate_stats(
+            "embedding-near-dup",
+            n_candidates=candidates.count(),
+            corpus_size=n_docs if n_docs is not None else emb.count(),
+            extra=f"{n_planes // bands} bits x {bands} bands",
+        )
+        scored = cosine_pair_scores(emb, candidates, id_col=id_col, vec_col=vec_col)
+        return pair_groups(scored.where(F.col("cos_x1e6") >= threshold_x1e6))
 
 
 # ---------------------------------------------------------------------------

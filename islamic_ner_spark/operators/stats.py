@@ -14,6 +14,8 @@ from typing import Dict, List, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from islamic_ner_spark.operators.materialize import materialize
+
 
 def label_distribution(annotated: DataFrame, labels_col: str = "labels") -> DataFrame:
     """Per-label share of all tokens, % rounded to 3dp (A7)."""
@@ -164,7 +166,9 @@ def oversample_to_targets(
             F.array(*[b_count(t) for t in targets]),
         ),
     )
-    yields = yields.persist()
+    # a lineage cut, not a cache: the _rid ids must be the same rows in
+    # the collects below and in the replication join
+    yields = materialize(yields)
 
     # current counts per targeted type (small aggregate)
     count_row = yields.select(

@@ -63,6 +63,7 @@ from islamic_ner_spark.operators.linking import (
     resolve_triples,
     resolve_vocabulary,
 )
+from islamic_ner_spark.operators.materialize import cache, owned, release
 from islamic_ner_spark.operators.ner import annotate_transcripts
 from islamic_ner_spark.operators.relations import extract_mentions, extract_triples
 from islamic_ner_spark.sources import tables
@@ -76,7 +77,9 @@ class GraphBuildResult:
     """A build's tables.  The build reads only the extraction, the fact
     tables and the resolution; ``annotated``, ``resolved_triples`` and
     ``resolved_mentions`` are views for callers, planned on first
-    access."""
+    access.  ``persisted`` is the build's cache owner
+    (operators/materialize): every frame the build cached, released by
+    :meth:`unpersist`."""
 
     mentions: DataFrame
     triples: DataFrame
@@ -85,7 +88,7 @@ class GraphBuildResult:
     edges: DataFrame
     extracted: DataFrame  # (conv, turn, doc, mentions, triples): cached, or staged
     annotate: Callable[[], DataFrame]  # plans the ``annotated`` view
-    persisted: list = field(default_factory=list)  # released via unpersist()
+    persisted: list = field(default_factory=list)
 
     @cached_property
     def annotated(self) -> DataFrame:
@@ -121,8 +124,7 @@ class GraphBuildResult:
         """Release every intermediate this build cached — required by
         long-running callers (e.g. the streaming foreachBatch loop) to
         keep executor storage bounded across many builds."""
-        for df in self.persisted or []:
-            df.unpersist()
+        release(self.persisted)
 
 
 def _fingerprint(*parts: object) -> str:
@@ -283,22 +285,21 @@ def build_graph_from_labels(
     """
     from islamic_ner_spark.operators.ner import annotate_labeled
 
-    annotated = annotate_labeled(
+    persisted: list = []
+    annotated = cache(annotate_labeled(
         labeled.select(
             "conv_id", F.col("turn_idx").cast("int").alias("turn_idx"), "tokens", "labels"
         )
-    ).persist()
+    ), persisted)
     gazetteer_bc = spark.sparkContext.broadcast(
         gazetteer or Gazetteer.from_dir(gazetteer_dir)
     )
-    result = _build_from_annotated(
-        spark, annotated, lambda: annotated, gazetteer_bc,
+    return _build_from_annotated(
+        spark, annotated, lambda: annotated, gazetteer_bc, persisted,
         # arbitrary labeled input may repeat (conv_id, turn_idx) rows, so
         # turn uniqueness is not guaranteed -> global groupBy merges
         unique_turns=False,
     )
-    result.persisted.append(annotated)
-    return result
 
 
 def build_graph(
@@ -314,12 +315,15 @@ def build_graph(
     """Run the full KG-construction dataflow.
 
     Without ``work_dir`` the extraction and the fused graph pass are
-    persisted since several children consume them; the resolution is
-    persisted only when its ladder ran distributed (the driver ladder's
-    rows feed the fused pass directly).  With ``work_dir`` every stage
-    materializes to parquet + manifest and re-runs resume from completed
-    work; ``annotated`` is then the staged lean extraction, and only this
-    path computes the input fingerprint that keys the staged tables.
+    cached since several children consume them; the resolution and the
+    distributed ladder's scored strings are cached only when that ladder
+    ran (the driver ladder's rows feed the fused pass directly).  Every
+    cache goes into the result's ``persisted`` owner, which the caller
+    releases with ``GraphBuildResult.unpersist()``.  With ``work_dir``
+    every stage materializes to parquet + manifest and re-runs resume
+    from completed work; ``annotated`` is then the staged lean
+    extraction, and only this path computes the input fingerprint that
+    keys the staged tables.
 
     Input contract: ``transcripts`` has at most one row per
     (conv_id, turn_idx) — the transcripts table's natural key per
@@ -328,32 +332,30 @@ def build_graph(
     """
     gazetteer = gazetteer or Gazetteer.from_dir(gazetteer_dir)
     gazetteer_bc = spark.sparkContext.broadcast(gazetteer)
+    persisted: list = []
 
     if work_dir:
         fingerprint = _input_fingerprint(transcripts, gazetteer, gazetteer_dir, input_token)
         extracted = _annotate_resumable(
             spark, transcripts, gazetteer_bc, work_dir, fingerprint, n_buckets
         )
-        result = _build_from_annotated(
-            spark, extracted, lambda: extracted, gazetteer_bc,
+        return _build_from_annotated(
+            spark, extracted, lambda: extracted, gazetteer_bc, persisted,
             work_dir=work_dir, fingerprint=fingerprint,
         )
-    else:
-        # Only the extraction outputs feed the KG stages; tokens/labels/
-        # norm_text are the bulk of the row, so the build materializes a
-        # LEAN annotate pass (same memoized kernel, 5-column output —
-        # the Arrow boundary never serializes the dropped columns, and
-        # the input projection prunes role/tool/ts from the scan).  The
-        # full annotated view is planned on access (for audits/stats).
-        extracted = annotate_transcripts(
-            transcripts, gazetteer_bc, extraction_only=True
-        ).persist()
-        result = _build_from_annotated(
-            spark, extracted, partial(annotate_transcripts, transcripts, gazetteer_bc),
-            gazetteer_bc,
-        )
-        result.persisted.append(extracted)
-    return result
+    # Only the extraction outputs feed the KG stages; tokens/labels/
+    # norm_text are the bulk of the row, so the build materializes a
+    # LEAN annotate pass (same memoized kernel, 5-column output —
+    # the Arrow boundary never serializes the dropped columns, and
+    # the input projection prunes role/tool/ts from the scan).  The
+    # full annotated view is planned on access (for audits/stats).
+    extracted = cache(annotate_transcripts(
+        transcripts, gazetteer_bc, extraction_only=True
+    ), persisted)
+    return _build_from_annotated(
+        spark, extracted, partial(annotate_transcripts, transcripts, gazetteer_bc),
+        gazetteer_bc, persisted,
+    )
 
 
 def _input_fingerprint(
@@ -408,11 +410,12 @@ def _materialize_graph(
     resolution: DataFrame,
     resolution_rows: Optional[list],
     unique_turns: bool,
-) -> tuple[DataFrame, DataFrame, list]:
-    """(nodes, edges, cached): the MERGE as the fused pass or the global
-    groupBy.  ``resolution_rows`` are the driver ladder's rows of
-    ``resolution`` (``None`` when it ran distributed or was staged).
-    ``cached`` lists what this call persisted."""
+    persisted: list,
+) -> tuple[DataFrame, DataFrame]:
+    """(nodes, edges): the MERGE as the fused pass or the global groupBy,
+    its cached frames owned by ``persisted``.  ``resolution_rows`` are
+    the driver ladder's rows of ``resolution`` (``None`` when it ran
+    distributed or was staged)."""
     # The fused pass needs the resolution as a driver-side dict.  The
     # driver ladder's rows are already here; otherwise the strategy is
     # chosen from a COUNT of the resolution (a few bytes to the driver)
@@ -431,19 +434,18 @@ def _materialize_graph(
             (text, entity_type): (canonical_name, confidence)
             for text, entity_type, _, canonical_name, confidence, _ in resolution_rows
         })
-        fused = fused_graph_outputs(extracted, res_bc).persist()
-        return nodes_from_combined(fused, extracted), edges_from_combined(fused), [fused]
+        fused = cache(fused_graph_outputs(extracted, res_bc), persisted)
+        return nodes_from_combined(fused, extracted), edges_from_combined(fused)
     # repeated turns (labeled input) or extreme vocabulary: global groupBy
     # merges; only the small aggregates are cached, since they are
     # consumed repeatedly and are cheaper to recompute-from-cache than the
     # full rows are to columnar-compress
     resolved_triples = resolve_triples(triples, resolution)
     doc_index = extracted.select("conv_id", "turn_idx", "doc_id")
-    nodes = build_nodes(
+    nodes = cache(build_nodes(
         resolve_mentions_table(mentions, resolution), doc_index, resolved_triples
-    ).persist()
-    edges = build_edges(resolved_triples).persist()
-    return nodes, edges, [nodes, edges]
+    ), persisted)
+    return nodes, cache(build_edges(resolved_triples), persisted)
 
 
 def _build_from_annotated(
@@ -451,16 +453,16 @@ def _build_from_annotated(
     extracted: DataFrame,
     annotate: Callable[[], DataFrame],
     gazetteer_bc,
+    persisted: list,
     *,
     work_dir: Optional[str] = None,
     fingerprint: Optional[str] = None,
     unique_turns: bool = True,
 ) -> GraphBuildResult:
     """The KG stages over ``extracted`` (conv, turn, doc, mentions,
-    triples); ``annotate`` plans the result's ``annotated`` view.
-    ``fingerprint`` keys the staged tables and is read only with a
-    ``work_dir``."""
-    persisted: list = []
+    triples); ``annotate`` plans the result's ``annotated`` view, and
+    ``persisted`` becomes the result's cache owner.  ``fingerprint``
+    keys the staged tables and is read only with a ``work_dir``."""
     resolution_rows = None
 
     if work_dir:
@@ -469,13 +471,15 @@ def _build_from_annotated(
         triples = _stage(spark, work_dir, "triples", fingerprint,
                          lambda: extract_triples(extracted), ["pred"])
         # the staged table is the resolution's source of truth, so a
-        # resume reads it back instead of rerunning the ladder
-        resolution = _stage(
-            spark, work_dir, "resolution", fingerprint,
-            lambda: build_resolution_table(
-                spark, mentions, triples, None, gazetteer_bc, persisted=persisted
-            ),
-        )
+        # resume reads it back instead of rerunning the ladder, and the
+        # ladder's cache is released once the table is written
+        with owned() as ladder:
+            resolution = _stage(
+                spark, work_dir, "resolution", fingerprint,
+                lambda: build_resolution_table(
+                    spark, mentions, triples, None, gazetteer_bc, persisted=ladder
+                ),
+            )
     else:
         # mentions/triples are cheap explodes of the cached `extracted`
         mentions = extract_mentions(extracted)
@@ -486,18 +490,16 @@ def _build_from_annotated(
         if resolution_rows is None:
             # the distributed ladder's table: the strategy count, the
             # collect or the global joins all read it
-            resolution = resolution.persist()
-            persisted.append(resolution)
+            resolution = cache(resolution, persisted)
 
-    def graph() -> tuple[DataFrame, DataFrame, list]:
+    def graph(owner: list) -> tuple[DataFrame, DataFrame]:
         return _materialize_graph(
             spark, extracted, mentions, triples, resolution, resolution_rows,
-            unique_turns,
+            unique_turns, owner,
         )
 
     if not work_dir:
-        nodes, edges, cached = graph()
-        persisted.extend(cached)
+        nodes, edges = graph(persisted)
     elif all(tables.table_is_current(str(Path(work_dir) / name), fingerprint)
              for name in ("nodes", "edges")):
         # resume of a finished graph: no strategy count, no resolution collect
@@ -505,11 +507,10 @@ def _build_from_annotated(
         edges = tables.read_table(spark, str(Path(work_dir) / "edges"))
     else:
         # the graph pass is cached, so writing both tables runs it once
-        fresh_nodes, fresh_edges, cached = graph()
-        nodes = _stage(spark, work_dir, "nodes", fingerprint, lambda: fresh_nodes, ["label"])
-        edges = _stage(spark, work_dir, "edges", fingerprint, lambda: fresh_edges, ["pred"])
-        for df in cached:
-            df.unpersist()
+        with owned() as local:
+            fresh_nodes, fresh_edges = graph(local)
+            nodes = _stage(spark, work_dir, "nodes", fingerprint, lambda: fresh_nodes, ["label"])
+            edges = _stage(spark, work_dir, "edges", fingerprint, lambda: fresh_edges, ["pred"])
 
     return GraphBuildResult(
         mentions=mentions,

@@ -29,6 +29,8 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from islamic_ner_spark.operators.materialize import cache, owned
+
 PACKAGE_ROOT = Path(__file__).resolve().parents[1]
 STAGE_ROOT = PACKAGE_ROOT.parent / ".stage"
 
@@ -231,20 +233,20 @@ def ensure_kg_stage(spark: SparkSession, sf_dir: str) -> None:
     )
     pair_edges = _write(new_pair_edges(new_nodes), "kg", "new_pair_edges")
 
-    resolution = resolution_from_scored(
-        scored, canonicalize_from_pairs(new_nodes, pair_edges)
-    ).persist()
-    resolved_triples = resolve_triples(triples, resolution)
-    _write(edge_candidate_rows(resolved_triples), "kg", "edge_rows")
-    _write(
-        node_candidate_rows(
-            resolve_mentions_table(mentions, resolution),
-            annotated.select("conv_id", "turn_idx", "doc_id"),
-            resolved_triples,
-        ),
-        "kg", "node_rows",
-    )
-    resolution.unpersist()
+    with owned() as persisted:  # both candidate-row writes read the resolution
+        resolution = cache(resolution_from_scored(
+            scored, canonicalize_from_pairs(new_nodes, pair_edges)
+        ), persisted)
+        resolved_triples = resolve_triples(triples, resolution)
+        _write(edge_candidate_rows(resolved_triples), "kg", "edge_rows")
+        _write(
+            node_candidate_rows(
+                resolve_mentions_table(mentions, resolution),
+                annotated.select("conv_id", "turn_idx", "doc_id"),
+                resolved_triples,
+            ),
+            "kg", "node_rows",
+        )
     _mark("kg", sf_dir)
 
 
@@ -346,15 +348,16 @@ def ensure_stream_stage(spark: SparkSession, sf_dir: str) -> None:
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    transcripts = transcripts_from_documents(
-        spark, docs, turns_per_conv=FLAGSHIP_TURNS_PER_CONV
-    ).persist()  # three filtered writes below reuse one generator pass
     work = Path(tempfile.mkdtemp(prefix="stream_stage_"))
     try:
-        for i in range(STREAM_N_BATCHES):
-            transcripts.where(
-                F.pmod(F.xxhash64("conv_id"), F.lit(STREAM_N_BATCHES)) == i
-            ).coalesce(1).write.parquet(str(work / "in" / f"part{i}"))
+        with owned() as persisted:  # three filtered writes reuse one generator pass
+            transcripts = cache(transcripts_from_documents(
+                spark, docs, turns_per_conv=FLAGSHIP_TURNS_PER_CONV
+            ), persisted)
+            for i in range(STREAM_N_BATCHES):
+                transcripts.where(
+                    F.pmod(F.xxhash64("conv_id"), F.lit(STREAM_N_BATCHES)) == i
+                ).coalesce(1).write.parquet(str(work / "in" / f"part{i}"))
         gazetteer_bc = spark.sparkContext.broadcast(
             Gazetteer.from_dir(DEFAULT_GAZETTEER_DIR)
         )
@@ -381,7 +384,6 @@ def ensure_stream_stage(spark: SparkSession, sf_dir: str) -> None:
             "stream", "nodes",
         )
     finally:
-        transcripts.unpersist()
         _shutil.rmtree(work, ignore_errors=True)
     _mark("stream", sf_dir)
 
@@ -471,37 +473,38 @@ def ensure_stream_window_stage(spark: SparkSession, sf_dir: str) -> None:
     )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
-    transcripts = transcripts_from_documents(
-        spark, docs, turns_per_conv=FLAGSHIP_TURNS_PER_CONV
-    ).persist()
     gazetteer_bc = spark.sparkContext.broadcast(
         Gazetteer.from_dir(DEFAULT_GAZETTEER_DIR)
     )
-    annotated = annotate_transcripts(transcripts, gazetteer_bc)
-    _write(
-        annotated.select("ts", F.explode("mentions").alias("m")).select(
-            "ts", F.col("m.entity_type").alias("entity_type")
-        ),
-        "swin", "mention_events",
-    )
-
-    bounds = sorted(r["ts"] for r in transcripts.select("ts").distinct().collect())
-    cuts = [
-        bounds[len(bounds) // 4],
-        bounds[len(bounds) // 2],
-        bounds[3 * len(bounds) // 4],
-    ]
-    parts = [
-        transcripts.where(F.col("ts") <= cuts[0]),
-        transcripts.where((F.col("ts") > cuts[0]) & (F.col("ts") <= cuts[1])),
-        transcripts.where((F.col("ts") > cuts[1]) & (F.col("ts") <= cuts[2])),
-        transcripts.where(F.col("ts") > cuts[2]),
-    ]
     work = Path(tempfile.mkdtemp(prefix="swin_stage_"))
     try:
-        for i, part in enumerate(parts):
-            part.coalesce(1).write.parquet(str(work / "in" / f"p{i}"))
-            _time.sleep(1.1)  # distinct mtimes => event-time batch order
+        with owned() as persisted:  # the events, the bounds and the parts reuse it
+            transcripts = cache(transcripts_from_documents(
+                spark, docs, turns_per_conv=FLAGSHIP_TURNS_PER_CONV
+            ), persisted)
+            annotated = annotate_transcripts(transcripts, gazetteer_bc)
+            _write(
+                annotated.select("ts", F.explode("mentions").alias("m")).select(
+                    "ts", F.col("m.entity_type").alias("entity_type")
+                ),
+                "swin", "mention_events",
+            )
+
+            bounds = sorted(r["ts"] for r in transcripts.select("ts").distinct().collect())
+            cuts = [
+                bounds[len(bounds) // 4],
+                bounds[len(bounds) // 2],
+                bounds[3 * len(bounds) // 4],
+            ]
+            parts = [
+                transcripts.where(F.col("ts") <= cuts[0]),
+                transcripts.where((F.col("ts") > cuts[0]) & (F.col("ts") <= cuts[1])),
+                transcripts.where((F.col("ts") > cuts[1]) & (F.col("ts") <= cuts[2])),
+                transcripts.where(F.col("ts") > cuts[2]),
+            ]
+            for i, part in enumerate(parts):
+                part.coalesce(1).write.parquet(str(work / "in" / f"p{i}"))
+                _time.sleep(1.1)  # distinct mtimes => event-time batch order
         kwargs = dict(
             available_now=True, max_files_per_trigger=1,
             window_duration=f"{STREAM_WINDOW_SECONDS} seconds",
@@ -517,7 +520,6 @@ def ensure_stream_window_stage(spark: SparkSession, sf_dir: str) -> None:
                 raise TimeoutError("windowed stream staging did not drain in 600s")
         _write(spark.read.parquet(str(work / "out")), "swin", "windowed")
     finally:
-        transcripts.unpersist()
         _shutil.rmtree(work, ignore_errors=True)
     _mark("swin", sf_dir)
 

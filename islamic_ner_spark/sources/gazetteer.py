@@ -148,15 +148,22 @@ class Gazetteer:
 
     @classmethod
     def from_dir(cls, gazetteer_dir: str | Path) -> "Gazetteer":
+        """Load the ``GAZETTEER_FILES`` under ``gazetteer_dir``.  A missing
+        file loads as empty, but a dir (or archive path) holding none of
+        them raises ``FileNotFoundError``: a mistyped dir must not build
+        a graph with no gazetteer matches."""
         base = _in_archive(Path(gazetteer_dir))
-        typed: List[Tuple[str, Sequence[str]]] = []
-        for file_name, entity_type in GAZETTEER_FILES:
-            path = base / file_name
-            if not path.exists():
-                continue
-            for variants in parse_gazetteer_text(path.read_text(encoding="utf-8")):
-                typed.append((entity_type, variants))
-        return cls(typed)
+        present = [(base / name, t) for name, t in GAZETTEER_FILES if (base / name).exists()]
+        if not present:
+            raise FileNotFoundError(
+                f"no gazetteer file ({', '.join(name for name, _ in GAZETTEER_FILES)}) "
+                f"under {gazetteer_dir}"
+            )
+        return cls(
+            (entity_type, variants)
+            for path, entity_type in present
+            for variants in parse_gazetteer_text(path.read_text(encoding="utf-8"))
+        )
 
     @classmethod
     def from_rows(cls, rows: Iterable[Tuple[str, Sequence[str]]]) -> "Gazetteer":

@@ -30,6 +30,8 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from islamic_ner_spark.operators.materialize import cache, owned
+
 MANIFEST_NAME = "_manifest.json"
 COMPACT_LOCK_NAME = "_compact.lock"
 
@@ -286,20 +288,21 @@ class ParquetTableSink:
         # state a crashed maintenance job left.
         acquire_compaction_lock(table_dir.parent)
         try:
-            self._merge_buckets_locked(
-                spark, table_dir, new_df, bucket_col, merge_fn, batch_id
-            )
+            with owned() as persisted:
+                self._merge_buckets_locked(
+                    spark, table_dir, new_df, bucket_col, merge_fn, batch_id, persisted
+                )
         finally:
             release_compaction_lock(table_dir.parent)
 
     def _merge_buckets_locked(
-        self, spark, table_dir, new_df, bucket_col, merge_fn, batch_id: int
+        self, spark, table_dir, new_df, bucket_col, merge_fn, batch_id: int, persisted
     ) -> None:
         import shutil
 
         self.recover_replace(table_dir)
         self.recover(table_dir)
-        new_df = new_df.withColumn("bucket", bucket_col).persist()
+        new_df = cache(new_df.withColumn("bucket", bucket_col), persisted)
         touched = sorted(
             r["bucket"] for r in new_df.select("bucket").distinct().collect()
         )
@@ -307,7 +310,6 @@ class ParquetTableSink:
             k for k in touched if self.bucket_watermark(table_dir, k) < batch_id
         ]
         if not pending:
-            new_df.unpersist()
             return
         new_pending = new_df.where(F.col("bucket").isin(pending))
         existing_dirs = [
@@ -346,7 +348,6 @@ class ParquetTableSink:
             staged.rename(final)
             shutil.rmtree(backup, ignore_errors=True)
         shutil.rmtree(tmp, ignore_errors=True)
-        new_df.unpersist()
 
     # -- full-table rewrite (compaction) ----------------------------------
 

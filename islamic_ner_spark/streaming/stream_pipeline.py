@@ -29,6 +29,7 @@ from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from islamic_ner_spark.operators.materialize import cache, owned
 from islamic_ner_spark.operators.ner import annotate_transcripts
 from islamic_ner_spark.operators.relations import extract_triples
 from islamic_ner_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
@@ -113,8 +114,12 @@ def stream_triples(
     transcripts_stream: DataFrame, gazetteer_bc: Broadcast
 ) -> DataFrame:
     """Stateless extraction transform, reused verbatim from the batch
-    operators (both are narrow mapInPandas passes)."""
-    return extract_triples(annotate_transcripts(transcripts_stream, gazetteer_bc))
+    operators (both are narrow mapInPandas passes).  Like the batch
+    build it runs the lean extraction, so only the triples' inputs cross
+    the Arrow boundary."""
+    return extract_triples(
+        annotate_transcripts(transcripts_stream, gazetteer_bc, extraction_only=True)
+    )
 
 
 def start_triples_stream(
@@ -292,12 +297,15 @@ def compact_graph_stream(spark: SparkSession, graph_dir: str, gazetteer_bc: Broa
     n_buckets = _check_graph_meta(graph_path)["n_buckets"]
     acquire_compaction_lock(graph_path)
     try:
-        return _compact_graph_locked(spark, graph_path, gazetteer_bc, n_buckets)
+        with owned() as persisted:
+            return _compact_graph_locked(
+                spark, graph_path, gazetteer_bc, n_buckets, persisted
+            )
     finally:
         release_compaction_lock(graph_path)
 
 
-def _compact_graph_locked(spark, graph_path, gazetteer_bc, n_buckets) -> dict:
+def _compact_graph_locked(spark, graph_path, gazetteer_bc, n_buckets, persisted) -> dict:
     from pyspark.sql import functions as F
 
     from islamic_ner_spark.operators.graph import (
@@ -360,9 +368,9 @@ def _compact_graph_locked(spark, graph_path, gazetteer_bc, n_buckets) -> dict:
     typed = nodes.where(F.col("label") != "Hadith").withColumn(
         "entity_type", label_to_type[F.col("label")]
     )
-    new_nodes_tbl = typed.join(
+    new_nodes_tbl = cache(typed.join(
         F.broadcast(known_df), ["entity_type", "key"], "left_anti"
-    ).persist()
+    ), persisted)
 
     # accumulated variant vocabulary of the new-entity nodes, re-normalized
     variants = new_nodes_tbl.select(
@@ -384,7 +392,7 @@ def _compact_graph_locked(spark, graph_path, gazetteer_bc, n_buckets) -> dict:
     # an old key is the norm of one of its variants, so it appears in the
     # vocabulary and gets exactly one joint canonical (re-clustering over
     # a superset can only merge old clusters, never split them)
-    remap = (
+    remap = cache(
         canon.select(
             "entity_type",
             F.col("norm_text").alias("key"),
@@ -392,8 +400,8 @@ def _compact_graph_locked(spark, graph_path, gazetteer_bc, n_buckets) -> dict:
         )
         .where(F.col("key") != F.col("new_key"))
         .join(new_nodes_tbl.select("entity_type", "key").distinct(),
-              ["entity_type", "key"])
-        .persist()
+              ["entity_type", "key"]),
+        persisted,
     )
     n_remapped = remap.count()
 
@@ -442,14 +450,11 @@ def _compact_graph_locked(spark, graph_path, gazetteer_bc, n_buckets) -> dict:
         SINK.replace_table(spark, graph_path / "nodes", compact_nodes,
                            node_bucket(n_buckets), batch_id)
 
-    stats = {
+    return {
         "remapped_keys": int(n_remapped),
         "nodes": spark.read.parquet(str(graph_path / "nodes")).count() if has_nodes else 0,
         "edges": spark.read.parquet(str(graph_path / "edges")).count() if has_edges else 0,
     }
-    remap.unpersist()
-    new_nodes_tbl.unpersist()
-    return stats
 
 
 def rebucket_graph(spark: SparkSession, graph_dir: str, new_n_buckets: int) -> dict:
@@ -665,7 +670,10 @@ def start_graph_stream(
     n_buckets: int = 64,
 ) -> StreamingQuery:
     """Continuously maintained graph: per micro-batch, build the batch's
-    subgraph and MERGE it into the persistent nodes/edges tables.
+    subgraph with the gazetteer of ``gazetteer_bc`` (the one the
+    compaction resolves against) and MERGE it into the persistent
+    nodes/edges tables.  The build's caches are released when the batch
+    ends, whether or not its merge succeeded.
 
     **Bucketed incremental MERGE** — the persistent tables are hash-
     partitioned on their MERGE keys (``graph.edge_bucket`` /
@@ -719,13 +727,15 @@ def start_graph_stream(
             return  # replayed batch fully committed previously
         if not batch_df.take(1):
             return
-        result = build_graph(spark, batch_df)
-        SINK.merge_buckets(spark, graph_path / "edges", result.edges,
-                           edge_bucket(n_buckets), bucket_upsert(merge_edge_rows), batch_id)
-        SINK.merge_buckets(spark, graph_path / "nodes", result.nodes,
-                           node_bucket(n_buckets), bucket_upsert(merge_node_rows), batch_id)
-        marker.write_text(json.dumps({"batch_id": batch_id}))
-        result.unpersist()
+        result = build_graph(spark, batch_df, gazetteer=gazetteer_bc.value)
+        try:
+            SINK.merge_buckets(spark, graph_path / "edges", result.edges,
+                               edge_bucket(n_buckets), bucket_upsert(merge_edge_rows), batch_id)
+            SINK.merge_buckets(spark, graph_path / "nodes", result.nodes,
+                               node_bucket(n_buckets), bucket_upsert(merge_node_rows), batch_id)
+            marker.write_text(json.dumps({"batch_id": batch_id}))
+        finally:
+            result.unpersist()
 
     transcripts = _read_parquet_stream(
         spark, input_dir, TRANSCRIPTS_SCHEMA, max_files_per_trigger

@@ -380,24 +380,29 @@ def test_kmeans_refinement_has_no_corpus_shuffle(embeddings) -> None:
     assert plan.count("Exchange") <= 1, plan
 
 
-def test_cap_buckets_auto_cache_registry_bounded(spark) -> None:
-    """Callers that pass no tracking list still get the input cached
-    (one kernel run feeds the cap window, the overflow report, and the
-    downstream join), but the module-level registry stays bounded —
-    older entries are explicitly unpersisted as new ones arrive
-    (ADVICE r3: the untracked path used to recompute the kernel up to
-    3x; the registry must not leak either)."""
-    from islamic_ner_spark.operators import capping
+def test_cap_buckets_caches_only_into_an_owner(spark) -> None:
+    """With an owner, cap_buckets caches its input into it, so the
+    overflow check, the cap window and the downstream join read one
+    kernel run; with none it caches nothing.  The capped rows are the
+    same either way."""
+    from islamic_ner_spark.operators.capping import cap_buckets
+    from islamic_ner_spark.operators.materialize import release
 
-    dfs = []
-    for i in range(capping._AUTO_CACHE_LIMIT + 2):
-        df = spark.createDataFrame([(i, "b")], "k long, band string")
-        capped = capping.cap_buckets(df, ["band"], 10, f"test-{i}")
-        capped.collect()
-        dfs.append(df)
-    assert len(capping._auto_cached) == capping._AUTO_CACHE_LIMIT
-    # evicted entries are no longer cached; recent ones are
-    assert all(df.storageLevel.useMemory for df in capping._auto_cached)
+    def cached() -> bool:
+        return not spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    banded = spark.createDataFrame(
+        [(i, "hot" if i < 4 else f"b{i}") for i in range(8)], "k long, band string"
+    )
+    spark.catalog.clearCache()
+    unowned = sorted(cap_buckets(banded, ["band"], 3, "test-no-owner").collect())
+    assert not cached()
+    owner: list = []
+    owned = sorted(cap_buckets(banded, ["band"], 3, "test-owner", owner).collect())
+    assert len(owner) == 1 and cached()
+    release(owner)
+    assert not cached()
+    assert owned == unowned and [r["k"] for r in owned] == [4, 5, 6, 7]
 
 
 def test_bucket_self_join_matches_brute_force(spark) -> None:

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import re
 from pathlib import Path
 
 import pytest
@@ -91,3 +92,14 @@ def test_to_dataframe_dimension(spark, resolver_gazetteer: Gazetteer) -> None:
     rows = {(r["variant_norm"], r["entity_type"]): r["canonical_norm"] for r in df.collect()}
     assert rows[(normalize("البخاري"), "SCHOLAR")] == normalize("محمد بن إسماعيل البخاري")
     assert rows[(normalize("البخاري"), "BOOK")] == normalize("صحيح البخاري")
+
+
+def test_from_dir_without_gazetteer_files_raises(tmp_path: Path) -> None:
+    """A mistyped dir, or one holding none of the four files, fails
+    loudly instead of loading an empty gazetteer."""
+    missing = tmp_path / "no_such_dir"
+    with pytest.raises(FileNotFoundError, match="no_such_dir"):
+        Gazetteer.from_dir(missing)
+    (tmp_path / "notes.txt").write_text("not a gazetteer\n", encoding="utf-8")
+    with pytest.raises(FileNotFoundError, match=re.escape(str(tmp_path))):
+        Gazetteer.from_dir(tmp_path)

@@ -3,8 +3,11 @@ Spark pipeline (build_graph_from_labels is the process_hadith equivalent)."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
+from __spark_entry__ import SF0001
 from islamic_ner_spark.functions.normalize import normalize
 from islamic_ner_spark.operators import queries as Q
 from islamic_ner_spark.operators.graph import EDGE_KEY, graph_stats
@@ -147,14 +150,147 @@ def test_count_narrated(spark, resolver_gazetteer, scholar, expected) -> None:
     assert Q.count_narrated_hadiths(result.edges, normalize(scholar)) == expected
 
 
-def test_unpersist_releases_every_cache(spark, resolver_gazetteer) -> None:
-    """unpersist() releases the label build's persisted annotate output
-    along with the intermediates the build cached."""
+def _no_cache(spark) -> bool:
+    """Spark's cache manager holds nothing: every ``persist()`` was
+    released (local checkpoints are not cache-manager entries)."""
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_unpersist_releases_every_cache(spark, resolver_gazetteer, tmp_path,
+                                        monkeypatch) -> None:
+    """Each build caches only into its result's owner, and unpersist()
+    leaves Spark's cache manager empty: the labeled build (global
+    groupBy), the in-memory build on the driver and on the distributed
+    ladder, and the staged build, which keeps no cache at all."""
     from pyspark import StorageLevel
 
+    from islamic_ner_spark.operators import linking
+    from islamic_ner_spark.plans.pipeline import build_graph
+    from islamic_ner_spark.sources.transcripts import synthetic_transcripts
+
+    spark.catalog.clearCache()
     result = _build(spark, [("h-cache", 0, H_STATS_TOKENS, H_STATS_LABELS)], resolver_gazetteer)
     result.stats()
     assert result.annotated.storageLevel != StorageLevel.NONE
     result.unpersist()
     assert result.annotated.storageLevel == StorageLevel.NONE
-    assert all(df.storageLevel == StorageLevel.NONE for df in result.persisted)
+    assert _no_cache(spark)
+
+    transcripts = synthetic_transcripts(spark, 6, turns_per_conv=3)
+    builds = {
+        "driver ladder": lambda: build_graph(spark, transcripts),
+        "distributed ladder": lambda: build_graph(spark, transcripts),
+        "staged": lambda: build_graph(spark, transcripts, work_dir=str(tmp_path / "w")),
+    }
+    for name, build in builds.items():
+        if name != "driver ladder":
+            monkeypatch.setattr(linking, "DRIVER_LADDER_LIMIT", 0)
+        spark.catalog.clearCache()
+        result = build()
+        if name == "staged":  # the ladder's cache ends with its staged table
+            assert _no_cache(spark) and not result.persisted
+        assert result.stats()["total_triples"] > 0, name
+        assert result.metrics()["resolution_strings"] > 0, name
+        result.unpersist()
+        assert _no_cache(spark), name
+
+
+def test_operators_release_their_caches(spark) -> None:
+    """The near-duplicate operators cache only into a local owner and
+    release it before they return."""
+    import random
+
+    from islamic_ner_spark.operators.dedup import near_duplicate_groups
+    from islamic_ner_spark.operators.similarity import embedding_near_duplicates
+
+    docs = spark.createDataFrame(
+        [(0, "the quick brown fox jumps over the lazy dog"),
+         (1, "the quick brown fox jumps over the lazy dog"),
+         (2, "a completely different sentence about spark")],
+        "doc_id long, text string",
+    )
+    rng = random.Random(3)
+    emb = spark.createDataFrame(
+        [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(20)],
+        "vec_id long, embedding array<double>",
+    )
+    for name, run in (
+        ("near_duplicate_groups", lambda: near_duplicate_groups(docs)),
+        ("embedding_near_duplicates", lambda: embedding_near_duplicates(emb)),
+    ):
+        spark.catalog.clearCache()
+        run().collect()
+        assert _no_cache(spark), name
+
+
+def test_compaction_releases_its_caches(spark, tmp_path) -> None:
+    """compact_graph_stream caches the new-entity nodes and the key remap
+    into an owner it releases before returning."""
+    import json
+
+    from islamic_ner_spark.operators.graph import (
+        edge_bucket,
+        merge_edge_rows,
+        merge_node_rows,
+        node_bucket,
+    )
+    from islamic_ner_spark.plans.pipeline import DEFAULT_GAZETTEER_DIR, build_graph
+    from islamic_ner_spark.sources.gazetteer import Gazetteer
+    from islamic_ner_spark.sources.tables import SINK
+    from islamic_ner_spark.sources.transcripts import synthetic_transcripts
+    from islamic_ner_spark.streaming.stream_pipeline import (
+        GRAPH_SCHEMA_VERSION,
+        bucket_upsert,
+        compact_graph_stream,
+    )
+
+    graph = tmp_path / "graph"
+    graph.mkdir()
+    (graph / "_graph_meta.json").write_text(
+        json.dumps({"n_buckets": 4, "schema_version": GRAPH_SCHEMA_VERSION})
+    )
+    result = build_graph(spark, synthetic_transcripts(spark, 6, turns_per_conv=3))
+    SINK.merge_buckets(spark, graph / "edges", result.edges, edge_bucket(4),
+                       bucket_upsert(merge_edge_rows), 0)
+    SINK.merge_buckets(spark, graph / "nodes", result.nodes, node_bucket(4),
+                       bucket_upsert(merge_node_rows), 0)
+    (graph / "_last_batch.json").write_text(json.dumps({"batch_id": 0}))
+    result.unpersist()
+
+    spark.catalog.clearCache()
+    gazetteer_bc = spark.sparkContext.broadcast(Gazetteer.from_dir(DEFAULT_GAZETTEER_DIR))
+    assert compact_graph_stream(spark, str(graph), gazetteer_bc)["nodes"] > 0
+    assert _no_cache(spark)
+
+
+@pytest.mark.skipif(not Path(SF0001).exists(), reason="sf0.001 test data absent")
+def test_ann_lsh_topk_leaves_no_cache(spark, tmp_path, monkeypatch) -> None:
+    """The staged ANN query passes no owner, so capping caches nothing."""
+    from islamic_ner_spark.plans import driver_queries, staging
+
+    monkeypatch.setattr(staging, "STAGE_ROOT", tmp_path / "stage")
+    staging.ensure_ann_stage(spark, SF0001)
+    spark.catalog.clearCache()
+    assert driver_queries.QUERIES["ann_lsh_topk"](spark, SF0001).collect()
+    assert _no_cache(spark)
+
+
+def test_failed_merge_releases_its_cache(spark, tmp_path) -> None:
+    """SINK.merge_buckets releases its cached batch when merge_fn raises."""
+    from pyspark.sql import functions as F
+
+    from islamic_ner_spark.sources.tables import SINK
+
+    def failing_merge(existing, incoming):
+        raise RuntimeError("merge failed")
+
+    table = tmp_path / "t"
+    bucket = F.pmod(F.col("k"), F.lit(2)).cast("int")
+    # the first write finds no stored bucket, so nothing is merged
+    SINK.merge_buckets(spark, table, spark.createDataFrame([(1, 10)], "k long, n long"),
+                       bucket, failing_merge, batch_id=1)
+    spark.catalog.clearCache()
+    with pytest.raises(RuntimeError, match="merge failed"):
+        SINK.merge_buckets(spark, table, spark.createDataFrame([(3, 30)], "k long, n long"),
+                           bucket, failing_merge, batch_id=2)
+    assert _no_cache(spark)

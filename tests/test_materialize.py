@@ -1,7 +1,8 @@
-"""The engine's one lineage cut (operators/materialize.py).
+"""The engine's one lineage cut and one cache (operators/materialize.py).
 
-- No module cuts lineage on its own: every ``checkpoint`` /
-  ``localCheckpoint`` call lives in the helper.
+- No module cuts lineage or caches on its own: every ``checkpoint`` /
+  ``localCheckpoint`` and every ``persist`` / ``cache`` call lives in
+  the helper.
 - Under ``plan_capture()`` building a kernel's plan runs no Spark job.
 - With ``spark.checkpoint.dir`` set, the kernels take reliable
   checkpoints (files appear under the dir) and return exactly what the
@@ -81,7 +82,9 @@ def kernel_results(spark) -> dict:
     }
 
 
-def test_no_lineage_cut_outside_materialize() -> None:
+def _calls_outside_helper(attrs: tuple[str, ...]) -> list[str]:
+    """``path:line`` of every ``.<attr>(`` call in the package outside
+    operators/materialize.py."""
     offenders = []
     for path in sorted(PACKAGE.rglob("*.py")):
         if path == HELPER:
@@ -90,10 +93,20 @@ def test_no_lineage_cut_outside_materialize() -> None:
             if (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
-                and node.func.attr in ("checkpoint", "localCheckpoint")
+                and node.func.attr in attrs
             ):
                 offenders.append(f"{path.relative_to(REPO)}:{node.lineno}")
+    return offenders
+
+
+def test_no_lineage_cut_outside_materialize() -> None:
+    offenders = _calls_outside_helper(("checkpoint", "localCheckpoint"))
     assert offenders == [], "cut lineage with operators.materialize.materialize"
+
+
+def test_no_cache_outside_materialize() -> None:
+    offenders = _calls_outside_helper(("persist", "cache"))
+    assert offenders == [], "cache into an owner with operators.materialize.cache"
 
 
 def test_plan_capture_runs_no_job(spark) -> None:

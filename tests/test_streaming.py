@@ -803,3 +803,53 @@ def test_maintenance_on_empty_graph_is_noop(spark, tmp_path) -> None:
     bucket_val = got.select("bucket").first()[0]
     import math
     assert 0 <= bucket_val < 5
+
+
+def test_graph_stream_builds_with_its_gazetteer(spark, tmp_path) -> None:
+    """The graph stream builds every micro-batch with the gazetteer it
+    is given: a scholar only that gazetteer knows resolves to its
+    canonical, and the streamed graph equals the batch build with the
+    same gazetteer on every node and edge column."""
+    import datetime
+    import shutil
+
+    from islamic_ner_spark.functions.normalize import normalize
+    from islamic_ner_spark.plans.pipeline import build_graph
+    from islamic_ner_spark.sources.transcripts import TRANSCRIPTS_SCHEMA
+    from islamic_ner_spark.streaming.stream_pipeline import start_graph_stream
+
+    gaz_dir = tmp_path / "gaz"
+    shutil.copytree(DEFAULT_GAZETTEER_DIR, gaz_dir)
+    canonical = "زربقان بن مهلهل الكوفي"
+    with open(gaz_dir / "scholars.txt", "a", encoding="utf-8") as f:
+        f.write(f"\n{canonical}|زربقان بن مهلهل\n")
+    gazetteer = Gazetteer.from_dir(gaz_dir)
+
+    input_dir = str(tmp_path / "in")
+    ts = datetime.datetime(2024, 1, 1)
+    spark.createDataFrame(
+        [("conv_gaz", 0, "assistant", "حدثنا زربقان بن مهلهل عن مالك عن نافع", None, ts)],
+        TRANSCRIPTS_SCHEMA,
+    ).unionByName(synthetic_transcripts(spark, 4, turns_per_conv=3)).write.parquet(input_dir)
+
+    graph_dir = tmp_path / "graph"
+    query = start_graph_stream(
+        spark, input_dir, str(graph_dir), str(tmp_path / "ckpt"),
+        spark.sparkContext.broadcast(gazetteer), available_now=True,
+    )
+    query.awaitTermination(timeout=180)
+
+    batch = build_graph(spark, spark.read.parquet(input_dir), gazetteer=gazetteer)
+
+    def rows(df):
+        return {tuple(tuple(v) if isinstance(v, list) else v for v in r)
+                for r in df.collect()}
+
+    streamed_nodes = rows(spark.read.parquet(str(graph_dir / "nodes"))
+                          .select(batch.nodes.columns))
+    key = batch.nodes.columns.index("key")
+    assert normalize(canonical) in {r[key] for r in streamed_nodes}
+    assert streamed_nodes == rows(batch.nodes)
+    assert rows(spark.read.parquet(str(graph_dir / "edges"))
+                .select(batch.edges.columns)) == rows(batch.edges)
+    batch.unpersist()
