@@ -29,6 +29,11 @@ enter it in one of two shapes:
   :func:`nodes_from_combined` / :func:`edges_from_combined`; needs one
   row per turn), the stream's per-bucket upsert and the compaction.
 
+The fused build's Hadith nodes need no aggregation: each one's writers
+all sit in one turn, and the annotate kernel counts them into the lean
+extraction's flat ``href_texts`` / ``n_href`` / ``href_slot`` columns,
+so :func:`build_hadith_nodes_turn_local` is a plain column projection.
+
 Both shapes run the one rule, so a streamed, compacted or resumed graph
 equals the one-shot build.
 
@@ -187,74 +192,47 @@ def build_nodes(
 
 
 def build_hadith_nodes_turn_local(extracted: DataFrame) -> DataFrame:
-    """Hadith (doc-scoped) nodes as a pure narrow projection — no shuffle.
+    """Hadith (doc-scoped) nodes as a plain column projection — no
+    shuffle, no lambdas.
 
     A Hadith node's key is the turn's ``doc_id``, so every row that could
     merge into it comes from that one turn: HADITH_REF mention spans,
     the per-doc metadata row, and HADITH_REF triple endpoints
-    (builder.py:149-167, 313-322).  All of those are available in the
-    annotate output's array columns, so the whole MERGE collapses to a
-    per-row expression:
+    (builder.py:149-167, 313-322).  The annotate kernel already counts
+    them per text into the lean extraction's flat columns (``href_texts``,
+    ``n_href``, ``href_slot``, operators/ner.EXTRACTED_SCHEMA), so the
+    whole MERGE is column arithmetic:
 
     * name_ar / confidence: the last writer is the metadata row or a
       HADITH_REF endpoint — both carry (doc_id, 1.0) — so the outcome is
       constant.
-    * variants: {doc_id} ∪ {HADITH_REF mention surface texts}.
-    * mention_count: 1 (metadata) + #HADITH_REF mentions + #HADITH_REF
-      endpoints.
+    * variants: {doc_id} ∪ href_texts, sorted.
+    * mention_count: 1 (metadata) + n_href.
+    * best_emit: the global agg's winner ordinal, the max emit among the
+      turn's candidate rows — the last HADITH_REF endpoint (3e9 +
+      href_slot) when there is one, else the metadata row (2e9);
+      mention emits (< 2e9) never win.
 
     Equivalence with the global groupBy strategy is asserted in
     tests/test_pipeline_scale.py; requires one input row per turn (the
     transcripts-table natural key).
-
-    ``extracted`` columns: conv_id, turn_idx, doc_id,
-    mentions array<struct<..entity_type,text..>>, triples array<struct<..>>.
     """
-    is_href = lambda m: m["entity_type"] == "HADITH_REF"  # noqa: E731
-    href_mentions = F.filter("mentions", is_href)
-    n_href_endpoints = F.size(
-        F.filter("triples", lambda t: t["subj_type"] == "HADITH_REF")
-    ) + F.size(F.filter("triples", lambda t: t["obj_type"] == "HADITH_REF"))
-
-    # the global agg's winner ordinal for this key: max emit among the
-    # turn's candidate rows — HADITH_REF triple endpoints (3e9 + 2*rel
-    # [+1 for obj]) when present, else the metadata row (2e9); mention
-    # emits (< 2e9) never win
-    endpoint_emit = F.aggregate(
-        "triples",
-        F.lit(2_000_000_000).cast("long"),
-        lambda acc, t: F.greatest(
-            acc,
-            F.when(
-                t["subj_type"] == "HADITH_REF",
-                F.lit(3_000_000_000) + t["rel_idx"].cast("long") * 2,
-            ).otherwise(F.lit(0).cast("long")),
-            F.when(
-                t["obj_type"] == "HADITH_REF",
-                F.lit(3_000_000_000) + t["rel_idx"].cast("long") * 2 + 1,
-            ).otherwise(F.lit(0).cast("long")),
-        ),
-    )
-
     return extracted.select(
         F.lit("Hadith").alias("label"),
         F.col("doc_id").alias("key"),
         F.col("doc_id").alias("name_ar"),
         F.lit(1.0).alias("confidence"),
-        F.array_sort(
-            F.array_distinct(
-                F.concat(
-                    F.array(F.col("doc_id")),
-                    F.transform(href_mentions, lambda m: m["text"]),
-                )
-            )
+        # sort_array, not array_sort: array_sort's default comparator is
+        # a lambda; with no null element both give the same order
+        F.sort_array(
+            F.array_distinct(F.concat(F.array("doc_id"), F.col("href_texts")))
         ).alias("variants"),
-        (F.lit(1) + F.size(href_mentions) + n_href_endpoints)
-        .cast("long")
-        .alias("mention_count"),
+        (F.col("n_href") + 1).cast("long").alias("mention_count"),
         F.col("conv_id").alias("best_conv"),
         F.col("turn_idx").cast("int").alias("best_turn"),
-        endpoint_emit.alias("best_emit"),
+        F.coalesce(
+            F.col("href_slot") + F.lit(3_000_000_000), F.lit(2_000_000_000)
+        ).cast("long").alias("best_emit"),
         F.lit("").alias("book_ref"),
         F.lit("").alias("chapter"),
     )
@@ -354,9 +332,10 @@ _COMBINED_SCHEMA = (
     "mention_count long, best_conv string, best_turn int, best_emit long"
 )
 # Hadith (doc-scoped) nodes are deliberately NOT part of the fused output:
-# at one row per turn they would double the cached row count with variant
-# arrays, and build_hadith_nodes_turn_local is a near-free narrow JVM
-# projection over the already-cached extraction.
+# at one Python row per turn they cost more CPU than they save (ROADMAP
+# Direction 2), while build_hadith_nodes_turn_local is a plain column
+# projection of the annotate kernel's flat Hadith-ref columns over the
+# already-cached extraction.
 
 
 def fused_graph_outputs(extracted: DataFrame, resolution_bc) -> DataFrame:

@@ -40,14 +40,28 @@ ANNOTATED_SCHEMA = (
     f"mentions array<{MENTION_STRUCT}>, triples array<{TRIPLE_STRUCT}>"
 )
 
+# The lean extraction the KG build reads: the fact arrays plus three
+# flat per-turn facts of the turn's Hadith node (operators/graph.
+# build_hadith_nodes_turn_local) — ``href_texts``, the HADITH_REF
+# mention texts; ``n_href``, the HADITH_REF mentions plus HADITH_REF
+# triple endpoints; ``href_slot``, the max ``2*rel_idx + side`` (subj 0,
+# obj 1) over those endpoints, null when there are none.  All three are
+# functions of the text alone, so the memo serves them as is.
 EXTRACTED_SCHEMA = (
     "conv_id string, turn_idx int, doc_id string, "
-    f"mentions array<{MENTION_STRUCT}>, triples array<{TRIPLE_STRUCT}>"
+    f"mentions array<{MENTION_STRUCT}>, triples array<{TRIPLE_STRUCT}>, "
+    "href_texts array<string>, n_href int, href_slot int"
 )
 
 LABELED_ANNOTATED_SCHEMA = ANNOTATED_SCHEMA  # same shape, text-free path
 
 _PASSTHROUGH = ["conv_id", "turn_idx", "role", "tool", "ts"]
+
+# the per-text annotate result, as the memo holds it
+_HIT_FIELDS = (
+    "norm_text", "tokens", "labels", "mentions", "triples",
+    "href_texts", "n_href", "href_slot",
+)
 
 # Per-task memo bound for the distinct-text annotate cache: beyond this
 # many distinct texts in one task the memo stops admitting new entries
@@ -122,12 +136,21 @@ def annotate_transcripts(
     memo is bounded (``_ANNOTATE_MEMO_CAP``) and task-scoped, so
     executor memory stays flat at any corpus size.
 
-    ``extraction_only=True`` emits just (conv_id, turn_idx, doc_id,
-    mentions, triples) — the columns the KG build consumes — so the
-    Arrow crossing does not serialize norm_text/tokens/labels for 10^N
-    turns only for the consumer to drop them (guide §4: the boundary
-    ships only what downstream reads).
+    ``extraction_only=True`` emits ``EXTRACTED_SCHEMA`` instead: (conv_id,
+    turn_idx, doc_id, mentions, triples) plus the three Hadith-node
+    columns (href_texts, n_href, href_slot) — the columns the KG build
+    consumes — so the Arrow crossing does not serialize norm_text/
+    tokens/labels for 10^N turns only for the consumer to drop them
+    (guide §4: the boundary ships only what downstream reads), and the
+    Hadith node is a plain projection of the extraction.
     """
+    if extraction_only:
+        transcripts = transcripts.select("conv_id", "turn_idx", "text")
+        passthrough, schema = ["conv_id", "turn_idx"], EXTRACTED_SCHEMA
+        computed = ["mentions", "href_texts", "n_href", "href_slot"]
+    else:
+        passthrough, schema = _PASSTHROUGH, ANNOTATED_SCHEMA
+        computed = ["norm_text", "tokens", "labels", "mentions"]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from islamic_ner_spark.functions.annotate import annotate_raw
@@ -144,20 +167,32 @@ def annotate_transcripts(
                 mentions, triples = mentions_and_triples(
                     tokens, labels, _DOC_SENTINEL
                 )
-                # does any triple carry the doc-dependent stand-in?
-                needs_doc = any(
-                    (t[3] == "HADITH_REF" and t[4] == -1)
-                    or (t[7] == "HADITH_REF" and t[8] == -1)
+                href_texts = [m[1] for m in mentions if m[2] == "HADITH_REF"]
+                href_slots = [
+                    2 * t[0] + side
                     for t in triples
+                    for side, etype in ((0, t[3]), (1, t[7]))
+                    if etype == "HADITH_REF"
+                ]
+                # in _HIT_FIELDS order, then: does any triple carry the
+                # doc-dependent stand-in?
+                hit = (
+                    ntext, tokens, labels, mentions, triples, href_texts,
+                    len(href_texts) + len(href_slots),
+                    max(href_slots, default=None),
+                    any(
+                        (t[3] == "HADITH_REF" and t[4] == -1)
+                        or (t[7] == "HADITH_REF" and t[8] == -1)
+                        for t in triples
+                    ),
                 )
-                hit = (ntext, tokens, labels, mentions, triples, needs_doc)
                 if len(memo) < memo_cap:
                     memo[text] = hit
             return hit
 
-        def doc_triples(triples, needs_doc, doc_id):
-            if not needs_doc:
-                return triples
+        def doc_triples(hit, doc_id):  # hit[4]: triples, hit[-1]: needs_doc
+            if not hit[-1]:
+                return hit[4]
             return [
                 (
                     t[0], t[1],
@@ -166,54 +201,25 @@ def annotate_transcripts(
                     doc_id if (t[7] == "HADITH_REF" and t[8] == -1) else t[6],
                     t[7], t[8], t[9], t[10], t[11],
                 )
-                for t in triples
+                for t in hit[4]
             ]
 
         for batch in batches:
             doc_ids = (
                 batch["conv_id"].astype(str) + ":" + batch["turn_idx"].astype(str)
             )
-            if extraction_only:
-                mention_rows, triple_rows = [], []
-                for text, doc_id in zip(batch["text"], doc_ids):
-                    _, _, _, mentions, triples, needs_doc = annotate_text(text)
-                    mention_rows.append(mentions)
-                    triple_rows.append(doc_triples(triples, needs_doc, doc_id))
-                yield pd.DataFrame(
-                    {
-                        "conv_id": batch["conv_id"],
-                        "turn_idx": batch["turn_idx"],
-                        "doc_id": doc_ids,
-                        "mentions": mention_rows,
-                        "triples": triple_rows,
-                    }
-                )
-                continue
-            norm_texts, token_rows, label_rows = [], [], []
-            mention_rows, triple_rows = [], []
-            for text, doc_id in zip(batch["text"], doc_ids):
-                ntext, tokens, labels, mentions, triples, needs_doc = (
-                    annotate_text(text)
-                )
-                norm_texts.append(ntext)
-                token_rows.append(tokens)
-                label_rows.append(labels)
-                mention_rows.append(mentions)
-                triple_rows.append(doc_triples(triples, needs_doc, doc_id))
-            out = batch[_PASSTHROUGH].copy()
+            hits = [annotate_text(text) for text in batch["text"]]
+            out = batch[passthrough].copy()
             out["doc_id"] = doc_ids
-            out["norm_text"] = norm_texts
-            out["tokens"] = token_rows
-            out["labels"] = label_rows
-            out["mentions"] = mention_rows
-            out["triples"] = triple_rows
+            for name in computed:
+                field = _HIT_FIELDS.index(name)
+                out[name] = [hit[field] for hit in hits]
+            out["triples"] = [
+                doc_triples(hit, doc_id) for hit, doc_id in zip(hits, doc_ids)
+            ]
             yield out
 
-    if extraction_only:
-        return transcripts.select("conv_id", "turn_idx", "text").mapInPandas(
-            run, schema=EXTRACTED_SCHEMA
-        )
-    return transcripts.mapInPandas(run, schema=ANNOTATED_SCHEMA)
+    return transcripts.mapInPandas(run, schema=schema)
 
 
 def annotate_labeled(labeled: DataFrame) -> DataFrame:

@@ -66,6 +66,7 @@ from islamic_ner_spark.operators.linking import (
 from islamic_ner_spark.operators.materialize import cache, owned, release
 from islamic_ner_spark.operators.ner import annotate_transcripts
 from islamic_ner_spark.operators.relations import extract_mentions, extract_triples
+from islamic_ner_spark.plans.staging import code_digest
 from islamic_ner_spark.sources import tables
 from islamic_ner_spark.sources.gazetteer import Gazetteer
 
@@ -86,7 +87,7 @@ class GraphBuildResult:
     resolution: DataFrame
     nodes: DataFrame
     edges: DataFrame
-    extracted: DataFrame  # (conv, turn, doc, mentions, triples): cached, or staged
+    extracted: DataFrame  # the lean extraction: cached, or staged
     annotate: Callable[[], DataFrame]  # plans the ``annotated`` view
     persisted: list = field(default_factory=list)
 
@@ -184,8 +185,8 @@ def _annotate_resumable(
     """Bucketed, partition-resumable annotate stage.
 
     Stages the lean extraction (``annotate_transcripts(...,
-    extraction_only=True)``): conv_id, turn_idx, doc_id, mentions,
-    triples — the only columns the KG stages read.
+    extraction_only=True)``, ``EXTRACTED_SCHEMA``) — the only columns
+    the KG stages read.
 
     Buckets are committed in ``ANNOTATE_WAVES`` independent append jobs,
     each followed by an incremental manifest update — so a killed job
@@ -321,9 +322,10 @@ def build_graph(
     cache goes into the result's ``persisted`` owner, which the caller
     releases with ``GraphBuildResult.unpersist()``.  With ``work_dir``
     every stage materializes to parquet + manifest and re-runs resume
-    from completed work; ``annotated`` is then the staged lean
+    from completed work; ``extracted`` is then the staged lean
     extraction, and only this path computes the input fingerprint that
-    keys the staged tables.
+    keys the staged tables.  On both paths ``annotated`` is the full
+    annotation (``ANNOTATED_SCHEMA``), planned on access.
 
     Input contract: ``transcripts`` has at most one row per
     (conv_id, turn_idx) — the transcripts table's natural key per
@@ -333,35 +335,34 @@ def build_graph(
     gazetteer = gazetteer or Gazetteer.from_dir(gazetteer_dir)
     gazetteer_bc = spark.sparkContext.broadcast(gazetteer)
     persisted: list = []
+    # the full annotated view is planned on access (for audits/stats)
+    annotate = partial(annotate_transcripts, transcripts, gazetteer_bc)
 
     if work_dir:
-        fingerprint = _input_fingerprint(transcripts, gazetteer, gazetteer_dir, input_token)
+        fingerprint = _input_fingerprint(transcripts, gazetteer, input_token)
         extracted = _annotate_resumable(
             spark, transcripts, gazetteer_bc, work_dir, fingerprint, n_buckets
         )
         return _build_from_annotated(
-            spark, extracted, lambda: extracted, gazetteer_bc, persisted,
+            spark, extracted, annotate, gazetteer_bc, persisted,
             work_dir=work_dir, fingerprint=fingerprint,
         )
     # Only the extraction outputs feed the KG stages; tokens/labels/
     # norm_text are the bulk of the row, so the build materializes a
-    # LEAN annotate pass (same memoized kernel, 5-column output —
-    # the Arrow boundary never serializes the dropped columns, and
-    # the input projection prunes role/tool/ts from the scan).  The
-    # full annotated view is planned on access (for audits/stats).
+    # LEAN annotate pass (same memoized kernel, flat EXTRACTED_SCHEMA
+    # output — the Arrow boundary never serializes the dropped columns,
+    # and the input projection prunes role/tool/ts from the scan).
     extracted = cache(annotate_transcripts(
         transcripts, gazetteer_bc, extraction_only=True
     ), persisted)
-    return _build_from_annotated(
-        spark, extracted, partial(annotate_transcripts, transcripts, gazetteer_bc),
-        gazetteer_bc, persisted,
-    )
+    return _build_from_annotated(spark, extracted, annotate, gazetteer_bc, persisted)
 
 
 def _input_fingerprint(
-    transcripts: DataFrame, gazetteer: Gazetteer, gazetteer_dir: str, input_token: str
+    transcripts: DataFrame, gazetteer: Gazetteer, input_token: str
 ) -> str:
-    """The staged tables' key: ``input_token`` folds the input identity
+    """The staged tables' key: the engine code, every gazetteer entry and
+    the input.  ``input_token`` folds the input identity
     (path, row caps) in so a work_dir is never silently reused across
     inputs.  Even without a token, a cheap intrinsic identity — schema +
     the source file listing (stable across job restarts, unlike plan/expr
@@ -372,11 +373,16 @@ def _input_fingerprint(
         source_files = sorted(transcripts.inputFiles())
     except Exception:  # non-file-backed plans (e.g. in-memory test frames)
         source_files = []
-    # "v3": the annotate stage stages the lean extraction — the version
-    # bump invalidates work_dirs staged by older code so a resume never
-    # appends lean buckets to a table of full-schema ones.
+    # every entry, through the three views the matcher and the resolver
+    # read; the engine code digest makes a resume never append buckets
+    # of one extraction schema to a table of another
+    entries = json.dumps(
+        [gazetteer.lookup, sorted(gazetteer.canonical_map.items()),
+         gazetteer.entity_metadata],
+        ensure_ascii=False,
+    )
     return _fingerprint(
-        "v3", gazetteer_dir, sorted(gazetteer.lookup)[:50], input_token,
+        code_digest(), hashlib.sha256(entries.encode()).hexdigest(), input_token,
         input_identity, hashlib.sha256("\n".join(source_files).encode()).hexdigest(),
     )
 

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from islamic_ner_spark.operators.materialize import cache, owned
+from islamic_ner_spark.sources.gazetteer import _in_archive
 
 PACKAGE_ROOT = Path(__file__).resolve().parents[1]
 STAGE_ROOT = PACKAGE_ROOT.parent / ".stage"
@@ -67,17 +68,30 @@ def _meta_file(group: str) -> Path:
     return STAGE_ROOT / group / "_STAGE_META.json"
 
 
+def tree_digest(root) -> str:
+    """sha256 over the relative path and bytes of every file under
+    ``root``, a ``Path`` or a ``zipfile.Path`` (``__pycache__`` skipped)."""
+    h = hashlib.sha256()
+
+    def walk(node, prefix: str) -> None:
+        for child in sorted(node.iterdir(), key=lambda c: c.name):
+            if child.is_dir():
+                if child.name != "__pycache__":
+                    walk(child, f"{prefix}{child.name}/")
+            else:
+                h.update(f"{prefix}{child.name}".encode() + b"\0")
+                h.update(hashlib.sha256(child.read_bytes()).digest())
+
+    walk(root, "")
+    return h.hexdigest()
+
+
 @functools.lru_cache(maxsize=1)
 def code_digest() -> str:
-    """sha256 over the path and bytes of every file under the package
-    (code and gazetteer data, ``__pycache__`` skipped): any edit to the
-    engine makes every stage stale."""
-    h = hashlib.sha256()
-    for path in sorted(PACKAGE_ROOT.rglob("*")):
-        if path.is_file() and "__pycache__" not in path.parts:
-            h.update(str(path.relative_to(PACKAGE_ROOT)).encode() + b"\0")
-            h.update(hashlib.sha256(path.read_bytes()).digest())
-    return h.hexdigest()
+    """The engine's :func:`tree_digest`, code and gazetteer data: any
+    edit to the engine makes every stage stale.  Read from the package's
+    zip when it ships as ``spark-submit --py-files pkg.zip``."""
+    return tree_digest(_in_archive(PACKAGE_ROOT))
 
 
 def _is_current(group: str, sf_dir: str) -> bool:

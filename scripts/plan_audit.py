@@ -113,6 +113,12 @@ def main() -> int:
         "SortMergeJoin" not in plan,
         "no sort-merge join in the edge dataflow",
     )
+    check(
+        "kg nodes: no interpreted lambdas",
+        "lambdafunction" not in plan_of(result.nodes).lower(),
+        "the fused build's node plan holds no higher-order lambda: Hadith "
+        "nodes are a plain projection of the extraction's href columns",
+    )
     result.unpersist()
 
     # -- resolution: the linkable strings read the extraction once per

@@ -71,23 +71,55 @@ def test_memoized_annotate_matches_direct(spark, matcher_gazetteer) -> None:
     assert saw_standin, "corpus must exercise the stand-in rewrite path"
 
 
+_SHARED = ["conv_id", "turn_idx", "doc_id", "mentions", "triples"]
+
+
 def test_extraction_only_matches_full(spark, matcher_gazetteer) -> None:
     bc = spark.sparkContext.broadcast(matcher_gazetteer)
     df = spark.createDataFrame(_rows(), TRANSCRIPTS_SCHEMA)
-    full = annotate_transcripts(df, bc).select(
-        "conv_id", "turn_idx", "doc_id", "mentions", "triples"
-    )
-    lean = annotate_transcripts(df, bc, extraction_only=True)
-    key = ["conv_id", "turn_idx"]
+    full = annotate_transcripts(df, bc).select(*_SHARED)
+    lean = annotate_transcripts(df, bc, extraction_only=True).select(*_SHARED)
     a = sorted(map(tuple, full.collect()), key=lambda r: (r[0], r[1]))
     b = sorted(map(tuple, lean.collect()), key=lambda r: (r[0], r[1]))
     assert a == b
     # the lean pass must not require role/tool/ts at all
     lean_cols = annotate_transcripts(
         df.select("conv_id", "turn_idx", "text"), bc, extraction_only=True
-    )
+    ).select(*_SHARED)
     c = sorted(map(tuple, lean_cols.collect()), key=lambda r: (r[0], r[1]))
     assert a == c
+
+
+def test_href_columns_match_full_annotation(spark, matcher_gazetteer) -> None:
+    """The lean extraction's Hadith-node columns are what the full
+    annotation's arrays say, with the memo on (one partition, so every
+    repeated text is a hit) and off."""
+    bc = spark.sparkContext.broadcast(matcher_gazetteer)
+    df = spark.createDataFrame(_rows(), TRANSCRIPTS_SCHEMA).coalesce(1)
+
+    def href(mentions, triples):
+        slots = [
+            2 * t["rel_idx"] + side
+            for t in triples
+            for side, etype in ((0, t["subj_type"]), (1, t["obj_type"]))
+            if etype == "HADITH_REF"
+        ]
+        texts = [m["text"] for m in mentions if m["entity_type"] == "HADITH_REF"]
+        return texts, len(texts) + len(slots), max(slots, default=None)
+
+    expected = {
+        (r["conv_id"], r["turn_idx"]): href(r["mentions"], r["triples"])
+        for r in annotate_transcripts(df, bc).collect()
+    }
+    assert any(v[0] for v in expected.values())
+    assert any(v[2] is not None for v in expected.values())
+    for memo_cap in (200_000, 0):
+        lean = annotate_transcripts(df, bc, extraction_only=True, memo_cap=memo_cap)
+        got = {
+            (r["conv_id"], r["turn_idx"]): (list(r["href_texts"]), r["n_href"], r["href_slot"])
+            for r in lean.collect()
+        }
+        assert got == expected
 
 
 def test_memo_cap_zero_still_exact(spark, matcher_gazetteer) -> None:

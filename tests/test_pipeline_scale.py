@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from islamic_ner_spark.plans.pipeline import build_graph
@@ -124,17 +126,18 @@ def test_fused_edge_merge_duplicates_first_writer_wins(spark) -> None:
 
     extracted = spark.createDataFrame([
         # turn c:0 — same edge key twice (x and x2 both resolve to X, with
-        # different evidence), one other edge
+        # different evidence), one other edge; HADITH_REF subj endpoints
+        # at rel 0 and 2 (href_texts, n_href, href_slot = [], 2, 2*2)
         ("c", 0, "c:0", [], [
             triple(0, "MENTIONS_CONCEPT", "h", "HADITH_REF", "x", "CONCEPT", 0.6, "first-ev"),
             triple(1, "NARRATED_FROM", "a", "SCHOLAR", "b", "SCHOLAR", 0.9, "chain"),
             triple(2, "MENTIONS_CONCEPT", "h", "HADITH_REF", "x2", "CONCEPT", 0.6, "second-ev"),
-        ]),
+        ], [], 2, 4),
         # turn c:1 — same canonicals as c:0 but a different source_hadith:
         # no merge
         ("c", 1, "c:1", [], [
             triple(0, "MENTIONS_CONCEPT", "h", "HADITH_REF", "x", "CONCEPT", 0.6, "other-turn"),
-        ]),
+        ], [], 1, 0),
     ], EXTRACTED_SCHEMA).coalesce(1)
     resolution = {
         ("x", "CONCEPT"): ("X", 1.0), ("x2", "CONCEPT"): ("X", 0.9),
@@ -154,6 +157,81 @@ def test_fused_edge_merge_duplicates_first_writer_wins(spark) -> None:
     assert len(merged) == 1
     assert merged[0][5:8] == ("c:0", 0.6, "first-ev") and merged[0][9] == 0
     assert len(fused_rows) == 3
+
+
+def test_hadith_projection_matches_global(spark) -> None:
+    """The fused build's Hadith nodes, projected from the extraction's
+    flat href columns, equal the global groupBy MERGE on every column,
+    the winner ordinals included.  The synthetic corpora put HADITH_REF
+    only on the subj side of a triple, so this is the only coverage of
+    an obj-side (side 1) endpoint."""
+    from islamic_ner_spark.operators.graph import (
+        build_hadith_nodes_turn_local,
+        build_nodes,
+        fused_graph_outputs,
+        nodes_from_combined,
+    )
+    from islamic_ner_spark.operators.linking import resolve_triples
+    from islamic_ner_spark.operators.ner import EXTRACTED_SCHEMA
+    from islamic_ner_spark.operators.relations import extract_mentions, extract_triples
+    from islamic_ner_spark.plans.pipeline import resolve_mentions_table
+
+    def triple(rel_idx, subj, subj_type, obj, obj_type):
+        return (rel_idx, "P", subj, subj_type, 0, 1, obj, obj_type, 2, 3, 0.6, "ev")
+
+    def mention(idx, text, entity_type):
+        return (idx, text, entity_type, idx, idx + 1)
+
+    extracted = spark.createDataFrame([
+        # repeated HADITH_REF mention texts, no endpoints
+        ("h", 0, "h:0", [
+            mention(0, "r5", "HADITH_REF"), mention(1, "x", "CONCEPT"),
+            mention(2, "r5", "HADITH_REF"),
+        ], [], ["r5", "r5"], 2, None),
+        # HADITH_REF endpoints on the subj side (rel 0) and the obj side
+        # (rel 1): slots 0 and 2*1+1
+        ("h", 1, "h:1", [mention(0, "a", "SCHOLAR")], [
+            triple(0, "h:1", "HADITH_REF", "x", "CONCEPT"),
+            triple(1, "a", "SCHOLAR", "h:1", "HADITH_REF"),
+        ], [], 2, 3),
+        # both: two mentions, three endpoints (slots 0, 2, 2*2+1)
+        ("h", 2, "h:2", [
+            mention(0, "rb", "HADITH_REF"), mention(1, "ra", "HADITH_REF"),
+            mention(2, "x", "CONCEPT"),
+        ], [
+            triple(0, "rb", "HADITH_REF", "x", "CONCEPT"),
+            triple(1, "ra", "HADITH_REF", "x", "CONCEPT"),
+            triple(2, "x", "CONCEPT", "ra", "HADITH_REF"),
+        ], ["rb", "ra"], 5, 5),
+        # neither
+        ("h", 3, "h:3", [mention(0, "a", "SCHOLAR"), mention(1, "b", "SCHOLAR")], [
+            triple(0, "a", "SCHOLAR", "b", "SCHOLAR"),
+        ], [], 0, None),
+    ], EXTRACTED_SCHEMA).coalesce(1)
+    resolution = {
+        ("x", "CONCEPT"): ("X", 1.0), ("a", "SCHOLAR"): ("A", 1.0),
+        ("b", "SCHOLAR"): ("B", 0.9),
+    }
+    resolution_df = spark.createDataFrame(
+        [(t, e, c, conf, "exact") for (t, e), (c, conf) in resolution.items()],
+        "text string, entity_type string, canonical_name string, "
+        "confidence double, match_type string",
+    )
+    glob = build_nodes(
+        resolve_mentions_table(extract_mentions(extracted), resolution_df),
+        extracted.select("conv_id", "turn_idx", "doc_id"),
+        resolve_triples(extract_triples(extracted), resolution_df),
+    )
+    hadith = _rows(build_hadith_nodes_turn_local(extracted), NODE_COLS)
+    assert hadith == _rows(glob.where(F.col("label") == "Hadith"), NODE_COLS)
+    assert {r[1]: (r[4], r[5], r[8]) for r in hadith} == {
+        "h:0": (("h:0", "r5"), 3, 2_000_000_000),
+        "h:1": (("h:1",), 3, 3_000_000_003),
+        "h:2": (("h:2", "ra", "rb"), 6, 3_000_000_005),
+        "h:3": (("h:3",), 1, 2_000_000_000),
+    }
+    fused = fused_graph_outputs(extracted, spark.sparkContext.broadcast(resolution))
+    assert _rows(nodes_from_combined(fused, extracted), NODE_COLS) == _rows(glob, NODE_COLS)
 
 
 def test_global_fallback_matches_fused(spark, monkeypatch) -> None:
@@ -181,9 +259,59 @@ def test_workdir_build_matches_in_memory(spark, tmp_path) -> None:
     in_memory = build_graph(spark, transcripts)
     assert _rows(staged.edges, EDGE_COLS) == _rows(in_memory.edges, EDGE_COLS)
     assert _rows(staged.nodes, NODE_COLS) == _rows(in_memory.nodes, NODE_COLS)
-    assert staged.annotated.columns == [
+    assert staged.extracted.columns == [
         "conv_id", "turn_idx", "doc_id", "mentions", "triples",
+        "href_texts", "n_href", "href_slot",
     ]
+    # both paths plan the same full annotation as ``annotated``
+    assert staged.annotated.schema == in_memory.annotated.schema
+
+
+def test_workdir_rebuilds_when_any_gazetteer_entry_changes(spark, tmp_path) -> None:
+    """The staged tables are keyed on every gazetteer entry: moving a
+    variant that sorts past the first 50 onto another canonical must
+    rebuild the staged annotate and every later stage, never resume."""
+    import json
+
+    from islamic_ner_spark.plans.pipeline import DEFAULT_GAZETTEER_DIR
+    from islamic_ner_spark.sources.gazetteer import (
+        GAZETTEER_FILES,
+        Gazetteer,
+        parse_gazetteer_text,
+    )
+
+    entries = [
+        (entity_type, variants)
+        for name, entity_type in GAZETTEER_FILES
+        for variants in parse_gazetteer_text(
+            (Path(DEFAULT_GAZETTEER_DIR) / name).read_text(encoding="utf-8")
+        )
+    ]
+    before = Gazetteer(entries)
+    # نافع becomes a variant of مالك: no variant is added or dropped
+    after = Gazetteer(
+        (t, ["مالك", "نافع"] if v == ["نافع"] else v) for t, v in entries
+    )
+    assert sorted(before.lookup) == sorted(after.lookup)
+    assert sorted(before.lookup).index("نافع") >= 50
+    assert before.lookup["نافع"] != after.lookup["نافع"]
+
+    transcripts = synthetic_transcripts(spark, 12, turns_per_conv=3)
+    work = str(tmp_path / "work")
+    manifest = tmp_path / "work" / "annotated" / "_manifest.json"
+    first = build_graph(spark, transcripts, gazetteer=before, work_dir=work, n_buckets=4)
+    first_nodes = _rows(first.nodes, NODE_COLS)
+    first_key = json.loads(manifest.read_text())["fingerprint"]
+
+    staged = build_graph(spark, transcripts, gazetteer=after, work_dir=work, n_buckets=4)
+    rebuilt = json.loads(manifest.read_text())
+    assert rebuilt["fingerprint"] != first_key
+    assert rebuilt["resumed"] is False
+    in_memory = build_graph(spark, transcripts, gazetteer=after)
+    assert _rows(staged.nodes, NODE_COLS) == _rows(in_memory.nodes, NODE_COLS)
+    assert _rows(staged.edges, EDGE_COLS) == _rows(in_memory.edges, EDGE_COLS)
+    assert _rows(staged.nodes, NODE_COLS) != first_nodes
+    in_memory.unpersist()
 
 
 def test_per_turn_text_equality_invariant(spark) -> None:
@@ -269,7 +397,7 @@ def test_workdir_resume_crash_between_commit_and_manifest(spark, tmp_path) -> No
     transcripts = synthetic_transcripts(spark, 12, turns_per_conv=3)
     work = str(tmp_path / "work")
     r1 = build_graph(spark, transcripts, work_dir=work, n_buckets=4)
-    clean_rows = r1.annotated.count()
+    clean_rows = r1.extracted.count()
     edges_1 = sorted(
         map(tuple, r1.edges.select("pred", "src_key", "tgt_key", "source_hadith").collect())
     )
@@ -284,7 +412,7 @@ def test_workdir_resume_crash_between_commit_and_manifest(spark, tmp_path) -> No
     (annotated_path / "_manifest.json").write_text(json.dumps(manifest))
 
     r2 = build_graph(spark, transcripts, work_dir=work, n_buckets=4)
-    assert r2.annotated.count() == clean_rows  # no duplicated turns
+    assert r2.extracted.count() == clean_rows  # no duplicated turns
     edges_2 = sorted(
         map(tuple, r2.edges.select("pred", "src_key", "tgt_key", "source_hadith").collect())
     )

@@ -136,6 +136,27 @@ def test_stage_goes_stale_when_engine_code_changes(tmp_path, monkeypatch) -> Non
     assert not staging._is_current("kg", "sf")
 
 
+def test_code_digest_reads_the_package_zip(tmp_path) -> None:
+    """Shipped as ``--py-files pkg.zip`` the package is no directory; the
+    digest must read the same files out of the archive, not hash an
+    empty tree."""
+    import zipfile
+
+    from islamic_ner_spark.plans import staging
+
+    root = staging.PACKAGE_ROOT
+    zip_path = tmp_path / "islamic_ner_spark.zip"
+    with zipfile.ZipFile(zip_path, "w") as zf:
+        for path in sorted(root.rglob("*")):
+            if path.is_file() and "__pycache__" not in path.parts:
+                zf.write(path, path.relative_to(root.parent))
+    in_zip = staging._in_archive(zip_path / "islamic_ner_spark")
+    assert isinstance(in_zip, zipfile.Path)
+    assert staging.tree_digest(in_zip) == staging.tree_digest(root)
+    (tmp_path / "empty").mkdir()
+    assert staging.tree_digest(root) != staging.tree_digest(tmp_path / "empty")
+
+
 def test_bfs_distances_hand_graph(spark) -> None:
     """bfs_distances on a hand-built edge table: path graph + branch +
     disconnected island; distances must be minimal and the island
