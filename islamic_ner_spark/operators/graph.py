@@ -499,10 +499,11 @@ def nodes_from_combined(combined: DataFrame, extracted: DataFrame) -> DataFrame:
     """Vocabulary candidates finish with a (tiny) global
     :func:`merge_node_rows`; Hadith nodes come from the narrow JVM
     projection over the cached extraction."""
-    vocab = (
-        combined.where(F.col("out") == "vnode")
-        .withColumn("book_ref", _hadith_provenance())
-        .withColumn("chapter", _hadith_provenance())
+    # one projection of one provenance expression: the fewest py4j round
+    # trips and one analysis (two withColumn calls analyze twice)
+    provenance = _hadith_provenance()
+    vocab = combined.where(F.col("out") == "vnode").withColumns(
+        {"book_ref": provenance, "chapter": provenance}
     )
     return merge_node_rows(vocab).unionByName(build_hadith_nodes_turn_local(extracted))
 

@@ -20,11 +20,17 @@ Scale shape (the whole point of this design):
   dimension (the map-side half of a broadcast hash join,
   entity_resolver.py:26-43), fused into the same batched Arrow pass as
 * L2 fuzzy scoring (SequenceMatcher vs same-type canonicals+variants;
-  entity_resolver.py:70-100), which skips a candidate whose exact difflib
-  upper bound cannot reach the threshold or the best score so far.
-  Both rungs are one per-string function (functions/resolve.resolve_string).
+  entity_resolver.py:70-100).  A batch of strings first meets one numpy
+  bound matrix against the type's candidate strings (difflib's
+  ``quick_ratio``, exact): a string no candidate can reach is "new" at
+  once, and only the rest are scored, skipping a candidate whose exact
+  difflib upper bound cannot reach the threshold or the best score so
+  far.  Both rungs are one batch function
+  (functions/resolve.resolve_strings) that both ladders call.
 * L3' "new" entities are clustered **jointly**: blocking by shared token,
-  pairwise SequenceMatcher ratio >= 0.8 scored in an Arrow batch, then
+  then pairwise ratio >= 0.8 through functions/resolve.similar_pairs —
+  the same vectorized bound over each block's pairs (or each Arrow
+  batch of pairs), SequenceMatcher only on its survivors — then
   connected components (large-star/small-star, or union-find on the
   driver) pick a deterministic canonical (lexicographic min).  This
   replaces the reference's order-dependent resolver mutation with
@@ -40,6 +46,7 @@ from __future__ import annotations
 import logging
 from typing import Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, SparkSession
@@ -106,26 +113,27 @@ MAX_BLOCK_SIZE = 1_000
 # blocks hold up to DRIVER_PAIR_LIMIT pairs; past either, distributed.
 # The driver's cost is linear in the blocked pairs (sum of n(n-1)/2 over
 # the kept blocks), so both counts were measured: build_resolution_table
-# over V scholar names, warm local[4] session on a 4-vCPU host, driver
-# vs distributed seconds, two runs each:
-#   names                             V   pairs  driver     distributed
-#   longtail_vocabulary(1, V, 200)    2k    37k  2.0  2.1   6.4  7.4
-#   (the benchmark's fixed pool)      5k   226k  4.7  4.9   8.0  8.0
-#                                    10k   900k 13.4 14.9  14.5 16.4
-#                                    20k  3.54M 30.2 43.1  39.6 43.5
-#   longtail_vocabulary(1, V, V/10)   2k    37k  1.6  1.9   4.7  4.8
-#   (blocks of ~20 names)             5k    92k  3.1  3.2   5.0  5.1
-#                                    10k   184k  3.9  4.6   6.0  6.1
-#                                    20k   367k  6.2  9.3   7.7  8.4
-#   "H بن Y", 999 names per hot H     2k   1.0M 11.8 13.4  17.0 13.5
-#   (blocks just under the cap)       5k   2.5M 23.8 22.0  29.9 26.1
-#                                    10k   5.0M 37.9 40.5  60.8 46.6
-# The driver was never slower (about even at pool-200 V=20k and hot
-# V=2k), so at 4 vCPUs neither limit is a crossover.  The string limit
-# bounds the collect where the few-pair shapes still clearly favour the
-# driver; the pair limit is the largest pair count measured.  Past it
-# one core is unmeasured, and a cluster with more cores scores the
-# distributed pairs in parallel.
+# over V scholar names plus its collect, warm local[4] session on a
+# 4-vCPU host, driver vs distributed seconds, two runs each, both ladders
+# scoring pairs through functions/resolve.similar_pairs (rows identical
+# between the two ladders, and to per-pair scalar scoring, on every row):
+#   names                             V   pairs  driver    distributed
+#   longtail_vocabulary(1, V, 200)    2k    37k  1.1  1.0   6.9  4.1
+#   (the benchmark's fixed pool)      5k   226k  1.0  1.1   4.1  3.9
+#                                    10k   900k  2.0  1.8   6.1  6.0
+#                                    20k  3.54M  5.9  5.1  15.4 13.3
+#   longtail_vocabulary(1, V, V/10)   2k    37k  0.7  0.7   2.8  2.5
+#   (blocks of ~20 names)             5k    92k  0.8  0.7   2.9  2.8
+#                                    10k   184k  1.1  1.3   3.5  3.3
+#                                    20k   367k  1.6  1.6   3.7  4.4
+#   "H بن Y", 999 names per hot H     2k   1.0M  2.2  2.3   5.3  5.0
+#   (blocks just under the cap)       5k   2.5M  3.7  3.5   9.5  8.9
+#                                    10k   5.0M  7.4  7.0  18.2 15.8
+# The driver was 2-4x faster on every row, so at 4 vCPUs neither limit
+# is a crossover and both stay.  The string limit bounds the collect;
+# the pair limit is the largest pair count measured.  Past it one core
+# is unmeasured, and a cluster with more cores scores the distributed
+# pairs in parallel.
 DRIVER_LADDER_LIMIT = 10_000
 DRIVER_PAIR_LIMIT = 5_000_000
 
@@ -158,9 +166,10 @@ def new_pair_edges(
     operators/capping helper) so one ubiquitous name particle cannot
     make the pair join quadratic in the vocabulary.  Both capping
     branches feed the shared bucket self-join
-    (operators/capping.bucket_self_join).  Pair scoring:
-    SequenceMatcher ratio >= 0.8 in an Arrow batch
-    (entity_resolver.py:70-100 semantics).
+    (operators/capping.bucket_self_join).  Pair scoring: ratio >= 0.8
+    (entity_resolver.py:70-100 semantics) of each Arrow batch of pairs
+    through functions/resolve.similar_pairs, the driver ladder's scorer:
+    the vectorized bound, then SequenceMatcher on its survivors.
     """
     from pyspark.sql import Window
 
@@ -188,11 +197,15 @@ def new_pair_edges(
     pairs = bucket_self_join(capped, block_key, "node", carry=("norm_text",))
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from islamic_ner_spark.functions.resolve import fuzzy_match
+        from islamic_ner_spark.functions.resolve import similar_pairs
 
         for batch in batches:
-            keep = [fuzzy_match(a, b)
-                    for a, b in zip(batch["norm_text_a"], batch["norm_text_b"])]
+            # the batch's pairs as one candidate chunk over its distinct texts
+            codes, texts = pd.factorize(pd.concat(
+                [batch["norm_text_a"], batch["norm_text_b"]], ignore_index=True))
+            a, b = codes[:len(batch)], codes[len(batch):]
+            similar = set(similar_pairs(list(texts), [(a, b)]))
+            keep = [pair in similar for pair in zip(a.tolist(), b.tolist())]
             yield batch.loc[keep, ["id_a", "id_b"]].set_axis(["src", "dst"], axis=1)
 
     return pairs.mapInPandas(score, schema="src string, dst string")
@@ -219,9 +232,9 @@ def canonicalize_from_pairs(nodes: DataFrame, pair_edges: DataFrame) -> DataFram
 def _canonicalize_new(spark: SparkSession, new_strings: DataFrame) -> DataFrame:
     """Joint clustering of unresolved strings.
 
-    Blocking (capped) -> pairwise SequenceMatcher >= 0.8 -> connected
-    components; the lexicographic-min norm_text of each component is the
-    canonical.  Identical to the reference for every test fixture."""
+    Blocking (capped) -> pairwise ratio >= 0.8 -> connected components;
+    the lexicographic-min norm_text of each component is the canonical.
+    Identical to the reference for every test fixture."""
     nodes = new_entity_nodes(new_strings.select("text", "entity_type", "norm_text"))
     # canonicalize_from_pairs runs connected_components, which materializes
     # the edge set — the blocked cache is no longer referenced after it
@@ -328,8 +341,8 @@ def resolve_strings_locally(
     ``DRIVER_PAIR_LIMIT`` the rows are ``None``: no pair is scored and
     nothing is logged, and the caller runs the distributed ladder.
 
-    The same rungs as the distributed path, rule for rule: the per-string
-    exact/fuzzy/new ladder (functions/resolve.resolve_string), token
+    The same rungs as the distributed path, rule for rule: the
+    exact/fuzzy/new ladder (functions/resolve.resolve_strings), token
     blocks over the new strings' nodes capped at ``MAX_BLOCK_SIZE``
     exploded (node, token) rows (a repeated token counts twice) with the
     same dropped-block WARNING, pairs scored as ``ratio(text of the
@@ -337,17 +350,19 @@ def resolve_strings_locally(
     union-find (components.min_label_components), whose component id's
     text after the last \\x1f is the canonical.
 
-    Pairs are scored node by node: each node's text is indexed once as a
-    matcher's ``seq2`` and scored against the smaller ids it shares a
-    kept block with, so no pair set is ever held — memory stays linear
-    in the vocabulary however many pairs the blocks generate."""
-    from difflib import SequenceMatcher
-
-    from islamic_ner_spark.functions.resolve import matcher_passes, resolve_string
+    Pairs are scored by functions/resolve.similar_pairs, block by block:
+    each kept block's upper triangle (members in id order) gets the
+    vectorized char-count bound in slices of a fixed byte budget, and
+    only the bound's survivors reach SequenceMatcher, each once even
+    when it shares two blocks — so no pair set beyond the survivors is
+    ever held, and memory stays linear in the vocabulary plus one
+    block's pairs."""
+    from islamic_ner_spark.functions.resolve import resolve_strings, similar_pairs
     from islamic_ner_spark.operators.capping import warn_dropped
 
-    scored = [(text, etype, *resolve_string(text, etype, gazetteer))
-              for text, etype in strings]
+    strings = list(strings)
+    scored = [(text, etype, *row)
+              for (text, etype), row in zip(strings, resolve_strings(strings, gazetteer))]
 
     # new_entity_nodes: node id -> (entity_type, normalized text)
     nodes = {f"{etype}\x1f{norm}": (etype, norm)
@@ -369,22 +384,21 @@ def resolve_strings_locally(
                key=lambda hot: (-hot[-1], hot[:-1])),
         MAX_BLOCK_SIZE,
     )
-    blocks_of: dict[str, list[list[str]]] = {}
-    for members in blocks.values():
-        if len(members) <= MAX_BLOCK_SIZE:
-            for node in members:
-                blocks_of.setdefault(node, []).append(members)
+    # positions in id order, so a block's upper triangle pairs each
+    # smaller id with a larger one
+    ids = sorted(nodes)
+    position = {node: i for i, node in enumerate(ids)}
 
-    def similar_pairs() -> Iterator[tuple[str, str]]:
-        matcher = SequenceMatcher(None)
-        for b, member_lists in blocks_of.items():
-            matcher.set_seq2(nodes[b][1])
-            for a in {a for members in member_lists for a in members if a < b}:
-                matcher.set_seq1(nodes[a][1])
-                if matcher_passes(matcher):
-                    yield a, b
+    def block_pairs() -> Iterator[tuple[np.ndarray, np.ndarray]]:
+        for members in blocks.values():
+            if len(members) <= MAX_BLOCK_SIZE:
+                # a repeated token lists its node twice; it pairs once
+                block = np.unique([position[node] for node in members])
+                a, b = np.triu_indices(len(block), 1)
+                yield block[a], block[b]
 
-    component = min_label_components(similar_pairs())
+    similar = similar_pairs([nodes[node][1] for node in ids], block_pairs())
+    component = min_label_components((ids[a], ids[b]) for a, b in similar)
 
     rows = []
     for text, etype, norm, canonical, confidence, match_type in scored:
@@ -397,16 +411,17 @@ def resolve_strings_locally(
 
 def score_strings_ladder(strings: DataFrame, gazetteer_bc: Broadcast) -> DataFrame:
     """Distinct strings -> per-string exact/fuzzy/new scoring in one
-    batched Arrow pass (the per-string half of the resolution ladder; the
-    'new' rows still need the joint canonicalization)."""
+    batched Arrow pass, each batch through functions/resolve.resolve_strings
+    (the per-string half of the resolution ladder; the 'new' rows still
+    need the joint canonicalization)."""
 
     def ladder(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from islamic_ner_spark.functions.resolve import resolve_string
+        from islamic_ner_spark.functions.resolve import resolve_strings
 
         gazetteer = gazetteer_bc.value
         for batch in batches:
-            scored = [resolve_string(text, etype, gazetteer)
-                      for text, etype in zip(batch["text"], batch["entity_type"])]
+            scored = resolve_strings(
+                zip(batch["text"], batch["entity_type"]), gazetteer)
             out = batch[["text", "entity_type"]].copy()
             for i, column in enumerate(RESOLUTION_COLUMNS[2:]):
                 out[column] = [row[i] for row in scored]

@@ -445,8 +445,12 @@ def _materialize_graph(
     # repeated turns (labeled input) or extreme vocabulary: global groupBy
     # merges; only the small aggregates are cached, since they are
     # consumed repeatedly and are cheaper to recompute-from-cache than the
-    # full rows are to columnar-compress
-    resolved_triples = resolve_triples(triples, resolution)
+    # full rows are to columnar-compress.  A unique-turn build is here
+    # because its resolution exceeds FUSED_VOCAB_LIMIT, too big to force
+    # a broadcast of (AQE still broadcasts a small one at runtime)
+    resolved_triples = resolve_triples(
+        triples, resolution, broadcast_resolution=not unique_turns
+    )
     doc_index = extracted.select("conv_id", "turn_idx", "doc_id")
     nodes = cache(build_nodes(
         resolve_mentions_table(mentions, resolution), doc_index, resolved_triples

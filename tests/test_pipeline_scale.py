@@ -251,6 +251,22 @@ def test_global_fallback_matches_fused(spark, monkeypatch) -> None:
     assert not fused.edges.is_cached
 
 
+def test_global_fallback_does_not_force_broadcast(spark, monkeypatch) -> None:
+    """A unique-turn build takes the global groupBy only because its
+    resolution exceeds FUSED_VOCAB_LIMIT, so its resolved triples carry
+    no broadcast hint on the resolution; the default view does."""
+    from islamic_ner_spark.plans import pipeline
+
+    def hinted(df) -> bool:
+        return "strategy=broadcast" in df._jdf.queryExecution().analyzed().toString()
+
+    monkeypatch.setattr(pipeline, "FUSED_VOCAB_LIMIT", 0)
+    fallback = build_graph(spark, synthetic_transcripts(spark, 8, turns_per_conv=2))
+    assert fallback.edges.is_cached
+    assert not hinted(fallback.edges) and not hinted(fallback.nodes)
+    assert hinted(fallback.resolved_triples)
+
+
 def test_workdir_build_matches_in_memory(spark, tmp_path) -> None:
     """The staged job runs the same fused pass over the staged lean
     extraction: identical node and edge multisets on every column."""

@@ -136,7 +136,10 @@ def _edits(text: str, rng: random.Random) -> list[str]:
 
 
 def test_pruned_fuzzy_matches_unpruned_reference(resolver_gazetteer) -> None:
-    from islamic_ner_spark.functions.resolve import best_fuzzy_candidate
+    from islamic_ner_spark.functions.resolve import (
+        best_fuzzy_candidate,
+        best_fuzzy_candidates,
+    )
     from islamic_ner_spark.operators.linking import LINKABLE_TYPES
     from islamic_ner_spark.plans.pipeline import DEFAULT_GAZETTEER_DIR
     from islamic_ner_spark.sources.gazetteer import Gazetteer
@@ -151,16 +154,23 @@ def test_pruned_fuzzy_matches_unpruned_reference(resolver_gazetteer) -> None:
         names += ["", normalize("محمد بن إسماعيل البخاريي")]
         hits = 0
         for entity_type in LINKABLE_TYPES:
-            for name in names:
-                expected = _unpruned_best_fuzzy(name, entity_type, gazetteer)
-                assert best_fuzzy_candidate(name, entity_type, gazetteer) == expected, (
+            expected = [_unpruned_best_fuzzy(name, entity_type, gazetteer)
+                        for name in names]
+            for name, best in zip(names, expected):
+                assert best_fuzzy_candidate(name, entity_type, gazetteer) == best, (
                     name, entity_type)
-                hits += expected is not None
+            # the bulk rung: one bound matrix, then the scalar on survivors
+            assert best_fuzzy_candidates(names, entity_type, gazetteer) == expected
+            hits += sum(best is not None for best in expected)
         assert len(names) > 300 and hits > 50
 
 
 def test_pruned_fuzzy_tie_keeps_earlier_canonical() -> None:
-    from islamic_ner_spark.functions.resolve import best_fuzzy_candidate, similarity_ratio
+    from islamic_ner_spark.functions.resolve import (
+        best_fuzzy_candidate,
+        best_fuzzy_candidates,
+        similarity_ratio,
+    )
     from islamic_ner_spark.sources.gazetteer import Gazetteer
 
     first, second, query = "محمد بن علي", "محمد بن علا", "محمد بن علو"
@@ -171,6 +181,82 @@ def test_pruned_fuzzy_tie_keeps_earlier_canonical() -> None:
             order[0], similarity_ratio(query, order[0]))
         assert best_fuzzy_candidate(query, "SCHOLAR", gazetteer) == _unpruned_best_fuzzy(
             query, "SCHOLAR", gazetteer)
+        assert best_fuzzy_candidates([query, first], "SCHOLAR", gazetteer) == [
+            (order[0], similarity_ratio(query, order[0])),
+            _unpruned_best_fuzzy(first, "SCHOLAR", gazetteer)]
+
+
+def test_bounded_pairs_match_unbounded(monkeypatch) -> None:
+    """``similar_pairs`` (the vectorized char-count bound, then
+    SequenceMatcher on its survivors) accepts exactly the pairs that
+    unbounded ``fuzzy_match`` accepts, in the order each pair is given,
+    however the bound is sliced into chunks."""
+    from itertools import combinations
+
+    import numpy as np
+
+    from islamic_ner_spark.functions import resolve
+
+    rng = random.Random(9)
+    names = _names(40, 5)
+    texts = [
+        "abcde", "abcdf",     # ratio exactly 0.8: on the threshold, kept
+        "bbbbca", "bbbaba",   # 0.83 in this order, 0.67 the other way
+        "", "x", "",          # empty normal forms (two empties: ratio 1.0)
+        "a\U0001f600bcd", "a\U0001f600bce", "a\U0001f601bcd",  # non-BMP
+        *names, *[edit for name in names[:20] for edit in _edits(name, rng)],
+    ]
+    blocks = [
+        [0, 1, 2, 3, 4, 5],
+        [0, 1, 6, 7, 8, 9, 4],   # shares the threshold pair (0, 1)
+        list(range(10, len(texts))),
+        list(range(10, 30)) + [7, 8],  # shares 190 pairs with the block above
+    ]
+    pairs = sorted({pair for block in blocks for pair in combinations(sorted(block), 2)})
+    expected = [(a, b) for a, b in pairs if resolve.fuzzy_match(texts[a], texts[b])]
+    assert {(0, 1), (2, 3), (4, 6), (7, 8)} <= set(expected)
+    assert resolve.similarity_ratio(texts[0], texts[1]) == 0.8
+    assert not resolve.fuzzy_match(texts[3], texts[2])
+    assert len(expected) > 20
+
+    def by_block():
+        for block in blocks:
+            block = np.array(sorted(block))
+            a, b = np.triu_indices(len(block), 1)
+            yield block[a], block[b]
+
+    for cells in (resolve._BOUND_CELLS, 7):
+        monkeypatch.setattr(resolve, "_BOUND_CELLS", cells)
+        # each pair once, even the ones two blocks share
+        assert sorted(resolve.similar_pairs(texts, by_block())) == expected
+        # one chunk of every pair, each given larger index first
+        flipped = np.array([(b, a) for a, b in pairs]).T
+        assert sorted(resolve.similar_pairs(texts, [(flipped[0], flipped[1])])) == sorted(
+            (b, a) for a, b in pairs if resolve.fuzzy_match(texts[b], texts[a]))
+
+
+def test_no_matcher_outside_resolve() -> None:
+    """Every SequenceMatcher is built, and every one-pair scorer called,
+    in functions/resolve.py, where the batch scorers put the vectorized
+    bound in front of them: no other module can score a pair unbounded."""
+    import ast
+    from pathlib import Path
+
+    import islamic_ner_spark
+
+    package = Path(islamic_ner_spark.__file__).parent
+    scorers = {"SequenceMatcher", "fuzzy_match", "similarity_ratio"}
+    offenders = []
+    for path in sorted(package.rglob("*.py")):
+        if path == package / "functions" / "resolve.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call) and (
+                getattr(node.func, "id", None) in scorers
+                or getattr(node.func, "attr", None) in scorers
+            ):
+                offenders.append(f"{path.relative_to(package.parent)}:{node.lineno}")
+    assert offenders == [], "score pairs through functions/resolve.similar_pairs"
 
 
 def _ladder_input() -> list[tuple[str, str]]:
