@@ -61,26 +61,9 @@ def similarity_ratio(a: str, b: str) -> float:
 
 def fuzzy_match(a: str, b: str) -> bool:
     """``similarity_ratio(a, b) >= FUZZY_THRESHOLD`` for one pair, with no
-    vectorized bound; batches go through :func:`similar_pairs`."""
-    return matcher_passes(SequenceMatcher(None, a, b))
-
-
-def matcher_passes(matcher: SequenceMatcher) -> bool:
-    """``matcher.ratio() >= FUZZY_THRESHOLD``; the full ratio is computed
-    only when difflib's exact upper bounds
-    (``real_quick_ratio() >= quick_ratio() >= ratio()``) reach the
-    threshold.  A caller scoring one string against many keeps it as
-    ``seq2`` (indexed once) and swaps ``seq1``.
-
-    This is the one-pair check (:func:`fuzzy_match`).  The batch scorers
-    run the bounds vectorized first (:func:`_reaches_threshold` is
-    ``quick_ratio``'s, which ``real_quick_ratio`` never falls below), so
-    a pair that survives them is verified by ``ratio()`` alone."""
-    return (
-        matcher.real_quick_ratio() >= FUZZY_THRESHOLD
-        and matcher.quick_ratio() >= FUZZY_THRESHOLD
-        and matcher.ratio() >= FUZZY_THRESHOLD
-    )
+    bound at all; batches go through :func:`similar_pairs`, whose bound
+    drops only pairs this rejects too."""
+    return similarity_ratio(a, b) >= FUZZY_THRESHOLD
 
 
 def char_counts(texts: Sequence[str]) -> Tuple[np.ndarray, np.ndarray]:
@@ -147,7 +130,8 @@ def similar_pairs(
             matcher.set_seq2(texts[b])
             seq2 = b
         matcher.set_seq1(texts[a])
-        # the bound passed, so matcher_passes' two bounds would too
+        # the bound passed, and real_quick_ratio() >= quick_ratio(), so
+        # only ratio() is left to check
         if matcher.ratio() >= FUZZY_THRESHOLD:
             similar.append((a, b))
     return similar
@@ -195,11 +179,11 @@ def best_fuzzy_candidate(
     the reference's ``max()`` over an insertion-ordered candidate list.
 
     A candidate string is skipped when one of difflib's exact upper bounds
-    (as in :func:`matcher_passes`) falls below what its ratio would have
-    to reach to matter: the threshold, the best canonical's score so far
-    (a later canonical must beat it strictly) and the current canonical's
-    score so far.  A skipped string can therefore never change the
-    answer."""
+    (``real_quick_ratio() >= quick_ratio() >= ratio()``) falls below what
+    its ratio would have to reach to matter: the threshold, the best
+    canonical's score so far (a later canonical must beat it strictly)
+    and the current canonical's score so far.  A skipped string can
+    therefore never change the answer."""
     if not norm_text:
         return None
     best: Optional[Tuple[str, float]] = None
