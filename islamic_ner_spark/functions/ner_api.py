@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from islamic_ner_spark.functions.annotate import annotate_raw, repair_bio, word_offsets
 from islamic_ner_spark.functions.normalize import normalize
+from islamic_ner_spark.functions.worker import drop_zip_importers
 
 
 def _build_entity(
@@ -156,6 +157,7 @@ def ner_table(
     import pandas as pd
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         gazetteer = gazetteer_bc.value
         for batch in batches:
             norm_l, ents_l = [], []

@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from islamic_ner_spark.functions.worker import drop_zip_importers
 from islamic_ner_spark.operators.capping import (
     MAX_BUCKET_SIZE,
     bucket_self_join,
@@ -87,6 +88,7 @@ def minhash_signatures(
     """(id, signature array<long>) via vectorized universal hashing."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         a, b = _perm_params(num_perm, seed)
         for batch in batches:
             sigs: List[List[int]] = []
@@ -156,6 +158,7 @@ def verify_jaccard_pairs(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for batch in batches:
             scores = []
             for ta, tb in zip(batch["text_a"], batch["text_b"]):
@@ -240,6 +243,7 @@ def jaccard_scores(
         return {text[i : i + shingle_k] for i in range(len(text) - shingle_k + 1)}
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for batch in batches:
             scores = []
             for ta, tb in zip(batch["text_a"], batch["text_b"]):
@@ -264,6 +268,7 @@ def simhash_signatures(
     """64-bit SimHash over whitespace tokens (weighted bit vote)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         bit_positions = np.arange(64, dtype=np.uint64)
         for batch in batches:
             out = []

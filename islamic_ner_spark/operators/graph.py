@@ -50,6 +50,8 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from islamic_ner_spark.functions.worker import drop_zip_importers
+
 NODE_LABELS = {
     "SCHOLAR": "Scholar",
     "BOOK": "Book",
@@ -369,6 +371,7 @@ def fused_graph_outputs(extracted: DataFrame, resolution_bc) -> DataFrame:
     """
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        drop_zip_importers()
         import pandas as pd
 
         res = resolution_bc.value

@@ -52,6 +52,7 @@ from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from islamic_ner_spark.functions.worker import drop_zip_importers
 from islamic_ner_spark.operators.components import (
     connected_components,
     min_label_components,
@@ -197,6 +198,7 @@ def new_pair_edges(
     pairs = bucket_self_join(capped, block_key, "node", carry=("norm_text",))
 
     def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         from islamic_ner_spark.functions.resolve import similar_pairs
 
         for batch in batches:
@@ -416,6 +418,7 @@ def score_strings_ladder(strings: DataFrame, gazetteer_bc: Broadcast) -> DataFra
     need the joint canonicalization)."""
 
     def ladder(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         from islamic_ner_spark.functions.resolve import resolve_strings
 
         gazetteer = gazetteer_bc.value

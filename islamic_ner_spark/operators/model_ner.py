@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame
 
+from islamic_ner_spark.functions.worker import drop_zip_importers
+
 try:  # pragma: no cover - not installed in this container
     import torch  # noqa: F401
     from transformers import AutoModelForTokenClassification, AutoTokenizer  # noqa: F401
@@ -212,6 +214,7 @@ def model_ner_labels(
         raise ValueError("gazetteer_bc is required for the fallback path")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         from islamic_ner_spark.functions.annotate import annotate_raw
         from islamic_ner_spark.functions.normalize import normalize
 

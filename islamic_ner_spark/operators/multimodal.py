@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from islamic_ner_spark.functions.worker import drop_zip_importers
+
 MEDIA_SCHEMA = (
     "media_id long, kind string, payload binary, "
     "meta struct<source:string, codec:string, duration_ms:int>"
@@ -45,6 +47,7 @@ def synthetic_media(spark: SparkSession, n: int, *, seed: int = 42) -> DataFrame
     height, n_frames) + pseudo-random bytes derived from (seed, id)."""
 
     def generate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for batch in batches:
             rows = []
             for media_id in batch["id"]:
@@ -90,6 +93,7 @@ def decode_media(media: DataFrame) -> DataFrame:
     """payload -> (width, height, n_frames, n_bytes), Arrow-batched."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for batch in batches:
             widths, heights, frames, sizes = [], [], [], []
             for payload in batch["payload"]:
@@ -119,6 +123,7 @@ def extract_features(media: DataFrame) -> DataFrame:
     operators (operators/similarity.py) unchanged."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for batch in batches:
             feats = []
             for payload in batch["payload"]:
@@ -138,6 +143,7 @@ def sample_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
     payload by the stub layout; a real build uses a frame decoder)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         rows = []
         for batch in batches:
             for media_id, kind, payload in zip(

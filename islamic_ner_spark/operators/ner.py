@@ -23,6 +23,8 @@ from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from islamic_ner_spark.functions.worker import drop_zip_importers
+
 MENTION_STRUCT = (
     "struct<mention_idx:int,text:string,entity_type:string,"
     "start_token:int,end_token:int>"
@@ -63,11 +65,30 @@ _HIT_FIELDS = (
     "href_texts", "n_href", "href_slot",
 )
 
-# Per-task memo bound for the distinct-text annotate cache: beyond this
-# many distinct texts in one task the memo stops admitting new entries
-# (existing hits keep serving).  Sized so worst-case residency stays
-# ~100-200 MB per worker at typical turn lengths.
-_ANNOTATE_MEMO_CAP = 200_000
+# Per-task bound of the distinct-text annotate memo, in UTF-8 bytes of
+# the memoized texts (see TextMemo).  A memoized result holds ~40-55x
+# its text's bytes in Python objects (measured on both benchmark
+# corpora), so 2 MiB of text keeps a worker's memo near 100 MB.  The
+# benchmark corpora hold ~0.2 MB of distinct text per task, so every
+# repeat there is a hit.
+_ANNOTATE_MEMO_CAP = 2 << 20
+
+
+class TextMemo(dict):
+    """Per-task annotate memo keyed on the raw turn text, bounded in
+    UTF-8 bytes of the texts it holds: a text is admitted only while
+    the held texts stay under ``budget``, so budget 0 admits nothing.
+    Admitted entries keep serving hits after admission stops."""
+
+    def __init__(self, budget: int):
+        super().__init__()
+        self.free = budget
+
+    def admit(self, text, hit) -> None:
+        size = len(text.encode("utf-8")) if text else 0
+        if size < self.free:
+            self[text] = hit
+            self.free -= size
 
 # hadith_id placeholder used while memoizing: the ONLY doc-dependent
 # part of the annotate output is the sentence-level HADITH_REF stand-in
@@ -133,7 +154,8 @@ def annotate_transcripts(
     greetings/boilerplate far harder), and the whole per-turn result is
     a pure function of the text except for the HADITH_REF stand-in
     entity, which is rewritten per row (see ``_DOC_SENTINEL``).  The
-    memo is bounded (``_ANNOTATE_MEMO_CAP``) and task-scoped, so
+    memo is task-scoped and bounded in bytes of memoized text
+    (``memo_cap``, default ``_ANNOTATE_MEMO_CAP``; 0 turns it off), so
     executor memory stays flat at any corpus size.
 
     ``extraction_only=True`` emits ``EXTRACTED_SCHEMA`` instead: (conv_id,
@@ -153,11 +175,12 @@ def annotate_transcripts(
         computed = ["norm_text", "tokens", "labels", "mentions"]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         from islamic_ner_spark.functions.annotate import annotate_raw
         from islamic_ner_spark.functions.normalize import normalize
 
         gazetteer = gazetteer_bc.value
-        memo: dict = {}
+        memo = TextMemo(memo_cap)
 
         def annotate_text(text):
             hit = memo.get(text)
@@ -186,8 +209,7 @@ def annotate_transcripts(
                         for t in triples
                     ),
                 )
-                if len(memo) < memo_cap:
-                    memo[text] = hit
+                memo.admit(text, hit)
             return hit
 
         def doc_triples(hit, doc_id):  # hit[4]: triples, hit[-1]: needs_doc
@@ -230,6 +252,7 @@ def annotate_labeled(labeled: DataFrame) -> DataFrame:
     labels skip text annotation but share every later stage."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for batch in batches:
             doc_ids = (
                 batch["conv_id"].astype(str) + ":" + batch["turn_idx"].astype(str)

@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from islamic_ner_spark.functions.worker import drop_zip_importers
 from islamic_ner_spark.operators.capping import (
     MAX_BUCKET_SIZE,
     bucket_self_join,
@@ -160,6 +161,7 @@ def hyperplane_signatures(
     assert n_planes % bands == 0
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         planes = None
         rows_per_band = n_planes // bands
         n_bytes = (rows_per_band + 7) // 8
@@ -475,6 +477,7 @@ def cell_partial_sums(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         cmat = mat_broadcast.value  # (n_cells, dim), unit rows
         sums = np.zeros_like(cmat)
         counts = np.zeros(cmat.shape[0], dtype=np.int64)
@@ -522,6 +525,7 @@ def assign_cells(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         cmat = mat_broadcast.value  # (n_cells, dim), unit rows
         # a tiny corpus can yield fewer centroids than nprobe
         probes = min(nprobe, cmat.shape[0])

@@ -12,6 +12,8 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from islamic_ner_spark.functions.worker import drop_zip_importers
+
 ENCODING_CANDIDATES: Sequence[str] = ("utf-8", "UTF-8-SIG", "cp1256", "windows-1256")
 
 # The reference scores columns by hit-rate of Sanadset structure tags.
@@ -58,6 +60,7 @@ def read_csv_with_fallback(
     schema = ", ".join(f"`{c.strip()}` string" for c in header)
 
     def parse(batches):
+        drop_zip_importers()
         import pandas as pd
 
         for batch in batches:

@@ -29,6 +29,8 @@ from typing import Iterator, List, Tuple
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from islamic_ner_spark.functions.worker import drop_zip_importers
+
 TRANSCRIPTS_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
 )
@@ -150,6 +152,7 @@ def synthetic_transcripts(
     base = spark.range(n_conversations, numPartitions=partitions)
 
     def generate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for batch in batches:
             rows = []
             for conv_idx in batch["id"]:
@@ -178,6 +181,7 @@ def transcripts_from_documents(
     genuine inputs at every scale factor."""
 
     def generate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         for batch in batches:
             rows = []
             for doc_id in batch["doc_id"]:
@@ -219,6 +223,7 @@ def expected_triples(
     base = spark.range(n_conversations, numPartitions=partitions)
 
     def generate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_zip_importers()
         from islamic_ner_spark.functions.annotate import annotate_raw
         from islamic_ner_spark.functions.normalize import normalize
         from islamic_ner_spark.functions.relations import extract_relations

@@ -29,6 +29,7 @@ from pyspark.broadcast import Broadcast
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from islamic_ner_spark.functions.worker import drop_zip_importers
 from islamic_ner_spark.operators.materialize import cache, owned
 from islamic_ner_spark.operators.ner import annotate_transcripts
 from islamic_ner_spark.operators.relations import extract_triples
@@ -378,6 +379,7 @@ def _compact_graph_locked(spark, graph_path, gazetteer_bc, n_buckets, persisted)
     ).distinct()
 
     def add_norm(batches):
+        drop_zip_importers()
         from islamic_ner_spark.functions.normalize import normalize
 
         for batch in batches:

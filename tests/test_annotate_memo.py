@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from islamic_ner_spark.operators.ner import (
+    TextMemo,
     annotate_transcripts,
     mentions_and_triples,
 )
@@ -140,3 +141,20 @@ def test_memo_cap_zero_still_exact(spark, matcher_gazetteer) -> None:
         )
     )
     assert with_memo == without
+
+
+def test_memo_admission_stops_at_byte_budget() -> None:
+    # the budget counts UTF-8 bytes of the held texts, not entries
+    memo = TextMemo(10)
+    memo.admit("abcd", 1)  # 4 bytes held
+    memo.admit("عبد", 2)  # 6 bytes: 4 + 6 reaches the budget, refused
+    memo.admit("ab", 3)  # 6 bytes held
+    memo.admit(None, 4)  # a null text holds no bytes
+    memo.admit("xyzw", 5)  # 6 + 4 reaches the budget, refused
+    assert memo == {"abcd": 1, "ab": 3, None: 4}
+    assert memo.free == 4
+
+    off = TextMemo(0)  # memo_cap=0: no memo at all
+    for text in ("", None, "a"):
+        off.admit(text, 0)
+    assert off == {}
